@@ -45,6 +45,7 @@ from video_features_spark.operators.features import (
     image_text_similarity,
 )
 from video_features_spark.sources.datagen import generate_images, generate_labels
+from video_features_spark.sources.tables import spread_scan
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -64,18 +65,6 @@ def _dsum(col, scale: int = 6):
     lossless at scale≥2."""
     c = col if not isinstance(col, str) else F.col(col)
     return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition a single-split scan to session parallelism before a
-    compute-heavy map/aggregate stage. The driver tables are one-row-group
-    parquet files that scan as ONE task, so partial aggregation and per-row
-    expression work above them is serialized without this (guide §2.5 "input
-    skew"). Keyed on a high-cardinality column ⇒ no sort-before-repartition
-    pass and an even spread; parallelism comes from the session, not a
-    constant. Results are unchanged (content-identical, redistributed)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(c) for c in cols])
 
 
 def _order_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,8 +222,8 @@ def _q_distinct_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition on the phase-1 grouping keys: the groupBy reuses this
     # exchange (same clustering), so the plan still has one shuffle of the
     # fact table but the aggregation runs parallel instead of on the
-    # single-split scan task (see _spread)
-    li = _spread(li, "l_returnflag", "l_orderkey", "l_linenumber")
+    # single-split scan task (see spread_scan)
+    li = spread_scan(li, "l_returnflag", "l_orderkey", "l_linenumber")
     l1 = li.groupBy("l_returnflag", "l_orderkey", "l_linenumber").agg(
         F.count(F.lit(1)).alias("__c")
     )
@@ -259,8 +248,8 @@ def _q_distinct_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the single-split scan so the 8-aggregate decimal partial agg
-    # runs parallel instead of on the scan's one task (see _spread)
-    li = _spread(_read(spark, sf_dir, "lineitem"), "l_orderkey")
+    # runs parallel instead of on the scan's one task (see spread_scan)
+    li = spread_scan(_read(spark, sf_dir, "lineitem"), "l_orderkey")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1305,9 +1294,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ``distinct_guard`` (exact + HLL in one agg), ``langid_scores`` subsumed
     by ``langid_ngram``, ``minhash_sigs`` by ``minhash_lsh_dedup`` (band
     hashes are a bijection of the signatures), ``sort_limit`` by ``tpch_q3``
-    (same TakeOrderedAndProject tail), exact ``embedding_near_dup`` by its
-    ``_blocked`` scale path (same cosine verify on candidates; the exact
-    operator stays pytest-gated in tests/test_dedup.py)."""
+    (same TakeOrderedAndProject tail), exact embedding near-dup by
+    ``embedding_near_dup_blocked`` (same cosine verify on candidates; its
+    pytest gate checks it against a numpy brute force)."""
     return {
         # -- marquee pipelines + seams (image/video/audio, checkpoint, stream)
         "image_flagship": _q_image_flagship,

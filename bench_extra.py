@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(var, "1")
 
@@ -73,7 +74,8 @@ def dump_explain(names):
     tag = os.environ.get("BX_TAG", "before")
     spark = get_session()
     qs = entrymod.queries()
-    os.makedirs("/root/repo/plans/r07", exist_ok=True)
+    out_dir = os.path.join(REPO, "plans", "r07")
+    os.makedirs(out_dir, exist_ok=True)
     for name in names or list(qs):
         try:
             df = qs[name](spark, SF_DIR)
@@ -82,7 +84,7 @@ def dump_explain(names):
             )
         except Exception as e:  # noqa: BLE001
             plan = f"explain failed: {e}"
-        with open(f"/root/repo/plans/r07/{name}_{tag}.txt", "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         print(f"wrote plans/r07/{name}_{tag}.txt", flush=True)
     spark.stop()

@@ -4,7 +4,7 @@
     spark-submit --py-files engine.zip jobs/run_pipeline.py \
         --images <parquet> --labels <parquet> --output <dir> \
         [--model clip-small-det] [--num-parts 64] [--snapshot-id snap-1] \
-        [--salt-threshold 100000]
+        [--salt-threshold 100000] [--no-strict]
 
 Reads the image+caption table (input_hint schema + entity_id/ts), extracts
 embeddings (Arrow UDF), strict as-of joins against the label probes, asserts
@@ -32,8 +32,9 @@ def main() -> None:
     ap.add_argument("--snapshot-id", default="snapshot-0")
     ap.add_argument("--salt-threshold", type=int, default=None,
                     help="probe-rows-per-entity above which hot keys are salted")
-    ap.add_argument("--strict", action="store_true", default=True,
-                    help="leakage-free: features strictly before label_ts")
+    ap.add_argument("--strict", action=argparse.BooleanOptionalAction, default=True,
+                    help="leakage-free: features strictly before label_ts "
+                         "(--no-strict also admits features AT label_ts)")
     ap.add_argument("--compact-manifest", action="store_true",
                     help="after the run, compact the append-only manifest to "
                          "one row per partition (generation-pointer swap — "

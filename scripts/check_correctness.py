@@ -6,6 +6,7 @@ aid; the gate run passes none)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -13,7 +14,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from video_features_spark.session import get_spark  # noqa: E402
@@ -53,8 +54,6 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
 
 
 def main(sf_dir: str, only: list[str] | None = None) -> int:
-    import os
-
     # data-dependent oracles (IVF centroid literals) must be generated from
     # the same tables this mirror compares against, not the driver's sf0.01
     os.environ["VFS_ORACLE_SF_DIR"] = sf_dir

@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -110,26 +111,33 @@ def main(sf_dir: str) -> int:
     if "BroadcastNestedLoopJoin" in p or "CartesianProduct" in p:
         failures.append("blocked near-dup plans a nested-loop join")
 
-    # 10. jaccard_on_pairs auto-switch: a candidate set above the broadcast
-    #     cap plans a SHUFFLE join (no executor-memory broadcast), a small one
-    #     broadcasts. Catalyst's own size-based auto-broadcast is disabled for
-    #     the check so any BroadcastExchange left is the operator's explicit
-    #     F.broadcast.
+    # 10. verify auto-switch: the bounded candidate probe
+    #     (_resolve_candidate_pairs) feeding jaccard_on_pair_sets broadcasts a
+    #     candidate set under the cap and plans a SHUFFLE join (no
+    #     executor-memory broadcast) for one above it. Catalyst's own
+    #     size-based auto-broadcast is disabled for the check so any
+    #     BroadcastExchange left is the operator's explicit F.broadcast.
     from video_features_spark.operators.dedup import (
-        jaccard_on_pairs,
+        _resolve_candidate_pairs,
+        jaccard_on_pair_sets,
         lsh_candidate_pairs,
         minhash_signatures,
-        shingle_table,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = shingle_table(docs, "doc_id", "text", 5)
     cands = lsh_candidate_pairs(minhash_signatures(docs, "doc_id", "text"), "doc_id")
+
+    def verify_plan(max_broadcast_pairs: int) -> str:
+        pairs, bc = _resolve_candidate_pairs(cands, max_broadcast_pairs)
+        return plan_of(
+            jaccard_on_pair_sets(docs, pairs, "doc_id", "text", 5, broadcast_pairs=bc)
+        )
+
     prior_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        p_small = plan_of(jaccard_on_pairs(sh, cands, "doc_id"))
-        p_big = plan_of(jaccard_on_pairs(sh, cands, "doc_id", max_broadcast_pairs=0))
+        p_small = verify_plan(500_000)
+        p_big = verify_plan(0)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_thresh)
     if "BroadcastExchange" not in p_small:
@@ -176,12 +184,6 @@ def main(sf_dir: str) -> int:
     #      otherwise never be shape-asserted — a regression that broadcasts
     #      the wide set side in THAT path is exactly the bug this audit
     #      exists to pin. Building this plan runs no probe and no jobs.
-    from video_features_spark.operators.dedup import (
-        jaccard_on_pair_sets,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
     cands_lazy = lsh_candidate_pairs(
         minhash_signatures(docs, "doc_id", "text", 32, 5), "doc_id", 8
     )

@@ -1,8 +1,8 @@
 """Bench-harness selection logic — pure-python, no Spark.
 
 The scaling artifact's shipped (lo, hi) pair is chosen by bench._pick_best
-over the merged pool of in-run attempts and session-hunt captures
-(scripts/scale_hunt.py). These gates pin the two properties the r4 advisor
+over the merged pool of in-run attempts and session-hunt captures read from
+a JSONL log. These gates pin the two properties the r4 advisor
 review demanded: (1) a degraded-lo capture with INFLATED efficiency must
 never ship, (2) hunt captures only join the pool when they measured the same
 core counts and at least this bench run's image count (a larger job is the
@@ -38,11 +38,12 @@ def bench():
     signal.signal(signal.SIGINT, saved[1])
 
 
-def _pair(lo_ips, hi_ips, source=None):
+def _pair(bench, lo_ips, hi_ips, source=None):
+    """A (lo, hi) capture at the core counts this host's bench measures."""
     eff = hi_ips / (lo_ips * 4.0)
     rec = {
-        "lo": {"cores": 8, "images": 32000, "images_per_sec": lo_ips},
-        "hi": {"cores": 32, "images": 32000, "images_per_sec": hi_ips},
+        "lo": {"cores": bench.CORES_LO, "images": 32000, "images_per_sec": lo_ips},
+        "hi": {"cores": bench.CPUS, "images": 32000, "images_per_sec": hi_ips},
         "efficiency": round(eff, 3),
     }
     if source:
@@ -54,15 +55,15 @@ def test_pick_best_rejects_inflated_degraded_lo(bench):
     # a slowdown window hitting only the lo worker shrinks the denominator:
     # 491 img/s lo gives "efficiency" 1.18 — physically impossible, must lose
     # to the clean-lo pair even though its efficiency number is higher
-    inflated = _pair(491.3, 2325.6)
-    clean = _pair(1085.2, 2799.7)
+    inflated = _pair(bench, 491.3, 2325.6)
+    clean = _pair(bench, 1085.2, 2799.7)
     assert bench._pick_best([inflated, clean]) is clean
     assert bench._pick_best([clean, inflated]) is clean
 
 
 def test_pick_best_ties_break_by_efficiency(bench):
-    a = _pair(1000.0, 2800.0)
-    b = _pair(1000.0, 3200.0)
+    a = _pair(bench, 1000.0, 2800.0)
+    b = _pair(bench, 1000.0, 3200.0)
     assert bench._pick_best([a, b]) is b
 
 
@@ -76,8 +77,8 @@ def test_pick_best_clean_subset_prefers_max_efficiency(bench):
     # Here the amortized 96k-image capture has a marginally SLOWER lo but a
     # far less overhead-diluted hi; fastest-lo selection would wrongly
     # demote it.
-    small_job = _pair(1085.2, 2799.7)               # eff 0.645 at 32k
-    big_job = _pair(1060.0, 3400.0)                 # eff 0.802 at 96k
+    small_job = _pair(bench, 1085.2, 2799.7)        # eff 0.645 at 32k
+    big_job = _pair(bench, 1060.0, 3400.0)          # eff 0.802 at 96k
     big_job["lo"]["images"] = big_job["hi"]["images"] = 96000
     assert bench._pick_best([small_job, big_job]) is big_job
 
@@ -85,8 +86,8 @@ def test_pick_best_clean_subset_prefers_max_efficiency(bench):
 def test_pick_best_no_clean_lo_falls_back_to_fastest_lo(bench):
     # every lo degraded: the least-degraded denominator ships, never the
     # inflated-efficiency pair
-    worse = _pair(491.3, 2325.6)                    # "efficiency" 1.18
-    better = _pair(583.0, 1900.0)
+    worse = _pair(bench, 491.3, 2325.6)             # "efficiency" 1.18
+    better = _pair(bench, 583.0, 1900.0)
     assert bench._pick_best([worse, better]) is better
 
 
@@ -127,15 +128,15 @@ def test_retry_plan_budget_bound(bench_worker):
 def test_hunt_captures_filtered_by_geometry_and_age(bench, tmp_path):
     log = tmp_path / "hunt.jsonl"
     rows = [
-        _pair(1018.6, 2898.0),                      # valid
+        _pair(bench, 1018.6, 2898.0),               # valid
         {"ts": 1.0, "host_ratio": 2.8},             # probe-only line: skipped
         "not json at all",                          # corrupt line: skipped
-        _pair(1049.6, 3025.4),                      # valid
+        _pair(bench, 1049.6, 3025.4),               # valid
     ]
-    wrong_images = _pair(500.0, 1800.0)
+    wrong_images = _pair(bench, 500.0, 1800.0)
     wrong_images["lo"]["images"] = 16000            # smaller job: skipped
     rows.insert(2, wrong_images)
-    bigger = _pair(1060.0, 3400.0)                  # amortized geometry:
+    bigger = _pair(bench, 1060.0, 3400.0)           # amortized geometry:
     bigger["lo"]["images"] = bigger["hi"]["images"] = 96000   # accepted
     rows.append(bigger)
     with open(log, "w") as f:

@@ -149,25 +149,6 @@ def test_compact_manifest_keeps_latest_and_verifies(spark, base):
     assert again["parts_skipped"] == 4 and again["parts_written"] == 0
 
 
-def test_compaction_crash_recovery(spark, base):
-    """A compaction killed between its two renames leaves no _manifest but a
-    .__compact_old — the next manifest read must self-heal (otherwise resume
-    recomputes EVERYTHING), and a later compaction must not wedge on the
-    leftover."""
-    import os
-
-    from video_features_spark.sources.checkpoint import compact_manifest
-
-    df = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(1))
-    checkpointed_write(df, base, ["k"], num_parts=4)
-    man = os.path.join(base, "_manifest")
-    os.rename(man, man + ".__compact_old")  # crash fell between the renames
-    again = checkpointed_write(df, base, ["k"], num_parts=4)
-    assert again["parts_skipped"] == 4 and again["parts_written"] == 0  # healed
-    stats = compact_manifest(spark, base)  # leftover must not wedge it
-    assert stats["rows_after"] == 4
-
-
 def test_compaction_generation_pointer_protocol(spark, base):
     """Pointer-based compaction (object-store-safe: NO directory rename):
     each compaction writes a fresh _manifest.g<N> dir then atomically flips

@@ -2,13 +2,14 @@
 recall vs exact, SimHash hamming on injected near-dups, ANN recall vs
 brute force."""
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from tests.utils import assert_frames_match
 from video_features_spark.operators.dedup import (
-    embedding_near_dup,
     hamming64_col,
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -98,18 +99,6 @@ def test_simhash_near_vs_far(corpus):
     ).select(hamming64_col(F.col("x.simhash"), F.col("y.simhash")).alias("ham"))
     fars = [r["ham"] for r in far.collect()]
     assert fars and np.mean(fars) > 10  # unrelated docs differ in many bits
-
-
-def test_embedding_near_dup_finds_planted(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    planted = emb.filter("vec_id < 3").select(
-        (F.col("vec_id") + 9000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 1.001).alias("embedding"),
-    )
-    pairs = embedding_near_dup(emb.select("vec_id", "embedding").unionByName(planted),
-                               "vec_id", threshold=0.999)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert {(0, 9000), (1, 9001), (2, 9002)} <= got
 
 
 def test_ann_recall_vs_bruteforce(spark, sf_dir):
@@ -212,8 +201,13 @@ def test_embedding_near_dup_blocked_matches_planted_and_plan(spark, sf_dir):
     blocked = embedding_near_dup_blocked(df, "vec_id", dim=64, threshold=0.999)
     got = {(r["id_a"], r["id_b"]) for r in blocked.collect()}
     assert {(0, 9000), (1, 9001), (2, 9002)} <= got
-    brute = {(r["id_a"], r["id_b"])
-             for r in embedding_near_dup(df, "vec_id", threshold=0.999).collect()}
+    # numpy all-pairs cosine; the 1e-9 slack absorbs summation-order ulps
+    rows = df.toPandas().sort_values("vec_id")
+    ids = rows["vec_id"].to_numpy()
+    vecs = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    ia, ib = np.nonzero(np.triu(unit @ unit.T >= 0.999 - 1e-9, k=1))
+    brute = set(zip(ids[ia].tolist(), ids[ib].tolist()))
     assert got <= brute  # verify step keeps precision exact
     plan = blocked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
@@ -256,10 +250,9 @@ def _union_find(nodes, edges):
 
 def test_cc_star_handles_adversarial_chain(spark):
     """The round-4 hardening gate: an adversarial duplicate CHAIN needs
-    O(length) rounds under min-label propagation but only O(log²) under the
-    large-star/small-star default — star must be exact on a 120-chain within
-    12 rounds, where label propagation provably is not (the reason the
-    default changed)."""
+    O(length) rounds under min-label propagation but only O(log²) under
+    large-star/small-star contraction — the star path must be exact on a
+    120-chain within 12 rounds."""
     from video_features_spark.operators.dedup import connected_components
 
     n = 120
@@ -268,14 +261,9 @@ def test_cc_star_handles_adversarial_chain(spark):
     )
     star = {
         r["id"]: r["component"]
-        for r in connected_components(pairs, max_iter=12, algorithm="star").collect()
+        for r in connected_components(pairs, max_iter=12, max_local_pairs=0).collect()
     }
     assert star == {i: 0 for i in range(n)}
-    label = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, max_iter=12, algorithm="label").collect()
-    }
-    assert label != star  # diameter-bound: 12 rounds can't traverse 120 hops
 
 
 from hypothesis import HealthCheck, given, settings, strategies as st  # noqa: E402
@@ -298,33 +286,23 @@ def _graphs(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-def test_cc_star_equals_label_equals_union_find(spark, edges):
+def test_cc_star_and_auto_equal_union_find(spark, edges):
     """Hypothesis gate: on random graphs (self-loop-free, duplicate edges
-    legal, both orientations legal) the star and label algorithms agree with
-    a pure-Python union-find ground truth."""
+    legal, both orientations legal) both connected-components paths agree
+    with a pure-Python union-find ground truth."""
     from video_features_spark.operators.dedup import connected_components
 
     nodes = sorted({x for e in edges for x in e})
     want = _union_find(nodes, edges)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    label = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, algorithm="label", max_iter=100).collect()
-    }
     auto = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
-    assert star == want
-    assert label == want
     assert auto == want  # driver-side union-find path (under-cap graphs)
-    # force the auto probe OVER the cap: must fall through to star, same answer
-    big_path = {
+    # force the probe OVER the cap: the distributed star path, same answer
+    star = {
         r["id"]: r["component"]
         for r in connected_components(pairs, max_local_pairs=0).collect()
     }
-    assert big_path == want
+    assert star == want
 
 
 def test_cc_star_refuses_unconverged_output(spark):
@@ -338,59 +316,41 @@ def test_cc_star_refuses_unconverged_output(spark):
     from video_features_spark.operators.dedup import connected_components
 
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1, algorithm="star").collect()
+        connected_components(pairs, max_iter=1, max_local_pairs=0).collect()
 
 
-def test_jaccard_on_pairs_keeps_zero_shingle_docs(spark):
-    """ADVICE r03: a candidate pair whose doc is SHORTER than shingle_n has
-    no shingle/size rows — with threshold=0.0 it must still appear, at
-    jaccard 0.0 (incl. the empty-∪-empty 0/0 case)."""
-    from video_features_spark.operators.dedup import jaccard_on_pairs, shingle_table
-
-    docs = spark.createDataFrame(
-        [("a", "tiny"), ("b", "this one is long enough to shingle"), ("c", "x")],
-        "doc_id string, text string",
-    )
-    sh = shingle_table(docs, "doc_id", "text", 5)
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c")], "id_a string, id_b string"
-    )
-    got = {(r["id_a"], r["id_b"]): r["jaccard"]
-           for r in jaccard_on_pairs(sh, pairs, "doc_id", threshold=0.0).collect()}
-    assert got == {("a", "b"): 0.0, ("a", "c"): 0.0}
+def _ref_shingle_set(text, n=5):
+    """Pure-Python twin of the in-row shingle-hash set: char n-grams (a text
+    shorter than n is its own single shingle), md5-prefix hashes, and NULL
+    text as the empty set."""
+    if text is None:
+        return set()
+    grams = {text[i:i + n] for i in range(max(len(text) - n + 1, 1))}
+    return {int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams}
 
 
-def test_jaccard_on_pair_sets_matches_exploded_verifier(spark):
-    """The set-based verify (minhash_dedup's hot path) must agree with the
-    exploded-table verifier on every pair, both join strategies, including
-    zero-overlap and sub-shingle-length docs."""
-    from video_features_spark.operators.dedup import (
-        jaccard_on_pair_sets,
-        jaccard_on_pairs,
-        shingle_table,
-    )
+def test_jaccard_on_pair_sets_matches_python_reference(spark):
+    """The set-based verify (minhash_dedup's hot path) must agree with a
+    pure-Python Jaccard on every pair, both join strategies, including
+    zero-overlap, sub-shingle-length and NULL-text docs."""
+    from video_features_spark.operators.dedup import jaccard_on_pair_sets
 
-    docs = spark.createDataFrame(
-        [
-            ("a", "the quick brown fox jumps over the lazy dog"),
-            ("b", "the quick brown fox jumps over the lazy cat"),
-            ("c", "completely unrelated text with no shared shingles!"),
-            ("d", "the quick brown fox jumps over the lazy dog"),  # == a
-            ("e", "xy"),  # shorter than shingle_n
-            ("f", None),  # NULL text
-            ("g", None),  # NULL text: f-g must be 0.0, never NULL==NULL 1.0
-        ],
-        "doc_id string, text string",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"), ("f", "g"), ("a", "f")],
-        "id_a string, id_b string",
-    )
-    sh = shingle_table(docs, "doc_id", "text", 5)
-    exploded = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_on_pairs(sh, pairs, "doc_id", threshold=0.0).collect()
+    texts = {
+        "a": "the quick brown fox jumps over the lazy dog",
+        "b": "the quick brown fox jumps over the lazy cat",
+        "c": "completely unrelated text with no shared shingles!",
+        "d": "the quick brown fox jumps over the lazy dog",  # == a
+        "e": "xy",  # shorter than shingle_n
+        "f": None,  # NULL text
+        "g": None,  # NULL text: f-g must be 0.0, never NULL==NULL 1.0
     }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id string, text string")
+    pair_list = [("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"), ("f", "g"), ("a", "f")]
+    pairs = spark.createDataFrame(pair_list, "id_a string, id_b string")
+    want = {}
+    for x, y in pair_list:
+        sx, sy = _ref_shingle_set(texts[x]), _ref_shingle_set(texts[y])
+        want[(x, y)] = len(sx & sy) / len(sx | sy) if sx | sy else 0.0
     for bc in (True, False):
         got = {
             (r["id_a"], r["id_b"]): r["jaccard"]
@@ -398,12 +358,13 @@ def test_jaccard_on_pair_sets_matches_exploded_verifier(spark):
                 docs, pairs, "doc_id", "text", 5, threshold=0.0, broadcast_pairs=bc
             ).collect()
         }
-        assert set(got) == set(exploded)
+        assert set(got) == set(want)
         for k in got:
-            assert abs(got[k] - exploded[k]) < 1e-12, (bc, k, got[k], exploded[k])
-    assert exploded[("a", "d")] == 1.0  # identical docs
-    assert exploded[("a", "c")] == 0.0  # zero overlap survives at threshold 0
-    assert exploded[("f", "g")] == 0.0  # NULL-text pair: both verifiers 0.0
+            assert abs(got[k] - want[k]) < 1e-12, (bc, k, got[k], want[k])
+    assert want[("a", "d")] == 1.0  # identical docs
+    assert want[("a", "c")] == 0.0  # zero overlap survives at threshold 0
+    assert want[("a", "e")] == 0.0  # sub-shingle-length doc
+    assert want[("f", "g")] == 0.0  # NULL-text pair
 
 
 def test_inrow_signatures_match_exploded_aggregate(spark):

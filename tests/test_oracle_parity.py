@@ -3,12 +3,13 @@ Spark-hash twins and the Spark-typed float folds are correctness-critical (the
 driver's value-hash compare needs BIT-exact oracles), so their equivalences are
 pinned here, not just in ad-hoc validation runs."""
 
+import os
 import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 

@@ -112,3 +112,29 @@ def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):
     assert joined.filter(F.col("embedding").isNotNull()).count() > 0
     stats2 = run(spark, spec)
     assert stats2["parts_written"] == 0 and stats2["parts_skipped"] == stats["parts_written"]
+
+
+def test_build_skips_quarantined_newest_image(spark, tmp_path):
+    """An undecodable image newer than every valid one must not win the
+    as-of match: the label gets the newest VALID feature, never the bad
+    row's timestamp with a null embedding."""
+    import datetime as dt
+
+    from video_features_spark.sources.datagen import (
+        IMAGES_SCHEMA,
+        LABELS_SCHEMA,
+        generate_images,
+    )
+
+    imgs = generate_images(spark, 40, n_entities=1).toPandas().sort_values("ts")
+    imgs.iloc[-1, imgs.columns.get_loc("bytes")] = b"not an image"
+    ip, lp = str(tmp_path / "imgs"), str(tmp_path / "lbls")
+    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
+    label_ts = imgs["ts"].iloc[-1].to_pydatetime() + dt.timedelta(hours=1)
+    spark.createDataFrame(
+        [(imgs["entity_id"].iloc[0], label_ts, 1.0)], LABELS_SCHEMA
+    ).write.parquet(lp)
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=str(tmp_path / "o"))
+    (row,) = build(spark, spec).collect()
+    assert row["ts_asof"] == imgs["ts"].iloc[-2].to_pydatetime()
+    assert row["embedding"] is not None

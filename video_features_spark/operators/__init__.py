@@ -3,7 +3,6 @@ from .audio import extract_audio_features  # noqa: F401
 from .dedup import (  # noqa: F401
     connected_components,
     dedup_groups,
-    embedding_near_dup,
     embedding_near_dup_blocked,
     exact_dedup,
     jaccard_pairs,

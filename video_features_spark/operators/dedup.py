@@ -1,5 +1,6 @@
 """Deduplication operators for training-data pipelines: exact, n-gram Jaccard,
-MinHash+LSH, SimHash, and embedding-cosine near-dup.
+MinHash+LSH, SimHash, embedding-cosine near-dup (hyperplane-LSH blocked), and
+connected components over verified pairs.
 
 No analog exists in the reference (its only uniqueness machinery is the
 duplicate-stem assertion, ``/root/reference/utils/utils.py:91-92``); these are
@@ -13,8 +14,8 @@ Scale notes
 -----------
 - Shingle explosion multiplies rows by ~doc_len; the candidate self-join is on
   the *banded signature* (MinHash) — k·n rows, band cardinality keeps buckets
-  small. Never on raw shingles except in ``jaccard_pairs`` (the exact verifier,
-  used on LSH candidates or small corpora).
+  small. Never on raw shingles except in ``jaccard_pairs`` (the exact
+  full-pair path for small corpora and oracle twins).
 - Stop-shingle removal (``max_shingle_freq``) bounds the hottest buckets the
   same way stop-words bound an inverted index; without it one common shingle
   creates an O(n²) bucket.
@@ -35,48 +36,17 @@ Scale notes
   (``jaccard_on_pair_sets``): per-doc shingle-hash sets are computed in-row
   and pairs intersect via ``array_intersect`` — no Σ_pairs|A| row explosion,
   no reassembly groupBy (measured 2× the exploded verify at sf0.1, identical
-  output). ``jaccard_on_pairs`` keeps the exploded-table form for callers
-  with a pre-built or stop-shingle-filtered table.
+  output).
+- ``connected_components`` picks its path by input size alone: driver-side
+  union-find under a pair cap, distributed large-star/small-star contraction
+  above it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _spread_scan(df: DataFrame, key_col: str | None = None) -> DataFrame:
-    """Lift scan parallelism when the input arrives in fewer partitions than
-    the session can use (guide §2.5 "input skew": a single-row-group parquet
-    file scans as ONE task, serializing every per-row transform above it —
-    the driver testdata tables are exactly that shape). Hash-repartition on
-    ``key_col`` (deterministic, no sort-before-repartition pass; Murmur3 over
-    thousands of distinct ids spreads evenly). No-op when the input is
-    already parallel (the 100 TB case — real corpora arrive in thousands of
-    splits) or streaming, so this never adds a shuffle at scale; locally it
-    trades one tiny exchange for 32-way parallelism of the md5/shingle work.
-    The target is the session's scheduling parallelism, not a constant."""
-    if df.isStreaming:
-        return df
-    try:
-        # probe ONLY scan-shaped plans: on a plan containing shuffles (joins,
-        # aggregates, repartitions) `.rdd` forces AQE to EXECUTE the upstream
-        # stages as a throwaway job — and such plans are already parallel
-        # anyway. Plan inspection is planning-time only, no execution.
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        nodes = {
-            ln.split("'")[0].strip("+-: ").split(" ")[0]
-            for ln in plan.splitlines()
-            if ln.strip()
-        }
-        if not nodes <= {"Project", "Filter", "Relation", "LogicalRDD", "MapInPandas"}:
-            return df
-        target = df.sparkSession.sparkContext.defaultParallelism
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 - parallelism probe must never break a plan
-        return df
-    if nparts >= target:
-        return df
-    return df.repartition(target, key_col) if key_col else df.repartition(target)
+from ..sources.tables import spread_scan
 
 # 2^32 < P (prime); md5-prefix hashes are < 2^32, so (a*h + b) % P is
 # collision-structured like a universal hash family
@@ -150,7 +120,7 @@ def jaccard_pairs(
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle:
     |A∩B| via shingle self-join, |A∪B| = |A|+|B|−|A∩B|. Output
     (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold."""
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     sh = shingle_table(df, id_col, text_col, n, max_shingle_freq)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "h")
@@ -268,8 +238,8 @@ def _shingle_set_expr(text_col: str, n: int):
     """In-row DISTINCT shingle-hash set of a text column. NULL hashes (NULL
     text ⇒ one NULL shingle ⇒ NULL md5) are FILTERED: ``array_intersect``
     treats NULL as equal-to-NULL, so keeping them would score two NULL-text
-    docs as jaccard 1.0 where the exploded verifier's equi-join (NULL never
-    equals NULL) scores 0.0 — the set form must match it."""
+    docs as jaccard 1.0. NULL text is the empty set, as in the exploded
+    ``jaccard_pairs`` equi-join (NULL never equals NULL), and scores 0.0."""
     return F.array_distinct(
         F.filter(
             F.transform(char_shingles(text_col, n), shingle_hash),
@@ -381,70 +351,6 @@ def jaccard_on_pair_sets(
     )
 
 
-def jaccard_on_pairs(
-    sh: DataFrame, pairs: DataFrame, id_col: str, threshold: float = 0.0,
-    broadcast_pairs: bool | None = None,
-    max_broadcast_pairs: int = 500_000,
-) -> DataFrame:
-    """Exact Jaccard restricted to a given candidate pair list — the verifier
-    LSH exists to feed. Only candidate pairs' shingles are joined: the pair
-    list broadcasts into the shingle table (post-LSH candidate sets are small
-    relative to the corpus), so the cost is O(candidates × shingles-per-doc),
-    never the full-corpus shingle self-join.
-
-    ``broadcast_pairs=None`` (default) decides automatically: a bounded probe
-    (``pairs.limit(max_broadcast_pairs + 1).collect()`` — CollectLimit stops
-    early, it never materializes a huge candidate set) picks broadcast for
-    ≤ ``max_broadcast_pairs`` candidates and a shuffle join on id_a above it,
-    so a loose banding config can no longer OOM an executor-memory broadcast.
-    In the broadcast case the probe's rows ARE the full candidate set, so they
-    are localized into a driver-side table and the candidate chain is never
-    evaluated again (the r4 probe re-ran the chain for the broadcast AND the
-    re-anchor join — ~1.5 s/query at sf0.1 paid twice); the collected set is
-    ≤ cap+1 small fixed-width rows, bounded by construction. Pass True/False
-    to force a side.
-
-    ``sh`` is a ``shingle_table`` output; ``pairs`` has (id_a, id_b)."""
-    if broadcast_pairs is None:
-        pairs, broadcast_pairs = _resolve_candidate_pairs(pairs, max_broadcast_pairs)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    sha = sh.select(F.col(id_col).alias("id_a"), "h")
-    shb = sh.select(F.col(id_col).alias("id_b"), "h")
-    cand = F.broadcast(pairs) if broadcast_pairs else pairs
-    inter = (
-        sha.join(cand, "id_a")
-        .join(shb, ["id_b", "h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    # candidate pairs sharing ZERO shingles vanish from the inner join above;
-    # re-anchor on the full pair list so they come back as jaccard = 0.0 —
-    # with the threshold=0.0 default the output must cover every input pair
-    inter = pairs.join(inter, ["id_a", "id_b"], "left").withColumn(
-        "inter", F.coalesce(F.col("inter"), F.lit(0))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    # docs with ZERO shingles (text shorter than shingle_n) have no sizes row
-    # — LEFT joins + coalesce keep their pairs too, and an empty-∪-empty pair
-    # is jaccard 0.0 by convention (guards the 0/0 division)
-    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sa, "id_a", "left")
-        .join(sb, "id_b", "left")
-        .withColumn("sz_a", F.coalesce(F.col("sz_a"), F.lit(0)))
-        .withColumn("sz_b", F.coalesce(F.col("sz_b"), F.lit(0)))
-        .select(
-            "id_a",
-            "id_b",
-            F.when(union_sz == 0, F.lit(0.0))
-            .otherwise(F.col("inter") / union_sz)
-            .alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -463,13 +369,11 @@ def minhash_dedup(
     candidate probe (``_resolve_candidate_pairs`` — an under-cap set is
     localized so the candidate chain never re-evaluates). Verification runs
     through the SET-based verifier (``jaccard_on_pair_sets``, measured 2×
-    the exploded join at sf0.1); the exploded-table verifier
-    (``jaccard_on_pairs``) remains for callers that bring a pre-built or
-    stop-shingle-filtered shingle table. Returns verified
-    (id_a, id_b, jaccard) pairs."""
+    the exploded join at sf0.1). Returns verified (id_a, id_b, jaccard)
+    pairs."""
     # single-split inputs (one-row-group parquet) would otherwise run the
     # whole signature AND verify-side set computation on one task
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
     cands = lsh_candidate_pairs(sigs, id_col, bands)
     localized = False
@@ -594,34 +498,28 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    algorithm: str = "auto",
     max_local_pairs: int = 500_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs → ``(id, component)`` with
     component = the smallest member id.
 
-    ``algorithm='auto'`` (default): a bounded probe
-    (``limit(max_local_pairs+1).collect()``) sizes the edge list. An
-    under-cap graph — the COMMON case: the input is the LSH-VERIFIED pair
-    set, already pruned to actual near-dups — solves driver-side by
-    union-find (exact, sub-second; the cap matches the broadcast probe's.
+    A bounded probe (``limit(max_local_pairs+1).collect()``) sizes the edge
+    list; the path depends on that size alone. An under-cap graph — the
+    COMMON case: the input is the LSH-VERIFIED pair set, already pruned to
+    actual near-dups — solves driver-side by union-find (exact, sub-second; the cap matches the broadcast probe's.
     Honest memory math: 500k collected Rows cost ~100+ bytes each plus a
     ≤1M-entry parent dict — order 100-200 MB transient driver memory, the
     same bounded-collect discipline as the IVF fit sample, NOT the raw 16
     bytes/pair), replacing ~K rounds × ~4 Spark jobs of pure scheduling
-    overhead with one job. An over-cap graph falls through to the
-    distributed star path. The probe runs over a ``localCheckpoint`` of the
-    pair chain, so the chain evaluates exactly ONCE whichever path wins
-    (probing the raw chain would re-evaluate it in the star path's own
-    edge materialization).
-
-    ``algorithm='star'``: alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — converges in O(log² n) rounds on ANY graph shape; THE scale
-    path. ``algorithm='label'``: iterative min-label propagation —
-    O(component diameter) rounds; fine for shallow near-dup clusters but an
-    adversarial duplicate CHAIN makes the round count linear in chain
-    length. All paths are gated equivalent (tests/test_dedup.py).
+    overhead with one job. An over-cap graph (``max_local_pairs=0`` forces
+    it) takes the distributed star path: alternating large-star/small-star
+    contraction (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14) — converges in O(log² n) rounds on ANY graph shape,
+    including an adversarial duplicate CHAIN. The probe runs over a
+    ``localCheckpoint`` of the pair chain, so the chain evaluates exactly
+    ONCE whichever path wins (probing the raw chain would re-evaluate it in
+    the star path's own edge materialization). Both paths are gated against
+    a union-find ground truth (tests/test_dedup.py).
 
     Scale notes (star): every step is a join/groupBy keyed on node id —
     neighbor lists are never materialized (hot star centers stay
@@ -629,60 +527,26 @@ def connected_components(
     the lineage every round — without it the plan doubles per iteration and
     the driver chokes long before the data does. This is the step that turns
     verified pairs into dedup groups (keep min(id) per component)."""
-    if algorithm == "auto":
-        # Materialize the (usually lazy, usually expensive) pair chain ONCE
-        # and probe the materialized set: probing the raw chain would make
-        # the over-cap case evaluate it twice — once for this collect, again
-        # when the star path materializes its own edges. An under-cap set is
-        # <= cap rows so its checkpoint write is trivial; an over-cap set
-        # needed materializing for the star rounds anyway. (Callers passing
-        # an already-checkpointed table pay one redundant copy — bounded by
-        # the data size, never by the chain.)
-        local = pairs.select(id_a, id_b).localCheckpoint()
-        head = local.limit(max_local_pairs + 1).collect()
-        if len(head) <= max_local_pairs:
-            return _cc_local_union_find(local, head, id_a, id_b)
-        pairs = local
-        algorithm = "star"
-    if algorithm == "star":
-        return _cc_alternating_stars(pairs, id_a, id_b, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"algorithm must be auto|star|label, got {algorithm!r}")
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.id)
-            .select(F.col("dst").alias("id"), "component")
-        )
-        new = (
-            labels.unionByName(nbr_min)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()  # cut lineage: iterative plans grow exponentially
-        )
-        changed = (
-            new.join(labels.withColumnRenamed("component", "__old"), "id")
-            .filter(F.col("component") != F.col("__old"))
-            .limit(1)
-            .count()
-        )
-        labels = new
-        if not changed:
-            break
-    return labels
+    # Materialize the (usually lazy, usually expensive) pair chain ONCE and
+    # probe the materialized set: probing the raw chain would make the
+    # over-cap case evaluate it twice — once for this collect, again when the
+    # star path materializes its own edges. An under-cap set is <= cap rows
+    # so its checkpoint write is trivial; an over-cap set needed
+    # materializing for the star rounds anyway. (Callers passing an
+    # already-checkpointed table pay one redundant copy — bounded by the data
+    # size, never by the chain.)
+    local = pairs.select(id_a, id_b).localCheckpoint()
+    head = local.limit(max_local_pairs + 1).collect()
+    if len(head) <= max_local_pairs:
+        return _cc_local_union_find(local, head, id_a, id_b)
+    return _cc_alternating_stars(local, id_a, id_b, max_iter)
 
 
 def _cc_local_union_find(pairs: DataFrame, rows: list, id_a: str, id_b: str) -> DataFrame:
     """Driver-side union-find over an under-cap edge list (see
-    ``connected_components(algorithm='auto')``). Union-by-min keeps each
-    tree's root at the set minimum, so root == component label directly; full
-    path compression makes the pass effectively linear."""
+    ``connected_components``). Union-by-min keeps each tree's root at the
+    set minimum, so root == component label directly; full path compression
+    makes the pass effectively linear."""
     import pandas as pd
 
     parent: dict = {}
@@ -717,7 +581,7 @@ def _cc_local_union_find(pairs: DataFrame, rows: list, id_a: str, id_b: str) -> 
 def _cc_alternating_stars(
     pairs: DataFrame, id_a: str, id_b: str, max_iter: int
 ) -> DataFrame:
-    """See ``connected_components(algorithm='star')``. Each round:
+    """The over-cap path of ``connected_components``. Each round:
 
     - large-star: every node's STRICTLY LARGER neighbors re-point to the
       minimum of its closed neighborhood → emitted edges always point
@@ -799,7 +663,7 @@ def _cc_alternating_stars(
         if _not_star_forest(edges):
             raise RuntimeError(
                 f"connected_components(star) did not converge in {max_iter} "
-                "rounds; raise max_iter or use algorithm='label'"
+                "rounds; raise max_iter"
             )
     return nodes.join(
         edges.select(F.col("src").alias("id"), F.col("dst").alias("component")),
@@ -808,12 +672,10 @@ def _cc_alternating_stars(
     ).select("id", F.coalesce("component", "id").alias("component"))
 
 
-def dedup_groups(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", algorithm: str = "auto"
-) -> DataFrame:
+def dedup_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Pairs → one row per duplicate-cluster member: ``(id, component,
     is_kept)`` where the smallest id of each component is the survivor."""
-    comp = connected_components(pairs, id_a, id_b, algorithm=algorithm)
+    comp = connected_components(pairs, id_a, id_b)
     return comp.withColumn("is_kept", F.col("id") == F.col("component"))
 
 
@@ -826,7 +688,7 @@ def simhash_signatures(
     signature. Near-dup docs differ in few bits (compare with hamming64)."""
     if bits > 32:
         raise ValueError("md5-prefix hash provides 32 bits; bits must be <= 32")
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     toks = df.select(
         id_col,
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("__tok"),
@@ -852,27 +714,6 @@ def hamming64_col(a, b):
     return F.bit_count(F.col(a).bitwiseXOR(F.col(b)) if isinstance(a, str) else a.bitwiseXOR(b))
 
 
-def embedding_near_dup(
-    df: DataFrame,
-    id_col: str,
-    emb_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cos ≥ threshold).
-    Brute-force O(n²) JVM-side — the exact verifier; for corpus scale, first
-    block candidates with ``similarity.hyperplane_buckets`` and verify here."""
-    norm = F.sqrt(F.aggregate(emb_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    base = df.select(F.col(id_col).alias("__id"), F.col(emb_col).alias("__e"), norm.alias("__n"))
-    a = base.select(F.col("__id").alias("id_a"), F.col("__e").alias("e_a"), F.col("__n").alias("n_a"))
-    b = base.select(F.col("__id").alias("id_b"), F.col("__e").alias("e_b"), F.col("__n").alias("n_b"))
-    dot = F.aggregate(F.zip_with("e_a", "e_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (dot / (F.col("n_a") * F.col("n_b"))).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-
-
 def embedding_near_dup_blocked(
     df: DataFrame,
     id_col: str,
@@ -887,8 +728,7 @@ def embedding_near_dup_blocked(
     bucket-local exact-cosine verify ≥ threshold. Candidates are pairs that
     collide in ANY of ``n_tables`` independent hash tables — the self-join runs
     on (table, bucket), never all-pairs, so the plan has no nested-loop join
-    over the corpus (`embedding_near_dup` above stays as the exact/oracle
-    twin). At cos ≥ 0.95 the per-table collision prob is ~0.66 with 4 planes;
+    over the corpus. At cos ≥ 0.95 the per-table collision prob is ~0.66 with 4 planes;
     4 tables give ~99% recall. Planes are seeded literals, so the whole chain
     is deterministic AND SQL-reproducible (the driver oracle is generated from
     the same literals)."""
@@ -896,7 +736,7 @@ def embedding_near_dup_blocked(
 
     # single-split inputs would compute every table's plane dots on one task
     b = _multi_table_buckets(
-        _spread_scan(df.select(id_col, emb_col), id_col), emb_col, dim, n_planes, n_tables, seed
+        spread_scan(df.select(id_col, emb_col), id_col), emb_col, dim, n_planes, n_tables, seed
     )
     norm = F.sqrt(F.aggregate(emb_col, F.lit(0.0), lambda acc, x: acc + x * x))
     b = b.select(

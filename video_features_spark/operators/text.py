@@ -48,12 +48,12 @@ def langid_ngram(
     distinct trigrams found in that language's profile; ``lang_pred`` is the
     argmax (ties broken by language-name order, deterministic). Emits
     ``(id, ngram_<lang>... , lang_pred)``."""
-    from .dedup import _spread_scan
+    from ..sources.tables import spread_scan
 
     profiles = profiles or TRIGRAM_PROFILES
     # single-split inputs would run the per-character trigram extraction on
-    # one task (see dedup._spread_scan)
-    df = _spread_scan(df, id_col)
+    # one task (see tables.spread_scan)
+    df = spread_scan(df, id_col)
     grams = char_trigrams(text_col).alias("__g")
     base = df.select(id_col, grams)
     scores = [
@@ -100,9 +100,10 @@ def curate_corpus(
 
     Emits (id, lang_pred, quality, n_words) for surviving documents.
     """
-    from .dedup import _spread_scan, dedup_groups, jaccard_pairs, minhash_dedup
+    from ..sources.tables import spread_scan
+    from .dedup import dedup_groups, jaccard_pairs, minhash_dedup
 
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     q = quality_score(df, text_col, id_col).select(id_col, "quality", "n_words")
     l = langid_ngram(df, text_col, id_col).select(id_col, "lang_pred")
     # localCheckpoint the SCORED table before the gates: (a) filtering on a
@@ -188,9 +189,10 @@ def winnow_fingerprints(
     detection: group by fingerprint, pairs sharing ≥ t fingerprints are
     plagiarism/near-copy candidates — same join shape as the shingle
     verifier, ~1/w the rows."""
-    from .dedup import _spread_scan, shingle_hash
+    from ..sources.tables import spread_scan
+    from .dedup import shingle_hash
 
-    df = _spread_scan(df, id_col)
+    df = spread_scan(df, id_col)
     t = F.col(text_col)
     pos = F.sequence(F.lit(1), F.greatest(F.length(t) - k + 1, F.lit(1)))
     hashes = F.transform(pos, lambda i: shingle_hash(t.substr(i, F.lit(k))))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.embed import MODEL_REGISTRY
 
@@ -84,26 +84,20 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
             raise ValueError(f"labels table missing column {c!r}")
 
     if spec.modality == "audio":
-        from pyspark.sql import functions as F
-
         from ..operators.audio import extract_audio_features
 
         # clip-level feature = the first 0.96 s example's embedding (one row
-        # per clip, deterministic); quarantined clips drop out of the build
-        # side the same way undecodable images do
-        feats = extract_audio_features(media, spec.model).filter(
-            F.col("error").isNull() & (F.col("example_idx") == 0)
-        )
+        # per clip, deterministic)
+        feats = extract_audio_features(media, spec.model).filter(F.col("example_idx") == 0)
     elif spec.modality == "video":
-        from pyspark.sql import functions as F
-
         from ..operators.video import extract_video_frames
 
         # container -> frame stream -> the SAME image embed operator; each
-        # frame is a feature row at its derived event time (clip ts + idx/fps)
+        # frame is a feature row at its derived event time (clip ts + idx/fps).
+        # An unreadable container's single error row carries no frame bytes,
+        # so its embed fails too and the quarantine filter below drops it.
         frames = (
             extract_video_frames(media)
-            .filter(F.col("error").isNull())
             .select(
                 F.col("video_id").alias("image_id"),
                 "entity_id",
@@ -119,10 +113,13 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
         feats = extract_image_features(
             media, spec.model, precision=spec.precision, augment_seed=spec.augment_seed
         )
+    # quarantined rows (error set, embedding null) never enter the build
+    # side: a bad row newer than every valid one would otherwise win the
+    # as-of match and hand the label a null feature
     right_cols = ["entity_id", "ts", "embedding", *spec.extra_feature_cols]
     return asof_join(
         labels,
-        feats.select(*right_cols),
+        feats.filter(F.col("error").isNull()).select(*right_cols),
         on=["entity_id"],
         left_ts="label_ts",
         right_ts="ts",

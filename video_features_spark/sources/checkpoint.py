@@ -89,17 +89,8 @@ def _content_checksum(cols: Sequence[str]):
 
 
 def load_manifest(spark: SparkSession, base_path: str) -> DataFrame | None:
-    path = _resolve_manifest_dir(base_path)
-    legacy_old = _manifest_path(base_path) + ".__compact_old"
-    if path == _manifest_path(base_path) and not os.path.exists(path) and os.path.exists(legacy_old):
-        # legacy (pre-pointer) base whose rename-based compaction crashed
-        # between its two renames — restore before reading, or resume would
-        # recompute EVERY partition. Restore rename ONLY: leftover cleanup
-        # belongs to compact_manifest (single-writer context) — a reader
-        # must never delete an in-flight compactor's tmp dir.
-        os.rename(legacy_old, path)
     try:
-        return spark.read.parquet(path)
+        return spark.read.parquet(_resolve_manifest_dir(base_path))
     except Exception:  # noqa: BLE001 - first run: no manifest yet
         return None
 
@@ -213,8 +204,8 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     before the flip leaves an orphan generation dir (overwritten by the next
     compaction); a crash after the flip leaves the superseded dir (removed by
     the next compaction). Only this function deletes anything — readers
-    self-heal by renames alone, so a racing ``load_manifest`` can never
-    destroy an in-flight compaction's work.
+    never modify the base, so a racing ``load_manifest`` can never destroy
+    an in-flight compaction's work.
 
     Appends continue to land in the resolved current dir; run compaction
     while no writer is appending (same single-compactor discipline as
@@ -225,16 +216,6 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     import shutil
 
     from pyspark.sql import Window
-
-    # legacy bases: heal a crashed rename-based compaction and clear stale
-    # leftovers (ownership: only the compactor deletes)
-    legacy = _manifest_path(base_path)
-    legacy_tmp, legacy_old = legacy + ".__compact_tmp", legacy + ".__compact_old"
-    if not os.path.exists(legacy) and os.path.exists(legacy_old):
-        os.rename(legacy_old, legacy)
-    for leftover in (legacy_tmp, legacy_old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
 
     manifest = load_manifest(spark, base_path)
     if manifest is None:
@@ -266,6 +247,7 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     for d in os.listdir(base_path):
         if d.startswith("_manifest.g") and d not in keep:
             shutil.rmtree(os.path.join(base_path, d), ignore_errors=True)
+    legacy = _manifest_path(base_path)
     if cur_dir != legacy and os.path.exists(legacy):
         shutil.rmtree(legacy, ignore_errors=True)
     return {"rows_before": before, "rows_after": after, "generation": next_gen}

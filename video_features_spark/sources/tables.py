@@ -39,6 +39,43 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     return {name: load_table(spark, name, sf_dir) for name in TABLES}
 
 
+def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Lift scan parallelism when the input arrives in fewer partitions than
+    the session can use (input skew: a single-row-group parquet file scans
+    as ONE task, serializing every per-row transform above it — the driver
+    testdata tables are exactly that shape). Hash-repartition on
+    ``key_cols`` (deterministic, no sort-before-repartition pass; Murmur3 over
+    thousands of distinct ids spreads evenly; no keys = round-robin). No-op
+    when the input is already parallel (the 100 TB case — real corpora arrive
+    in thousands of splits) or streaming, so this never adds a shuffle at
+    scale; locally it trades one tiny exchange for full-session parallelism
+    of the work above it. The target is the session's scheduling
+    parallelism, not a constant. Results are unchanged (content-identical,
+    redistributed)."""
+    if df.isStreaming:
+        return df
+    try:
+        # probe ONLY scan-shaped plans: on a plan containing shuffles (joins,
+        # aggregates, repartitions) `.rdd` forces AQE to EXECUTE the upstream
+        # stages as a throwaway job — and such plans are already parallel
+        # anyway. Plan inspection is planning-time only, no execution.
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        nodes = {
+            ln.split("'")[0].strip("+-: ").split(" ")[0]
+            for ln in plan.splitlines()
+            if ln.strip()
+        }
+        if not nodes <= {"Project", "Filter", "Relation", "LogicalRDD", "MapInPandas"}:
+            return df
+        target = df.sparkSession.sparkContext.defaultParallelism
+        nparts = df.rdd.getNumPartitions()
+    except Exception:  # noqa: BLE001 - parallelism probe must never break a plan
+        return df
+    if nparts >= target:
+        return df
+    return df.repartition(target, *key_cols)
+
+
 def has_iceberg(spark: SparkSession) -> bool:
     """True when an Iceberg runtime is on the classpath (production clusters);
     this sandbox ships none, so the snapshot source falls back to parquet."""
