@@ -16,11 +16,26 @@ from pyspark.sql import functions as F  # noqa: E402
 from video_features_spark.session import get_spark  # noqa: E402
 
 
-def plan_of(df) -> str:
+def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
+
+
+def optimized_plan_lines(df) -> list[str]:
+    text = plan_of(df, "extended")
+    start = text.index("== Optimized Logical Plan ==")
+    return text[start:text.index("== Physical Plan ==")].splitlines()[1:]
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def is_ancestor(lines: list[str], i: int, j: int) -> bool:
+    """Tree line ``i`` is an ancestor of line ``j`` in an explain() tree."""
+    return i < j and all(_depth(line) > _depth(lines[i]) for line in lines[i + 1 : j + 1])
 
 
 def main(sf_dir: str) -> int:
@@ -198,6 +213,25 @@ def main(sf_dir: str) -> int:
         if "BroadcastExchange" in block and ("__sa" in block or "__sb" in block or "__sset" in block):
             failures.append("forced-shuffle set verify broadcasts a shingle-set side")
             break
+
+    # 14. the flagship's leakage gate survives optimization: the guard's
+    #     raise_error predicate sits in a Filter ABOVE the as-of Window (a
+    #     refactor that lets column pruning or pushdown drop it would make the
+    #     gated write silently ungated)
+    from video_features_spark.operators.asof import leakage_guard
+    from video_features_spark.plans import FeatureJobSpec, build
+    from video_features_spark.sources.datagen import generate_labels
+
+    lbl = tempfile.mkdtemp(prefix="audit_lbls_")
+    generate_labels(spark, 20, n_entities=2).write.mode("overwrite").parquet(lbl)
+    spec = FeatureJobSpec(images_path=d, labels_path=lbl, output_path=lbl + "_out")
+    lines = optimized_plan_lines(
+        leakage_guard(build(spark, spec), "label_ts", "ts_asof", strict=spec.strict)
+    )
+    guards = [i for i, line in enumerate(lines) if "Filter" in line and "raise_error" in line]
+    windows = [i for i, line in enumerate(lines) if line.lstrip(" :+-").startswith("Window ")]
+    if not any(is_ancestor(lines, g, w) for g in guards for w in windows):
+        failures.append("leakage guard's raise_error Filter is not above the as-of Window")
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

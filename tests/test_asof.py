@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from tests.utils import assert_frames_match
 from video_features_spark.operators import asof_join
-from video_features_spark.operators.asof import assert_no_leakage
+from video_features_spark.operators.asof import assert_no_leakage, leakage_guard
 
 
 def _feat(spark, sf_dir):
@@ -65,6 +65,36 @@ def test_leakage_gate(spark, sf_dir):
     assert_no_leakage(res, "ts", "o_orderdate_asof", strict=True)
     # matched rows exist at all (the gate isn't vacuous)
     assert res.filter(F.col("o_orderdate_asof").isNotNull()).count() > 0
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_leakage_guard_equal_timestamp(spark, strict):
+    """A feature AT the label timestamp leaks under strict and is admitted
+    under non-strict; a feature after it leaks under both; no match never
+    leaks. The guard (in-plan raise) and assert_no_leakage (count) agree."""
+    from pyspark.errors import SparkRuntimeException
+
+    rows = [
+        ("a", "2024-01-02 00:00:00", "2024-01-01 00:00:00"),
+        ("b", "2024-01-02 00:00:00", None),
+        ("c", "2024-01-02 00:00:00", "2024-01-02 00:00:00"),
+    ]
+    df = spark.createDataFrame(rows, "entity_id string, label_ts string, ts_asof string").select(
+        "entity_id", F.col("label_ts").cast("timestamp"), F.col("ts_asof").cast("timestamp")
+    )
+    guarded = leakage_guard(df, "label_ts", "ts_asof", strict=strict)
+    if strict:
+        with pytest.raises(SparkRuntimeException, match="temporal leakage.*entity_id=c") as info:
+            guarded.collect()
+        assert info.value.getCondition() == "USER_RAISED_EXCEPTION"
+        with pytest.raises(AssertionError, match="temporal leakage: ts_asof >= label_ts: 1 rows"):
+            assert_no_leakage(df, "label_ts", "ts_asof", strict=True)
+    else:
+        assert sorted(r["entity_id"] for r in guarded.collect()) == ["a", "b", "c"]
+        assert_no_leakage(df, "label_ts", "ts_asof", strict=False)
+    later = df.withColumn("ts_asof", F.col("ts_asof") + F.expr("INTERVAL 1 SECOND"))
+    with pytest.raises(SparkRuntimeException, match="entity_id=c"):
+        leakage_guard(later, "label_ts", "ts_asof", strict=strict).collect()
 
 
 # ---------------------------------------------------------------------------

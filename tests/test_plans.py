@@ -47,11 +47,105 @@ def test_run_end_to_end_and_resume(spark, tmp_path):
     )
     stats = run(spark, spec)
     assert stats["parts_written"] >= 1 and stats["rows_written"] == 60
+    # one pass: every image decoded exactly once
+    assert stats["rows_in"] == 120 and stats["quarantined_rows"] == 0
     # second run resumes: everything already checkpointed, nothing recomputed
     stats2 = run(spark, spec)
     assert stats2["parts_skipped"] == stats["parts_written"]
     assert stats2["rows_written"] == 0
+    assert stats2["rows_in"] == 0  # completed partitions pruned below the UDF
     assert os.path.isdir(os.path.join(op, "_manifest"))
+
+
+def _digest(df):
+    from pyspark.sql import functions as F
+
+    return df.agg(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+    ).first()
+
+
+@pytest.mark.parametrize("label_key,image_key", [("string", "string"), ("int", "long")])
+def test_resume_recomputes_exactly_the_lost_partitions(spark, tmp_path, label_key, image_key):
+    """Crash between the data write and the manifest append of 2 of 8
+    partitions: the rerun decodes only the images of entities in those
+    partitions, rewrites exactly them, and the output is unchanged. The
+    int/long case pins the pruning hash to the JOINED key type (hashing the
+    labels' int key as an int would prune the wrong partitions)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from video_features_spark.sources.checkpoint import (
+        PART_COL,
+        load_manifest,
+        partition_id,
+        read_checkpointed,
+        verify_manifest,
+    )
+    from video_features_spark.sources.datagen import generate_images, generate_labels
+
+    def keyed(df, key_type):
+        return df.withColumn("entity_id", F.expr("substring(entity_id, 2)").cast(key_type))
+
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "out"))
+    keyed(generate_images(spark, 120, n_entities=24), image_key).write.parquet(ip)
+    keyed(generate_labels(spark, 96, n_entities=24), label_key).write.parquet(lp)
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=8)
+    first = run(spark, spec)
+    assert first["rows_in"] == 120 and first["rows_written"] == 96
+    cold = _digest(read_checkpointed(spark, op))
+
+    part_rows = dict(load_manifest(spark, op).select(PART_COL, "row_count").collect())
+    lost = sorted(part_rows)[:2]
+    kept = [r for r in load_manifest(spark, op).collect() if r[PART_COL] not in lost]
+    schema = load_manifest(spark, op).schema
+    shutil.rmtree(os.path.join(op, "_manifest"))
+    spark.createDataFrame(kept, schema).write.parquet(os.path.join(op, "_manifest"))
+
+    stats = run(spark, spec)
+    # the writer's key type: the joined output widens int labels to long
+    key = F.col("entity_id").cast("long" if image_key == "long" else "string")
+    lost_images = spark.read.parquet(ip).filter(partition_id([key], 8).isin(*lost)).count()
+    assert 0 < lost_images < 120
+    assert stats["rows_in"] == lost_images
+    assert stats["parts_written"] == 2
+    assert stats["rows_written"] == sum(part_rows[p] for p in lost)
+    assert verify_manifest(spark, op).count() == 0
+    assert _digest(read_checkpointed(spark, op)) == cold
+
+
+def test_run_fails_on_leakage_before_anything_commits(spark, tmp_path, monkeypatch):
+    """A leaking row fails the write's job: run() raises AssertionError
+    ("temporal leakage…") and commits no data file and no manifest row. The
+    leak is planted by letting the as-of join admit an equal-timestamp
+    feature while the spec (and so the guard) stays strict."""
+    import video_features_spark.operators.asof as asof_mod
+    from video_features_spark.sources.checkpoint import load_manifest
+    from video_features_spark.sources.datagen import LABELS_SCHEMA, generate_images
+
+    imgs = generate_images(spark, 12, n_entities=3)
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "out"))
+    imgs.write.parquet(ip)
+    first = imgs.orderBy("ts").select("entity_id", "ts").first()
+    spark.createDataFrame([(first["entity_id"], first["ts"], 1.0)], LABELS_SCHEMA).write.parquet(lp)
+
+    real_asof = asof_mod.asof_join
+    monkeypatch.setattr(
+        asof_mod, "asof_join", lambda *a, **kw: real_asof(*a, **{**kw, "strict": False})
+    )
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=4)
+    with pytest.raises(AssertionError, match=r"^temporal leakage") as info:
+        run(spark, spec)
+    assert first["entity_id"] in str(info.value)
+    data = os.path.join(op, "data")
+    assert not os.path.exists(data) or not [
+        f for _, _, fs in os.walk(data) for f in fs if f.endswith(".parquet")
+    ]
+    assert load_manifest(spark, op) is None
+    # the same tables pass once the as-of join is strict again
+    monkeypatch.setattr(asof_mod, "asof_join", real_asof)
+    assert run(spark, spec)["rows_written"] == 1
 
 
 def test_audio_job_spec_end_to_end_and_resume(spark, tmp_path):

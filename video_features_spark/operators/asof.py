@@ -252,14 +252,50 @@ def _asof_merge(
     return grouped.applyInPandas(merge, schema=schema)
 
 
+def _leak(label_ts: str, asof_ts: str, strict: bool):
+    """The one leak predicate: a matched feature timestamp at (strict) or
+    after its label timestamp. Null ``asof_ts`` (no match) never leaks."""
+    cond = F.col(asof_ts) >= F.col(label_ts) if strict else F.col(asof_ts) > F.col(label_ts)
+    return F.col(asof_ts).isNotNull() & cond
+
+
+LEAK_MESSAGE_PREFIX = "temporal leakage"
+
+
+def _leak_message(label_ts: str, asof_ts: str, strict: bool) -> str:
+    return f"{LEAK_MESSAGE_PREFIX}: {asof_ts} {'>=' if strict else '>'} {label_ts}"
+
+
 def assert_no_leakage(
     result: DataFrame, label_ts: str, asof_ts: str, strict: bool = True
 ) -> None:
     """Zero-temporal-leakage gate (north rule): every matched feature timestamp
-    must be strictly before (or ≤) its label timestamp. Raises on violation."""
-    cond = (
-        F.col(asof_ts) >= F.col(label_ts) if strict else F.col(asof_ts) > F.col(label_ts)
-    )
-    n = result.filter(F.col(asof_ts).isNotNull() & cond).count()
+    must be strictly before (or ≤) its label timestamp. Raises on violation.
+    Runs its own count; to gate a write without a second pass over the plan,
+    wrap the frame in ``leakage_guard`` instead."""
+    n = result.filter(_leak(label_ts, asof_ts, strict)).count()
     if n:
-        raise AssertionError(f"temporal leakage: {n} rows with {asof_ts} {'>=' if strict else '>'} {label_ts}")
+        raise AssertionError(f"{_leak_message(label_ts, asof_ts, strict)}: {n} rows")
+
+
+def leakage_guard(df: DataFrame, label_ts: str, asof_ts: str, strict: bool = True) -> DataFrame:
+    """``df`` unchanged, except that evaluating any leaking row fails the task
+    with Spark's ``USER_RAISED_EXCEPTION`` (message starts "temporal
+    leakage", names the row's ``entity_id`` when the frame has one, and both
+    timestamps). The gate rides inside whatever action consumes ``df``: a
+    write through it aborts its job before anything commits.
+
+    A ``filter``, not a dropped ``withColumn``: column pruning would delete a
+    dropped check column and the check with it. The predicate reads
+    ``asof_ts``, so the optimizer cannot move it below the as-of window."""
+    who = [F.lit("entity_id="), F.col("entity_id").cast("string"), F.lit(", ")] if (
+        "entity_id" in df.columns
+    ) else []
+    msg = F.concat(
+        F.lit(_leak_message(label_ts, asof_ts, strict) + " ("),
+        *who,
+        F.lit(f"{label_ts}="), F.col(label_ts).cast("string"),
+        F.lit(f", {asof_ts}="), F.col(asof_ts).cast("string"),
+        F.lit(")"),
+    )
+    return df.filter(F.when(_leak(label_ts, asof_ts, strict), F.raise_error(msg)).otherwise(F.lit(True)))

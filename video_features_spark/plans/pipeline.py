@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.embed import MODEL_REGISTRY
 
@@ -59,13 +59,19 @@ REQUIRED_AUDIO_COLS = ("clip_id", "audio", "entity_id", "ts")
 REQUIRED_VIDEO_COLS = ("video_id", "video", "entity_id", "ts")
 REQUIRED_LABEL_COLS = ("entity_id", "label_ts")
 
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_PROPAGATION = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
 
 def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
     """Assemble the flagship logical plan: scan → decode+embed (Arrow UDF) →
     strict as-of join → leakage-safe training rows. Pure plan construction —
     nothing executes until the caller writes/collects."""
-    from ..operators.asof import asof_join
-    from ..operators.features import extract_image_features
+    return _assemble(spec, *_read_inputs(spark, spec))
+
+
+def _read_inputs(spark: SparkSession, spec: FeatureJobSpec) -> tuple[DataFrame, DataFrame]:
+    """The spec's (media, labels) snapshots, schema-checked."""
     from ..sources.tables import read_snapshot
 
     spec.validate()
@@ -82,6 +88,20 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
     for c in REQUIRED_LABEL_COLS:
         if c not in labels.columns:
             raise ValueError(f"labels table missing column {c!r}")
+    return media, labels
+
+
+def _assemble(
+    spec: FeatureJobSpec,
+    media: DataFrame,
+    labels: DataFrame,
+    observation: Observation | None = None,
+) -> DataFrame:
+    """decode+embed ``media`` and as-of join it onto ``labels``. With an
+    ``observation``, the extract output (quarantined rows included) reports
+    ``rows_in`` and ``quarantined_rows`` once an action has run the plan."""
+    from ..operators.asof import asof_join
+    from ..operators.features import extract_image_features
 
     if spec.modality == "audio":
         from ..operators.audio import extract_audio_features
@@ -113,6 +133,12 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
         feats = extract_image_features(
             media, spec.model, precision=spec.precision, augment_seed=spec.augment_seed
         )
+    if observation is not None:
+        feats = feats.observe(
+            observation,
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum(F.col("error").isNotNull().cast("long")).alias("quarantined_rows"),
+        )
     # quarantined rows (error set, embedding null) never enter the build
     # side: a bad row newer than every valid one would otherwise win the
     # as-of match and hand the label a null feature
@@ -129,17 +155,60 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
 
 
 def run(spark: SparkSession, spec: FeatureJobSpec) -> dict:
-    """Execute the spec end-to-end with the leakage gate + checkpointed write;
-    returns the writer's resume stats. Re-run after failure to resume."""
-    from ..operators.asof import assert_no_leakage
-    from ..sources.checkpoint import checkpointed_write
+    """Execute the spec end-to-end in ONE pass over the plan: scan →
+    decode+embed → as-of → leakage guard → checkpointed write. Re-run after
+    failure to resume.
 
-    joined = build(spark, spec)
-    assert_no_leakage(joined, "label_ts", "ts_asof", strict=spec.strict)
-    return checkpointed_write(
-        joined,
-        spec.output_path,
-        ["entity_id"],
-        num_parts=spec.num_parts,
-        snapshot_id=spec.snapshot_id,
+    - Resume: partitions the manifest marks complete for this snapshot are
+      filtered out of both input tables BELOW the decode+embed UDF, so a
+      resume decodes only the images of entities in missing partitions.
+    - Leakage: ``leakage_guard`` fails the write's job on the first leaking
+      row, before anything commits (no data, no manifest row); that failure
+      is re-raised as ``AssertionError("temporal leakage: …")``.
+
+    Returns the writer's stats plus ``rows_in`` (extract output rows this
+    run decoded) and ``quarantined_rows`` (those with a decode/embed error).
+    """
+    from pyspark.errors import SparkRuntimeException
+
+    from ..operators.asof import LEAK_MESSAGE_PREFIX, leakage_guard
+    from ..session import session_conf
+    from ..sources.checkpoint import checkpointed_write, completed_parts, partition_id
+
+    media, labels = _read_inputs(spark, spec)
+    done = completed_parts(spark, spec.output_path, spec.snapshot_id)
+    if done:
+        # hash the key as the JOINED output types it (int and long keys would
+        # otherwise land in different partitions than the writer computes)
+        key = F.col("entity_id").cast(_assemble(spec, media, labels).schema["entity_id"].dataType)
+        pending = ~partition_id([key], spec.num_parts).isin(*done)
+        media, labels = media.filter(pending), labels.filter(pending)
+    observation = Observation()
+    joined = leakage_guard(
+        _assemble(spec, media, labels, observation), "label_ts", "ts_asof", strict=spec.strict
     )
+    # AQE replaces a subtree it finds empty at run time by an empty relation,
+    # and with it the observed extract stage: the observation would then
+    # complete with no metrics (e.g. a resume whose pending entities have no
+    # labels). Keep the stage in the plan for this write.
+    prior_rules = spark.conf.get(_AQE_EXCLUDED_RULES, None)
+    excluded = f"{prior_rules},{_AQE_EMPTY_PROPAGATION}" if prior_rules else _AQE_EMPTY_PROPAGATION
+    try:
+        with session_conf(spark, _AQE_EXCLUDED_RULES, excluded):
+            stats = checkpointed_write(
+                joined,
+                spec.output_path,
+                ["entity_id"],
+                num_parts=spec.num_parts,
+                snapshot_id=spec.snapshot_id,
+            )
+    except SparkRuntimeException as e:
+        message = (e.getMessageParameters() or {}).get("errorMessage", "")
+        if e.getCondition() == "USER_RAISED_EXCEPTION" and message.startswith(LEAK_MESSAGE_PREFIX):
+            raise AssertionError(message) from e
+        raise
+    # read only after the write: the observation completes with the action
+    counts = observation.get
+    stats["rows_in"] = counts["rows_in"]
+    stats["quarantined_rows"] = counts["quarantined_rows"] or 0
+    return stats

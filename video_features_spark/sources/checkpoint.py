@@ -20,10 +20,14 @@ Design
   partitioning-independent).
   A partition whose data wrote but whose manifest row didn't (crash between
   the two) is simply recomputed and overwritten — safe, never corrupt.
-- Resume = left ANTI-join of the input's partition ids against the manifest's
-  completed ids: only missing partitions are computed. The expensive stage
-  (decode/embed UDFs) never runs for completed partitions because the filter
-  sits below it in the plan.
+- Resume = filter the input's partition ids against the manifest's completed
+  ids (``completed_parts``): only missing partitions are written.
+  ``checkpointed_write`` applies that filter to the frame it is given, i.e.
+  ABOVE any Python UDF inside it (Catalyst cannot push a filter through
+  ``MapInArrow``), so a generic caller still pays the UDF for completed
+  partitions. A caller that knows how its key reaches its inputs prunes
+  them below the UDF itself (``plans.run`` does, with ``partition_id``);
+  the writer's filter stays as the backstop.
 - ``verify_manifest`` recounts + re-checksums the data and reports drift —
   the "loads without error" half of the reference's check, done with
   aggregates instead of re-reading into the model.
@@ -33,8 +37,11 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from ..session import session_conf
 
 PART_COL = "__part"
 
@@ -75,10 +82,15 @@ def _resolve_manifest_dir(base: str) -> str:
     return _manifest_path(base) if gen is None else _gen_dir(base, gen)
 
 
+def partition_id(keys: Sequence[str | Column], num_parts: int) -> Column:
+    """Deterministic partition id of the key columns — same key always lands
+    in the same part regardless of cluster size or input order. The hash
+    depends on the key's TYPE (an int and a long of equal value differ)."""
+    return F.pmod(F.xxhash64(*keys), F.lit(num_parts)).cast("int")
+
+
 def with_partition_id(df: DataFrame, key_cols: Sequence[str], num_parts: int) -> DataFrame:
-    """Deterministic partition id from the entity key — same key always lands
-    in the same part regardless of cluster size or input order."""
-    return df.withColumn(PART_COL, F.pmod(F.xxhash64(*key_cols), F.lit(num_parts)).cast("int"))
+    return df.withColumn(PART_COL, partition_id(key_cols, num_parts))
 
 
 def _content_checksum(cols: Sequence[str]):
@@ -89,10 +101,34 @@ def _content_checksum(cols: Sequence[str]):
 
 
 def load_manifest(spark: SparkSession, base_path: str) -> DataFrame | None:
+    path = _resolve_manifest_dir(base_path)
+    # a read of a missing path is a failed query, and every failed query is
+    # posted to the session's query listeners (an Observation's listener logs
+    # an ERROR stack trace for it): skip the read when a plain local path is
+    # absent (a URI with a scheme is left to the reader)
+    if not urlparse(path).scheme and not os.path.isdir(path):
+        return None
     try:
-        return spark.read.parquet(_resolve_manifest_dir(base_path))
+        return spark.read.parquet(path)
     except Exception:  # noqa: BLE001 - first run: no manifest yet
         return None
+
+
+def _manifest_state(manifest: DataFrame, snapshot_id: str) -> tuple[set[int], int]:
+    """(partition ids complete for ``snapshot_id``, highest ``manifest_seq``)
+    in one aggregation."""
+    row = manifest.agg(
+        F.collect_set(F.when(F.col("snapshot_id") == snapshot_id, F.col(PART_COL))).alias("done"),
+        F.max("manifest_seq").alias("seq"),
+    ).first()
+    return set(row["done"]), row["seq"] or 0
+
+
+def completed_parts(spark: SparkSession, base_path: str, snapshot_id: str) -> set[int]:
+    """Partition ids the manifest under ``base_path`` marks complete for
+    ``snapshot_id`` (empty before the first write)."""
+    manifest = load_manifest(spark, base_path)
+    return set() if manifest is None else _manifest_state(manifest, snapshot_id)[0]
 
 
 def checkpointed_write(
@@ -114,27 +150,18 @@ def checkpointed_write(
     done: set[int] = set()
     seq = 0
     if manifest is not None:
-        done = {
-            r[PART_COL]
-            for r in manifest.filter(F.col("snapshot_id") == snapshot_id)
-            .select(PART_COL)
-            .distinct()
-            .collect()
-        }
+        done, last_seq = _manifest_state(manifest, snapshot_id)
         # monotone write sequence: verify_manifest trusts only the LATEST row
         # per partition, so re-writing a base with a new snapshot never leaves
         # stale rows that report false drift
-        seq = (manifest.agg(F.max("manifest_seq")).first()[0] or 0) + 1
+        seq = last_seq + 1
 
     todo = keyed.filter(~F.col(PART_COL).isin(*done)) if done else keyed
     out_cols = [c for c in keyed.columns if c != PART_COL]
 
     stats = {"parts_total": num_parts, "parts_skipped": len(done)}
-    # dynamic partition overwrite ONLY for this write — restore the session's
-    # prior setting afterwards (a shared session must not be mutated for good)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    # dynamic partition overwrite ONLY for this write
+    with session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         # materialize once: write data, then derive manifest rows from what landed.
         # Repartition ON THE PART ID first: a narrow input (e.g. a single-split
         # scan) would otherwise write all ``num_parts`` partition dirs from one
@@ -147,11 +174,6 @@ def checkpointed_write(
             .partitionBy(PART_COL)
             .parquet(_data_path(base_path))
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
     written = spark.read.parquet(_data_path(base_path))
     new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
     manifest_rows = (
