@@ -1,6 +1,7 @@
 """Resume-from-checkpoint gates (SURVEY §5: kill after partition k, rerun,
 identical output, no recompute of completed partitions)."""
 
+import glob
 import shutil
 import tempfile
 
@@ -215,3 +216,69 @@ def test_compaction_crash_before_flip_reader_safe(spark, base, monkeypatch):
     again = checkpointed_write(df, base, ["k"], num_parts=4)
     assert again["parts_skipped"] == 4 and again["parts_written"] == 0
     assert verify_manifest(spark, base).count() == 0
+
+
+MANIFEST_SCHEMA = (
+    "struct<__part:int,row_count:bigint,checksum:decimal(38,0),key_min:string,"
+    "key_max:string,snapshot_id:string,manifest_seq:int>"
+)
+
+
+def _parquet_files(path):
+    return glob.glob(f"{path}/*.parquet")
+
+
+def test_write_is_aqe_sized_and_labelled(spark, base):
+    """The data write is one AQE-coalesced exchange on the part id: a small
+    write with the default 64 parts launches no more than defaultParallelism
+    tasks per stage (a fixed-count repartition launched 64), still lands
+    exactly one file per partition dir, appends exactly one manifest file per
+    call, labels its jobs, and leaves the caller's job group and description
+    as they were."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    tracker = sc.statusTracker()
+    df = spark.range(120).select(F.col("id").alias("k"), F.lit("x").alias("v"))
+    group = "ckpt-write-shape"
+    sc.setJobGroup(group, "caller description")
+    try:
+        s = checkpointed_write(df, base, ["k"])
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert s["parts_total"] == 64 and s["rows_written"] == 120
+
+    by_label: dict[str, list[int]] = {}
+    for j in tracker.getJobIdsForGroup(group):
+        desc = store.job(j).description()
+        by_label.setdefault(desc.get() if desc.isDefined() else None, []).append(j)
+    assert {"checkpoint: write data", "checkpoint: manifest rows",
+            "checkpoint: append manifest"} <= set(by_label)
+    write_tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for j in by_label["checkpoint: write data"]
+        for sid in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(write_tasks) <= sc.defaultParallelism, write_tasks
+
+    part_dirs = glob.glob(f"{base}/data/{PART_COL}=*")
+    assert len(part_dirs) == s["parts_written"]
+    assert all(len(_parquet_files(d)) == 1 for d in part_dirs)
+    assert len(_parquet_files(f"{base}/_manifest")) == 1
+    checkpointed_write(df, base, ["k"], snapshot_id="snapshot-1")
+    assert len(_parquet_files(f"{base}/_manifest")) == 2
+    assert all(len(_parquet_files(d)) == 1 for d in part_dirs)
+    m = load_manifest(spark, base)
+    assert m.schema.simpleString() == MANIFEST_SCHEMA
+    assert verify_manifest(spark, base).count() == 0
+
+
+def test_empty_first_write_creates_empty_manifest(spark, base):
+    df = spark.range(0).select(F.col("id").alias("k"), F.lit("x").alias("v"))
+    s = checkpointed_write(df, base, ["k"], num_parts=4)
+    assert s["parts_written"] == 0 and s["rows_written"] == 0
+    assert len(_parquet_files(f"{base}/_manifest")) == 1
+    m = load_manifest(spark, base)
+    assert m.schema.simpleString() == MANIFEST_SCHEMA and m.count() == 0

@@ -116,6 +116,10 @@ def curate_corpus(
     # connected_components already uses. At 100 TB the checkpoint is one
     # corpus-sized materialization traded against >=4 recomputations of the
     # scan + scoring chain.
+    # Failure semantics (intended): the lineage is cut, so a lost executor
+    # fails the query and the caller reruns it; nothing recomputes from
+    # lineage. Not persist(DISK_ONLY): its session-wide cache entry would need
+    # an unpersist after the caller has consumed the lazy result.
     scored = df.join(q, id_col).join(l, id_col).localCheckpoint()
     kept = scored.filter(F.col("quality") >= min_quality)
     if lang is not None:

@@ -81,3 +81,16 @@ def session_conf(spark: SparkSession, key: str, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prior)
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label the jobs the block launches; restore the prior description (a
+    caller's job group and description survive) after it."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prior)

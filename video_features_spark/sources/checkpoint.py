@@ -12,12 +12,16 @@ Design
   (``__part = pmod(xxhash64(keys), num_parts)``) — the resume granule.
 - Data lands under ``<base>/data`` partitioned by ``__part`` with DYNAMIC
   partition overwrite: re-running a partition replaces exactly that partition →
-  idempotent under crash-and-retry, no cross-run races.
+  idempotent under crash-and-retry, no cross-run races. The write repartitions
+  on ``__part`` with no count, so each partition dir gets one file and AQE
+  sizes the writer tasks to the data, not to ``num_parts``.
 - The manifest (``<base>/_manifest``, or the ``_manifest.ptr``-named
   generation dir once a compaction has run) appends one row per completed
   partition: job/snapshot id, partition id, key range, row count, content
   checksum (sum of per-row xxhash64 — order-independent,
-  partitioning-independent).
+  partitioning-independent). The rows are aggregated from the read-back of
+  what landed, collected to the driver (at most ``num_parts`` of them) and
+  appended as one file per write.
   A partition whose data wrote but whose manifest row didn't (crash between
   the two) is simply recomputed and overwritten — safe, never corrupt.
 - Resume = filter the input's partition ids against the manifest's completed
@@ -41,7 +45,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..session import session_conf
+from ..session import job_description, session_conf
 
 PART_COL = "__part"
 
@@ -161,46 +165,40 @@ def checkpointed_write(
 
     stats = {"parts_total": num_parts, "parts_skipped": len(done)}
     # dynamic partition overwrite ONLY for this write
-    with session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        # materialize once: write data, then derive manifest rows from what landed.
-        # Repartition ON THE PART ID first: a narrow input (e.g. a single-split
-        # scan) would otherwise write all ``num_parts`` partition dirs from one
-        # task, serially; hash-distributing by the part id gives ~num_parts
-        # parallel writers and exactly one file per partition dir (guide §6
-        # output sizing — same rows land in the same dirs either way).
+    with session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"), \
+            job_description(spark, "checkpoint: write data"):
+        # no count: AQE coalesces this REPARTITION_BY_COL exchange to the
+        # data size, never repartition(num_parts, col); one reducer per part id
         (
-            todo.repartition(num_parts, F.col(PART_COL))
+            todo.repartition(F.col(PART_COL))
             .write.mode("overwrite")
             .partitionBy(PART_COL)
             .parquet(_data_path(base_path))
         )
-    written = spark.read.parquet(_data_path(base_path))
-    new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
-    manifest_rows = (
-        new_parts.groupBy(PART_COL)
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            _content_checksum(out_cols),
-            F.min(key_cols[0]).cast("string").alias("key_min"),
-            F.max(key_cols[0]).cast("string").alias("key_max"),
+    # manifest rows from what LANDED; the explicit schema lets a write that
+    # landed no file (empty input) read back as empty
+    with job_description(spark, "checkpoint: manifest rows"):
+        written = spark.read.schema(keyed.schema).parquet(_data_path(base_path))
+        new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
+        manifest_rows = (
+            new_parts.groupBy(PART_COL)
+            .agg(
+                F.count(F.lit(1)).alias("row_count"),
+                _content_checksum(out_cols),
+                F.min(key_cols[0]).cast("string").alias("key_min"),
+                F.max(key_cols[0]).cast("string").alias("key_max"),
+            )
+            .withColumn("snapshot_id", F.lit(snapshot_id))
+            .withColumn("manifest_seq", F.lit(seq))
         )
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("manifest_seq", F.lit(seq))
-        # cached: the append below and the stats aggregate would otherwise
-        # each re-scan + re-checksum the data partitions (one extra full
-        # read of the base per write call)
-        .cache()
-    )
-    try:
-        manifest_rows.write.mode("append").parquet(_resolve_manifest_dir(base_path))
-
-        done_now = manifest_rows.agg(
-            F.count(F.lit(1)).alias("p"), F.sum("row_count").alias("r")
-        ).first()
-    finally:
-        manifest_rows.unpersist()
-    stats["parts_written"] = done_now["p"] or 0
-    stats["rows_written"] = done_now["r"] or 0
+        # at most num_parts rows: one collect feeds the append and the stats
+        rows = manifest_rows.collect()
+    # an empty write still appends, so the manifest dir exists after it
+    with job_description(spark, "checkpoint: append manifest"):
+        appended = spark.createDataFrame(rows, schema=manifest_rows.schema).coalesce(1)
+        appended.write.mode("append").parquet(_resolve_manifest_dir(base_path))
+    stats["parts_written"] = len(rows)
+    stats["rows_written"] = sum(r["row_count"] for r in rows)
     return stats
 
 
