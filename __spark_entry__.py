@@ -2576,7 +2576,11 @@ def _langid_ngram_oracle() -> str:
 def _curate_oracle() -> str:
     """DuckDB twin of operators.text.curate_corpus with the _q_curate_corpus
     parameters (min_quality=0.3, lang='en', jaccard 0.5): quality CTE +
-    langid CTE + jaccard over kept docs + recursive-CTE components."""
+    langid CTE + jaccard over kept docs + recursive-CTE components. ``lang``
+    and ``kept`` are MATERIALIZED: DuckDB otherwise inlines a CTE at every
+    reference, and the MinHash-LSH oracle references ``kept`` many times
+    (measured at sf0.001 on 4 cores: 218.5 s inlined, 7.3 s materialized,
+    same rows)."""
     lang_sql = _langid_ngram_oracle()
     return f"""
         WITH RECURSIVE quality AS (
@@ -2588,8 +2592,8 @@ def _curate_oracle() -> str:
                                   / greatest(length(text), 1) * 4, 1.0)) AS quality,
                  len(string_split_regex(trim(text), '\\s+')) AS n_words
           FROM documents),
-        lang AS ({lang_sql}),
-        kept AS (
+        lang AS MATERIALIZED ({lang_sql}),
+        kept AS MATERIALIZED (
           SELECT d.doc_id, d.text, q.quality, q.n_words, l.lang_pred
           FROM documents d
           JOIN quality q USING (doc_id) JOIN lang l USING (doc_id)

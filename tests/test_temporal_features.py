@@ -7,7 +7,9 @@ from pyspark.sql import functions as F
 
 from video_features_spark.operators.features import extract_image_features
 from video_features_spark.operators.temporal_features import (
+    consecutive_pair_embeddings,
     consecutive_pair_features,
+    consecutive_pair_flow_fields,
     stack_mean_pool,
     zero_shot_classify,
 )
@@ -98,26 +100,58 @@ def test_zero_shot_classify(spark, images):
     assert res.filter((F.col("rank") == 1) & (F.col("prob") <= 0)).count() == 0
 
 
-def test_pair_features_partition_strategy_matches_window(spark, images):
-    """The bytes-shuffle-once strategy must produce the identical pair set
-    and values as the window (lead) strategy, across partitionings."""
-    from video_features_spark.operators.temporal_features import consecutive_pair_features
+PAIR_OPERATORS = {
+    "features": consecutive_pair_features,
+    "embeddings": consecutive_pair_embeddings,
+    "flow": consecutive_pair_flow_fields,
+}
 
-    def key(rows):
-        return sorted(
-            (r["entity_id"], r["ts"], r["next_ts"],
-             None if r["mean_abs_motion"] is None else round(r["mean_abs_motion"], 9),
-             None if r["changed_frac"] is None else round(r["changed_frac"], 9))
-            for r in rows
-        )
 
-    win = key(consecutive_pair_features(images).collect())
-    part = key(consecutive_pair_features(images, strategy="partition").collect())
-    assert win == part
-    part3 = key(
-        consecutive_pair_features(images.repartition(3), strategy="partition", partitions=5).collect()
-    )
-    assert win == part3
+def _rows_by_pair(df):
+    return {(r["entity_id"], r["ts"]): tuple(r) for r in df.collect()}
+
+
+def test_pair_operators_identical_across_partitionings(spark, images):
+    """The one pairing path (lead window) gives the identical pair set and
+    values for 1, 3 and 7 input partitions, for all three pair operators.
+    Equality is exact: pair embeddings must be bit-identical."""
+    for name, op in PAIR_OPERATORS.items():
+        want = _rows_by_pair(op(images))
+        assert len(want) == N - N_ENT, name
+        for k in (1, 3, 7):
+            assert _rows_by_pair(op(images.repartition(k))) == want, (name, k)
+
+
+def test_pair_operators_quarantine_undecodable_frame(spark, images):
+    """One undecodable image in the middle of an entity quarantines exactly
+    the two pairs that contain it (null outputs, ``error`` naming the decode
+    exception's class) in every pair operator; every other row equals the
+    clean run's."""
+    from video_features_spark.functions.codec import decode_image
+
+    garbage = b"not-an-image-payload"
+    with pytest.raises(Exception) as exc:
+        decode_image(garbage, "png")
+    err_cls = type(exc.value).__name__
+    ent = images.filter(F.col("entity_id") == "e00001").orderBy("ts").collect()
+    mid = len(ent) // 2
+    bad = images.withColumn(
+        "bytes",
+        F.when(F.col("image_id") == ent[mid]["image_id"], F.lit(garbage))
+        .otherwise(F.col("bytes")),
+    ).cache()
+    hit = {("e00001", ent[mid - 1]["ts"]), ("e00001", ent[mid]["ts"])}
+    for name, op in PAIR_OPERATORS.items():
+        clean, got = _rows_by_pair(op(images)), _rows_by_pair(op(bad))
+        assert set(got) == set(clean), name
+        for key in hit:
+            row = got[key]
+            assert row[-1].startswith(f"{err_cls}: "), (name, row[-1])
+            assert all(v is None for v in row[3:-1]), name
+        assert {k: v for k, v in got.items() if k not in hit} == {
+            k: v for k, v in clean.items() if k not in hit
+        }, name
+    bad.unpersist()
 
 
 def test_pair_embeddings_deterministic_and_pair_sensitive(spark):

@@ -265,7 +265,6 @@ def jaccard_on_pair_sets(
     n: int = 5,
     threshold: float = 0.0,
     broadcast_pairs: bool = False,
-    prefilter_ids: bool | None = None,
 ) -> DataFrame:
     """Exact Jaccard over a candidate pair list via per-doc shingle SETS:
     join each pair to its two in-row shingle-hash arrays, then
@@ -282,24 +281,19 @@ def jaccard_on_pair_sets(
     (hot-shingle fan-out only matters for candidate GENERATION, which LSH
     banding already bounds). Every pair id exists in ``df`` by construction
     (candidates are drawn from it), and zero-overlap pairs surface naturally
-    with jaccard 0 — no re-anchor join needed."""
-    if prefilter_ids is None:
-        # NOT broadcast_pairs: broadcast only vouches for SMALLNESS, while
-        # the prefilter references `pairs` two more times — on a lazy
-        # candidate chain (the usual external input) that re-executes the
-        # whole signature+banding+self-join pipeline per reference. Only
-        # callers holding a LOCALIZED pair table (minhash_dedup after its
-        # bounded probe) should opt in.
-        prefilter_ids = False
+    with jaccard 0 — no re-anchor join needed.
+
+    ``broadcast_pairs=True``: ``pairs`` is a small driver-local table (as
+    ``_resolve_candidate_pairs`` returns under its cap) — broadcast it and
+    pre-filter both sides to its ids. Leave it False for a lazy candidate
+    chain: the pre-filter references ``pairs`` twice more, and each reference
+    would re-run the chain."""
     base_a = base_b = df
-    if prefilter_ids:
-        # pairs are a small LOCAL table here (the caller vouches — each
-        # semi-join below references them twice more, which would re-evaluate
-        # a lazy candidate chain) — pre-filter each side's docs to the ids
-        # that actually appear in candidates (broadcast semi-join sits BELOW
-        # the set projection, so non-candidate rows never pay the
-        # per-character shingle transform; on a sparse-candidate corpus this
-        # prunes most of the work)
+    if broadcast_pairs:
+        # pre-filter each side's docs to the ids that actually appear in
+        # candidates (broadcast semi-join sits BELOW the set projection, so
+        # non-candidate rows never pay the per-character shingle transform;
+        # on a sparse-candidate corpus this prunes most of the work)
         base_a = df.join(
             F.broadcast(pairs.select(F.col("id_a").alias(id_col)).distinct()), id_col, "semi"
         )
@@ -359,38 +353,22 @@ def minhash_dedup(
     bands: int = 8,
     shingle_n: int = 5,
     threshold: float = 0.7,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: MinHash → LSH banding → candidate pairs →
     exact-Jaccard verification ≥ threshold, computed ONLY over the LSH
     candidates (the pruning is the whole point — verifying against a
     full-corpus Jaccard would re-introduce the O(n²) shingle self-join).
-    ``broadcast_pairs=None`` auto-picks broadcast vs shuffle by a bounded
-    candidate probe (``_resolve_candidate_pairs`` — an under-cap set is
-    localized so the candidate chain never re-evaluates). Verification runs
-    through the SET-based verifier (``jaccard_on_pair_sets``, measured 2×
-    the exploded join at sf0.1). Returns verified (id_a, id_b, jaccard)
-    pairs."""
+    A bounded candidate probe (``_resolve_candidate_pairs``) picks broadcast
+    vs shuffle: an under-cap set is localized, so the candidate chain never
+    re-evaluates, and verify broadcasts it. Verification runs through the
+    SET-based verifier (``jaccard_on_pair_sets``, measured 2× the exploded
+    join at sf0.1). Returns verified (id_a, id_b, jaccard) pairs."""
     # single-split inputs (one-row-group parquet) would otherwise run the
     # whole signature AND verify-side set computation on one task
     df = spread_scan(df, id_col)
     sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
-    cands = lsh_candidate_pairs(sigs, id_col, bands)
-    localized = False
-    if broadcast_pairs is None:
-        cands, broadcast_pairs = _resolve_candidate_pairs(cands, 500_000)
-        localized = broadcast_pairs
-    elif broadcast_pairs:
-        # caller vouches for smallness; still try to localize so the chain
-        # evaluates once — over the cap we honor the broadcast but skip the
-        # id pre-filter (it would re-evaluate the lazy chain twice)
-        local, ok = _resolve_candidate_pairs(cands, 500_000)
-        if ok:
-            cands, localized = local, True
-    return jaccard_on_pair_sets(
-        df, cands, id_col, text_col, shingle_n, threshold, broadcast_pairs,
-        prefilter_ids=localized,
-    )
+    cands, local = _resolve_candidate_pairs(lsh_candidate_pairs(sigs, id_col, bands), 500_000)
+    return jaccard_on_pair_sets(df, cands, id_col, text_col, shingle_n, threshold, local)
 
 
 def near_dup_join(
@@ -535,6 +513,9 @@ def connected_components(
     # materializing for the star rounds anyway. (Callers passing an
     # already-checkpointed table pay one redundant copy — bounded by the data
     # size, never by the chain.)
+    # Failure semantics (intended): the lineage is cut, so a lost executor
+    # fails the query and the caller reruns it; nothing recomputes from
+    # lineage.
     local = pairs.select(id_a, id_b).localCheckpoint()
     head = local.limit(max_local_pairs + 1).collect()
     if len(head) <= max_local_pairs:
@@ -593,7 +574,9 @@ def _cc_alternating_stars(
     groupBy-min + join on the node id; the convergence probe is two LIMIT-1
     scans of the checkpointed round output."""
     # ONE materialization of the (possibly expensive) upstream pair chain;
-    # nodes and working edges both derive from it
+    # nodes and working edges both derive from it. Failure semantics (as at
+    # every cut in this module): a lost executor fails the query; nothing
+    # recomputes from lineage.
     raw = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .distinct()
@@ -649,6 +632,8 @@ def _cc_alternating_stars(
             .distinct()
             .localCheckpoint()  # cut lineage: iterative plans grow per round
         )
+        # a lost executor fails the query here too: a round's checkpoint has
+        # no lineage to recompute from
         edges = new
         # a non-trivial input is never star-shaped after round 0's large-star
         # alone — skip the probe there to save two jobs

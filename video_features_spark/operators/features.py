@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType
 
-from ..functions.codec import decode_image, psnr
+from ..functions.codec import decode_image
 from ..functions.embed import (
     checkpoint_for,
     embed_captions,
@@ -44,19 +44,15 @@ def extract_image_features(
     id_cols: Sequence[str] = ("image_id", "entity_id", "ts"),
     bytes_col: str = "bytes",
     fmt_col: str = "fmt",
-    check_psnr: bool = False,
     precision: str = "fp32",
     augment_seed: int | None = None,
 ) -> DataFrame:
     """(id cols, bytes, fmt) → (id cols, embedding array<float>, error string).
 
-    ``check_psnr=True`` additionally re-encodes losslessly and verifies the
-    decode invariant (PSNR ≥ 40 dB for lossy payloads — input_hint contract);
-    meant for audit runs, not the hot path. ``precision="fp16"`` runs with
-    float16-quantized weights (P20). ``augment_seed`` enables seeded
-    deterministic augmentation (P12): each row's flip/jitter is a pure
-    function of (augment_seed, first id column), so retries/resumes are
-    bit-identical.
+    ``precision="fp16"`` runs with float16-quantized weights (P20).
+    ``augment_seed`` enables seeded deterministic augmentation (P12): each
+    row's flip/jitter is a pure function of (augment_seed, first id column),
+    so retries/resumes are bit-identical.
     """
     get_model(model_name, precision=precision)  # fail fast on the driver
     # captured at plan-build time: python workers don't share driver module
@@ -88,13 +84,6 @@ def extract_image_features(
             for i in range(n):
                 try:
                     img = decode_image(blobs[i], fmts[i])
-                    if check_psnr and fmts[i] != "png":
-                        # lossy invariant: decode(encode(decode(x))) within 40dB
-                        from ..functions.codec import decode_qjpg, encode_qjpg
-
-                        rt = decode_qjpg(encode_qjpg(img))
-                        if psnr(img, rt) < 40.0:
-                            raise ValueError("PSNR < 40dB on lossy roundtrip")
                     if augment_seed is not None:
                         from ..functions.preprocess import augment_deterministic
                         import zlib

@@ -6,20 +6,110 @@ image×text pattern).
 These are the three reference operator families that consume *sequences*, not
 single rows — re-expressed so the windowing lives in DataFrame land (the
 reference hand-rolls it inside its batcher and needs an overlap cache,
-``/root/reference/utils/io.py:120-126``, to avoid losing pairs at batch
-boundaries; ``F.lead`` makes that problem not exist).
+reference ``utils/io.py:120-126``, to avoid losing pairs at batch boundaries;
+``F.lead`` makes that problem not exist).
+
+The three pair operators (``consecutive_pair_features``,
+``consecutive_pair_embeddings``, ``consecutive_pair_flow_fields``) share ONE
+pairing path, ``_consecutive_pairs``: lead window → one Arrow pass that
+decodes both frames of every pair (a decode failure quarantines that pair) →
+the operator's kernel over the whole batch of decoded pairs. Each operator is
+only its kernel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.codec import decode_image
-from ..functions.embed import get_model
+
+# decoded frames a, decoded frames b → one result per pair: a tuple of output
+# values (one per out column), or the exception that quarantines that pair
+PairKernel = Callable[[list, list], list]
+
+
+def _consecutive_pairs(
+    df: DataFrame,
+    entity_col: str,
+    ts_col: str,
+    bytes_col: str,
+    fmt_col: str,
+    out_cols: Sequence[tuple[str, str]],
+    kernel: PairKernel,
+) -> DataFrame:
+    """Pair every image with its entity's NEXT image (``F.lead`` over entity
+    ORDER BY ts — pairs form across any partitioning; the last frame of each
+    entity has no successor and is dropped: T frames → T-1 pairs, as the
+    reference's flow extraction) and run ``kernel`` over the decoded pairs of
+    each Arrow batch in ONE call (batch-level model calls keep the fixed-tile
+    matmul's 8192-row padding amortized). A pair whose decode fails, or for
+    which the kernel returns an exception, gets null ``out_cols`` and
+    ``error = "<ExceptionClass>: <message>"`` (S10 quarantine).
+
+    Output: (entity, ts, next_ts timestamp, *out_cols, error string)."""
+    w = Window.partitionBy(entity_col).orderBy(ts_col)
+    paired = (
+        df.select(entity_col, ts_col, bytes_col, fmt_col)
+        .withColumn("__nb", F.lead(bytes_col).over(w))
+        .withColumn("__nf", F.lead(fmt_col).over(w))
+        .withColumn("__nts", F.lead(ts_col).over(w))
+        .filter(F.col("__nb").isNotNull())
+    )
+    id_schema = ", ".join(
+        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in (entity_col, ts_col)
+    )
+    out_schema = ", ".join(
+        [id_schema, "next_ts timestamp"] + [f"{c} {t}" for c, t in out_cols] + ["error string"]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            results: list = [None] * len(b)
+            fa, fb, ok = [], [], []
+            for i in range(len(b)):
+                try:
+                    a = decode_image(bytes(b[bytes_col].iloc[i]), b[fmt_col].iloc[i])
+                    nxt = decode_image(bytes(b["__nb"].iloc[i]), b["__nf"].iloc[i])
+                except Exception as e:  # noqa: BLE001 - quarantine
+                    results[i] = e
+                    continue
+                fa.append(a)
+                fb.append(nxt)
+                ok.append(i)
+            if ok:
+                for i, r in zip(ok, kernel(fa, fb), strict=True):
+                    results[i] = r
+            out = b[[entity_col, ts_col]].copy()
+            out["next_ts"] = b["__nts"].values
+            for j, (c, _) in enumerate(out_cols):
+                out[c] = [None if isinstance(r, Exception) else r[j] for r in results]
+            out["error"] = [
+                f"{type(r).__name__}: {r}" if isinstance(r, Exception) else None
+                for r in results
+            ]
+            yield out
+
+    return paired.mapInPandas(run, schema=out_schema)
+
+
+def _per_pair(fn: Callable[[np.ndarray, np.ndarray], tuple]) -> PairKernel:
+    """A batch kernel from a per-pair function; an exception it raises
+    quarantines that pair only."""
+
+    def kernel(fa: list, fb: list) -> list:
+        out = []
+        for a, nxt in zip(fa, fb):
+            try:
+                out.append(fn(a, nxt))
+            except Exception as e:  # noqa: BLE001 - quarantine
+                out.append(e)
+        return out
+
+    return kernel
 
 
 def _pair_metrics(a: np.ndarray, nxt: np.ndarray) -> tuple[float, float]:
@@ -35,130 +125,19 @@ def consecutive_pair_features(
     ts_col: str = "ts",
     bytes_col: str = "bytes",
     fmt_col: str = "fmt",
-    strategy: str = "window",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Pair every image with its entity's NEXT image and compute pair features
     (mean absolute pixel motion, changed-pixel fraction) — the relational form
     of the reference's flow extraction: ``model(batch[:-1], batch[1:])`` with
     an overlap=1 batch cache (``models/_base/base_flow_extractor.py:78-84``,
-    ``utils/io.py:120-126``).
-
-    Two strategies, identical output (equivalence-tested):
-
-    ``window``: ``F.lead`` over (entity ORDER BY ts) pairs rows across any
-    partitioning; one shuffle, then a single Arrow pass. Simple and correct —
-    but every image's BYTES travel twice through the window shuffle (once as
-    itself, once as its predecessor's lead), and decode runs twice per image.
-
-    ``partition`` (the 100 TB path): ``repartition(entity)`` +
-    ``sortWithinPartitions(entity, ts)`` + ``mapInPandas`` with a one-row
-    carry across Arrow batches (entity never straddles a partition, only
-    batches). Bytes shuffle ONCE and each image decodes ONCE per batch —
-    halves both network volume and decode CPU for ~25 KB payloads.
-
-    Last frame of each entity has no successor → dropped (same as reference:
-    T frames yield T-1 flow vectors). Pairs with mismatched shapes (the entity
+    ``utils/io.py:120-126``). Pairs with mismatched shapes (the entity
     changed resolution mid-stream) yield null features + an ``error``.
-    """
-    if strategy == "partition":
-        return _pair_features_partition(df, entity_col, ts_col, bytes_col, fmt_col, partitions)
-    if strategy != "window":
-        raise ValueError(f"strategy must be window|partition, got {strategy!r}")
-    w = Window.partitionBy(entity_col).orderBy(ts_col)
-    paired = (
-        df.select(entity_col, ts_col, bytes_col, fmt_col)
-        .withColumn("__nb", F.lead(bytes_col).over(w))
-        .withColumn("__nf", F.lead(fmt_col).over(w))
-        .withColumn("__nts", F.lead(ts_col).over(w))
-        .filter(F.col("__nb").isNotNull())
+    Output: (entity, ts, next_ts, mean_abs_motion, changed_frac, error)."""
+    return _consecutive_pairs(
+        df, entity_col, ts_col, bytes_col, fmt_col,
+        [("mean_abs_motion", "double"), ("changed_frac", "double")],
+        _per_pair(_pair_metrics),
     )
-    id_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in (entity_col, ts_col)
-    )
-    out_schema = (
-        f"{id_schema}, next_ts timestamp, mean_abs_motion double, "
-        f"changed_frac double, error string"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            motion, changed, err = [], [], []
-            for i in range(len(b)):
-                try:
-                    a = decode_image(bytes(b[bytes_col].iloc[i]), b[fmt_col].iloc[i])
-                    nxt = decode_image(bytes(b["__nb"].iloc[i]), b["__nf"].iloc[i])
-                    m, c = _pair_metrics(a, nxt)
-                    motion.append(m)
-                    changed.append(c)
-                    err.append(None)
-                except Exception as e:  # noqa: BLE001 - quarantine
-                    motion.append(None)
-                    changed.append(None)
-                    err.append(f"{type(e).__name__}: {e}")
-            out = b[[entity_col, ts_col]].copy()
-            out["next_ts"] = b["__nts"].values
-            out["mean_abs_motion"] = motion
-            out["changed_frac"] = changed
-            out["error"] = err
-            yield out
-
-    return paired.mapInPandas(run, schema=out_schema)
-
-
-def _pair_features_partition(df, entity_col, ts_col, bytes_col, fmt_col, partitions):
-    """See consecutive_pair_features(strategy='partition'). The carry row
-    bridges Arrow-batch boundaries INSIDE a partition — the Spark-shaped twin
-    of the reference's overlap=1 batch cache (utils/io.py:120-126), needed
-    here only because mapInPandas slices one partition into many batches."""
-    sel = df.select(entity_col, ts_col, bytes_col, fmt_col)
-    npart = partitions or df.sparkSession.sparkContext.defaultParallelism
-    arranged = sel.repartition(npart, entity_col).sortWithinPartitions(entity_col, ts_col)
-    id_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in (entity_col, ts_col)
-    )
-    out_schema = (
-        f"{id_schema}, next_ts timestamp, mean_abs_motion double, "
-        f"changed_frac double, error string"
-    )
-    cols = [entity_col, ts_col, "next_ts", "mean_abs_motion", "changed_frac", "error"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None:
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) < 2:
-                carry = b
-                continue
-            decoded: list = []
-            for i in range(len(b)):
-                try:
-                    decoded.append(decode_image(bytes(b[bytes_col].iloc[i]), b[fmt_col].iloc[i]))
-                except Exception as e:  # noqa: BLE001 - quarantine
-                    decoded.append(e)
-            rows = []
-            ents = b[entity_col].values
-            for i in range(len(b) - 1):
-                if ents[i] != ents[i + 1]:
-                    continue
-                try:
-                    a, nxt = decoded[i], decoded[i + 1]
-                    if isinstance(a, Exception):
-                        raise a
-                    if isinstance(nxt, Exception):
-                        raise nxt
-                    m, c = _pair_metrics(a, nxt)
-                    rows.append((ents[i], b[ts_col].iloc[i], b[ts_col].iloc[i + 1], m, c, None))
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        (ents[i], b[ts_col].iloc[i], b[ts_col].iloc[i + 1],
-                         None, None, f"{type(e).__name__}: {e}")
-                    )
-            carry = b.iloc[[-1]].reset_index(drop=True)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return arranged.mapInPandas(run, schema=out_schema)
 
 
 def consecutive_pair_embeddings(
@@ -172,53 +151,20 @@ def consecutive_pair_embeddings(
 ) -> DataFrame:
     """Pair every image with its entity's next image and run the TWO-INPUT
     model head over each pair — the reference's flow-model architecture
-    (``/root/reference/models/raft/raft_src/raft.py:118-177``:
-    ``model(img_t, img_t+1)`` in one forward) behind the same embed registry
-    as the single-frame encoders. The pairing is the J1 lead window
-    ``consecutive_pair_features`` uses; the decode+forward is one Arrow pass.
-    Mixed-size pairs are legal (both frames resize through the model's
-    preprocess first). Decode failures quarantine per-row (S10 contract).
+    (``models/raft/raft_src/raft.py:118-177``: ``model(img_t, img_t+1)`` in
+    one forward) behind the same embed registry as the single-frame encoders.
+    One ``preprocess_and_embed_pairs`` call per Arrow batch. Mixed-size pairs
+    are legal (both frames resize through the model's preprocess first).
     Output: (entity, ts, next_ts, embedding array<float>, error string)."""
     from ..functions.embed import preprocess_and_embed_pairs
 
-    w = Window.partitionBy(entity_col).orderBy(ts_col)
-    paired = (
-        df.select(entity_col, ts_col, bytes_col, fmt_col)
-        .withColumn("__nb", F.lead(bytes_col).over(w))
-        .withColumn("__nf", F.lead(fmt_col).over(w))
-        .withColumn("__nts", F.lead(ts_col).over(w))
-        .filter(F.col("__nb").isNotNull())
-    )
-    id_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in (entity_col, ts_col)
-    )
-    out_schema = f"{id_schema}, next_ts timestamp, embedding array<float>, error string"
+    def kernel(fa: list, fb: list) -> list:
+        vecs = preprocess_and_embed_pairs(fa, fb, model_name, precision)
+        return [(v.tolist(),) for v in vecs]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            fa, fb, ok, err = [], [], [], []
-            for i in range(len(b)):
-                try:
-                    fa.append(decode_image(bytes(b[bytes_col].iloc[i]), b[fmt_col].iloc[i]))
-                    fb.append(decode_image(bytes(b["__nb"].iloc[i]), b["__nf"].iloc[i]))
-                    ok.append(i)
-                    err.append(None)
-                except Exception as e:  # noqa: BLE001 - quarantine
-                    if len(fa) > len(fb):
-                        fa.pop()
-                    err.append(f"{type(e).__name__}: {e}")
-            embs: list = [None] * len(b)
-            if ok:
-                vecs = preprocess_and_embed_pairs(fa, fb, model_name, precision)
-                for j, i in enumerate(ok):
-                    embs[i] = vecs[j].tolist()
-            out = b[[entity_col, ts_col]].copy()
-            out["next_ts"] = b["__nts"].values
-            out["embedding"] = embs
-            out["error"] = err
-            yield out
-
-    return paired.mapInPandas(run, schema=out_schema)
+    return _consecutive_pairs(
+        df, entity_col, ts_col, bytes_col, fmt_col, [("embedding", "array<float>")], kernel
+    )
 
 
 def consecutive_pair_flow_fields(
@@ -234,42 +180,14 @@ def consecutive_pair_flow_fields(
     motion grid per consecutive pair, ``raft_src/raft.py:118-177``), where
     ``consecutive_pair_embeddings`` matches only its two-input *architecture*
     shape. The field is ``functions.flow.pair_flow_field`` flattened to
-    ``array<float>`` of length ``2*grid*grid`` in (channel, row, col) order.
-    Same J1 lead-window pairing; decode failures quarantine per-row (S10)."""
+    ``array<float>`` of length ``2*grid*grid`` in (channel, row, col) order;
+    a frame smaller than the grid quarantines its pair."""
     from ..functions.flow import pair_flow_field
 
-    w = Window.partitionBy(entity_col).orderBy(ts_col)
-    paired = (
-        df.select(entity_col, ts_col, bytes_col, fmt_col)
-        .withColumn("__nb", F.lead(bytes_col).over(w))
-        .withColumn("__nf", F.lead(fmt_col).over(w))
-        .withColumn("__nts", F.lead(ts_col).over(w))
-        .filter(F.col("__nb").isNotNull())
+    return _consecutive_pairs(
+        df, entity_col, ts_col, bytes_col, fmt_col, [("flow", "array<float>")],
+        _per_pair(lambda a, nxt: (pair_flow_field(a, nxt, grid).ravel().tolist(),)),
     )
-    id_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in (entity_col, ts_col)
-    )
-    out_schema = f"{id_schema}, next_ts timestamp, flow array<float>, error string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            flows, err = [], []
-            for i in range(len(b)):
-                try:
-                    a = decode_image(bytes(b[bytes_col].iloc[i]), b[fmt_col].iloc[i])
-                    nxt = decode_image(bytes(b["__nb"].iloc[i]), b["__nf"].iloc[i])
-                    flows.append(pair_flow_field(a, nxt, grid).ravel().tolist())
-                    err.append(None)
-                except Exception as e:  # noqa: BLE001 - quarantine
-                    flows.append(None)
-                    err.append(f"{type(e).__name__}: {e}")
-            out = b[[entity_col, ts_col]].copy()
-            out["next_ts"] = b["__nts"].values
-            out["flow"] = flows
-            out["error"] = err
-            yield out
-
-    return paired.mapInPandas(run, schema=out_schema)
 
 
 def stack_mean_pool(
