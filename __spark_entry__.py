@@ -1775,7 +1775,7 @@ def _payload_section_audio() -> dict:
         if len(ex):
             ex_all.append(ex)
     # ONE embed over all clips' examples — the fixed-tile matmul pads every
-    # call to a full 8192-row GEMM, so per-clip calls pay the whole tile
+    # call to whole 1024-row GEMM tiles, so per-clip calls pay the whole tile
     vecs = embed_examples(np.concatenate(ex_all)) if ex_all else []
     sqs = _seq_fold_sq_batch(vecs) if len(vecs) else []
     return {"audio": [(*m, sq) for m, sq in zip(meta, sqs)]}

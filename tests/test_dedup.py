@@ -15,6 +15,7 @@ from video_features_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_dedup,
     minhash_signatures,
+    near_dup_join,
     simhash_signatures,
 )
 from video_features_spark.operators.similarity import cosine_topk, lsh_ann_topk
@@ -185,6 +186,20 @@ def test_minhash_dedup_jaccard_values_are_exact(corpus):
     )
     assert j.filter(F.col("jaccard_exact").isNull()).count() == 0  # precision exact
     assert j.filter(F.abs(F.col("jaccard") - F.col("jaccard_exact")) > 1e-12).count() == 0
+
+
+def test_near_dup_join_self_lookup_equals_minhash_dedup(spark, sf_dir):
+    """Looking the corpus up against itself, restricted to doc_id < corpus_id,
+    is the self-dedup: the same pairs with the same jaccard, because the
+    lookup and ``minhash_dedup`` share one signature, banding and verify
+    chain."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    lookup = near_dup_join(docs, docs.withColumnRenamed("doc_id", "corpus_id")).filter(
+        F.col("doc_id") < F.col("corpus_id")
+    )
+    got = sorted(tuple(r) for r in lookup.select("doc_id", "corpus_id", "jaccard").collect())
+    want = sorted(tuple(r) for r in minhash_dedup(docs, "doc_id", "text").collect())
+    assert got and got == want
 
 
 def test_embedding_near_dup_blocked_matches_planted_and_plan(spark, sf_dir):

@@ -104,6 +104,15 @@ def test_error_quarantine(spark, images):
     assert bad.count() == images.filter(F.col("image_id").endswith("0")).count()
     assert bad.filter(F.col("embedding").isNotNull()).count() == 0
     assert good.count() + bad.count() == N
+    # a quarantined row leaves its batch neighbours untouched: every good
+    # row's embedding is bit-identical to a clean run over the same images
+    clean = {r["image_id"]: r["embedding"] for r in extract_image_features(images).collect()}
+    kept = good.select("image_id", "embedding").collect()
+    assert kept and all(
+        np.array(r["embedding"], np.float32).tobytes()
+        == np.array(clean[r["image_id"]], np.float32).tobytes()
+        for r in kept
+    )
 
 
 def test_flagship_asof_leakage_free(spark, images):

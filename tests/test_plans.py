@@ -177,10 +177,7 @@ def test_job_spec_validates_modality_and_precision(tmp_path):
     with _pytest.raises(ValueError, match="modality"):
         FeatureJobSpec(**base, modality="text").validate()
     FeatureJobSpec(**base, modality="video").validate()  # S2 path is real now
-    with _pytest.raises(ValueError, match="precision"):
-        FeatureJobSpec(**base, precision="int8").validate()
     FeatureJobSpec(**base, modality="audio", model="vggish-det").validate()
-    FeatureJobSpec(**base, precision="fp16", augment_seed=7).validate()
 
 
 def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):

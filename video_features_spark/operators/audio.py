@@ -80,9 +80,10 @@ def extract_audio_features(
         for b in batches:
             # decode + frame per row, but run ONE embed over the whole Arrow
             # batch's concatenated examples: the fixed-tile matmul pads every
-            # call to a full 8192-row GEMM, so per-clip calls (1-3 examples
-            # each) pay ~the whole tile per row — batching is ~100x cheaper
-            # and bit-identical (per-row independence is the tile's contract)
+            # call to whole 1024-row GEMM tiles, so per-clip calls (1-3
+            # examples each) pay ~the whole tile per row — batching is far
+            # cheaper and bit-identical (per-row independence is the tile's
+            # contract)
             rows = []
             pending: list = []  # (row_in_rows, n_examples) for embed backfill
             ex_all: list = []

@@ -32,11 +32,14 @@ Scale notes
   tier, persist the DISTINCT (id, h) output of ``shingle_table`` externally
   (e.g. write it bucketed by id via ``sources.bucketed``) and feed the
   downstream stages from that table instead.
-- The minhash_dedup VERIFY avoids the exploded table altogether
-  (``jaccard_on_pair_sets``): per-doc shingle-hash sets are computed in-row
-  and pairs intersect via ``array_intersect`` — no Σ_pairs|A| row explosion,
-  no reassembly groupBy (measured 2× the exploded verify at sf0.1, identical
-  output).
+- The MinHash chain is written once: ``_minhash_expr`` (in-row signature),
+  ``_band_rows`` (exchange barrier + band hashes) and ``_set_jaccard``
+  (staged verify). ``minhash_dedup`` (corpus vs itself) and
+  ``near_dup_join`` (new data vs a corpus) are two compositions of it.
+- The VERIFY avoids the exploded table altogether (``_set_jaccard``):
+  per-doc shingle-hash sets are computed in-row and pairs intersect via
+  ``array_intersect`` — no Σ_pairs|A| row explosion, no reassembly groupBy
+  (measured 2× the exploded verify at sf0.1, identical output).
 - ``connected_components`` picks its path by input size alone: driver-side
   union-find under a pair cap, distributed large-star/small-star contraction
   above it.
@@ -151,6 +154,11 @@ def _sig_min_expr(a: int, b: int):
     return F.array_min(F.transform("__sset", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_P)))
 
 
+def _minhash_expr(n_hashes: int):
+    """The in-row MinHash signature of the ``__sset`` shingle-hash set column."""
+    return F.array(*[_sig_min_expr(a, b) for a, b in _hash_params(n_hashes)])
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 32, shingle_n: int = 5
 ) -> DataFrame:
@@ -162,10 +170,7 @@ def minhash_signatures(
     aggregate at sf0.1, bit-identical values — min over the same distinct
     set commutes with how the set is laid out)."""
     sets = shingle_sets(df, id_col, text_col, shingle_n)
-    return sets.select(
-        id_col,
-        F.array(*[_sig_min_expr(a, b) for a, b in _hash_params(n_hashes)]).alias("minhash"),
-    )
+    return sets.select(id_col, _minhash_expr(n_hashes).alias("minhash"))
 
 
 def band_hash_expr(sig_col: str, band: int, rows_per_band):
@@ -180,29 +185,36 @@ def band_hash_expr(sig_col: str, band: int, rows_per_band):
     return shingle_hash(F.concat_ws(",", vals, F.lit(f"b{band}")))
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, id_col: str, bands: int = 8, sig_col: str = "minhash"
+def _band_rows(
+    sig_df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band, carry=()
 ) -> DataFrame:
-    """Band the signature, hash each band, self-join on (band, band_hash):
-    classic MinHash-LSH candidate generation. Signature length must be
-    divisible by ``bands``.
+    """(id, carry..., band, band_hash): one row per band of each signature.
 
     The input is re-exchanged on the id first: in-row signatures arrive as an
     UNMATERIALIZED projection, and without a barrier Catalyst's projection
     collapse inlines the whole signature computation (shingle set + one
     transform per hash function) into EVERY band-hash expression on BOTH
-    sides of the self-join — measured 2x the total chain at sf0.1. The
-    exchange carries only (id, n_hashes longs) — trivial at any scale — and
-    the two join sides share it via ReuseExchange, so the signature pipeline
-    evaluates exactly once."""
-    sig_df = sig_df.repartition(id_col)
-    rows_per_band = (F.size(F.col(sig_col)) / bands).cast("int")
-    banded = sig_df.select(
+    sides of the join — measured 2x the total chain at sf0.1. The exchange
+    carries only (id, n_hashes longs, carry) — trivial at any scale — and a
+    self-join's two sides share it via ReuseExchange, so the signature
+    pipeline evaluates exactly once. ``repartition`` is streaming-legal."""
+    return sig_df.repartition(id_col).select(
         id_col,
+        *carry,
         F.posexplode(
             F.array(*[band_hash_expr(sig_col, b, rows_per_band) for b in range(bands)])
         ).alias("band", "band_hash"),
     )
+
+
+def lsh_candidate_pairs(
+    sig_df: DataFrame, id_col: str, bands: int = 8, sig_col: str = "minhash"
+) -> DataFrame:
+    """Band the signature, hash each band, self-join on (band, band_hash):
+    classic MinHash-LSH candidate generation. Signature length must be
+    divisible by ``bands``."""
+    rows_per_band = (F.size(F.col(sig_col)) / bands).cast("int")
+    banded = _band_rows(sig_df, id_col, sig_col, bands, rows_per_band)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     return (
@@ -316,33 +328,32 @@ def jaccard_on_pair_sets(
         .hint("shuffle_hash")
     )
     cand = F.broadcast(pairs) if broadcast_pairs else pairs
-    # two-step projection so the O(|A|+|B|) array_intersect runs ONCE per
-    # pair: inlined into the jaccard expression it is evaluated three times
-    # (tie condition, numerator, denominator) — HOF/collection expressions
-    # are CodegenFallback, so codegen subexpression elimination never merges
-    # them. Aliasing intersect/size in their own projection makes the
-    # references attribute reads (same arithmetic, same values).
-    scored = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb")).alias("__i"),
-            (F.size("__sa") + F.size("__sb")).alias("__sz"),
-        )
+    joined = cand.join(a, "id_a").join(b, "id_b")
+    return _set_jaccard(joined, ["id_a", "id_b"], "__sa", "__sb", threshold)
+
+
+def _set_jaccard(df: DataFrame, keep, sa: str, sb: str, threshold: float) -> DataFrame:
+    """(keep..., jaccard) of the shingle-hash set columns ``sa``/``sb`` (0
+    when both sets are empty), filtered to jaccard ≥ ``threshold``.
+
+    The intersect size and the size sum are staged in their own projection so
+    the O(|A|+|B|) ``array_intersect`` runs ONCE per pair: inlined into the
+    jaccard expression it is evaluated three times (tie condition, numerator,
+    denominator) — HOF/collection expressions are CodegenFallback, so codegen
+    subexpression elimination never merges them. The staged references are
+    attribute reads (same arithmetic, same values). A caller that builds the
+    sets in the same pass must stage them in a projection of their own
+    first, for the same reason."""
+    staged = df.select(
+        *keep,
+        F.size(F.array_intersect(sa, sb)).alias("__i"),
+        (F.size(sa) + F.size(sb)).alias("__sz"),
     )
     union_sz = F.col("__sz") - F.col("__i")
-    return (
-        scored.select(
-            "id_a",
-            "id_b",
-            F.when(union_sz == 0, F.lit(0.0))
-            .otherwise(F.col("__i") / union_sz)
-            .alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return staged.select(
+        *keep,
+        F.when(union_sz == 0, F.lit(0.0)).otherwise(F.col("__i") / union_sz).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_dedup(
@@ -410,62 +421,26 @@ def near_dup_join(
     stream to itself, which Structured Streaming forbids)."""
     if n_hashes % bands:
         raise ValueError(f"bands ({bands}) must evenly divide n_hashes ({n_hashes})")
-    rpb = n_hashes // bands
 
     def banded_side(df, id_col, text_col, out_id, out_txt, extra=()):
-        sets = df.select(
+        sig = df.select(
             F.col(id_col).alias(out_id),
             F.col(text_col).alias(out_txt),
             *[F.col(c) for c in extra],
             _shingle_set_expr(text_col, shingle_n).alias("__sset"),
-        )
-        sig = sets.select(
-            out_id, out_txt, *extra,
-            F.array(*[_sig_min_expr(a, b) for a, b in _hash_params(n_hashes)]).alias("__mh"),
-        )
-        # exchange barrier: without it projection collapse inlines the whole
-        # signature computation into every band expression (see
-        # lsh_candidate_pairs); repartition is streaming-legal
-        sig = sig.repartition(out_id)
-        return sig.select(
-            out_id, out_txt, *extra,
-            F.posexplode(
-                F.array(*[band_hash_expr("__mh", b, rpb) for b in range(bands)])
-            ).alias("band", "band_hash"),
-        )
+        ).select(out_id, out_txt, *extra, _minhash_expr(n_hashes).alias("__mh"))
+        return _band_rows(sig, out_id, "__mh", bands, n_hashes // bands, (out_txt, *extra))
 
     lb = banded_side(left, id_left, text_left, "__lid", "__ltxt", tuple(left_extra_cols))
     rb = banded_side(right, id_right, text_right, "__rid", "__rtxt")
-    cand = lb.join(rb, ["band", "band_hash"])
-    # stage the shingle sets, then the intersect size, then the score: inlined
-    # into one expression the per-character set computation and the intersect
-    # are each re-evaluated for every reference (3x for the intersect — HOFs
-    # are CodegenFallback, no subexpression elimination). Same values.
-    staged = cand.select(
+    sets = lb.join(rb, ["band", "band_hash"]).select(
         F.col("__lid").alias(id_left),
         *[F.col(c) for c in left_extra_cols],
         F.col("__rid").alias(id_right),
         _shingle_set_expr("__ltxt", shingle_n).alias("__sl"),
         _shingle_set_expr("__rtxt", shingle_n).alias("__sr"),
-    ).select(
-        id_left,
-        *left_extra_cols,
-        id_right,
-        F.size(F.array_intersect("__sl", "__sr")).alias("__i"),
-        (F.size("__sl") + F.size("__sr")).alias("__sz"),
     )
-    union_sz = F.col("__sz") - F.col("__i")
-    out = (
-        staged.select(
-            id_left,
-            *left_extra_cols,
-            id_right,
-            F.when(union_sz == 0, F.lit(0.0))
-            .otherwise(F.col("__i") / union_sz)
-            .alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    out = _set_jaccard(sets, [id_left, *left_extra_cols, id_right], "__sl", "__sr", threshold)
     if left.isStreaming:
         return out  # caller collapses band duplicates within its watermark
     return out.dropDuplicates([id_left, id_right])
@@ -717,24 +692,18 @@ def embedding_near_dup_blocked(
     4 tables give ~99% recall. Planes are seeded literals, so the whole chain
     is deterministic AND SQL-reproducible (the driver oracle is generated from
     the same literals)."""
-    from .similarity import _multi_table_buckets
+    from .similarity import _dot, _l2, _multi_table_buckets
 
     # single-split inputs would compute every table's plane dots on one task
     b = _multi_table_buckets(
         spread_scan(df.select(id_col, emb_col), id_col), emb_col, dim, n_planes, n_tables, seed
     )
-    norm = F.sqrt(F.aggregate(emb_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    b = b.select(
-        F.col(id_col).alias("__id"), F.col(emb_col).alias("__e"), norm.alias("__n"),
-        "lsh_table", "lsh_bucket",
-    )
-    a = b.select(
-        F.col("__id").alias("id_a"), F.col("__e").alias("e_a"), F.col("__n").alias("n_a"),
-        "lsh_table", "lsh_bucket",
-    )
-    c = b.select(
-        F.col("__id").alias("id_b"), F.col("__e").alias("e_b"), F.col("__n").alias("n_b"),
-        "lsh_table", "lsh_bucket",
+    a, c = (
+        b.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(emb_col).alias(f"e_{s}"),
+            _l2(emb_col).alias(f"n_{s}"), "lsh_table", "lsh_bucket",
+        )
+        for s in "ab"
     )
     # dedup BEFORE scoring: a pair colliding in k tables appears k times, and
     # scoring first would compute the dim-length dot fold k times per pair —
@@ -747,8 +716,5 @@ def embedding_near_dup_blocked(
         .select("id_a", "id_b", "e_a", "n_a", "e_b", "n_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    dot = F.aggregate(F.zip_with("e_a", "e_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        cand.select("id_a", "id_b", (dot / (F.col("n_a") * F.col("n_b"))).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
+    cos = _dot("e_a", "e_b") / (F.col("n_a") * F.col("n_b"))
+    return cand.select("id_a", "id_b", cos.alias("cos")).filter(F.col("cos") >= threshold)

@@ -21,6 +21,7 @@ bytes [+ caption]) are read from the scan.
 
 from __future__ import annotations
 
+import zlib
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -36,6 +37,7 @@ from ..functions.embed import (
     preprocess_and_embed,
     token_count,
 )
+from ..functions.preprocess import augment_deterministic
 
 
 def extract_image_features(
@@ -68,8 +70,9 @@ def extract_image_features(
     # a bytes copy per cell, per-row iloc, float32→python-list boxing of every
     # embedding, pandas→arrow re-inference) measured ~20-30% on top. Arrow in,
     # arrow out: id columns pass through zero-copy, embeddings leave as ONE
-    # flat float32 buffer + offsets. Values are bit-identical (tolist widened
-    # float32→double and the sink narrowed it back — identity round trip).
+    # flat float32 buffer + offsets, a quarantined row as a null zero-length
+    # slot. Values are bit-identical (tolist widened float32→double and the
+    # sink narrowed it back — identity round trip).
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         import pyarrow as pa
 
@@ -85,34 +88,25 @@ def extract_image_features(
                 try:
                     img = decode_image(blobs[i], fmts[i])
                     if augment_seed is not None:
-                        from ..functions.preprocess import augment_deterministic
-                        import zlib
-
                         key = zlib.crc32(str(keys[i]).encode()) ^ augment_seed
                         img = augment_deterministic(img, key)
                     images[i] = img
                 except Exception as e:  # noqa: BLE001 - quarantine, don't die
                     errors[i] = f"{type(e).__name__}: {e}"
-            ok_idx = [i for i in range(n) if images[i] is not None]
+            failed = np.array([img is None for img in images], dtype=bool)
+            ok_idx = np.flatnonzero(~failed)
             embs = (
                 preprocess_and_embed(
                     [images[i] for i in ok_idx], model_name, ckpt, precision
                 )
-                if ok_idx
+                if len(ok_idx)
                 else np.empty((0, 0), np.float32)
             )
-            if len(ok_idx) == n and n:
-                # fast path (the normal case: no quarantines): one offsets
-                # array over the flat float32 buffer, no per-row boxing
-                offsets = pa.array(
-                    np.arange(0, (n + 1) * embs.shape[1], embs.shape[1], dtype=np.int32)
-                )
-                emb_arr = pa.ListArray.from_arrays(offsets, pa.array(embs.ravel()))
-            else:
-                emb_list: list[list[float] | None] = [None] * n
-                for j, i in enumerate(ok_idx):
-                    emb_list[i] = embs[j].tolist()
-                emb_arr = pa.array(emb_list, type=pa.list_(pa.float32()))
+            lengths = np.where(failed, 0, embs.shape[1])
+            offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
+            emb_arr = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(embs.ravel()), mask=pa.array(failed)
+            )
             err_arr = pa.array(errors, type=pa.string())
             yield pa.RecordBatch.from_arrays(
                 [by_name[c] for c in id_cols] + [emb_arr, err_arr],

@@ -27,6 +27,30 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _embedding_side(df: DataFrame, id_col: str, emb_col: str, tag: str, *extra) -> DataFrame:
+    """(id, ``__<tag>e`` embedding, ``__<tag>n`` L2 norm, extra...): one side
+    of a cosine join — ``tag`` is ``c`` for the corpus, ``q`` for queries."""
+    return df.select(
+        id_col, F.col(emb_col).alias(f"__{tag}e"), _l2(emb_col).alias(f"__{tag}n"), *extra
+    )
+
+
+def _cosine(pairs: DataFrame, query_id_col: str, id_col: str) -> DataFrame:
+    """(query_id, id, cos) over joined corpus × query sides, self-matches
+    dropped."""
+    return pairs.filter(F.col(id_col) != F.col(query_id_col)).select(
+        query_id_col,
+        id_col,
+        (_dot("__ce", "__qe") / (F.col("__cn") * F.col("__qn"))).alias("cos"),
+    )
+
+
+def _top_k(sims: DataFrame, query_id_col: str, id_col: str, k: int) -> DataFrame:
+    """Rank each query's matches by cos desc, id asc; keep rank <= k."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -37,17 +61,10 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for every query vector (brute force). Queries are
     broadcast; corpus scans once. Output (query_id, vec_id, cos, rank)."""
-    c = corpus.select(F.col(id_col), F.col(emb_col).alias("__ce"), _l2(emb_col).alias("__cn"))
-    q = queries.select(
-        F.col(query_id_col), F.col(emb_col).alias("__qe"), _l2(emb_col).alias("__qn")
-    )
-    sims = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col)).select(
-        query_id_col,
-        id_col,
-        (_dot("__ce", "__qe") / (F.col("__cn") * F.col("__qn"))).alias("cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    c = _embedding_side(corpus, id_col, emb_col, "c")
+    q = _embedding_side(queries, query_id_col, emb_col, "q")
+    # no join key: Catalyst folds _cosine's self-match filter into the join
+    return _top_k(_cosine(c.join(F.broadcast(q)), query_id_col, id_col), query_id_col, id_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -158,21 +175,11 @@ def ivf_ann_topk(
         corpus, id_col, emb_col, n_centroids=n_centroids, sample_size=sample_size, seed=seed
     )
     c = ivf_assign(corpus.select(id_col, emb_col), cents, emb_col, nprobe=1)
-    c = c.select(id_col, F.col(emb_col).alias("__ce"), _l2(emb_col).alias("__cn"), "ivf_cell")
+    c = _embedding_side(c, id_col, emb_col, "c", "ivf_cell")
     q = ivf_assign(queries.select(query_id_col, emb_col), cents, emb_col, nprobe=nprobe)
-    q = q.select(
-        query_id_col, F.col(emb_col).alias("__qe"), _l2(emb_col).alias("__qn"), "ivf_cell"
-    )
-    sims = (
-        c.join(F.broadcast(q), "ivf_cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col, id_col,
-            (_dot("__ce", "__qe") / (F.col("__cn") * F.col("__qn"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = _embedding_side(q, query_id_col, emb_col, "q", "ivf_cell")
+    sims = _cosine(c.join(F.broadcast(q), "ivf_cell"), query_id_col, id_col)
+    return _top_k(sims, query_id_col, id_col, k)
 
 
 def _planes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -235,24 +242,14 @@ def lsh_ann_topk(
     construction (tests measure it vs the exact baseline); cost drops from
     O(|corpus|·|queries|) to bucket-local work. Tune n_planes↑ for selectivity
     (bigger corpora), n_tables↑ for recall — the standard LSH trade."""
+    keys = ("lsh_table", "lsh_bucket")
     c = _multi_table_buckets(corpus.select(id_col, emb_col), emb_col, dim, n_planes, n_tables, seed)
-    c = c.select(id_col, F.col(emb_col).alias("__ce"), _l2(emb_col).alias("__cn"),
-                 "lsh_table", "lsh_bucket")
+    c = _embedding_side(c, id_col, emb_col, "c", *keys)
     q = _multi_table_buckets(queries.select(query_id_col, emb_col), emb_col, dim, n_planes, n_tables, seed)
-    q = q.select(query_id_col, F.col(emb_col).alias("__qe"), _l2(emb_col).alias("__qn"),
-                 "lsh_table", "lsh_bucket")
+    q = _embedding_side(q, query_id_col, emb_col, "q", *keys)
     # score BEFORE the candidate dedup: the dropDuplicates shuffle then
     # carries (query_id, vec_id, cos) scalars instead of two embedding
     # vectors + norms per row (guide §2.3). Multi-table duplicates of a pair
     # hold identical vectors, hence identical cos.
-    sims = (
-        c.join(F.broadcast(q), ["lsh_table", "lsh_bucket"])
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col, id_col,
-            (_dot("__ce", "__qe") / (F.col("__cn") * F.col("__qn"))).alias("cos"),
-        )
-        .dropDuplicates([query_id_col, id_col])
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    sims = _cosine(c.join(F.broadcast(q), list(keys)), query_id_col, id_col)
+    return _top_k(sims.dropDuplicates([query_id_col, id_col]), query_id_col, id_col, k)

@@ -46,7 +46,7 @@ def _consecutive_pairs(
     entity has no successor and is dropped: T frames → T-1 pairs, as the
     reference's flow extraction) and run ``kernel`` over the decoded pairs of
     each Arrow batch in ONE call (batch-level model calls keep the fixed-tile
-    matmul's 8192-row padding amortized). A pair whose decode fails, or for
+    matmul's 1024-row tile padding amortized). A pair whose decode fails, or for
     which the kernel returns an exception, gets null ``out_cols`` and
     ``error = "<ExceptionClass>: <message>"`` (S10 quarantine).
 

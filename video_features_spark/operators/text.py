@@ -91,17 +91,18 @@ def curate_corpus(
     one logical plan Catalyst optimizes jointly (the quality/lang filters
     prune rows *before* the near-dup stage).
 
-    ``dedup_strategy``: ``"lsh"`` (default, the 100 TB path — MinHash→LSH
-    banding→candidate-only verify; 64 hashes / 16 bands = 4 rows per band,
-    the r=4 selectivity that keeps moderate-similarity pairs out of the
-    candidate set with ~99% recall at jaccard ≥ 0.7) or ``"exact"``
-    (full-pair Jaccard — O(Σ freq²) shingle self-join, the
-    oracle-twin/small-corpus path).
+    The near-dup stage is ``minhash_dedup`` (MinHash→LSH banding→
+    candidate-only verify; 64 hashes / 16 bands = 4 rows per band, the r=4
+    selectivity that keeps moderate-similarity pairs out of the candidate
+    set with ~99% recall at jaccard ≥ 0.7). ``dedup_strategy`` accepts only
+    ``"lsh"``.
 
     Emits (id, lang_pred, quality, n_words) for surviving documents.
     """
+    if dedup_strategy != "lsh":
+        raise ValueError(f"dedup_strategy must be 'lsh', got {dedup_strategy!r}")
     from ..sources.tables import spread_scan
-    from .dedup import dedup_groups, jaccard_pairs, minhash_dedup
+    from .dedup import dedup_groups, minhash_dedup
 
     df = spread_scan(df, id_col)
     q = quality_score(df, text_col, id_col).select(id_col, "quality", "n_words")
@@ -124,16 +125,11 @@ def curate_corpus(
     kept = scored.filter(F.col("quality") >= min_quality)
     if lang is not None:
         kept = kept.filter(F.col("lang_pred") == lang)
-    if dedup_strategy == "lsh":
-        pairs = minhash_dedup(
-            kept, id_col, text_col,
-            n_hashes=n_hashes, bands=bands, shingle_n=shingle_n,
-            threshold=jaccard_threshold,
-        )
-    elif dedup_strategy == "exact":
-        pairs = jaccard_pairs(kept, id_col, text_col, n=shingle_n, threshold=jaccard_threshold)
-    else:
-        raise ValueError(f"dedup_strategy must be lsh|exact, got {dedup_strategy!r}")
+    pairs = minhash_dedup(
+        kept, id_col, text_col,
+        n_hashes=n_hashes, bands=bands, shingle_n=shingle_n,
+        threshold=jaccard_threshold,
+    )
     groups = dedup_groups(pairs).withColumnRenamed("id", id_col)
     return (
         kept.join(groups.select(id_col, "is_kept"), id_col, "left")

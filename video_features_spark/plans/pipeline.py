@@ -12,7 +12,7 @@ owns the physical plan.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -32,9 +32,6 @@ class FeatureJobSpec:
     salt_threshold: int | None = None  # probe rows/entity before hot-key salting
     num_parts: int = 64              # checkpoint/resume granularity
     snapshot_id: str = "snapshot-0"
-    precision: str = "fp32"          # fp32 | fp16 weight quantization (image)
-    augment_seed: int | None = None  # seeded deterministic augmentation (image)
-    extra_feature_cols: tuple[str, ...] = field(default_factory=tuple)
 
     def validate(self) -> None:
         """sanity_check analog (utils/utils.py:74-132): fail fast on the driver."""
@@ -44,8 +41,6 @@ class FeatureJobSpec:
             raise ValueError(
                 f"unknown model {self.model!r}; registry: {sorted(MODEL_REGISTRY)}"
             )
-        if self.precision not in ("fp32", "fp16"):
-            raise ValueError(f"precision must be fp32|fp16, got {self.precision!r}")
         if self.num_parts < 1:
             raise ValueError("num_parts must be >= 1")
         if self.salt_threshold is not None and self.salt_threshold < 1:
@@ -126,13 +121,9 @@ def _assemble(
                 "fmt",
             )
         )
-        feats = extract_image_features(
-            frames, spec.model, precision=spec.precision, augment_seed=spec.augment_seed
-        )
+        feats = extract_image_features(frames, spec.model)
     else:
-        feats = extract_image_features(
-            media, spec.model, precision=spec.precision, augment_seed=spec.augment_seed
-        )
+        feats = extract_image_features(media, spec.model)
     if observation is not None:
         feats = feats.observe(
             observation,
@@ -142,10 +133,9 @@ def _assemble(
     # quarantined rows (error set, embedding null) never enter the build
     # side: a bad row newer than every valid one would otherwise win the
     # as-of match and hand the label a null feature
-    right_cols = ["entity_id", "ts", "embedding", *spec.extra_feature_cols]
     return asof_join(
         labels,
-        feats.filter(F.col("error").isNull()).select(*right_cols),
+        feats.filter(F.col("error").isNull()).select("entity_id", "ts", "embedding"),
         on=["entity_id"],
         left_ts="label_ts",
         right_ts="ts",
