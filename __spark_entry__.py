@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from video_features_spark.operators import (
     asof_join,
@@ -33,12 +33,12 @@ from video_features_spark.operators import (
 from video_features_spark.operators.asof import assert_no_leakage
 from video_features_spark.operators.dedup import (
     _hash_params,
+    exact_dedup,
     jaccard_pairs,
     minhash_dedup,
     simhash_signatures,
 )
-from video_features_spark.operators.similarity import cosine_topk as ann_cosine_topk
-from video_features_spark.operators.similarity import lsh_ann_topk
+from video_features_spark.operators.similarity import cosine_topk, lsh_ann_topk
 from video_features_spark.operators.features import (
     embed_caption_column,
     extract_image_features,
@@ -306,10 +306,7 @@ def _q_grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: keep the first (min event_id) row per (user_id, event_type)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.groupBy("user_id", "event_type").agg(
-        F.min("event_id").alias("keep_event_id"), F.count(F.lit(1)).alias("n_dups")
-    )
+    return exact_dedup(_read(spark, sf_dir, "events"), ["user_id", "event_type"], "event_id")
 
 
 def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,26 +409,10 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k neighbor search: query vecs (vec_id < 5) vs all
     others; broadcast the small query side (ANN baseline)."""
     emb = _read(spark, sf_dir, "embeddings")
-    norm = F.sqrt(F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    q = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-    )
-    sims = (
-        base.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", (dot / (F.col("nrm") * F.col("q_nrm"))).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "vec_id", "rank")
-    )
+    return cosine_topk(emb, queries, k=3).select("query_id", "vec_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -588,6 +569,12 @@ def _assert_count(df: DataFrame, expected: int, msg: str) -> None:
         raise AssertionError(f"invariant violated: {msg}: got {n}, expected {expected}")
 
 
+def _decoded(feats: DataFrame) -> DataFrame:
+    """Feature rows that decoded and embedded: a quarantined row (error set,
+    embedding null) must not win an as-of match (as ``plans._assemble``)."""
+    return feats.filter(F.col("error").isNull())
+
+
 def _q_image_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _n_images(sf_dir)
     n_ent = max(n // 50, 1)
@@ -596,7 +583,7 @@ def _q_image_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = generate_labels(spark, n // 2, n_entities=n_ent)
     joined = asof_join(
         labels,
-        feats.select("entity_id", "ts", "embedding"),
+        _decoded(feats).select("entity_id", "ts", "embedding"),
         on=["entity_id"],
         left_ts="label_ts",
         right_ts="ts",
@@ -848,7 +835,7 @@ def _q_image_phash_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = asof_join(
         probes,
-        feats.select("phash", "ts", "embedding"),
+        _decoded(feats).select("phash", "ts", "embedding"),
         on=["phash"],
         left_ts="label_ts",
         right_ts="ts",
@@ -1276,7 +1263,7 @@ def entry(spark: SparkSession) -> DataFrame:
     labels = generate_labels(spark, 150, n_entities=n_ent)
     joined = asof_join(
         labels,
-        feats.select("entity_id", "ts", "embedding"),
+        _decoded(feats).select("entity_id", "ts", "embedding"),
         on=["entity_id"],
         left_ts="label_ts",
         right_ts="ts",

@@ -3,7 +3,7 @@
     zip -r engine.zip video_features_spark
     spark-submit --py-files engine.zip jobs/run_pipeline.py \
         --images <parquet> --labels <parquet> --output <dir> \
-        [--model clip-small-det] [--num-parts 64] [--snapshot-id snap-1] \
+        [--modality image] [--model clip-small-det] [--num-parts 64] [--snapshot-id snap-1] \
         [--salt-threshold 100000] [--no-strict]
 
 Reads the image+caption table (input_hint schema + entity_id/ts), extracts
@@ -31,7 +31,9 @@ def main() -> None:
     ap.add_argument("--images", required=True, help="parquet dir: input_hint table + entity_id, ts")
     ap.add_argument("--labels", required=True, help="parquet dir: (entity_id, label_ts, label)")
     ap.add_argument("--output", required=True, help="output base dir (data + _manifest)")
-    ap.add_argument("--model", default="clip-small-det")
+    ap.add_argument("--model", default="clip-small-det",
+                    help="registry model; it must serve --modality (an image model such "
+                         "as clip-small-det for image and video, vggish-det for audio)")
     ap.add_argument("--modality", default="image", choices=["image", "audio", "video"],
                     help="media type of --images (audio = WAV clips; video = MJPEG-AVI clips)")
     ap.add_argument("--num-parts", type=int, default=64)
@@ -52,8 +54,6 @@ def main() -> None:
 
     from video_features_spark.plans import FeatureJobSpec, run
 
-    # on a cluster, spark-submit owns master/executors; getOrCreate attaches
-    spark = SparkSession.builder.appName("vfs-point-in-time").getOrCreate()
     spec = FeatureJobSpec(
         images_path=args.images,
         labels_path=args.labels,
@@ -65,6 +65,12 @@ def main() -> None:
         num_parts=args.num_parts,
         snapshot_id=args.snapshot_id,
     )
+    try:
+        spec.validate()  # before any Spark work
+    except ValueError as e:
+        ap.error(str(e))
+    # on a cluster, spark-submit owns master/executors; getOrCreate attaches
+    spark = SparkSession.builder.appName("vfs-point-in-time").getOrCreate()
     stats = run(spark, spec)
     if args.compact_manifest:
         from video_features_spark.sources.checkpoint import compact_manifest

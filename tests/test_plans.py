@@ -168,16 +168,47 @@ def test_audio_job_spec_end_to_end_and_resume(spark, tmp_path):
     assert stats2["parts_written"] == 0 and stats2["parts_skipped"] == stats["parts_written"]
 
 
-def test_job_spec_validates_modality_and_precision(tmp_path):
-    import pytest as _pytest
-
-    from video_features_spark.plans.pipeline import FeatureJobSpec
-
+def test_job_spec_validates_modality_and_model():
     base = dict(images_path="a", labels_path="b", output_path="c")
-    with _pytest.raises(ValueError, match="modality"):
+    with pytest.raises(ValueError, match="modality"):
         FeatureJobSpec(**base, modality="text").validate()
     FeatureJobSpec(**base, modality="video").validate()  # S2 path is real now
     FeatureJobSpec(**base, modality="audio", model="vggish-det").validate()
+    # a model must serve the spec's modality: the audio head cannot embed
+    # frames and an image model cannot embed log-mel examples
+    with pytest.raises(ValueError, match="'clip-small-det' serves image inputs, not audio"):
+        FeatureJobSpec(**base, modality="audio", model="clip-small-det").validate()
+    for modality in ("image", "video"):
+        for model in ("vggish-det", "raft-small-det"):
+            with pytest.raises(ValueError, match=f"'{model}' serves .* inputs, not image"):
+                FeatureJobSpec(**base, modality=modality, model=model).validate()
+
+
+def test_operators_reject_mismatched_model_before_any_job(spark):
+    """A wrong model name fails on the driver while the plan is built — not
+    inside a task, and not by silently seeding weights from the name."""
+    import datetime as dt
+
+    from video_features_spark.operators.audio import extract_audio_features
+    from video_features_spark.operators.temporal_features import consecutive_pair_embeddings
+
+    ts = dt.datetime(2024, 1, 1)
+    clips = spark.createDataFrame(
+        [("c0", "e0", ts, b"RIFF")], "clip_id string, entity_id string, ts timestamp, audio binary"
+    )
+    frames = spark.createDataFrame(
+        [("e0", ts, b"\x89PNG", "png")], "entity_id string, ts timestamp, bytes binary, fmt string"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("mismatched-model", "must stay empty")
+    try:
+        with pytest.raises(ValueError, match="unknown model 'no-such-model'; audio models"):
+            extract_audio_features(clips, "no-such-model")
+        with pytest.raises(ValueError, match="'clip-small-det' serves image inputs, not pair"):
+            consecutive_pair_embeddings(frames, "clip-small-det")
+        assert sc.statusTracker().getJobIdsForGroup("mismatched-model") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):

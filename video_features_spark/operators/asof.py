@@ -124,13 +124,14 @@ def asof_join(
     raise ValueError(f"strategy must be window|merge, got {strategy!r}")
 
 
-def _build_tiebreak(right_cols, asof_ts):
+def _build_tiebreak(payload, ts):
     """Deterministic tiebreak among build rows sharing (key, ts): xxhash64 of
-    the full build payload. Without it, which duplicate-(key, ts) build row the
-    as-of join picks depends on input partitioning/order (datagen produces such
-    dups: same phash+ts, different embeddings). Both strategies use the SAME
-    hash so window and merge pick the same winner: the max-hash row."""
-    return F.xxhash64(F.struct(*[F.col(c) for c in right_cols], F.col(asof_ts)))
+    the full build payload (``payload`` and ``ts``: column names or Columns).
+    Without it, which duplicate-(key, ts) build row the as-of join picks
+    depends on input partitioning/order (datagen produces such dups: same
+    phash+ts, different embeddings). Both strategies and the streaming lookup
+    use the SAME hash so they pick the same winner: the max-hash row."""
+    return F.xxhash64(F.struct(*payload, ts))
 
 
 def _asof_window(
@@ -204,9 +205,7 @@ def _asof_merge(
         *[F.col(c).alias(f"__r_{c}") for c in right_cols],
         # same payload hash as the window strategy so both pick the same
         # winner among duplicate-(key, ts) build rows
-        F.xxhash64(
-            F.struct(*[F.col(c) for c in right_cols], F.col(right_ts).cast("timestamp"))
-        ).alias("__tb"),
+        _build_tiebreak(right_cols, F.col(right_ts).cast("timestamp")).alias("__tb"),
         bucket,
     )
 

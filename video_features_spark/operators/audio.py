@@ -6,9 +6,9 @@ ffmpeg demux + wav read (``/root/reference/models/vggish/extract_vggish.py:42-57
 ``utils/utils.py:104-132``), mono mixdown and 0.96 s log-mel examples
 (``vggish_src/vggish_input.py:53-70``), mel matmul
 (``vggish_src/mel_features.py:200-221``), 128-d embedding
-(``vggish_src/vggish_slim.py``; weights here are the seeded-deterministic
-stand-in, same contract as ``functions/embed.py`` — swap via the identical
-``register_checkpoint`` seam if real weights are available).
+(``vggish_src/vggish_slim.py``; the ``vggish-det`` model in
+``functions/embed.py``'s registry, with the same weight cache and projection
+head as the image and pair encoders).
 
 Same scale shape as the image pipeline: map-only (no shuffle), column-pruned
 scan, per-row independence ⇒ bit-identical output under any partitioning.
@@ -16,46 +16,23 @@ scan, per-row independence ⇒ bit-identical output under any partitioning.
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.embed import _head, _model
 from ..functions.wav import demux_audio, logmel_examples, mono_mixdown
-
-_AUDIO_DIM = 128
-_EX_FRAMES = 96
-_EX_FEATS = _EX_FRAMES * 64
-
-# per-executor-process weight cache (same pattern as functions/embed._CACHE)
-_CACHE: dict[str, np.ndarray] = {}
-
-
-def _audio_weights(model_name: str = "vggish-det") -> np.ndarray:
-    if model_name not in _CACHE:
-        seed = zlib.crc32(model_name.encode()) & 0x7FFFFFFF
-        rng = np.random.default_rng(seed)
-        _CACHE[model_name] = (
-            rng.standard_normal((_AUDIO_DIM, _EX_FEATS)).astype(np.float32)
-            / np.sqrt(_EX_FEATS)
-        )
-    return _CACHE[model_name]
 
 
 def embed_examples(examples: np.ndarray, model_name: str = "vggish-det") -> np.ndarray:
-    """(n, 96, 64) log-mel examples → (n, 128) L2-normalized float32. Row
-    independence via the fixed-tile matmul (bit-equal under any batching)."""
-    from ..functions.preprocess import _tiled_matmul
-
+    """(n, 96, 64) log-mel examples → (n, 128) L2-normalized float32 through
+    the shared embed head (bit-equal under any batching)."""
+    spec, w = _model(model_name, "audio")
     if not len(examples):
-        return np.empty((0, _AUDIO_DIM), np.float32)
-    w = _audio_weights(model_name)
-    flat = np.ascontiguousarray(examples.reshape(len(examples), -1).astype(np.float32))
-    emb = np.tanh(_tiled_matmul(flat, w.T))
-    norms = np.linalg.norm(emb, axis=1, keepdims=True)
-    return (emb / np.maximum(norms, 1e-12)).astype(np.float32)
+        return np.empty((0, spec.dim), np.float32)
+    return _head(examples.reshape(len(examples), -1).astype(np.float32), w)
 
 
 def extract_audio_features(
@@ -72,6 +49,7 @@ def extract_audio_features(
     (example_idx null, error 'too_short') so no input disappears silently —
     the reference's skip-on-missing becomes a queryable fact (S10 pattern).
     """
+    _model(model_name, "audio")  # fail fast on the driver
     id_cols = list(id_cols)
     schema_id = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols)
     out_schema = f"{schema_id}, example_idx int, embedding array<float>, error string"

@@ -31,9 +31,9 @@ from pyspark.sql.types import ArrayType, FloatType, IntegerType
 
 from ..functions.codec import decode_image
 from ..functions.embed import (
+    _model,
     checkpoint_for,
     embed_captions,
-    get_model,
     preprocess_and_embed,
     token_count,
 )
@@ -56,7 +56,7 @@ def extract_image_features(
     row's flip/jitter is a pure function of (augment_seed, first id column),
     so retries/resumes are bit-identical.
     """
-    get_model(model_name, precision=precision)  # fail fast on the driver
+    _model(model_name, "image", precision=precision)  # fail fast on the driver
     # captured at plan-build time: python workers don't share driver module
     # state, so the (SparkFiles name, sha256) pin rides the UDF closure
     ckpt = checkpoint_for(model_name)
@@ -124,7 +124,7 @@ def embed_caption_column(
 ) -> DataFrame:
     """Caption → L2-normalized embedding (CLIP text-tower analog,
     clip_src/model.py:343-356), as a scalar Arrow-batched pandas UDF."""
-    get_model(model_name)
+    _model(model_name, "image")  # fail fast on the driver
     ckpt = checkpoint_for(model_name)
 
     @F.pandas_udf(ArrayType(FloatType()))
@@ -184,9 +184,6 @@ def image_text_similarity(
     matmul (``extract_clip.py:86-108``, logit_scale * v @ t.T) degenerates to a
     same-row dot product in our keyed data model (SURVEY.md J2). Pure JVM:
     ``F.zip_with`` + ``F.aggregate``, no Python."""
-    dot = F.aggregate(
-        F.zip_with(F.col(img_col), F.col(txt_col), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.withColumn(out_col, (F.lit(logit_scale) * dot).cast("float"))
+    from .similarity import _dot
+
+    return df.withColumn(out_col, (F.lit(logit_scale) * _dot(img_col, txt_col)).cast("float"))

@@ -152,11 +152,15 @@ def consecutive_pair_embeddings(
     """Pair every image with its entity's next image and run the TWO-INPUT
     model head over each pair — the reference's flow-model architecture
     (``models/raft/raft_src/raft.py:118-177``: ``model(img_t, img_t+1)`` in
-    one forward) behind the same embed registry as the single-frame encoders.
-    One ``preprocess_and_embed_pairs`` call per Arrow batch. Mixed-size pairs
-    are legal (both frames resize through the model's preprocess first).
+    one forward) behind the same embed registry, weight cache and head as the
+    single-frame encoders. The model must be a pair model (checked on the
+    driver). One ``preprocess_and_embed_pairs`` call per Arrow batch.
+    Mixed-size pairs are legal (both frames resize through the model's
+    preprocess first).
     Output: (entity, ts, next_ts, embedding array<float>, error string)."""
-    from ..functions.embed import preprocess_and_embed_pairs
+    from ..functions.embed import _model, preprocess_and_embed_pairs
+
+    _model(model_name, "pair", precision=precision)  # fail fast on the driver
 
     def kernel(fa: list, fb: list) -> list:
         vecs = preprocess_and_embed_pairs(fa, fb, model_name, precision)
@@ -260,6 +264,7 @@ def zero_shot_classify(
     ``utils/utils.py:40-46``). The class table is tiny → computed driver-side
     once, broadcast-joined; per-row softmax over classes in JVM expressions."""
     from ..functions.embed import embed_captions
+    from .similarity import _dot
 
     spark = image_feats.sparkSession
     cls_emb = embed_captions(list(class_captions), model_name)
@@ -267,13 +272,9 @@ def zero_shot_classify(
         [(i, c, e.tolist()) for i, (c, e) in enumerate(zip(class_captions, cls_emb))],
         "class_id int, class_caption string, class_embedding array<float>",
     )
-    dot = F.aggregate(
-        F.zip_with(emb_col, "class_embedding", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    logit = F.lit(logit_scale) * _dot(emb_col, "class_embedding")
     scored = image_feats.crossJoin(F.broadcast(cls_df)).select(
-        id_col, "class_id", "class_caption", (F.lit(logit_scale) * dot).alias("logit")
+        id_col, "class_id", "class_caption", logit.alias("logit")
     )
     # softmax over ALL classes (reference softmaxes the full logit row before
     # ranking, extract_clip.py:100-104) — normalizing after the top-k filter

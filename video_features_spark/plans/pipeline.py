@@ -16,7 +16,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..functions.embed import MODEL_REGISTRY
+from ..functions.embed import _spec_for
 
 
 @dataclass(frozen=True)
@@ -37,10 +37,8 @@ class FeatureJobSpec:
         """sanity_check analog (utils/utils.py:74-132): fail fast on the driver."""
         if self.modality not in ("image", "audio", "video"):
             raise ValueError(f"modality must be image|audio|video, got {self.modality!r}")
-        if self.modality in ("image", "video") and self.model not in MODEL_REGISTRY:
-            raise ValueError(
-                f"unknown model {self.model!r}; registry: {sorted(MODEL_REGISTRY)}"
-            )
+        # image and video jobs embed frames with an image model
+        _spec_for(self.model, "audio" if self.modality == "audio" else "image")
         if self.num_parts < 1:
             raise ValueError("num_parts must be >= 1")
         if self.salt_threshold is not None and self.salt_threshold < 1:

@@ -40,19 +40,20 @@ def stream_tumbling_agg(
     """Event-time tumbling/sliding aggregation with a watermark: the streaming
     twin of ``operators.windows.tumbling_window_agg`` (same output schema).
     Late rows beyond ``watermark`` are dropped; state is bounded by it."""
-    win = F.window(ts_col, window_duration, slide_duration or window_duration)
-    return (
-        _tz(sdf, ts_col).withWatermark(ts_col, watermark)
-        .groupBy(*entity_cols, win.alias("win"))
+    from ..operators.windows import tumbling_window_agg
+
+    return tumbling_window_agg(
+        _tz(sdf, ts_col).withWatermark(ts_col, watermark),
+        entity_cols,
+        ts_col,
+        window_duration,
         # decimal accumulate → double after: batch-twin parity must be exact
         # and float sum order varies with state-store merge order
-        .agg(
+        [
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .withColumn("win_start", F.col("win.start"))
-        .withColumn("win_end", F.col("win.end"))
-        .drop("win")
+        ],
+        slide_duration,
     )
 
 
@@ -209,6 +210,8 @@ def stream_asof_lookup(
     """
     from functools import reduce
 
+    from ..operators.asof import _build_tiebreak
+
     on = list(on)
     if right_cols is None:
         right_cols = [c for c in static_features.columns if c not in on and c != right_ts]
@@ -227,14 +230,11 @@ def stream_asof_lookup(
     )
     joined = p.join(b, cond, "left")
     probe_cols = [c for c in probes.columns if c not in on and c != left_ts]
-    # same tiebreak hash as operators.asof._build_tiebreak: struct field order
-    # makes max() compare (ts, hash) before any payload field
-    tb = F.xxhash64(
-        F.struct(*[F.col(f"__b.{c}") for c in right_cols], F.col(f"__b.{right_ts}"))
-    )
+    # the batch strategies' tiebreak hash; struct field order makes max()
+    # compare (ts, hash) before any payload field
     payload = F.struct(
         F.col(f"__b.{right_ts}").alias(asof_ts),
-        tb.alias("__tb"),
+        _build_tiebreak([f"__b.{c}" for c in right_cols], f"__b.{right_ts}").alias("__tb"),
         *[F.col(f"__b.{c}").alias(c) for c in right_cols],
     )
     agg = joined.groupBy(
