@@ -16,6 +16,8 @@ tests/.
 from __future__ import annotations
 
 import os
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -44,10 +46,9 @@ from video_features_spark.operators.features import (
     extract_image_features,
     image_text_similarity,
 )
+from video_features_spark.session import session_conf
 from video_features_spark.sources.datagen import generate_images, generate_labels
 from video_features_spark.sources.tables import spread_scan
-
-SF001 = "/root/testdata/sf0.001"
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -553,20 +554,69 @@ def _n_images(sf_dir: str) -> int:
     return _SF_ROWS.get(os.path.basename(sf_dir.rstrip("/")), 1000)
 
 
-def _assert_empty(df: DataFrame, cond, msg: str) -> None:
-    """In-query invariant for rows-only queries: generation is deterministic,
-    so expected counts/bounds are computable from the parameters — a silent
-    operator regression turns into a loud driver error instead of an
-    unchecked row count."""
-    n = df.filter(cond).limit(1).count()
-    if n:
-        raise AssertionError(f"invariant violated: {msg}")
+def _count_is(expected: int, msg: str, view: Callable[[DataFrame], DataFrame] | None = None):
+    """Gate: the frame (or ``view`` of it) has exactly ``expected`` rows."""
+
+    def gate(df: DataFrame) -> None:
+        n = (view(df) if view else df).count()
+        if n != expected:
+            raise AssertionError(f"invariant violated: {msg}: got {n}, expected {expected}")
+
+    return gate
 
 
-def _assert_count(df: DataFrame, expected: int, msg: str) -> None:
-    n = df.count()
-    if n != expected:
-        raise AssertionError(f"invariant violated: {msg}: got {n}, expected {expected}")
+def _none_where(cond, msg: str, view: Callable[[DataFrame], DataFrame] | None = None):
+    """Gate: no row of the frame (or ``view`` of it) satisfies ``cond``."""
+
+    def gate(df: DataFrame) -> None:
+        if (view(df) if view else df).filter(cond).limit(1).count():
+            raise AssertionError(f"invariant violated: {msg}")
+
+    return gate
+
+
+def _leak_free(df: DataFrame) -> None:
+    """Gate: every as-of match is strictly before its label."""
+    assert_no_leakage(df, "label_ts", "ts_asof", strict=True)
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """A driver-local copy of ``df``'s rows, taken in one action: later
+    actions on the copy re-run none of ``df``'s plan. Arrow carries
+    timestamps as epoch micros and float32 arrays as-is, so the copy is
+    exact."""
+    return df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
+
+
+def _gated(df: DataFrame, *gates: Callable[[DataFrame], None], cols=None) -> DataFrame:
+    """The one materialize → gate → release step of a gated query. ``df`` is
+    cached once, because every gate that re-read its plan would re-run the
+    Python decode+embed UDF; each gate runs against the cache; the result is
+    a driver-local copy of the rows (``cols`` of them, if given); and the
+    cache is released in a ``finally``, so a failing gate releases it too.
+
+    The gates make rows-only queries over in-Spark-generated media loud:
+    generation is deterministic, so expected counts/bounds are computable
+    from the parameters and a silent operator regression turns into a driver
+    error instead of an unchecked row count."""
+    df.cache()
+    try:
+        for gate in gates:
+            gate(df)
+        return _local(df.select(*cols) if cols else df)
+    finally:
+        df.unpersist()
+
+
+def _sq_norm(col: str, name: str):
+    """Squared L2 norm of an array<float> column as Spark folds it (float32
+    products, sequential double sum); ``_seq_fold_sq`` is the oracle twin."""
+    return F.aggregate(col, F.lit(0.0), lambda a, x: a + x * x).alias(name)
+
+
+def _off_unit_norm(col: str):
+    """A squared norm more than 1e-4 away from 1 (null never matches)."""
+    return (F.col(col) > 1.0 + 1e-4) | (F.col(col) < 1.0 - 1e-4)
 
 
 def _decoded(feats: DataFrame) -> DataFrame:
@@ -590,21 +640,18 @@ def _q_image_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         strict=True,
     )
     out = joined.select(
-        "entity_id",
-        "label_ts",
-        "label",
-        F.col("ts_asof"),
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
-    ).cache()  # generate+decode+embed once across the three gates + return
-    assert_no_leakage(out, "label_ts", "ts_asof", strict=True)
-    _assert_count(out, n // 2, "one output row per label probe")
-    _assert_empty(
-        out,
-        F.col("emb_sq_norm").isNotNull()
-        & ((F.col("emb_sq_norm") > 1.0 + 1e-4) | (F.col("emb_sq_norm") < 1.0 - 1e-4)),
-        "embeddings are L2-normalized: squared norm must be 1",
+        "entity_id", "label_ts", "label", F.col("ts_asof"),
+        _sq_norm("embedding", "emb_sq_norm"),
     )
-    return out
+    return _gated(
+        out,
+        _leak_free,
+        _count_is(n // 2, "one output row per label probe"),
+        _none_where(
+            _off_unit_norm("emb_sq_norm"),
+            "embeddings are L2-normalized: squared norm must be 1",
+        ),
+    )
 
 
 def _q_image_caption_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,14 +660,14 @@ def _q_image_caption_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = extract_image_features(imgs, "clip-small-det")
     caps = embed_caption_column(imgs.select("image_id", "caption"), "clip-small-det")
     both = feats.join(caps, "image_id")
-    out = image_text_similarity(both).select("image_id", "img_txt_sim").cache()
-    _assert_count(out, n, "one similarity row per image")
-    _assert_empty(
-        out,
-        F.col("img_txt_sim").isNotNull() & (F.abs("img_txt_sim") > 100.0 + 1e-3),
-        "logit = 100 * cosine of unit vectors: |logit| <= 100",
+    return _gated(
+        image_text_similarity(both).select("image_id", "img_txt_sim"),
+        _count_is(n, "one similarity row per image"),
+        _none_where(
+            F.col("img_txt_sim").isNotNull() & (F.abs("img_txt_sim") > 100.0 + 1e-3),
+            "logit = 100 * cosine of unit vectors: |logit| <= 100",
+        ),
     )
-    return out
 
 
 def _q_image_phash_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,18 +675,19 @@ def _q_image_phash_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
     out = sessionize(imgs, ["phash"], "ts", gap_seconds=3600, tiebreak_col="image_id").select(
         "image_id", "phash", "ts", "session_id"
-    ).cache()  # generation once across the gates + return
-    _assert_count(out, n, "sessionize is row-preserving")
-    grp = out.groupBy("phash").agg(
-        F.min("session_id").alias("lo"), F.max("session_id").alias("hi"),
-        F.count(F.lit(1)).alias("cnt"), F.countDistinct("session_id").alias("nsess"),
     )
-    _assert_empty(
-        grp,
-        (F.col("lo") != 1) | (F.col("hi") > F.col("cnt")) | (F.col("hi") != F.col("nsess")),
-        "session ids must be dense 1..n_sessions within each phash group",
+    return _gated(
+        out,
+        _count_is(n, "sessionize is row-preserving"),
+        _none_where(
+            (F.col("lo") != 1) | (F.col("hi") > F.col("cnt")) | (F.col("hi") != F.col("nsess")),
+            "session ids must be dense 1..n_sessions within each phash group",
+            view=lambda d: d.groupBy("phash").agg(
+                F.min("session_id").alias("lo"), F.max("session_id").alias("hi"),
+                F.count(F.lit(1)).alias("cnt"), F.countDistinct("session_id").alias("nsess"),
+            ),
+        ),
     )
-    return out
 
 
 def _q_image_pair_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,22 +697,21 @@ def _q_image_pair_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _n_images(sf_dir)
     n_ent = max(n // 50, 1)
     imgs = generate_images(spark, n, n_entities=n_ent)
-    out = consecutive_pair_features(imgs).cache()
-    _assert_count(out, n - n_ent, "T frames per entity yield T-1 pairs")
-    _assert_empty(
-        out,
-        F.col("error").isNull()
-        & ((F.col("mean_abs_motion") < 0) | (F.col("changed_frac") < 0)
-           | (F.col("changed_frac") > 1)),
-        "pair features must be in range when no error",
+    return _gated(
+        consecutive_pair_features(imgs),
+        _count_is(n - n_ent, "T frames per entity yield T-1 pairs"),
+        _none_where(
+            F.col("error").isNull()
+            & ((F.col("mean_abs_motion") < 0) | (F.col("changed_frac") < 0)
+               | (F.col("changed_frac") > 1)),
+            "pair features must be in range when no error",
+        ),
+        _none_where(
+            F.col("error").isNotNull()
+            & (F.col("mean_abs_motion").isNotNull() | F.col("changed_frac").isNotNull()),
+            "quarantined rows carry null features",
+        ),
     )
-    _assert_empty(
-        out,
-        F.col("error").isNotNull()
-        & (F.col("mean_abs_motion").isNotNull() | F.col("changed_frac").isNotNull()),
-        "quarantined rows carry null features",
-    )
-    return out
 
 
 def _q_image_pair_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,25 +726,20 @@ def _q_image_pair_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ent = max(n // 50, 1)
     imgs = generate_images(spark, n, n_entities=n_ent)
     out = consecutive_pair_embeddings(imgs).select(
-        "entity_id",
-        "ts",
-        "next_ts",
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
-        "error",
-    ).cache()
-    _assert_count(out, n - n_ent, "T frames per entity yield T-1 pair embeddings")
-    _assert_empty(
-        out,
-        F.col("error").isNull()
-        & ((F.col("emb_sq_norm") > 1.0 + 1e-4) | (F.col("emb_sq_norm") < 1.0 - 1e-4)),
-        "pair embeddings are L2-normalized",
+        "entity_id", "ts", "next_ts", _sq_norm("embedding", "emb_sq_norm"), "error",
     )
-    _assert_empty(
+    return _gated(
         out,
-        F.col("error").isNotNull() & F.col("emb_sq_norm").isNotNull(),
-        "quarantined pairs carry null embeddings",
+        _count_is(n - n_ent, "T frames per entity yield T-1 pair embeddings"),
+        _none_where(
+            F.col("error").isNull() & _off_unit_norm("emb_sq_norm"),
+            "pair embeddings are L2-normalized",
+        ),
+        _none_where(
+            F.col("error").isNotNull() & F.col("emb_sq_norm").isNotNull(),
+            "quarantined pairs carry null embeddings",
+        ),
     )
-    return out
 
 
 def _q_image_pair_flow_field(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,20 +755,17 @@ def _q_image_pair_flow_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ent = max(n // 50, 1)
     imgs = generate_images(spark, n, n_entities=n_ent)
     out = consecutive_pair_flow_fields(imgs, grid=8).select(
-        "entity_id",
-        "ts",
-        "next_ts",
-        F.size("flow").alias("flow_dim"),
-        F.aggregate("flow", F.lit(0.0), lambda a, x: a + x * x).alias("flow_sq_norm"),
-        "error",
-    ).cache()  # generation + pairwise flow once: shared by both gates + return
-    _assert_count(out, n - n_ent, "T frames per entity yield T-1 flow fields")
-    _assert_empty(
-        out,
-        F.col("error").isNull() & (F.col("flow_dim") != 2 * 8 * 8),
-        "flow fields are dense 2x8x8 grids",
+        "entity_id", "ts", "next_ts",
+        F.size("flow").alias("flow_dim"), _sq_norm("flow", "flow_sq_norm"), "error",
     )
-    return out
+    return _gated(
+        out,
+        _count_is(n - n_ent, "T frames per entity yield T-1 flow fields"),
+        _none_where(
+            F.col("error").isNull() & (F.col("flow_dim") != 2 * 8 * 8),
+            "flow fields are dense 2x8x8 grids",
+        ),
+    )
 
 
 def _q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,28 +774,31 @@ def _q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's VideoCapture read loop + ts derivation, ``utils/io.py:96-154``,
     as one map-only pass) → per-frame decode through the same codec the image
     pipeline uses. Emits engine-neutral decode proof (shape + pixel sum);
-    frame-count exactness is gated in-query against the clips' own metadata."""
+    frame-count exactness is gated in-query against the clips' own metadata
+    (``n_frames`` rides through the demux, so the gates read only the
+    cached frame rows, not a second generation of the clips)."""
     from video_features_spark.functions.codec import decode_image
     from video_features_spark.operators.video import extract_video_frames
     from video_features_spark.sources.datagen import generate_videos
 
     n = max(_n_images(sf_dir) // 20, 10)
-    n_ent = max(n // 5, 1)
-    # cached (audio_logmel precedent): the invariant actions below plus the
-    # final materialization would otherwise regenerate + JPEG-encode every
-    # clip once per job (generation is the expensive half of this query)
-    vids = generate_videos(spark, n, n_entities=n_ent).cache()
-    frames = extract_video_frames(vids)
+    vids = generate_videos(spark, n, n_entities=max(n // 5, 1))
+    frames = extract_video_frames(vids, id_cols=("video_id", "n_frames"))
 
     def stats(batches):
         for b in batches:
             hh, ww, ps = [], [], []
             for i in range(len(b)):
+                if b["error"].iloc[i] is not None:  # quarantined clip: gated below
+                    hh.append(None)
+                    ww.append(None)
+                    ps.append(None)
+                    continue
                 img = decode_image(bytes(b["bytes"].iloc[i]), b["fmt"].iloc[i])
                 hh.append(img.shape[0])
                 ww.append(img.shape[1])
                 ps.append(int(img.astype("int64").sum()))
-            out = b[["video_id", "frame_idx", "frame_ts"]].copy()
+            out = b[["video_id", "n_frames", "frame_idx", "frame_ts", "error"]].copy()
             out["frame_h"] = hh
             out["frame_w"] = ww
             out["pix_sum"] = ps
@@ -765,14 +807,25 @@ def _q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = frames.mapInPandas(
         stats,
         schema=(
-            "video_id string, frame_idx int, frame_ts timestamp, "
-            "frame_h int, frame_w int, pix_sum long"
+            "video_id string, n_frames int, frame_idx int, frame_ts timestamp, "
+            "error string, frame_h int, frame_w int, pix_sum long"
         ),
-    ).cache()  # demux+decode once: count gate + final materialization share it
-    _assert_empty(frames, F.col("error").isNotNull(), "no clip quarantines")
-    expected = vids.agg(F.sum("n_frames")).first()[0]
-    _assert_count(out, int(expected), "every container frame becomes a row")
-    return out
+    )
+
+    def per_clip(d: DataFrame) -> DataFrame:
+        return d.groupBy("video_id", "n_frames").count()
+
+    return _gated(
+        out,
+        _none_where(F.col("error").isNotNull(), "no clip quarantines"),
+        _count_is(n, "every clip yields its frames", view=per_clip),
+        _none_where(
+            F.col("count") != F.col("n_frames"),
+            "every container frame becomes a row",
+            view=per_clip,
+        ),
+        cols=("video_id", "frame_idx", "frame_ts", "frame_h", "frame_w", "pix_sum"),
+    )
 
 
 def _q_image_stack_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,22 +833,23 @@ def _q_image_stack_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_features_spark.operators.temporal_features import stack_mean_pool
 
     n = _n_images(sf_dir)
-    imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
+    n_ent = max(n // 50, 1)
+    imgs = generate_images(spark, n, n_entities=n_ent)
     feats = extract_image_features(imgs, "clip-small-det")
     pooled = stack_mean_pool(feats, stack_size=8, step_size=4)
     out = pooled.select(
         "entity_id", "stack_start_idx", "stack_ts",
-        F.aggregate("stack_embedding", F.lit(0.0), lambda a, x: a + x * x).alias("stack_sq_norm"),
-    ).cache()
-    n_ent = max(n // 50, 1)
-    per_entity = n // n_ent
-    _assert_count(out, n_ent * ((per_entity - 8) // 4 + 1), "complete stacks per entity")
-    _assert_empty(
-        out,
-        (F.col("stack_sq_norm") > 1.0 + 1e-4) | (F.col("stack_sq_norm") <= 0),
-        "mean of unit vectors has norm in (0, 1]",
+        _sq_norm("stack_embedding", "stack_sq_norm"),
     )
-    return out
+    per_entity = n // n_ent
+    return _gated(
+        out,
+        _count_is(n_ent * ((per_entity - 8) // 4 + 1), "complete stacks per entity"),
+        _none_where(
+            (F.col("stack_sq_norm") > 1.0 + 1e-4) | (F.col("stack_sq_norm") <= 0),
+            "mean of unit vectors has norm in (0, 1]",
+        ),
+    )
 
 
 def _q_image_zero_shot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,14 +863,15 @@ def _q_image_zero_shot(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = min(_n_images(sf_dir), 500)
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
     feats = extract_image_features(imgs, "clip-small-det")
-    full = zero_shot_classify(feats, list(_ZS_CAPTIONS), top_k=3).cache()
-    _assert_count(full, n * 3, "exactly top_k rows per image")
-    _assert_empty(
-        full,
-        (F.col("prob") <= 0) | (F.col("prob") > 1) | (F.col("rank") < 1) | (F.col("rank") > 3),
-        "probs in (0, 1], rank in 1..top_k",
+    return _gated(
+        zero_shot_classify(feats, list(_ZS_CAPTIONS), top_k=3),
+        _count_is(n * 3, "exactly top_k rows per image"),
+        _none_where(
+            (F.col("prob") <= 0) | (F.col("prob") > 1) | (F.col("rank") < 1) | (F.col("rank") > 3),
+            "probs in (0, 1], rank in 1..top_k",
+        ),
+        cols=("image_id", "class_id", "rank", "logit"),
     )
-    return full.select("image_id", "class_id", "rank", "logit")
 
 
 def _q_image_phash_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,11 +897,12 @@ def _q_image_phash_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         strict=True,
         salt_threshold=max(n // 20, 10),  # hot phash buckets get salted
         num_salts=8,
-    ).cache()  # generate+embed+join once: leakage gate + return share it
-    assert_no_leakage(joined, "label_ts", "ts_asof", strict=True)
-    return joined.select(
-        "image_id", "phash", "label_ts", "ts_asof",
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
+    )
+    return _gated(
+        joined.select(
+            "image_id", "phash", "label_ts", "ts_asof", _sq_norm("embedding", "emb_sq_norm"),
+        ),
+        _leak_free,
     )
 
 
@@ -859,10 +915,9 @@ def _q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortize-one-shuffle-at-write-time pattern for the feature store.
     Catalog tables and /tmp data are dropped before returning (the small
     aggregate is materialized first)."""
-    import os
     import shutil
 
-    from video_features_spark.sources.bucketed import read_bucketed, write_bucketed
+    from video_features_spark.sources.bucketed import drop_table, read_bucketed, write_bucketed
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     base = f"/tmp/vfs_bucketed_{tag}"
@@ -887,65 +942,47 @@ def _q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # self-audit: the co-location contract must hold, or this query fails loudly
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
+    with session_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        if "Exchange" in out._jdf.queryExecution().executedPlan().toString():
             raise AssertionError("bucketed join planned an Exchange — co-location broken")
         # materialize the (small) aggregate off the bucketed scans so the
         # catalog tables and /tmp dirs can be cleaned up before returning —
         # repeated driver runs must leave no residue
-        rows = out.collect()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-    from video_features_spark.sources.bucketed import drop_table
-
+        rows = _local(out)
     drop_table(spark, f"vfs_ev_{tag}")
     drop_table(spark, f"vfs_feat_{tag}")
     shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return rows
 
 
 def _q_audio_logmel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio family end-to-end (S5/S6/P17/A6): WAV demux → mono mixdown →
     log-mel examples → 128-d embedding, one row per 0.96 s example. Rows-only
     (clips generated in-Spark) but invariant-gated: the exact example count
-    per clip is computable from n_samples WITHOUT decoding, and embeddings
-    must be unit-norm."""
+    per clip is computable from n_samples WITHOUT decoding (``n_samples``
+    rides through the operator), and embeddings must be unit-norm."""
     from video_features_spark.operators.audio import extract_audio_features
     from video_features_spark.sources.datagen import generate_audio
 
     n = max(_n_images(sf_dir) // 5, 20)
-    # cached: the invariant checks below plus the driver's final collect would
-    # otherwise regenerate + re-decode the clips once per job
-    clips = generate_audio(spark, n).cache()
-    feats = extract_audio_features(clips)
+    feats = extract_audio_features(
+        generate_audio(spark, n), id_cols=("clip_id", "entity_id", "n_samples")
+    )
     out = feats.filter(F.col("error").isNull()).select(
-        "clip_id",
-        "entity_id",
-        "example_idx",
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
-    ).cache()
-    expected = clips.select(
-        "clip_id",
-        F.floor((F.lit(1) + F.floor((F.col("n_samples") - 400) / 160)) / 96).alias("n_exp"),
+        "clip_id", "entity_id", "example_idx", "n_samples",
+        _sq_norm("embedding", "emb_sq_norm"),
     )
-    got = out.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n_got"))
-    _assert_empty(
-        got.join(expected, "clip_id"),
-        F.col("n_got") != F.col("n_exp"),
-        "example count per clip must equal the framing formula over n_samples",
-    )
-    _assert_empty(
+    return _gated(
         out,
-        (F.col("emb_sq_norm") > 1.0 + 1e-4) | (F.col("emb_sq_norm") < 1.0 - 1e-4),
-        "audio embeddings are L2-normalized",
+        _none_where(
+            F.col("count")
+            != F.floor((F.lit(1) + F.floor((F.col("n_samples") - 400) / 160)) / 96),
+            "example count per clip must equal the framing formula over n_samples",
+            view=lambda d: d.groupBy("clip_id", "n_samples").count(),
+        ),
+        _none_where(_off_unit_norm("emb_sq_norm"), "audio embeddings are L2-normalized"),
+        cols=("clip_id", "entity_id", "example_idx", "emb_sq_norm"),
     )
-    return out
 
 
 def _q_image_augmented_fp16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,18 +993,11 @@ def _q_image_augmented_fp16(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = min(_n_images(sf_dir), 500)
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
     feats = extract_image_features(imgs, "clip-small-det", precision="fp16", augment_seed=11)
-    out = feats.select(
-        "image_id",
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
-    ).cache()
-    _assert_count(out, n, "augmentation is row-preserving")
-    _assert_empty(
-        out,
-        F.col("emb_sq_norm").isNotNull()
-        & ((F.col("emb_sq_norm") > 1.0 + 1e-4) | (F.col("emb_sq_norm") < 1.0 - 1e-4)),
-        "fp16 embeddings stay L2-normalized",
+    return _gated(
+        feats.select("image_id", _sq_norm("embedding", "emb_sq_norm")),
+        _count_is(n, "augmentation is row-preserving"),
+        _none_where(_off_unit_norm("emb_sq_norm"), "fp16 embeddings stay L2-normalized"),
     )
-    return out
 
 
 _CKPT_FILE = "vfs_r5_ckpt.npz"
@@ -984,15 +1014,11 @@ def _q_image_checkpoint_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored afterwards so no other query sees the registration. Oracle:
     regenerate the same checkpoint (pure function of the seed) and embed with
     the same loader under BLAS-1."""
-    import tempfile
-
     from video_features_spark.functions import embed as embed_mod
 
     n = min(_n_images(sf_dir), 500)
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
-    _clean_stale_tmp("vfs_ckpt_npz_")
-    td = tempfile.mkdtemp(prefix="vfs_ckpt_npz_")
-    path = os.path.join(td, _CKPT_FILE)
+    path = os.path.join(_fresh_tmp("vfs_ckpt_npz_"), _CKPT_FILE)
     embed_mod.synth_checkpoint_npz("clip-small-det", path, _CKPT_SEED)
     prior = embed_mod.checkpoint_for("clip-small-det")
     embed_mod.register_checkpoint(spark, "clip-small-det", path)
@@ -1005,20 +1031,13 @@ def _q_image_checkpoint_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             embed_mod._CHECKPOINTS.pop("clip-small-det", None)
         else:
             embed_mod._CHECKPOINTS["clip-small-det"] = prior
-    # cached: the two invariant actions + the final materialization would
-    # otherwise regenerate + decode + embed the corpus once per job each
-    out = feats.select(
-        "image_id",
-        F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x).alias("emb_sq_norm"),
-    ).cache()
-    _assert_count(out, n, "checkpoint-weight embedding is row-preserving")
-    _assert_empty(
-        out,
-        F.col("emb_sq_norm").isNotNull()
-        & ((F.col("emb_sq_norm") > 1.0 + 1e-4) | (F.col("emb_sq_norm") < 1.0 - 1e-4)),
-        "checkpoint-weight embeddings stay L2-normalized",
+    return _gated(
+        feats.select("image_id", _sq_norm("embedding", "emb_sq_norm")),
+        _count_is(n, "checkpoint-weight embedding is row-preserving"),
+        _none_where(
+            _off_unit_norm("emb_sq_norm"), "checkpoint-weight embeddings stay L2-normalized"
+        ),
     )
-    return out
 
 
 def _q_caption_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1032,15 +1051,11 @@ def _q_caption_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from video_features_spark.functions import bpe
     from video_features_spark.operators.features import caption_bpe_tokenize
 
-    import tempfile
-
     n = _n_images(sf_dir)
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
     base = imgs.select("image_id", "caption")
     toks = caption_bpe_tokenize(base)  # default trained table
-    _clean_stale_tmp("vfs_bpe_vocab_")
-    vdir = tempfile.mkdtemp(prefix="vfs_bpe_vocab_")
-    vpath = os.path.join(vdir, _BPE_VOCAB_FILE)
+    vpath = os.path.join(_fresh_tmp("vfs_bpe_vocab_"), _BPE_VOCAB_FILE)
     bpe.write_fixture_vocab(vpath)
     bpe.register_vocab(spark, vpath)
     try:
@@ -1063,14 +1078,14 @@ def _q_caption_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _clean_stale_tmp(prefix: str, max_age_sec: int = 7200) -> None:
-    """Remove this query family's PREVIOUS temp artifacts (each invocation
-    needs a fresh dir — resume state must not leak between runs — but dead
-    ones would otherwise accumulate a full orders copy per bench/sweep run).
-    Age-gated so a concurrently running harness is never clobbered."""
+def _fresh_tmp(prefix: str, max_age_sec: int = 7200) -> str:
+    """A new temp dir for one run of a query family (resume and stream state
+    must not leak between runs), made after removing the family's dirs older
+    than ``max_age_sec``: hard-killed runs would otherwise accumulate a full
+    orders copy each. Age-gated so a concurrently running harness is never
+    clobbered."""
     import glob
     import shutil
-    import tempfile
     import time
 
     now = time.time()
@@ -1080,6 +1095,7 @@ def _clean_stale_tmp(prefix: str, max_age_sec: int = 7200) -> None:
                 shutil.rmtree(d, ignore_errors=True)
         except OSError:
             pass
+    return tempfile.mkdtemp(prefix=prefix)
 
 
 def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1092,8 +1108,6 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``parts_resumed``); the read-back aggregate proves the union landed with
     no loss or duplication. Oracle: partition membership replayed with the
     verified pure-Python xxhash64 replica; totals are plain SQL over orders."""
-    import tempfile
-
     from video_features_spark.sources.checkpoint import (
         PART_COL,
         checkpointed_write,
@@ -1102,9 +1116,8 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_partition_id,
     )
 
-    _clean_stale_tmp("vfs_ckpt_resume_")
+    base = _fresh_tmp("vfs_ckpt_resume_")
     orders = _read(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="vfs_ckpt_resume_")
     num_parts = 64
     half = (
         with_partition_id(orders, ["o_orderkey"], num_parts)
@@ -1133,124 +1146,101 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.8 streaming parity as a driver query: the SAME point-in-time
-    enrichment as ``asof_window`` with the probe side arriving as a STREAM —
-    file source over the events parquet, ``trigger(availableNow=True)``,
-    through ``streaming.ops.stream_asof_lookup`` into a memory sink. The
-    oracle is the batch ``_ASOF_ORACLE``: stream and batch must agree
-    row-for-row (the tiebreak-parity contract the pytest suite pins,
-    ``tests/test_streaming.py``). Timestamps round-trip NTZ→TZ→NTZ because
-    watermarks require zoned timestamps (CLAUDE.md sharp edge)."""
-    import uuid
-
-    from video_features_spark.streaming.ops import stream_asof_lookup
-
-    import tempfile
-
+def _stream_events(
+    spark: SparkSession,
+    sf_dir: str,
+    view_prefix: str,
+    build: Callable[[DataFrame], DataFrame],
+    cols,
+) -> DataFrame:
+    """The one stream runner: ``build`` over the events table arriving as a
+    STREAM (file source, ``trigger(availableNow=True)``) into a complete-mode
+    memory sink, run to the end; returns a driver-local copy of ``cols`` of
+    the sink and drops the sink's temp view. State-store task count follows
+    the session's parallelism instead of the batch shuffle-partition
+    default: each streaming-agg partition pays a per-trigger state-store
+    open/commit, pure overhead beyond ~cores for an availableNow batch this
+    size (sized from the session, not a constant; restored afterwards)."""
     # the file stream source lists a DIRECTORY; driver testdata is one file —
     # link it into a temp dir (no data copy)
-    _clean_stale_tmp("vfs_stream_src_")
-    src_dir = tempfile.mkdtemp(prefix="vfs_stream_src_")
+    src_dir = _fresh_tmp("vfs_stream_")
     os.symlink(
         os.path.join(sf_dir, "events.parquet"),
         os.path.join(src_dir, "events.parquet"),
     )
-    ev_schema = _read(spark, sf_dir, "events").schema
-    probes = (
-        spark.readStream.schema(ev_schema)
-        .parquet(src_dir)
-        .select("event_id", "user_id", "ts")
-        # the single-file micro-batch scans as ONE task and the asof join
-        # fans each probe out against its key's whole build history before
-        # the max collapses it — spread the probe side so that fan-out runs
-        # parallel (streaming-legal repartition; content unchanged)
-        .repartition(spark.sparkContext.defaultParallelism, "user_id")
-    )
-    out = stream_asof_lookup(
-        probes,
-        _order_features(spark, sf_dir),
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="o_orderdate",
-        strict=True,
-    )
-    name = f"qsa_{uuid.uuid4().hex[:8]}"
-    # state-store task count follows the session's parallelism instead of the
-    # batch shuffle-partition default: each streaming-agg partition pays a
-    # per-trigger state-store open/commit, pure overhead beyond ~cores for an
-    # availableNow batch this size (restored below; sized from the session,
-    # not a constant)
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
+    events = spark.readStream.schema(_read(spark, sf_dir, "events").schema).parquet(src_dir)
+    out = build(events)
+    name = f"{view_prefix}_{uuid.uuid4().hex[:8]}"
     try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with session_conf(
+            spark, "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        ):
+            (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return _local(spark.table(name).select(*cols))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
-    return spark.table(name).select(
+        spark.catalog.dropTempView(name)
+
+
+def _q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.8 streaming parity as a driver query: the SAME point-in-time
+    enrichment as ``asof_window`` with the probe side arriving as a STREAM
+    through ``streaming.ops.stream_asof_lookup``. The oracle is the batch
+    ``_ASOF_ORACLE``: stream and batch must agree row-for-row (the
+    tiebreak-parity contract the pytest suite pins,
+    ``tests/test_streaming.py``). Timestamps round-trip NTZ→TZ→NTZ because
+    watermarks require zoned timestamps."""
+    from video_features_spark.streaming.ops import stream_asof_lookup
+
+    def build(events: DataFrame) -> DataFrame:
+        probes = (
+            events.select("event_id", "user_id", "ts")
+            # the single-file micro-batch scans as ONE task and the asof join
+            # fans each probe out against its key's whole build history
+            # before the max collapses it — spread the probe side so that
+            # fan-out runs parallel (streaming-legal repartition; content
+            # unchanged)
+            .repartition(spark.sparkContext.defaultParallelism, "user_id")
+        )
+        return stream_asof_lookup(
+            probes,
+            _order_features(spark, sf_dir),
+            on=["user_id"],
+            left_ts="ts",
+            right_ts="o_orderdate",
+            strict=True,
+        )
+
+    return _stream_events(spark, sf_dir, "qsa", build, (
         "event_id",
         "user_id",
         F.col("ts").cast("timestamp_ntz").alias("ts"),
         "feat_price",
         F.col("o_orderdate_asof").cast("timestamp_ntz").alias("o_orderdate_asof"),
-    )
+    ))
 
 
 def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 streaming AGGREGATION parity (beyond the stream-asof lookup): the
     same daily tumbling count/sum as ``tumbling_daily`` with events arriving
-    as a STREAM — file source over the events parquet,
-    ``trigger(availableNow=True)``, watermarked event-time window
-    (``streaming.ops.stream_tumbling_agg``) into a memory sink. Complete
-    output mode so the final window (above the watermark at stream end) is
-    emitted too; the oracle is the batch tumbling SQL — stream and batch must
-    agree row-for-row."""
-    import tempfile
-    import uuid
-
+    as a STREAM through a watermarked event-time window
+    (``streaming.ops.stream_tumbling_agg``). Complete output mode so the
+    final window (above the watermark at stream end) is emitted too; the
+    oracle is the batch tumbling SQL — stream and batch must agree
+    row-for-row."""
     from video_features_spark.streaming.ops import stream_tumbling_agg
 
-    _clean_stale_tmp("vfs_stream_tum_")
-    src_dir = tempfile.mkdtemp(prefix="vfs_stream_tum_")
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    ev_schema = _read(spark, sf_dir, "events").schema
-    ev = spark.readStream.schema(ev_schema).parquet(src_dir)
-    out = stream_tumbling_agg(ev, ["user_id"], "ts", "1 day")
-    name = f"qst_{uuid.uuid4().hex[:8]}"
-    # state-store partitions sized from the session, not the batch shuffle
-    # default — see _q_stream_asof (restored below)
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
-    return spark.table(name).select(
-        "user_id",
-        F.col("win_start").cast("timestamp_ntz").alias("win_start"),
-        "n_events",
-        "sum_value",
+    return _stream_events(
+        spark, sf_dir, "qst",
+        lambda events: stream_tumbling_agg(events, ["user_id"], "ts", "1 day"),
+        ("user_id", F.col("win_start").cast("timestamp_ntz").alias("win_start"),
+         "n_events", "sum_value"),
     )
 
 
@@ -1269,8 +1259,7 @@ def entry(spark: SparkSession) -> DataFrame:
         right_ts="ts",
         strict=True,
     )
-    assert_no_leakage(joined, "label_ts", "ts_asof", strict=True)
-    return joined
+    return _gated(joined, _leak_free)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1566,13 +1555,7 @@ def _seq_fold_sq(v) -> float:
     column: the product is computed in FLOAT32 (Spark float*float stays
     float), accumulation is sequential in float64 — verified bit-exact
     against Spark on random vectors."""
-    import numpy as np
-
-    prods = np.asarray(v, dtype=np.float32) * np.asarray(v, dtype=np.float32)
-    acc = 0.0
-    for p in prods:
-        acc += float(p)
-    return acc
+    return _seq_fold_dot(v, v)
 
 
 def _seq_fold_dot(a, b) -> float:
@@ -1792,7 +1775,6 @@ def _payload_section_ckpt() -> dict:
     SparkContext in this child), and embed the regenerated images THROUGH the
     same SHA256-verified npz loader the executors run. BLAS-1 only."""
     import hashlib
-    import tempfile
 
     import numpy as np
 
@@ -1900,11 +1882,9 @@ def _oracle_payload() -> dict:
     of UDF outputs requires a BLAS-1 process. Thread pools can't be resized
     after numpy loads (no threadpoolctl in this container), so compute in a
     pinned child process and cache the pickle."""
-    import os
     import pickle
     import subprocess
     import sys
-    import tempfile
 
     if getattr(_oracle_payload, "_memo", None) is not None:
         return _oracle_payload._memo
@@ -2158,7 +2138,6 @@ def _caption_bpe_oracle() -> str:
     replay Spark's xxhash64 over the comma-joined id strings via the verified
     pure-Python XXH64."""
     import hashlib
-    import tempfile
 
     from video_features_spark.functions import bpe
 
@@ -2233,107 +2212,94 @@ def _checkpoint_resume_oracle() -> str:
     """
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _avalanche64(h: int) -> int:
+    h ^= h >> 33
+    h = (h * _P2) & _M64
+    h ^= h >> 29
+    h = (h * _P3) & _M64
+    return h ^ (h >> 32)
+
+
+def _signed64(h: int) -> int:
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
 def _xxhash64_bytes(data: bytes, seed: int = 42) -> int:
     """Full XXH64 over a byte string (published algorithm; Spark's
     ``xxhash64`` on a STRING column hashes its UTF-8 bytes with seed 42) —
     verified bit-exact against Spark across lengths 0..100 incl. multibyte."""
     import struct
 
-    m = (1 << 64) - 1
-    p1, p2, p3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    p4, p5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (64 - r))) & m
-
     def rnd(acc: int, inp: int) -> int:
-        acc = (acc + inp * p2) & m
-        return (rotl(acc, 31) * p1) & m
+        return (_rotl64((acc + inp * _P2) & _M64, 31) * _P1) & _M64
 
     n, i = len(data), 0
     if n >= 32:
-        v1, v2 = (seed + p1 + p2) & m, (seed + p2) & m
-        v3, v4 = seed & m, (seed - p1) & m
+        v1, v2 = (seed + _P1 + _P2) & _M64, (seed + _P2) & _M64
+        v3, v4 = seed & _M64, (seed - _P1) & _M64
         while i + 32 <= n:
             v1 = rnd(v1, struct.unpack_from("<Q", data, i)[0])
             v2 = rnd(v2, struct.unpack_from("<Q", data, i + 8)[0])
             v3 = rnd(v3, struct.unpack_from("<Q", data, i + 16)[0])
             v4 = rnd(v4, struct.unpack_from("<Q", data, i + 24)[0])
             i += 32
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & m
+        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _M64
         for v in (v1, v2, v3, v4):
-            h = ((h ^ rnd(0, v)) * p1 + p4) & m
+            h = ((h ^ rnd(0, v)) * _P1 + _P4) & _M64
     else:
-        h = (seed + p5) & m
-    h = (h + n) & m
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
     while i + 8 <= n:
-        h = (rotl(h ^ rnd(0, struct.unpack_from("<Q", data, i)[0]), 27) * p1 + p4) & m
+        h = (_rotl64(h ^ rnd(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M64
         i += 8
     if i + 4 <= n:
-        h = (rotl(h ^ ((struct.unpack_from("<I", data, i)[0] * p1) & m), 23) * p2 + p3) & m
+        h = (_rotl64(h ^ ((struct.unpack_from("<I", data, i)[0] * _P1) & _M64), 23) * _P2
+             + _P3) & _M64
         i += 4
     while i < n:
-        h = (rotl(h ^ ((data[i] * p5) & m), 11) * p1) & m
+        h = (_rotl64(h ^ ((data[i] * _P5) & _M64), 11) * _P1) & _M64
         i += 1
-    h ^= h >> 33
-    h = (h * p2) & m
-    h ^= h >> 29
-    h = (h * p3) & m
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
+    return _signed64(_avalanche64(h))
 
 
 def _xxhash64_int(i: int, seed: int) -> int:
     """XXH64 4-byte lane (Spark hashes IntegerType/FloatType bits this way):
     ``hash = seed + P5 + 4; hash ^= (i & 0xFFFFFFFF) * P1; rotl(23)*P2 + P3;
     avalanche``. Returns the UNSIGNED accumulator for chaining."""
-    m = (1 << 64) - 1
-    p1, p2, p3, p5 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x27D4EB2F165667C5
-    h = (seed + p5 + 4) & m
-    h ^= ((i & 0xFFFFFFFF) * p1) & m
-    h = ((((h << 23) | (h >> 41)) & m) * p2 + p3) & m
-    h ^= h >> 33
-    h = (h * p2) & m
-    h ^= h >> 29
-    h = (h * p3) & m
-    h ^= h >> 32
-    return h
+    h = (seed + _P5 + 4) & _M64
+    h ^= ((i & 0xFFFFFFFF) * _P1) & _M64
+    return _avalanche64((_rotl64(h, 23) * _P2 + _P3) & _M64)
 
 
 def _xxhash64_long_u(v: int, seed: int) -> int:
     """XXH64 8-byte lane with an arbitrary seed, unsigned result (the
     chaining form of ``_xxhash64_long``)."""
-    m = (1 << 64) - 1
-    p1, p2, p3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    p4, p5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+    h = (seed + _P5 + 8) & _M64
+    h ^= (_rotl64(((v & _M64) * _P2) & _M64, 31) * _P1) & _M64
+    return _avalanche64((_rotl64(h, 27) * _P1 + _P4) & _M64)
 
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (64 - r))) & m
 
-    v &= m
-    h = (seed + p5 + 8) & m
-    h ^= (rotl((v * p2) & m, 31) * p1) & m
-    h = (rotl(h, 27) * p1 + p4) & m
-    h ^= h >> 33
-    h = (h * p2) & m
-    h ^= h >> 29
-    h = (h * p3) & m
-    h ^= h >> 32
-    return h
+def _xxhash64_long(v: int, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` for a LongType input (XXH64 single-lane path,
+    seed 42; published algorithm) — signed 64-bit result. Lets the IVF oracle
+    reproduce the operator's hash-ordered centroid sample outside Spark."""
+    return _signed64(_xxhash64_long_u(v, seed))
 
 
 def _seq_fold_sq_batch(embs) -> "list[float]":
     """Row-batched ``_seq_fold_sq``: float32 products, then per-row SEQUENTIAL
     float64 accumulation vectorized ACROSS rows (iterate positions, add one
     column at a time) — identical per-row rounding, ~500x fewer Python ops."""
-    import numpy as np
-
-    x = np.asarray(embs, dtype=np.float32)
-    prods = (x * x).astype(np.float64)
-    acc = np.zeros(len(x), np.float64)
-    for i in range(prods.shape[1]):
-        acc += prods[:, i]
-    return acc.tolist()
+    return _seq_fold_dot_batch(embs, embs)
 
 
 def _seq_fold_dot_batch(a, b) -> "list[float]":
@@ -2354,15 +2320,19 @@ def _asof_tiebreak_hash_batch(embs, ts_micros) -> "list[int]":
     the scalar version (gated by a test)."""
     import numpy as np
 
-    p1 = np.uint64(0x9E3779B185EBCA87)
-    p2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    p3 = np.uint64(0x165667B19E3779F9)
-    p4 = np.uint64(0x85EBCA77C2B2AE63)
-    p5 = np.uint64(0x27D4EB2F165667C5)
+    p1, p2, p3, p4, p5 = (np.uint64(p) for p in (_P1, _P2, _P3, _P4, _P5))
     u64 = np.uint64
 
     def rotl(x, r):
         return (x << u64(r)) | (x >> u64(64 - r))
+
+    def avalanche(a):
+        a ^= a >> u64(33)
+        a *= p2
+        a ^= a >> u64(29)
+        a *= p3
+        a ^= a >> u64(32)
+        return a
 
     with np.errstate(over="ignore"):
         x = np.asarray(embs, dtype=np.float32)
@@ -2373,24 +2343,12 @@ def _asof_tiebreak_hash_batch(embs, ts_micros) -> "list[int]":
             # int lane: h' = avalanche(rotl((seed+P5+4) ^ (i32*P1), 23)*P2+P3)
             a = h + p5 + u64(4)
             a = a ^ (bits[:, i].astype(np.uint64) * p1)
-            a = rotl(a, 23) * p2 + p3
-            a ^= a >> u64(33)
-            a *= p2
-            a ^= a >> u64(29)
-            a *= p3
-            a ^= a >> u64(32)
-            h = a
+            h = avalanche(rotl(a, 23) * p2 + p3)
         # long lane for the timestamp micros
         v = np.asarray(ts_micros, dtype=np.uint64)
         a = h + p5 + u64(8)
         a = a ^ (rotl(v * p2, 31) * p1)
-        a = rotl(a, 27) * p1 + p4
-        a ^= a >> u64(33)
-        a *= p2
-        a ^= a >> u64(29)
-        a *= p3
-        a ^= a >> u64(32)
-        return a.view(np.int64).tolist()
+        return avalanche(rotl(a, 27) * p1 + p4).view(np.int64).tolist()
 
 
 def _asof_tiebreak_hash(emb, ts_micros: int) -> int:
@@ -2405,31 +2363,7 @@ def _asof_tiebreak_hash(emb, ts_micros: int) -> int:
     for f in np.asarray(emb, dtype=np.float32):
         bits = int(np.float32(0.0 if f == 0.0 else f).view(np.int32))
         h = _xxhash64_int(bits, h)
-    h = _xxhash64_long_u(ts_micros, h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def _xxhash64_long(v: int, seed: int = 42) -> int:
-    """Spark's ``xxhash64`` for a LongType input (XXH64 single-lane path,
-    seed 42; published algorithm) — signed 64-bit result. Lets the IVF oracle
-    reproduce the operator's hash-ordered centroid sample outside Spark."""
-    m = (1 << 64) - 1
-    p1, p2, p3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    p4, p5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (64 - r))) & m
-
-    v &= m
-    h = (seed + p5 + 8) & m
-    h ^= (rotl((v * p2) & m, 31) * p1) & m
-    h = (rotl(h, 27) * p1 + p4) & m
-    h ^= h >> 33
-    h = (h * p2) & m
-    h ^= h >> 29
-    h = (h * p3) & m
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
+    return _signed64(_xxhash64_long_u(ts_micros, h))
 
 
 def _ann_ivf_oracle(

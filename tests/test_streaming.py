@@ -96,12 +96,10 @@ def test_stream_dedup(spark, events_dir):
 
 
 def test_stream_embed_equals_batch(spark, tmp_path):
-    from video_features_spark.streaming import stream_extract_features
-
     d = str(tmp_path / "imgs")
     generate_images(spark, 60, n_entities=4).write.mode("overwrite").parquet(d)
     sdf = spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
-    res = _run_stream(spark, stream_extract_features(sdf), "t_embed", mode="append")
+    res = _run_stream(spark, extract_image_features(sdf), "t_embed", mode="append")
     batch = extract_image_features(spark.read.parquet(d))
     got = {r["image_id"]: r["embedding"] for r in res.collect()}
     want = {r["image_id"]: r["embedding"] for r in batch.collect()}

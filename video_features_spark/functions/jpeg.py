@@ -652,10 +652,10 @@ def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()
 
 
-def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -> bytes:
-    """uint8 H×W×3 RGB → baseline JPEG bytes (4:4:4, standard tables).
-    ``restart_interval`` > 0 emits a DRI segment and RSTn markers every that
-    many MCUs (resync points a splitting decoder can parallelize on)."""
+def _quantized_blocks(img: np.ndarray, quality: int):
+    """RGB → per-component zigzag-quantized coefficient arrays (bY, bX, 64)
+    plus the two scaled quantization tables: colour conversion, edge
+    padding, FDCT and quantization for both encoders (4:4:4)."""
     h, w = img.shape[:2]
     rgb = img.astype(np.float32)
     y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
@@ -663,12 +663,32 @@ def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -
     cr = 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1] - 0.081312 * rgb[..., 2] + 128.0
     qly = _scaled_qt(STD_LUM_QT, quality)
     qlc = _scaled_qt(STD_CHR_QT, quality)
+    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
+    out = []
+    for ci, p in enumerate((y, cb, cr)):
+        pad = np.empty((ph, pw), np.float32)
+        pad[:h, :w] = p
+        pad[h:, :w] = p[h - 1 : h, :]
+        pad[:, w:] = pad[:, w - 1 : w]
+        pad -= 128.0
+        f = pad.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
+        coefs = _C @ f @ _C.T  # FDCT batched over every block
+        qtab = (qly if ci == 0 else qlc).astype(np.float32)  # raster order
+        q = np.round(coefs.reshape(ph // 8, pw // 8, 64) / qtab).astype(np.int32)
+        out.append(q[..., ZIGZAG])  # raster → zigzag (zz[i] = q[ZIGZAG[i]])
+    return out, qly, qlc
+
+
+def _header(sof: int, h: int, w: int, qly: np.ndarray, qlc: np.ndarray) -> bytearray:
+    """SOI, both DQTs, the SOFn frame header (three 1x1-sampled components)
+    and the four Annex K DHTs — everything before the first scan, for the
+    baseline (SOF0) and the progressive (SOF2) encoder."""
     out = bytearray(b"\xff\xd8")  # SOI
     for tid, tbl in ((0, qly), (1, qlc)):
         out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + bytes(
             int(tbl[z]) for z in ZIGZAG
         )
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, h, w, 3)
+    out += bytes([0xFF, sof]) + struct.pack(">HBHHB", 17, 8, h, w, 3)
     for cid, tq in ((1, 0), (2, 1), (3, 1)):
         out += bytes([cid, 0x11, tq])  # 1x1 sampling (4:4:4)
     for cls, tid, (bits, vals) in (
@@ -677,6 +697,26 @@ def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -
         out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals)) + bytes(
             [(cls << 4) | tid] + bits + vals
         )
+    return out
+
+
+def _put(wtr: _BitWriter, codes: dict, run: int, v: int) -> None:
+    """Huffman symbol ``run << 4 | size`` then the size-bit magnitude of
+    ``v`` (T.81 F.1.2; a DC difference is run 0)."""
+    size = _category(v)
+    code, ln = codes[(run << 4) | size]
+    wtr.write(code, ln)
+    if size:
+        wtr.write(v if v >= 0 else v + (1 << size) - 1, size)
+
+
+def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -> bytes:
+    """uint8 H×W×3 RGB → baseline JPEG bytes (4:4:4, standard tables).
+    ``restart_interval`` > 0 emits a DRI segment and RSTn markers every that
+    many MCUs (resync points a splitting decoder can parallelize on)."""
+    h, w = img.shape[:2]
+    comps, qly, qlc = _quantized_blocks(img, quality)
+    out = _header(0xC0, h, w, qly, qlc)
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
     out += b"\xff\xda" + struct.pack(">HB", 12, 3)
@@ -686,19 +726,10 @@ def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -
     dc_codes = [_huff_codes(*DC_LUM), _huff_codes(*DC_CHR)]
     ac_codes = [_huff_codes(*AC_LUM), _huff_codes(*AC_CHR)]
     wtr = _BitWriter()
-    ph = (h + 7) // 8 * 8
-    pw = (w + 7) // 8 * 8
-    planes = []
-    for p in (y, cb, cr):
-        pad = np.empty((ph, pw), np.float32)
-        pad[:h, :w] = p
-        pad[h:, :w] = p[h - 1 : h, :]
-        pad[:, w:] = pad[:, w - 1 : w]
-        planes.append(pad - 128.0)
     dc_pred = [0, 0, 0]
-    n_mcux = pw // 8
+    n_mcuy, n_mcux = comps[0].shape[:2]
     rst = 0
-    for m in range(ph // 8 * n_mcux):
+    for m in range(n_mcuy * n_mcux):
         my, mx = divmod(m, n_mcux)
         if restart_interval and m and m % restart_interval == 0:
             wtr.flush()
@@ -707,39 +738,26 @@ def encode_jpeg(img: np.ndarray, quality: int = 92, restart_interval: int = 0) -
             out += bytes([0xFF, 0xD0 + rst])
             rst = (rst + 1) % 8
             dc_pred = [0, 0, 0]
-        if True:
-            for ci, p in enumerate(planes):
-                tid = 0 if ci == 0 else 1
-                qtab = qly if ci == 0 else qlc
-                block = p[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-                coefs = _C @ block @ _C.T
-                q = np.round(coefs.reshape(64) / qtab.astype(np.float32)).astype(np.int64)
-                zz = q[ZIGZAG]
-                diff = int(zz[0]) - dc_pred[ci]
-                dc_pred[ci] = int(zz[0])
-                t = _category(diff)
-                code, ln = dc_codes[tid][t]
-                wtr.write(code, ln)
-                if t:
-                    wtr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        for ci, comp in enumerate(comps):
+            tid = 0 if ci == 0 else 1
+            zz = comp[my, mx]
+            _put(wtr, dc_codes[tid], 0, int(zz[0]) - dc_pred[ci])
+            dc_pred[ci] = int(zz[0])
+            run = 0
+            for k in range(1, 64):
+                v = int(zz[k])
+                if v == 0:
+                    run += 1
+                    continue
+                while run > 15:
+                    code, ln = ac_codes[tid][0xF0]
+                    wtr.write(code, ln)
+                    run -= 16
+                _put(wtr, ac_codes[tid], run, v)
                 run = 0
-                for k in range(1, 64):
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = ac_codes[tid][0xF0]
-                        wtr.write(code, ln)
-                        run -= 16
-                    size = _category(v)
-                    code, ln = ac_codes[tid][(run << 4) | size]
-                    wtr.write(code, ln)
-                    wtr.write(v if v >= 0 else v + (1 << size) - 1, size)
-                    run = 0
-                if run:
-                    code, ln = ac_codes[tid][0x00]
-                    wtr.write(code, ln)
+            if run:
+                code, ln = ac_codes[tid][0x00]
+                wtr.write(code, ln)
     wtr.flush()
     out += wtr.out
     out += b"\xff\xd9"  # EOI
@@ -794,33 +812,6 @@ class _EOBState:
         self.blocks = []
 
 
-def _quantized_blocks(img: np.ndarray, quality: int):
-    """RGB → per-component zigzag-quantized coefficient arrays (bY, bX, 64)
-    plus the two scaled quantization tables — shared by both encoders'
-    4:4:4 geometry."""
-    h, w = img.shape[:2]
-    rgb = img.astype(np.float32)
-    y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    cb = -0.168736 * rgb[..., 0] - 0.331264 * rgb[..., 1] + 0.5 * rgb[..., 2] + 128.0
-    cr = 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1] - 0.081312 * rgb[..., 2] + 128.0
-    qly = _scaled_qt(STD_LUM_QT, quality)
-    qlc = _scaled_qt(STD_CHR_QT, quality)
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    out = []
-    for ci, p in enumerate((y, cb, cr)):
-        pad = np.empty((ph, pw), np.float32)
-        pad[:h, :w] = p
-        pad[h:, :w] = p[h - 1 : h, :]
-        pad[:, w:] = pad[:, w - 1 : w]
-        pad -= 128.0
-        f = pad.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
-        coefs = _C @ f @ _C.T  # FDCT batched over every block
-        qtab = (qly if ci == 0 else qlc).astype(np.float32)  # raster order
-        q = np.round(coefs.reshape(ph // 8, pw // 8, 64) / qtab).astype(np.int32)
-        out.append(q[..., ZIGZAG])  # raster → zigzag (zz[i] = q[ZIGZAG[i]])
-    return out, qly, qlc
-
-
 def encode_progressive_jpeg(
     img: np.ndarray, quality: int = 92, script=None
 ) -> bytes:
@@ -830,20 +821,7 @@ def encode_progressive_jpeg(
     the baseline encoding of the same image (same quantized coefficients)."""
     h, w = img.shape[:2]
     comps, qly, qlc = _quantized_blocks(img, quality)
-    out = bytearray(b"\xff\xd8")
-    for tid, tbl in ((0, qly), (1, qlc)):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + bytes(
-            int(tbl[z]) for z in ZIGZAG
-        )
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 17, 8, h, w, 3)
-    for cid, tq in ((1, 0), (2, 1), (3, 1)):
-        out += bytes([cid, 0x11, tq])
-    for cls, tid, (bits, vals) in (
-        (0, 0, DC_LUM), (1, 0, AC_LUM), (0, 1, DC_CHR), (1, 1, AC_CHR)
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals)) + bytes(
-            [(cls << 4) | tid] + bits + vals
-        )
+    out = _header(0xC2, h, w, qly, qlc)
     dc_codes = [_huff_codes(*DC_LUM), _huff_codes(*DC_CHR)]
     ac_codes = [_huff_codes(*AC_LUM), _huff_codes(*AC_CHR)]
     for cis, ss, se, ah, al in (script or PROGRESSIVE_SCRIPT):
@@ -860,13 +838,8 @@ def encode_progressive_jpeg(
                 yy, xx = divmod(m, bx)
                 for ci in cis:
                     v = int(comps[ci][yy, xx, 0]) >> al  # arithmetic shift
-                    diff = v - dc_pred[ci]
+                    _put(wtr, dc_codes[0 if ci == 0 else 1], 0, v - dc_pred[ci])
                     dc_pred[ci] = v
-                    t = _category(diff)
-                    code, ln = dc_codes[0 if ci == 0 else 1][t]
-                    wtr.write(code, ln)
-                    if t:
-                        wtr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
         elif ss == 0:  # DC refinement: bit Al of every block, MCU order
             by, bx = comps[0].shape[:2]
             for m in range(by * bx):
@@ -890,11 +863,7 @@ def encode_progressive_jpeg(
                         code, ln = codes[0xF0]
                         wtr.write(code, ln)
                         run -= 16
-                    size = mag.bit_length()
-                    code, ln = codes[(run << 4) | size]
-                    wtr.write(code, ln)
-                    sv = mag if v > 0 else -mag
-                    wtr.write(sv if sv >= 0 else sv + (1 << size) - 1, size)
+                    _put(wtr, codes, run, mag if v > 0 else -mag)
                     run = 0
                 if run:
                     eob.add_block([])

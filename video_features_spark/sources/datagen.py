@@ -118,6 +118,23 @@ def _row(seed: int, rid: int, n_entities: int, caption_null_rate: float) -> tupl
     return (f"img{rid:010d}", f"e{entity:05d}", ts, bytearray(data), w, h, fmt, caption, ph)
 
 
+def _generate(
+    spark: SparkSession, n_rows: int, partitions: int | None, schema: str, row
+) -> DataFrame:
+    """The one generator scaffold: ``row(rid)`` for every id of
+    ``spark.range(n_rows)``, inside ``mapInPandas`` (default: one partition
+    per core). ``row`` returns the columns of ``schema`` in order."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield pd.DataFrame([row(int(rid)) for rid in b["id"]], columns=columns)
+
+    return spark.range(
+        n_rows, numPartitions=partitions or spark.sparkContext.defaultParallelism
+    ).mapInPandas(gen, schema=schema)
+
+
 def generate_images(
     spark: SparkSession,
     n_rows: int,
@@ -128,19 +145,9 @@ def generate_images(
 ) -> DataFrame:
     """The synthetic `images` table, distributed and deterministic."""
     n_entities = n_entities or max(n_rows // 50, 1)
-    partitions = partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [_row(seed, int(rid), n_entities, caption_null_rate) for rid in b["id"]]
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "entity_id", "ts", "bytes", "w", "h", "fmt", "caption", "phash"],
-            )
-
-    return (
-        spark.range(n_rows, numPartitions=partitions)
-        .mapInPandas(gen, schema=IMAGES_SCHEMA)
+    return _generate(
+        spark, n_rows, partitions, IMAGES_SCHEMA,
+        lambda rid: _row(seed, rid, n_entities, caption_null_rate),
     )
 
 
@@ -175,16 +182,9 @@ def generate_labels(
     strict `<` (leakage-free) tie semantics are pinned by data (FIXTURES.md §2)."""
     n_entities = n_entities or max(n_rows // 50, 1)
     images_per_entity = images_per_entity or 50
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                [_label_row(seed, int(rid), n_entities, images_per_entity) for rid in b["id"]],
-                columns=["entity_id", "label_ts", "label"],
-            )
-
-    return spark.range(n_rows, numPartitions=partitions or spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, schema=LABELS_SCHEMA
+    return _generate(
+        spark, n_rows, partitions, LABELS_SCHEMA,
+        lambda rid: _label_row(seed, rid, n_entities, images_per_entity),
     )
 
 
@@ -208,16 +208,10 @@ def generate_audio(
     generator; ``n_samples`` rides along so invariants can compute the exact
     expected log-mel example count without decoding."""
     n_entities = n_entities or max(n_rows // 20, 1)
-    partitions = partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                [_audio_row(seed, int(rid), n_entities, sample_rate) for rid in b["id"]],
-                columns=["clip_id", "entity_id", "ts", "audio", "sr", "n_channels", "n_samples"],
-            )
-
-    return spark.range(n_rows, numPartitions=partitions).mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return _generate(
+        spark, n_rows, partitions, AUDIO_SCHEMA,
+        lambda rid: _audio_row(seed, rid, n_entities, sample_rate),
+    )
 
 
 def _audio_row(seed: int, rid: int, n_entities: int, sample_rate: int = 16000) -> tuple:
@@ -302,13 +296,7 @@ def generate_videos(
     rides along so invariants can compute exact expected frame counts
     without demuxing."""
     n_entities = n_entities or max(n_rows // 5, 1)
-    partitions = partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                [_video_row(seed, int(rid), n_entities, fps) for rid in b["id"]],
-                columns=["video_id", "entity_id", "ts", "video", "fps", "n_frames", "w", "h"],
-            )
-
-    return spark.range(n_rows, numPartitions=partitions).mapInPandas(gen, schema=VIDEOS_SCHEMA)
+    return _generate(
+        spark, n_rows, partitions, VIDEOS_SCHEMA,
+        lambda rid: _video_row(seed, rid, n_entities, fps),
+    )

@@ -132,15 +132,6 @@ def stream_near_dup_lookup(
     return matches.dropDuplicatesWithinWatermark([id_col, corpus_id_col])
 
 
-def stream_extract_features(sdf: DataFrame, model_name: str = "clip-small-det") -> DataFrame:
-    """Decode+embed on a stream: ``extract_image_features`` is mapInPandas, so
-    the exact same operator runs on a streaming DataFrame unchanged — one code
-    path for batch and streaming (the reference needs two: loop + resume)."""
-    from ..operators.features import extract_image_features
-
-    return extract_image_features(sdf, model_name)
-
-
 _STATE_SCHEMA = "n long, last_ts timestamp"
 _OUT_SCHEMA = "entity_id string, n_so_far long, last_ts timestamp"
 
