@@ -91,7 +91,7 @@ _ASOF_ORACLE = """
 """
 
 
-def _q_asof(strategy: str, salt: int | None = None):
+def _q_asof(salt: int | None = None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe = _read(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         res = asof_join(
@@ -101,7 +101,6 @@ def _q_asof(strategy: str, salt: int | None = None):
             left_ts="ts",
             right_ts="o_orderdate",
             strict=True,
-            strategy=strategy,
             salt_threshold=salt,
             num_salts=8,
         )
@@ -654,6 +653,25 @@ def _q_image_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q_asof_image_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship's match on metadata alone: the same labels strictly as-of
+    joined to the same images' ``(entity_id, ts, image_id)``, with no decode
+    and no embed. ``image_id`` is the match key a decode of only the matched
+    images would join back on. The image bytes never reach the exchange
+    (plan_audit #15)."""
+    n = _n_images(sf_dir)
+    n_ent = max(n // 50, 1)
+    return asof_join(
+        generate_labels(spark, n // 2, n_entities=n_ent),
+        generate_images(spark, n, n_entities=n_ent).select("entity_id", "ts", "image_id"),
+        on=["entity_id"],
+        left_ts="label_ts",
+        right_ts="ts",
+        right_cols=["image_id"],
+        strict=True,
+    )
+
+
 def _q_image_caption_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _n_images(sf_dir)
     imgs = generate_images(spark, n, n_entities=max(n // 50, 1))
@@ -1107,7 +1125,11 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition (``parts_skipped``) and compute exactly the missing ones
     (``parts_resumed``); the read-back aggregate proves the union landed with
     no loss or duplication. Oracle: partition membership replayed with the
-    verified pure-Python xxhash64 replica; totals are plain SQL over orders."""
+    verified pure-Python xxhash64 replica; totals are plain SQL over orders.
+    Returns a driver-local copy of the one result row and deletes the
+    checkpoint base before returning."""
+    import shutil
+
     from video_features_spark.sources.checkpoint import (
         PART_COL,
         checkpointed_write,
@@ -1117,33 +1139,36 @@ def _q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base = _fresh_tmp("vfs_ckpt_resume_")
-    orders = _read(spark, sf_dir, "orders")
-    num_parts = 64
-    half = (
-        with_partition_id(orders, ["o_orderkey"], num_parts)
-        .filter(F.col(PART_COL) < num_parts // 2)
-        .drop(PART_COL)
-    )
-    checkpointed_write(half, base, ["o_orderkey"], num_parts)
-    stats = checkpointed_write(orders, base, ["o_orderkey"], num_parts)
-    # the reference's "loads without error" half (base_extractor.py:102-118):
-    # recount + re-checksum every partition against its latest manifest row
-    drift = verify_manifest(spark, base).count()
-    return (
-        read_checkpointed(spark, base)
-        .agg(
-            F.count(F.lit(1)).alias("rows_total"),
-            _dsum("o_totalprice", scale=2).alias("sum_totalprice"),
+    try:
+        orders = _read(spark, sf_dir, "orders")
+        num_parts = 64
+        half = (
+            with_partition_id(orders, ["o_orderkey"], num_parts)
+            .filter(F.col(PART_COL) < num_parts // 2)
+            .drop(PART_COL)
         )
-        .select(
-            F.lit(stats["parts_total"]).alias("parts_total"),
-            F.lit(stats["parts_skipped"]).alias("parts_skipped"),
-            F.lit(stats["parts_written"]).alias("parts_resumed"),
-            F.lit(drift).alias("drift_rows"),
-            "rows_total",
-            "sum_totalprice",
+        checkpointed_write(half, base, ["o_orderkey"], num_parts)
+        stats = checkpointed_write(orders, base, ["o_orderkey"], num_parts)
+        # the reference's "loads without error" half (base_extractor.py:102-118):
+        # recount + re-checksum every partition against its latest manifest row
+        drift = verify_manifest(spark, base).count()
+        return _local(
+            read_checkpointed(spark, base)
+            .agg(
+                F.count(F.lit(1)).alias("rows_total"),
+                _dsum("o_totalprice", scale=2).alias("sum_totalprice"),
+            )
+            .select(
+                F.lit(stats["parts_total"]).alias("parts_total"),
+                F.lit(stats["parts_skipped"]).alias("parts_skipped"),
+                F.lit(stats["parts_written"]).alias("parts_resumed"),
+                F.lit(drift).alias("drift_rows"),
+                "rows_total",
+                "sum_totalprice",
+            )
         )
-    )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _stream_events(
@@ -1286,9 +1311,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_frames": _q_video_frames,
         "audio_logmel": _q_audio_logmel,
         # -- point-in-time joins
-        "asof_window": _q_asof("window"),
-        "asof_merge": _q_asof("merge"),
-        "asof_salted": _q_asof("window", salt=8),
+        "asof_window": _q_asof(),
+        "asof_merge": _q_asof_image_match,
+        "asof_salted": _q_asof(salt=8),
         "image_phash_asof": _q_image_phash_asof,
         # -- temporal/pair image operators
         "image_pair_flow_field": _q_image_pair_flow_field,
@@ -1683,7 +1708,7 @@ def _payload_section_main() -> dict:
         i = bisect.bisect_left([t[0] for t in fl], lts)
         if i:
             # (ts, hash) sort ⇒ fl[i-1] is max ts < lts, then max hash: the
-            # same winner both asof strategies pick
+            # same winner the as-of join picks
             ts_asof, _, sq = fl[i - 1]
             pa.append((r[0], r[8], str(lts), str(ts_asof), sq))
         else:
@@ -1964,6 +1989,34 @@ def _image_flagship_oracle() -> str:
         SELECT entity_id, label_ts, label::DOUBLE AS label,
                ts_asof::TIMESTAMP AS ts_asof, emb_sq_norm::DOUBLE AS emb_sq_norm
         FROM (VALUES {values}) AS t(entity_id, label_ts, label, ts_asof, emb_sq_norm)
+    """
+
+
+def _asof_image_match_oracle() -> str:
+    """DuckDB twin of the ``asof_merge`` slot (the metadata-only flagship
+    match): images and labels regenerated in pure Python (both pure functions
+    of (seed, rid)) as VALUES tables, joined by DuckDB's own strict
+    ``ASOF LEFT JOIN``. Per-entity image timestamps are unique
+    (``seq*600 + rand(0, 300)``), so the answer has no ties."""
+    from video_features_spark.sources.datagen import SEED, _label_row
+
+    n = _oracle_n_images()
+    n_ent = max(n // 50, 1)
+    imgs = ", ".join(
+        f"({_sql_str(r[1])}, TIMESTAMP '{r[2]}', {_sql_str(r[0])})"
+        for r in _regen_image_rows(n, n_ent)
+    )
+    labels = ", ".join(
+        f"({_sql_str(ent)}, TIMESTAMP '{lts}', {_dlit(label)})"
+        for ent, lts, label in (_label_row(SEED, rid, n_ent, 50) for rid in range(n // 2))
+    )
+    return f"""
+        WITH imgs(entity_id, ts, image_id) AS (VALUES {imgs}),
+        labels(entity_id, label_ts, label) AS (VALUES {labels})
+        SELECT l.entity_id, l.label_ts, l.label::DOUBLE AS label,
+               i.image_id, i.ts AS ts_asof
+        FROM labels l ASOF LEFT JOIN imgs i
+          ON l.entity_id = i.entity_id AND l.label_ts > i.ts
     """
 
 
@@ -2554,7 +2607,7 @@ def oracle_sql() -> dict[str, str]:
     """
     return {
         "asof_window": _ASOF_ORACLE,
-        "asof_merge": _ASOF_ORACLE,
+        "asof_merge": _asof_image_match_oracle(),
         "asof_salted": _ASOF_ORACLE,
         "stream_asof": _ASOF_ORACLE,
         "lag_lead": """

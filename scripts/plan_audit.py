@@ -29,6 +29,21 @@ def optimized_plan_lines(df) -> list[str]:
     return text[start:text.index("== Physical Plan ==")].splitlines()[1:]
 
 
+def exchange_schemas(df) -> list[str]:
+    """The schema (``simpleString``, nested fields included) of every shuffle
+    Exchange in ``df``'s physical plan; ``df`` must not have run yet (its
+    adaptive plan is still the initial one)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    stack, out = [plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan], []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange":
+            out.append(node.schema().simpleString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def _depth(line: str) -> int:
     return len(line) - len(line.lstrip(" :+-"))
 
@@ -93,7 +108,7 @@ def main(sf_dir: str) -> int:
         if unneeded in read_line:
             failures.append(f"image pipeline scan reads unneeded column {unneeded}")
 
-    # 5. as-of join (window strategy): exactly ONE exchange feeding one sort —
+    # 5. as-of join: exactly ONE exchange feeding one sort —
     #    union both sides, hash-partition on the key, sort within partitions,
     #    streaming window frame. No Python stage, no N×M join.
     from video_features_spark.operators import asof_join
@@ -105,10 +120,10 @@ def main(sf_dir: str) -> int:
     )
     n_exchanges = p.count(" Exchange ")
     if n_exchanges > 1:
-        failures.append(f"asof window strategy has {n_exchanges} exchanges (expected 1)")
+        failures.append(f"as-of join has {n_exchanges} exchanges (expected 1)")
     for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         if bad in p:
-            failures.append(f"asof window strategy runs Python ({bad})")
+            failures.append(f"as-of join runs Python ({bad})")
 
     # 6. image decode+embed pipeline: embarrassingly parallel — NO shuffle
     p = plan_of(extract_image_features(spark.read.parquet(d)))
@@ -232,6 +247,17 @@ def main(sf_dir: str) -> int:
     windows = [i for i, line in enumerate(lines) if line.lstrip(" :+-").startswith("Window ")]
     if not any(is_ancestor(lines, g, w) for g in guards for w in windows):
         failures.append("leakage guard's raise_error Filter is not above the as-of Window")
+
+    # 15. the metadata-only flagship match (the asof_merge driver query):
+    #     exactly one Exchange, the as-of window's, and image bytes never
+    #     cross it. The join packs the build columns into one struct, so the
+    #     check reads each Exchange's schema (nested fields included) for a
+    #     binary column rather than its Input names.
+    schemas = exchange_schemas(entrymod.queries()["asof_merge"](spark, sf_dir))
+    if len(schemas) != 1:
+        failures.append(f"metadata as-of match has {len(schemas)} exchanges (expected 1)")
+    if any(":binary" in sch for sch in schemas):
+        failures.append("metadata as-of match shuffles image bytes")
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

@@ -1,12 +1,17 @@
-"""As-of join correctness vs DuckDB's native ASOF JOIN, both strategies,
-strict and non-strict, salted and unsalted."""
+"""As-of join correctness, strict and non-strict, salted and unsalted: vs
+DuckDB's native ASOF JOIN, and vs a pandas reference (``pd.merge_asof`` after
+keeping the max-tiebreak-hash row of each duplicate (key, ts)) that shares no
+join code with the operator."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.utils import assert_frames_match
 from video_features_spark.operators import asof_join
-from video_features_spark.operators.asof import assert_no_leakage, leakage_guard
+from video_features_spark.operators.asof import _build_tiebreak, assert_no_leakage, leakage_guard
+
+# Test ids name the join's one physical plan: the union + window pass.
+_WINDOW = pytest.mark.parametrize("plan", ["window"])
 
 
 def _feat(spark, sf_dir):
@@ -35,25 +40,25 @@ def _oracle(duck, strict):
     ).df()
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
+@_WINDOW
 @pytest.mark.parametrize("strict", [True, False])
-def test_asof_matches_duckdb(spark, duck, sf_dir, strategy, strict):
+def test_asof_matches_duckdb(spark, duck, sf_dir, plan, strict):
     probe = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts", "event_id")
     res = asof_join(
         probe, _feat(spark, sf_dir), on=["user_id"], left_ts="ts",
-        right_ts="o_orderdate", strict=strict, strategy=strategy,
+        right_ts="o_orderdate", strict=strict,
     )
     assert_frames_match(res.toPandas(), _oracle(duck, strict))
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
-def test_asof_salted_matches_unsalted(spark, sf_dir, strategy):
+@_WINDOW
+def test_asof_salted_matches_unsalted(spark, sf_dir, plan):
     probe = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts", "event_id")
     feat = _feat(spark, sf_dir)
-    plain = asof_join(probe, feat, ["user_id"], "ts", "o_orderdate", strategy=strategy)
+    plain = asof_join(probe, feat, ["user_id"], "ts", "o_orderdate")
     # threshold low enough that many keys are "hot" => salting path exercised
     salted = asof_join(
-        probe, feat, ["user_id"], "ts", "o_orderdate", strategy=strategy,
+        probe, feat, ["user_id"], "ts", "o_orderdate",
         salt_threshold=2, num_salts=4,
     )
     assert_frames_match(salted.toPandas(), plain.toPandas())
@@ -117,14 +122,32 @@ def _ref_asof(probe: pd.DataFrame, build: pd.DataFrame, strict: bool) -> pd.Data
     return out.rename(columns={"fts": "fts_asof"})
 
 
+def _ref_asof_max_hash(probe, build, strict: bool) -> pd.DataFrame:
+    """Reference for build sides with duplicate (e, fts) and different
+    payloads: Spark computes each build row's tiebreak hash (the hash alone —
+    its Python twin is pinned in test_oracle_parity), pandas keeps the
+    max-hash row per (e, fts), and ``_ref_asof`` joins."""
+    p = probe.toPandas().astype({"ts": "datetime64[ns]"})
+    b = build.select("e", "fts", "payload", _build_tiebreak(["payload"], F.col("fts")).alias("h"))
+    b = b.toPandas().astype({"e": p["e"].dtype, "fts": "datetime64[ns]", "h": "int64"})
+    b = b.sort_values("h", kind="mergesort").drop_duplicates(["e", "fts"], keep="last")
+    return _ref_asof(p, b.drop(columns="h"), strict)
+
+
+def _rows(pdf: pd.DataFrame, cols) -> list:
+    """Sorted row tuples, every missing value (None/NaN/NaT) as None."""
+    return sorted(
+        tuple(None if pd.isna(v) else v for v in row) for row in pdf[list(cols)].itertuples(index=False)
+    )
+
+
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     probe_rows=st.lists(_row, min_size=1, max_size=25),
     build_rows=st.lists(_row, min_size=0, max_size=25),
     strict=st.booleans(),
-    strategy=st.sampled_from(["window", "merge"]),
 )
-def test_asof_property_vs_pandas(spark, probe_rows, build_rows, strict, strategy):
+def test_asof_property_vs_pandas(spark, probe_rows, build_rows, strict):
     """Duplicate probe timestamps, empty build sides, equal-ts boundaries,
     entities present on only one side — all must match pd.merge_asof. Build
     keys deduped: multiple build rows at one (entity, ts) are ambiguous by
@@ -148,8 +171,7 @@ def test_asof_property_vs_pandas(spark, probe_rows, build_rows, strict, strategy
         else spark.createDataFrame([], "e long, fts timestamp, val long")
     )
     got = (
-        asof_join(sp, sb, on=["e"], left_ts="ts", right_ts="fts",
-                  strict=strict, strategy=strategy)
+        asof_join(sp, sb, on=["e"], left_ts="ts", right_ts="fts", strict=strict)
         .toPandas()
         .sort_values("pid", kind="mergesort")
         .reset_index(drop=True)
@@ -162,32 +184,32 @@ def test_asof_property_vs_pandas(spark, probe_rows, build_rows, strict, strategy
     assert got_ts.isna().equals(ref_ts.isna()) and (got_ts.dropna() == ref_ts.dropna()).all()
 
 
-@pytest.mark.parametrize("strategy", ["window", "merge"])
-def test_asof_duplicate_build_ts_deterministic(spark, strategy):
+@_WINDOW
+def test_asof_duplicate_build_ts_deterministic(spark, plan):
     """Build rows sharing (key, ts) with DIFFERENT payloads: the chosen row
     must be deterministic (max payload-hash) across partitionings and
-    identical between the two strategies."""
+    salting, and equal to the pandas max-hash reference."""
     probe = spark.createDataFrame(
-        [("k1", 100), ("k1", 50), ("k2", 100)], "key string, ts long"
-    ).select("key", F.timestamp_seconds("ts").alias("ts"))
+        [("k1", 100), ("k1", 50), ("k2", 100)], "e string, ts long"
+    ).select("e", F.timestamp_seconds("ts").alias("ts"))
     build = spark.createDataFrame(
         [("k1", 10, "a"), ("k1", 10, "b"), ("k1", 10, "c"), ("k2", 10, "x"), ("k2", 10, "y")],
-        "key string, fts long, payload string",
-    ).select("key", F.timestamp_seconds("fts").alias("fts"), "payload")
+        "e string, fts long, payload string",
+    ).select("e", F.timestamp_seconds("fts").alias("fts"), "payload")
+    cols = ("e", "ts", "payload")
 
-    def run(b, strat):
+    def run(b, salt=None):
         res = asof_join(
-            probe, b, on=["key"], left_ts="ts", right_ts="fts",
-            strict=True, strategy=strat,
+            probe, b, on=["e"], left_ts="ts", right_ts="fts",
+            strict=True, salt_threshold=salt, num_salts=4,
         )
-        return sorted((r["key"], r["ts"], r["payload"]) for r in res.collect())
+        return _rows(res.toPandas(), cols)
 
-    base = run(build.repartition(1), strategy)
-    assert base == run(build.repartition(7), strategy)
-    assert base == run(build.orderBy(F.desc("payload")).repartition(3), strategy)
-    # both strategies pick the SAME winner among the duplicate-(key, ts) rows
-    other = "merge" if strategy == "window" else "window"
-    assert base == run(build, other)
+    base = run(build.repartition(1))
+    assert base == run(build.repartition(7))
+    assert base == run(build.orderBy(F.desc("payload")).repartition(3))
+    assert base == run(build, salt=1)
+    assert base == _rows(_ref_asof_max_hash(probe, build, strict=True), cols)
     # every probe matched something (ts > build ts for all)
     assert all(p is not None for _, _, p in base)
 
@@ -205,12 +227,12 @@ _skewed_entity = st.sampled_from([0, 0, 0, 0, 0, 1, 2, 3, 4])
     ),
     strict=st.booleans(),
 )
-def test_asof_salted_strategies_agree_on_adversarial_skew(spark, probes, builds, strict):
+def test_asof_salted_matches_reference_on_adversarial_skew(spark, probes, builds, strict):
     """Round-3 gate for the payload-hash tiebreak (asof.py): on tables where
     one key holds ~half the rows AND build rows duplicate (key, ts) with
-    DIFFERENT payloads, the salted window path, the unsalted window path, and
-    the merge path must produce identical rows — salting and the cogrouped
-    merge must not change which duplicate wins."""
+    DIFFERENT payloads, the salted and the unsalted join must both equal the
+    pandas max-hash reference — salting must not change which duplicate
+    wins."""
     probe = spark.createDataFrame(
         [(e, ts, i) for i, (e, ts) in enumerate(probes)], "e long, ts long, pid long"
     ).select("e", F.timestamp_seconds("ts").alias("ts"), "pid")
@@ -218,18 +240,11 @@ def test_asof_salted_strategies_agree_on_adversarial_skew(spark, probes, builds,
         [(e, ts, f"p{v}") for e, ts, v in builds] or [],
         "e long, fts long, payload string",
     ).select("e", F.timestamp_seconds("fts").alias("fts"), "payload")
-
-    def run(strategy, salt):
+    cols = ("pid", "payload", "fts_asof")
+    ref = _rows(_ref_asof_max_hash(probe, build, strict), cols)
+    for salt in (None, 1):  # 1: every key over threshold -> salted
         res = asof_join(
             probe, build, on=["e"], left_ts="ts", right_ts="fts",
-            strict=strict, strategy=strategy,
-            salt_threshold=salt, num_salts=4,
+            strict=strict, salt_threshold=salt, num_salts=4,
         )
-        return sorted(
-            (r["pid"], r["payload"], r["fts_asof"]) for r in res.collect()
-        )
-
-    unsalted = run("window", None)
-    assert unsalted == run("window", 1)   # every key over threshold -> salted
-    assert unsalted == run("merge", None)
-    assert unsalted == run("merge", 1)
+        assert _rows(res.toPandas(), cols) == ref, salt

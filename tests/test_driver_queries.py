@@ -1,9 +1,11 @@
 """The gated driver queries materialize once and release what they made: no
-cached RDD and no streaming memory-sink view outlives a query call, also when
-a gate fails."""
+cached RDD, no streaming memory-sink view and no checkpoint base outlives a
+query call, also when a gate fails."""
 
+import glob
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -33,3 +35,13 @@ def test_failing_gate_releases_the_cache(spark):
         entrymod._gated(df, entrymod._count_is(11, "ten rows"))
     assert not df.is_cached
     assert _persistent_rdds(spark) - before == set()
+
+
+def test_checkpoint_resume_leaves_no_base(spark, sf_dir):
+    def bases() -> set:
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "vfs_ckpt_resume_*")))
+
+    before = bases()
+    row = entrymod.queries()["checkpoint_resume"](spark, sf_dir).collect()
+    assert len(row) == 1 and row[0]["drift_rows"] == 0
+    assert bases() - before == set()

@@ -8,27 +8,19 @@ closest analog is the consecutive-frame overlap pairing
 (``/root/reference/models/_base/base_flow_extractor.py:78-84``) — so the design
 here is Spark-first, not a port.
 
-Two physical strategies
------------------------
-``window`` (default, all-JVM):
-    Union probe+build rows tagged by side, then one window pass per entity:
-    ``last(build_payload, ignorenulls=True)`` over
-    ``(entity ORDER BY ts, side_tag ROWS UNBOUNDED PRECEDING..CURRENT)``.
-    Strictness is encoded purely in the sort: for strict ``<`` probes sort
-    *before* builds at equal ts (so an equal-ts feature is outside the frame);
-    for ``<=`` builds sort first. One shuffle, no Python, whole-stage codegen
-    end-to-end, streaming window frame (O(1) state per row). This is the shape
-    that survives 100 TB: sort-merge within range partitions, no N×M blowup.
-
-``merge`` (bucketed cogrouped sort-merge):
-    hash keys into ~2×parallelism buckets, cogroup on the bucket, and run
-    ``pd.merge_asof(by=keys, allow_exact_matches=not strict)`` per bucket —
-    the per-key backward merge happens in C, one Arrow exchange per bucket
-    instead of one per key. Both strategies are sort-merge joins: the window
-    strategy's physical plan is hash-partition → sort-within-partitions →
-    streaming frame (Spark's Window operator), i.e. the same shape the north
-    rule names, executed entirely in the JVM. Use ``merge`` when downstream
-    pandas-side feature logic should ride along in the same pass.
+Physical plan
+-------------
+Union probe+build rows tagged by side, then one window pass per entity:
+``last(build_payload, ignorenulls=True)`` over
+``(entity ORDER BY ts, side_tag, tiebreak ROWS UNBOUNDED PRECEDING..CURRENT)``.
+Strictness is encoded purely in the sort: for strict ``<`` probes sort
+*before* builds at equal ts (so an equal-ts feature is outside the frame);
+for ``<=`` builds sort first; duplicate-(key, ts) build rows sort by
+``_build_tiebreak``, so the max-hash row wins. The plan is hash-partition →
+sort-within-partitions → streaming window frame: a sort-merge join with one
+shuffle, no Python, whole-stage codegen end-to-end and O(1) frame state per
+row. This is the shape that survives 100 TB: sort-merge within range
+partitions, no N×M blowup.
 
 Skew
 ----
@@ -45,7 +37,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 _SALT = "__asof_salt"
@@ -99,7 +90,6 @@ def asof_join(
     right_ts: str,
     right_cols: Sequence[str] | None = None,
     strict: bool = True,
-    strategy: str = "window",
     salt_threshold: int | None = None,
     num_salts: int = 16,
 ) -> DataFrame:
@@ -113,30 +103,6 @@ def asof_join(
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in on and c != right_ts]
     right_cols = list(right_cols)
-    if strategy == "window":
-        return _asof_window(
-            left, right, on, left_ts, right_ts, right_cols, strict, salt_threshold, num_salts
-        )
-    if strategy == "merge":
-        return _asof_merge(
-            left, right, on, left_ts, right_ts, right_cols, strict, salt_threshold, num_salts
-        )
-    raise ValueError(f"strategy must be window|merge, got {strategy!r}")
-
-
-def _build_tiebreak(payload, ts):
-    """Deterministic tiebreak among build rows sharing (key, ts): xxhash64 of
-    the full build payload (``payload`` and ``ts``: column names or Columns).
-    Without it, which duplicate-(key, ts) build row the as-of join picks
-    depends on input partitioning/order (datagen produces such dups: same
-    phash+ts, different embeddings). Both strategies and the streaming lookup
-    use the SAME hash so they pick the same winner: the max-hash row."""
-    return F.xxhash64(F.struct(*payload, ts))
-
-
-def _asof_window(
-    left, right, on, left_ts, right_ts, right_cols, strict, salt_threshold, num_salts
-):
     left, right, keys = _with_salt(left, right, on, salt_threshold, num_salts)
     asof_ts = f"{right_ts}_asof"
     # side tag controls tie behavior at equal ts: the window frame ends at the
@@ -185,70 +151,14 @@ def _asof_window(
     return probes.select(*out_cols)
 
 
-def _asof_merge(
-    left, right, on, left_ts, right_ts, right_cols, strict, salt_threshold, num_salts
-):
-    """Bucketed cogrouped sort-merge: hash the (salted) key into ~2×parallelism
-    buckets, cogroup on the BUCKET (not the raw key — one Python/Arrow call per
-    key would dominate at high key cardinality), sort each side inside pandas,
-    and let ``pd.merge_asof(by=keys)`` run the per-key backward merge in C.
-    Requires non-null join keys on the probe side (merge_asof ``by`` contract);
-    use the window strategy when probes may carry null keys."""
-    left, right, keys = _with_salt(left, right, on, salt_threshold, num_salts)
-    asof_ts = f"{right_ts}_asof"
-    nbuckets = max(2 * left.sparkSession.sparkContext.defaultParallelism, 16)
-    bucket = F.pmod(F.xxhash64(*keys), F.lit(nbuckets)).alias("__bucket")
-    lsel = left.select("*", bucket)
-    rsel = right.select(
-        *keys,
-        F.col(right_ts).cast("timestamp").alias("__rts"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
-        # same payload hash as the window strategy so both pick the same
-        # winner among duplicate-(key, ts) build rows
-        _build_tiebreak(right_cols, F.col(right_ts).cast("timestamp")).alias("__tb"),
-        bucket,
-    )
-
-    out_fields = [
-        f"`{c}` {lsel.schema[c].dataType.simpleString()}"
-        for c in lsel.columns
-        if c not in (_SALT, "__bucket")
-    ]
-    out_fields += [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in right_cols]
-    out_fields += [f"`{asof_ts}` timestamp"]
-    schema = ", ".join(out_fields)
-    lcols = [c for c in lsel.columns if c not in (_SALT, "__bucket")]
-    rename = {f"__r_{c}": c for c in right_cols}
-    allow_exact = not strict
-    by = list(keys)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=lcols + right_cols + [asof_ts])
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        if rpdf.empty:
-            merged = lpdf.copy()
-            for c in right_cols:
-                merged[c] = None
-            merged[asof_ts] = pd.NaT
-            return merged[lcols + right_cols + [asof_ts]]
-        # ties on __rts resolved by the payload hash: merge_asof backward picks
-        # the LAST eligible row, so the max-hash duplicate wins (matches window)
-        rpdf = rpdf.sort_values(["__rts", "__tb"], kind="mergesort")
-        rpdf[asof_ts] = rpdf["__rts"]
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[by + ["__rts", asof_ts] + list(rename)],
-            left_on=left_ts,
-            right_on="__rts",
-            by=by,
-            direction="backward",
-            allow_exact_matches=allow_exact,
-        ).rename(columns=rename)
-        return merged[lcols + right_cols + [asof_ts]]
-
-    grouped = lsel.groupBy("__bucket").cogroup(rsel.groupBy("__bucket"))
-    return grouped.applyInPandas(merge, schema=schema)
+def _build_tiebreak(payload, ts):
+    """Deterministic tiebreak among build rows sharing (key, ts): xxhash64 of
+    the full build payload (``payload`` and ``ts``: column names or Columns).
+    Without it, which duplicate-(key, ts) build row the as-of join picks
+    depends on input partitioning/order (datagen produces such dups: same
+    phash+ts, different embeddings). The batch join and the streaming lookup
+    use the SAME hash so they pick the same winner: the max-hash row."""
+    return F.xxhash64(F.struct(*payload, ts))
 
 
 def _leak(label_ts: str, asof_ts: str, strict: bool):

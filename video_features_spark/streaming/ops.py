@@ -176,13 +176,13 @@ def stream_asof_lookup(
     ``operators.asof.asof_join`` for the stream-probe/static-build case (a
     label stream enriched against a feature-store snapshot).
 
-    The union+window trick the batch strategy uses is unavailable on a stream
+    The union+window trick the batch join uses is unavailable on a stream
     (non-time window functions are unsupported), so this uses a stream-static
     LEFT join whose condition carries the temporal predicate (key equality AND
     ``build_ts < probe_ts``; unmatched probes keep one null row — the batch
     left-outer contract), then ``max(struct(ts, tiebreak, payload))`` per
     probe: latest ``right_ts`` wins, and exact-ts ties break by the SAME
-    ``xxhash64(payload)`` the batch strategies use (``_build_tiebreak``), so
+    ``xxhash64(payload)`` the batch join uses (``_build_tiebreak``), so
     batch and streaming pick the same winner on duplicate-(key, ts) build
     rows. The groupBy keys on EVERY probe column, so distinct probe rows never
     merge — but FULLY-identical duplicate probe rows collapse to one output
@@ -221,7 +221,7 @@ def stream_asof_lookup(
     )
     joined = p.join(b, cond, "left")
     probe_cols = [c for c in probes.columns if c not in on and c != left_ts]
-    # the batch strategies' tiebreak hash; struct field order makes max()
+    # the batch join's tiebreak hash; struct field order makes max()
     # compare (ts, hash) before any payload field
     payload = F.struct(
         F.col(f"__b.{right_ts}").alias(asof_ts),
