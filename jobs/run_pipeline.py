@@ -30,7 +30,9 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--images", required=True, help="parquet dir: input_hint table + entity_id, ts")
     ap.add_argument("--labels", required=True, help="parquet dir: (entity_id, label_ts, label)")
-    ap.add_argument("--output", required=True, help="output base dir (data + _manifest)")
+    ap.add_argument("--output", required=True,
+                    help="output base dir (data + _manifest): a local path or file: URI; "
+                         "the manifest is kept with local file I/O, so other schemes are refused")
     ap.add_argument("--model", default="clip-small-det",
                     help="registry model; it must serve --modality (an image model such "
                          "as clip-small-det for image and video, vggish-det for audio)")
@@ -45,8 +47,8 @@ def main() -> None:
                          "(--no-strict also admits features AT label_ts)")
     ap.add_argument("--compact-manifest", action="store_true",
                     help="after the run, compact the append-only manifest to "
-                         "one row per partition (generation-pointer swap — "
-                         "safe on object stores; run while no other writer "
+                         "one row per partition (generation-pointer swap, no "
+                         "directory rename; run while no other writer "
                          "is appending to this base)")
     args = ap.parse_args()
 

@@ -7,7 +7,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,9 +55,8 @@ def is_ancestor(lines: list[str], i: int, j: int) -> bool:
     return i < j and all(_depth(line) > _depth(lines[i]) for line in lines[i + 1 : j + 1])
 
 
-def main(sf_dir: str) -> int:
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def checks(spark, sf_dir: str, tmp: str) -> list[str]:
+    """Run every check; scratch tables go under ``tmp``. Returns the failures."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     failures = []
@@ -98,9 +99,7 @@ def main(sf_dir: str) -> int:
     from video_features_spark.operators.features import extract_image_features
     from video_features_spark.sources.datagen import generate_images
 
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="audit_imgs_")
+    d = os.path.join(tmp, "imgs")
     generate_images(spark, 50, n_entities=2).write.mode("overwrite").parquet(d)
     p = plan_of(extract_image_features(spark.read.parquet(d)))
     read_line = next(line for line in p.splitlines() if "ReadSchema" in line)
@@ -237,7 +236,7 @@ def main(sf_dir: str) -> int:
     from video_features_spark.plans import FeatureJobSpec, build
     from video_features_spark.sources.datagen import generate_labels
 
-    lbl = tempfile.mkdtemp(prefix="audit_lbls_")
+    lbl = os.path.join(tmp, "lbls")
     generate_labels(spark, 20, n_entities=2).write.mode("overwrite").parquet(lbl)
     spec = FeatureJobSpec(images_path=d, labels_path=lbl, output_path=lbl + "_out")
     lines = optimized_plan_lines(
@@ -270,7 +269,18 @@ def main(sf_dir: str) -> int:
     if "TakeOrderedAndProject" not in p:
         failures.append("IVF sample does not compile to TakeOrderedAndProject")
 
-    spark.stop()
+    return failures
+
+
+def main(sf_dir: str) -> int:
+    spark = get_spark(cores=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    tmp = tempfile.mkdtemp(prefix="audit_")
+    try:
+        failures = checks(spark, sf_dir, tmp)
+    finally:  # also when a check raises
+        shutil.rmtree(tmp, ignore_errors=True)
+        spark.stop()
     if failures:
         print("PLAN AUDIT FAILURES:")
         for f in failures:

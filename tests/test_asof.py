@@ -107,7 +107,7 @@ def test_leakage_guard_equal_timestamp(spark, strict):
 # ---------------------------------------------------------------------------
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 _row = st.tuples(st.integers(0, 3), st.integers(0, 20))  # (entity, ts-seconds)
 
@@ -227,6 +227,10 @@ _skewed_entity = st.sampled_from([0, 0, 0, 0, 0, 1, 2, 3, 4])
     ),
     strict=st.booleans(),
 )
+# five payloads tied at the newest eligible (key, ts), in both input orders:
+# a window that ignores the __tb tiebreak keeps whichever row sorts last
+@example(probes=[(0, 20)], builds=[(0, 5, v) for v in range(5)], strict=True)
+@example(probes=[(0, 20)], builds=[(0, 5, v) for v in reversed(range(5))], strict=True)
 def test_asof_salted_matches_reference_on_adversarial_skew(spark, probes, builds, strict):
     """Round-3 gate for the payload-hash tiebreak (asof.py): on tables where
     one key holds ~half the rows AND build rows duplicate (key, ts) with

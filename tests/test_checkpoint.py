@@ -2,8 +2,10 @@
 identical output, no recompute of completed partitions)."""
 
 import glob
+import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -233,8 +235,9 @@ def test_write_is_aqe_sized_and_labelled(spark, base):
     write with the default 64 parts launches no more than defaultParallelism
     tasks per stage (a fixed-count repartition launched 64), still lands
     exactly one file per partition dir, appends exactly one manifest file per
-    call, labels its jobs, and leaves the caller's job group and description
-    as they were."""
+    call, runs only jobs under its two labels (the append and the part-dir
+    listing run none), and leaves the caller's job group and description as
+    they were."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()  # noqa: SLF001
     tracker = sc.statusTracker()
@@ -254,8 +257,7 @@ def test_write_is_aqe_sized_and_labelled(spark, base):
     for j in tracker.getJobIdsForGroup(group):
         desc = store.job(j).description()
         by_label.setdefault(desc.get() if desc.isDefined() else None, []).append(j)
-    assert {"checkpoint: write data", "checkpoint: manifest rows",
-            "checkpoint: append manifest"} <= set(by_label)
+    assert set(by_label) == {"checkpoint: write data", "checkpoint: manifest rows"}
     write_tasks = [
         tracker.getStageInfo(sid).numTasks
         for j in by_label["checkpoint: write data"]
@@ -282,3 +284,103 @@ def test_empty_first_write_creates_empty_manifest(spark, base):
     assert len(_parquet_files(f"{base}/_manifest")) == 1
     m = load_manifest(spark, base)
     assert m.schema.simpleString() == MANIFEST_SCHEMA and m.count() == 0
+
+
+def _tagged(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"ckpt-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_state_and_compaction_run_no_spark_job(spark, base):
+    """The manifest is driver metadata: resume state and compaction read and
+    write it with pyarrow, launching no Spark job."""
+    from video_features_spark.sources.checkpoint import compact_manifest, completed_parts
+
+    df = spark.range(100).withColumn("k", F.col("id") % 10)
+    checkpointed_write(df, base, ["k"], num_parts=4)
+    assert _tagged(spark, lambda: completed_parts(spark, base, "snapshot-0")) == (set(range(4)), [])
+    stats, jobs = _tagged(spark, lambda: compact_manifest(spark, base))
+    assert jobs == [] and stats["rows_after"] == 4
+    assert completed_parts(spark, base, "snapshot-0") == set(range(4))
+
+
+def test_non_local_base_is_refused(spark):
+    """The manifest is kept with local file I/O: a base on another filesystem
+    raises before anything reads or writes it (it would otherwise read as "no
+    manifest" and create a local ``s3a:`` dir)."""
+    from video_features_spark.sources.checkpoint import compact_manifest, completed_parts
+
+    remote = "s3a://no-such-bucket/ckpt"
+    df = spark.range(10).withColumn("k", F.col("id") % 2)
+    for call in (
+        lambda: checkpointed_write(df, remote, ["k"], num_parts=2),
+        lambda: load_manifest(spark, remote),
+        lambda: completed_parts(spark, remote, "snapshot-0"),
+        lambda: verify_manifest(spark, remote),
+        lambda: compact_manifest(spark, remote),
+    ):
+        with pytest.raises(ValueError, match="s3a://no-such-bucket/ckpt"):
+            call()
+
+
+def test_file_uri_base_is_the_local_path(spark, base):
+    df = spark.range(100).withColumn("k", F.col("id") % 10)
+    checkpointed_write(df, f"file://{base}", ["k"], num_parts=4)
+    assert checkpointed_write(df, base, ["k"], num_parts=4)["parts_skipped"] == 4
+    assert verify_manifest(spark, f"file://{base}").count() == 0
+
+
+def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, monkeypatch):
+    """The driver dies after the manifest file is written but before it is
+    renamed into place: the hidden partial file is never read (by the
+    manifest reader, by verify or by a plain ``pq.read_table``), and the
+    rerun rewrites exactly the partitions whose rows never landed, after
+    which verify reports no drift."""
+    import pyarrow.parquet as pq
+
+    from video_features_spark.sources import checkpoint as C
+
+    df = spark.range(200).withColumn("k", F.col("id") % 20).withColumn("v", F.col("id") * 3)
+    keyed = with_partition_id(df, ["k"], N_PARTS)
+    parts = sorted(r[PART_COL] for r in keyed.select(PART_COL).distinct().collect())
+    first, rest = parts[:3], parts[3:]
+    assert rest
+    partial = keyed.filter(F.col(PART_COL).isin(first)).drop(PART_COL)
+
+    def crash(*_):
+        raise RuntimeError("driver died mid-append")
+
+    def write_and_crash(frame):
+        with monkeypatch.context() as m:
+            m.setattr(C.os, "replace", crash)
+            with pytest.raises(RuntimeError, match="mid-append"):
+                checkpointed_write(frame, base, ["k"], num_parts=N_PARTS)
+
+    # the very first append dies: the manifest dir holds only a hidden file
+    write_and_crash(partial)
+    assert load_manifest(spark, base) is None
+    assert checkpointed_write(partial, base, ["k"], num_parts=N_PARTS)["parts_written"] == len(first)
+
+    write_and_crash(df)
+    manifest_dir = C._resolve_manifest_dir(base)
+    hidden = [f for f in os.listdir(manifest_dir) if f.startswith(".part-")]
+    assert len(hidden) == 2  # both partial appends are still there, hidden
+    assert pq.read_table(manifest_dir).num_rows == len(first)
+    assert sorted(C._read_manifest(base)[PART_COL].to_pylist()) == first
+    # the data of every part landed; the manifest records only the first write
+    assert sorted(r[PART_COL] for r in verify_manifest(spark, base).collect()) == rest
+
+    s = checkpointed_write(df, base, ["k"], num_parts=N_PARTS)
+    assert s["parts_skipped"] == len(first) and s["parts_written"] == len(rest)
+    assert s["rows_written"] == keyed.filter(F.col(PART_COL).isin(rest)).count()
+    assert verify_manifest(spark, base).count() == 0
+    assert sorted(C._read_manifest(base)[PART_COL].to_pylist()) == parts
+    assert read_checkpointed(spark, base).count() == 200

@@ -16,12 +16,16 @@ Design
   on ``__part`` with no count, so each partition dir gets one file and AQE
   sizes the writer tasks to the data, not to ``num_parts``.
 - The manifest (``<base>/_manifest``, or the ``_manifest.ptr``-named
-  generation dir once a compaction has run) appends one row per completed
-  partition: job/snapshot id, partition id, key range, row count, content
-  checksum (sum of per-row xxhash64 — order-independent,
-  partitioning-independent). The rows are aggregated from the read-back of
-  what landed, collected to the driver (at most ``num_parts`` of them) and
-  appended as one file per write.
+  generation dir once a compaction has run) gets one row per completed
+  partition per write: job/snapshot id, partition id, key range, row count,
+  content checksum (sum of per-row xxhash64 — order-independent,
+  partitioning-independent), aggregated from the read-back of what landed.
+  It is driver metadata (at most ``num_parts`` rows per write), kept with
+  pyarrow and local file I/O: the append is one file written under a hidden
+  ``.`` name and ``os.replace``d into place (no reader lists a partial one).
+  A write runs two labelled Spark actions (write data, manifest rows);
+  resume state, the append and compaction run none. A base that is not a
+  local path or ``file:`` URI is a ``ValueError``.
   A partition whose data wrote but whose manifest row didn't (crash between
   the two) is simply recomputed and overwritten — safe, never corrupt.
 - Resume = filter the input's partition ids against the manifest's completed
@@ -40,14 +44,28 @@ Design
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..session import job_description, session_conf
 
 PART_COL = "__part"
+
+
+def _local_base(base: str) -> str:
+    """``base`` as a local path: the manifest is kept with local file I/O, so
+    any other URI scheme is refused before anything touches the base."""
+    url = urlparse(base)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"checkpoint base {base!r} is not a local path or file: URI")
+    return url.path if url.scheme else base
 
 
 def _data_path(base: str) -> str:
@@ -104,35 +122,38 @@ def _content_checksum(cols: Sequence[str]):
     return F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("checksum")
 
 
+def _read_manifest(base: str) -> pa.Table | None:
+    """The live manifest of local ``base`` as one Arrow table, or None while
+    it has no visible file. Hidden (``.``/``_``-prefixed) files are not
+    listed, so an append that died before its rename is never read."""
+    path = _resolve_manifest_dir(base)
+    table = pq.read_table(path) if os.path.isdir(path) else None
+    return table if table is not None and table.num_columns else None
+
+
+def _latest(table: pa.Table) -> pa.Table:
+    """The LATEST row per partition (max ``manifest_seq``): earlier rows
+    describe data a later write overwrote."""
+    rows = table.sort_by([(PART_COL, "ascending"), ("manifest_seq", "descending")])
+    parts = rows[PART_COL].to_pylist()
+    first = [i for i, p in enumerate(parts) if i == 0 or p != parts[i - 1]]
+    return rows.take(pa.array(first, pa.int64()))
+
+
+def _done(table: pa.Table, snapshot_id: str) -> set[int]:
+    return set(table.filter(pc.field("snapshot_id") == snapshot_id)[PART_COL].to_pylist())
+
+
 def load_manifest(spark: SparkSession, base_path: str) -> DataFrame | None:
-    path = _resolve_manifest_dir(base_path)
-    # a read of a missing path is a failed query, and every failed query is
-    # posted to the session's query listeners (an Observation's listener logs
-    # an ERROR stack trace for it): skip the read when a plain local path is
-    # absent (a URI with a scheme is left to the reader)
-    if not urlparse(path).scheme and not os.path.isdir(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 - first run: no manifest yet
-        return None
-
-
-def _manifest_state(manifest: DataFrame, snapshot_id: str) -> tuple[set[int], int]:
-    """(partition ids complete for ``snapshot_id``, highest ``manifest_seq``)
-    in one aggregation."""
-    row = manifest.agg(
-        F.collect_set(F.when(F.col("snapshot_id") == snapshot_id, F.col(PART_COL))).alias("done"),
-        F.max("manifest_seq").alias("seq"),
-    ).first()
-    return set(row["done"]), row["seq"] or 0
+    table = _read_manifest(_local_base(base_path))
+    return None if table is None else spark.createDataFrame(table)
 
 
 def completed_parts(spark: SparkSession, base_path: str, snapshot_id: str) -> set[int]:
     """Partition ids the manifest under ``base_path`` marks complete for
-    ``snapshot_id`` (empty before the first write)."""
-    manifest = load_manifest(spark, base_path)
-    return set() if manifest is None else _manifest_state(manifest, snapshot_id)[0]
+    ``snapshot_id`` (empty before the first write); no Spark job."""
+    table = _read_manifest(_local_base(base_path))
+    return set() if table is None else _done(table, snapshot_id)
 
 
 def checkpointed_write(
@@ -148,17 +169,15 @@ def checkpointed_write(
     Call again after any failure: completed partitions are not recomputed.
     """
     spark = df.sparkSession
+    base_path = _local_base(base_path)
     keyed = with_partition_id(df, key_cols, num_parts)
 
-    manifest = load_manifest(spark, base_path)
-    done: set[int] = set()
-    seq = 0
-    if manifest is not None:
-        done, last_seq = _manifest_state(manifest, snapshot_id)
-        # monotone write sequence: verify_manifest trusts only the LATEST row
-        # per partition, so re-writing a base with a new snapshot never leaves
-        # stale rows that report false drift
-        seq = last_seq + 1
+    manifest = _read_manifest(base_path)
+    done = set() if manifest is None else _done(manifest, snapshot_id)
+    # monotone write sequence: verify_manifest trusts only the LATEST row per
+    # partition, so re-writing a base with a new snapshot never leaves stale
+    # rows that report false drift
+    seq = 0 if manifest is None else (pc.max(manifest["manifest_seq"]).as_py() or 0) + 1
 
     todo = keyed.filter(~F.col(PART_COL).isin(*done)) if done else keyed
     out_cols = [c for c in keyed.columns if c != PART_COL]
@@ -176,8 +195,10 @@ def checkpointed_write(
             .parquet(_data_path(base_path))
         )
     # manifest rows from what LANDED; the explicit schema lets a write that
-    # landed no file (empty input) read back as empty
-    with job_description(spark, "checkpoint: manifest rows"):
+    # landed no file (empty input) read back as empty. The base is local, so
+    # its (at most num_parts) part dirs are listed on the driver: no listing job
+    with job_description(spark, "checkpoint: manifest rows"), \
+            session_conf(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(num_parts)):
         written = spark.read.schema(keyed.schema).parquet(_data_path(base_path))
         new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
         manifest_rows = (
@@ -192,13 +213,16 @@ def checkpointed_write(
             .withColumn("manifest_seq", F.lit(seq))
         )
         # at most num_parts rows: one collect feeds the append and the stats
-        rows = manifest_rows.collect()
+        rows = manifest_rows.toArrow()
     # an empty write still appends, so the manifest dir exists after it
-    with job_description(spark, "checkpoint: append manifest"):
-        appended = spark.createDataFrame(rows, schema=manifest_rows.schema).coalesce(1)
-        appended.write.mode("append").parquet(_resolve_manifest_dir(base_path))
-    stats["parts_written"] = len(rows)
-    stats["rows_written"] = sum(r["row_count"] for r in rows)
+    manifest_dir = _resolve_manifest_dir(base_path)
+    os.makedirs(manifest_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden = os.path.join(manifest_dir, "." + name)
+    pq.write_table(rows, hidden)
+    os.replace(hidden, os.path.join(manifest_dir, name))
+    stats["parts_written"] = rows.num_rows
+    stats["rows_written"] = pc.sum(rows["row_count"]).as_py() or 0
     return stats
 
 
@@ -207,55 +231,37 @@ def read_checkpointed(spark: SparkSession, base_path: str) -> DataFrame:
 
 
 def compact_manifest(spark: SparkSession, base_path: str) -> dict:
-    """Rewrite the append-only manifest down to the LATEST row per partition
-    (max ``manifest_seq`` — earlier rows describe overwritten data). The
-    manifest grows by one row per partition per (re)run; resume and verify
-    filter it every time, so long-lived bases compact periodically to keep
-    those reads O(partitions).
+    """Rewrite the append-only manifest (one row per partition per (re)run)
+    down to the ``_latest`` row per partition, keeping its reads O(partitions).
 
-    Swap protocol — GENERATION POINTER, no directory rename (object-store
-    safe: S3/GCS renames are copy+delete, not atomic): the compacted rows are
-    written to a fresh ``_manifest.g<N+1>`` dir, then a one-line pointer file
-    ``_manifest.ptr`` is atomically replaced to name the new generation
-    (``os.replace`` of a file on POSIX; a single small-object PUT on an
-    object store — both atomic at the granularity that matters). Readers
-    resolve the pointer first, so at every instant they see a COMPLETE
-    manifest: the old generation before the flip, the new one after. A crash
-    before the flip leaves an orphan generation dir (overwritten by the next
-    compaction); a crash after the flip leaves the superseded dir (removed by
-    the next compaction). Only this function deletes anything — readers
-    never modify the base, so a racing ``load_manifest`` can never destroy
-    an in-flight compaction's work.
-
-    Appends continue to land in the resolved current dir; run compaction
-    while no writer is appending (same single-compactor discipline as
-    before — the pointer protocol removes the reader/compactor race, not the
-    writer/compactor one).
+    Swap protocol — GENERATION POINTER, no directory rename (renames on
+    S3/GCS are copy+delete, not atomic): one ``pq.write_table`` into a fresh
+    ``_manifest.g<N+1>`` dir (no Spark job), then the one-line pointer file
+    ``_manifest.ptr`` is atomically replaced to name it. Readers resolve the
+    pointer first, so they always see a COMPLETE generation. A crash before
+    the flip leaves an orphan dir (replaced by the next compaction), one
+    after it the superseded dir (removed by the next compaction). Only this
+    function deletes anything; its flip and cleanup are local file I/O, so
+    a non-local base is refused (``ValueError``). Appends land in the
+    resolved current dir: run compaction while no writer is appending (the
+    pointer removes the reader/compactor race, not the writer/compactor one).
 
     Returns {"rows_before", "rows_after", "generation"}."""
-    import shutil
-
-    from pyspark.sql import Window
-
-    manifest = load_manifest(spark, base_path)
+    base_path = _local_base(base_path)
+    manifest = _read_manifest(base_path)
     if manifest is None:
         raise FileNotFoundError(f"no manifest under {base_path}")
     gen = _current_generation(base_path)
     cur_dir = _resolve_manifest_dir(base_path)
     next_gen = 0 if gen is None else gen + 1
 
-    before = manifest.count()
-    latest = Window.partitionBy(PART_COL).orderBy(F.desc("manifest_seq"))
-    compacted = (
-        manifest.withColumn("__rn", F.row_number().over(latest))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    compacted = _latest(manifest)
     new_dir = _gen_dir(base_path, next_gen)
-    # mode=overwrite also absorbs an orphan dir of the same generation left
-    # by a compaction that crashed before its pointer flip
-    compacted.write.mode("overwrite").parquet(new_dir)
-    after = spark.read.parquet(new_dir).count()
+    # a fresh dir also absorbs an orphan of the same generation left by a
+    # compaction that crashed before its pointer flip
+    shutil.rmtree(new_dir, ignore_errors=True)
+    os.makedirs(new_dir)
+    pq.write_table(compacted, os.path.join(new_dir, "part-00000.parquet"))
     _flip_pointer(base_path, next_gen)
     # GRACE-PERIOD cleanup: the JUST-superseded manifest (cur_dir) survives
     # until the NEXT compaction — a reader that resolved the pointer an
@@ -270,7 +276,7 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     legacy = _manifest_path(base_path)
     if cur_dir != legacy and os.path.exists(legacy):
         shutil.rmtree(legacy, ignore_errors=True)
-    return {"rows_before": before, "rows_after": after, "generation": next_gen}
+    return {"rows_before": manifest.num_rows, "rows_after": compacted.num_rows, "generation": next_gen}
 
 
 def _flip_pointer(base_path: str, gen: int) -> None:
@@ -290,17 +296,11 @@ def verify_manifest(spark: SparkSession, base_path: str) -> DataFrame:
     """Recount + re-checksum every data partition against its LATEST manifest
     row (max manifest_seq — earlier rows describe overwritten data); returns
     the partitions that disagree (empty DataFrame == healthy)."""
-    from pyspark.sql import Window
-
-    manifest = load_manifest(spark, base_path)
-    if manifest is None:
+    base_path = _local_base(base_path)
+    table = _read_manifest(base_path)
+    if table is None:
         raise FileNotFoundError(f"no manifest under {base_path}")
-    latest = Window.partitionBy(PART_COL).orderBy(F.desc("manifest_seq"))
-    manifest = (
-        manifest.withColumn("__rn", F.row_number().over(latest))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    manifest = spark.createDataFrame(_latest(table))
     data = spark.read.parquet(_data_path(base_path))
     out_cols = [c for c in data.columns if c != PART_COL]
     actual = data.groupBy(PART_COL).agg(
