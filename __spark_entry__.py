@@ -620,7 +620,7 @@ def _off_unit_norm(col: str):
 
 def _decoded(feats: DataFrame) -> DataFrame:
     """Feature rows that decoded and embedded: a quarantined row (error set,
-    embedding null) must not win an as-of match (as ``plans._assemble``)."""
+    embedding null) must not win an as-of match."""
     return feats.filter(F.col("error").isNull())
 
 

@@ -6,16 +6,20 @@
         [--modality image] [--model clip-small-det] [--num-parts 64] [--snapshot-id snap-1] \
         [--salt-threshold 100000] [--no-strict]
 
-Reads the image+caption table (input_hint schema + entity_id/ts), extracts
-embeddings (Arrow UDF), strict as-of joins against the label probes, and
-writes the result through the checkpointed writer, in one pass over the
-plan. Any leaking row (feature timestamp at or after its label's) fails the
-write before it commits: no data file and no manifest row land, and the job
-exits with ``AssertionError: temporal leakage: …`` naming the row.
+Reads the image+caption table (input_hint schema + entity_id/ts), strict
+as-of matches the label probes against the image metadata, extracts
+embeddings (Arrow UDF) of the matched images only, and writes the result
+through the checkpointed writer. Any leaking row (feature timestamp at or
+after its label's) fails the write before it commits: no data file and no
+manifest row land, and the job exits with ``AssertionError: temporal
+leakage: …`` naming the row. A matched image that fails to decode aborts
+the write the same way; the run then drops it from the match and writes
+again, so its labels get their newest earlier decodable image.
 Re-running after any failure resumes from the partition manifest, decoding
 only the images of entities in missing partitions. The ``JOB_STATS`` line
-reports the writer's partition counts plus ``rows_in`` (media rows decoded)
-and ``quarantined_rows`` (those that failed decode/embed). This is the CLI
+reports the writer's partition counts plus ``rows_in`` (media rows decoded:
+the matched ones, plus undecodable matches found on the way) and
+``quarantined_rows`` (those undecodable matches). This is the CLI
 lifecycle of SURVEY.md §3.4; argument validation plays the role of the
 reference's sanity_check (/root/reference/utils/utils.py:74-132).
 """

@@ -31,15 +31,16 @@ def optimized_plan_lines(df) -> list[str]:
     return text[start:text.index("== Physical Plan ==")].splitlines()[1:]
 
 
-def exchange_schemas(df) -> list[str]:
-    """The schema (``simpleString``, nested fields included) of every shuffle
-    Exchange in ``df``'s physical plan; ``df`` must not have run yet (its
-    adaptive plan is still the initial one)."""
+def exchange_schemas(df, kinds: tuple[str, ...] = ("Exchange",)) -> list[str]:
+    """The schema (``simpleString``, nested fields included) of every node of
+    the given ``kinds`` (default: shuffle ``Exchange``; add
+    ``"BroadcastExchange"`` for broadcasts) in ``df``'s physical plan; ``df``
+    must not have run yet (its adaptive plan is still the initial one)."""
     plan = df._jdf.queryExecution().executedPlan()
     stack, out = [plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan], []
     while stack:
         node = stack.pop()
-        if node.nodeName() == "Exchange":
+        if node.nodeName() in kinds:
             out.append(node.schema().simpleString())
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
@@ -257,6 +258,34 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
         failures.append(f"metadata as-of match has {len(schemas)} exchanges (expected 1)")
     if any(":binary" in sch for sch in schemas):
         failures.append("metadata as-of match shuffles image bytes")
+
+    # 16. the plan ``run`` writes never moves media bytes: the matched-key
+    #     filter reaches the image scan through a broadcast of the keys, and
+    #     neither a shuffle Exchange nor a BroadcastExchange carries a binary
+    #     column. The writer is swapped for one that hands back its input,
+    #     partitioned as the real writer does, without running it.
+    import video_features_spark.sources.checkpoint as ckpt
+    from video_features_spark.plans import run
+
+    class Written(Exception):
+        pass
+
+    def capture(df, base_path, key_cols, num_parts=64, **_):
+        keyed = ckpt.with_partition_id(df, key_cols, num_parts)
+        raise Written(keyed.repartition(F.col(ckpt.PART_COL)))
+
+    real_write, ckpt.checkpointed_write = ckpt.checkpointed_write, capture
+    try:
+        run(spark, spec)
+        failures.append("run wrote nothing to audit")
+    except Written as w:
+        schemas = exchange_schemas(w.args[0], ("Exchange", "BroadcastExchange"))
+        if not any("embedding" in sch for sch in schemas):
+            failures.append("run's written plan has no exchange carrying embeddings")
+        if any(":binary" in sch for sch in schemas):
+            failures.append("run's written plan moves media bytes through an exchange")
+    finally:
+        ckpt.checkpointed_write = real_write
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

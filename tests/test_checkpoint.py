@@ -312,6 +312,25 @@ def test_manifest_state_and_compaction_run_no_spark_job(spark, base):
     assert completed_parts(spark, base, "snapshot-0") == set(range(4))
 
 
+def test_reads_of_a_wide_base_list_on_the_driver(spark, base):
+    """A base with more part dirs than Spark's parallel-discovery threshold
+    (32): ``read_checkpointed`` and ``verify_manifest`` list them on the
+    driver instead of launching a distributed listing job (their one-task
+    parquet footer read stays)."""
+    store = spark.sparkContext._jsc.sc().statusStore()  # noqa: SLF001
+
+    def listing_jobs(jobs):
+        descs = [store.job(j).description() for j in jobs]
+        return [d.get() for d in descs if d.isDefined() and d.get().startswith("Listing")]
+
+    df = spark.range(400).withColumn("k", F.col("id") % 200)
+    assert checkpointed_write(df, base, ["k"], num_parts=64)["parts_written"] > 32
+    read, jobs = _tagged(spark, lambda: read_checkpointed(spark, base))
+    assert listing_jobs(jobs) == [] and read.columns == ["id", "k"]
+    drift, jobs = _tagged(spark, lambda: verify_manifest(spark, base))
+    assert listing_jobs(jobs) == [] and drift.count() == 0
+
+
 def test_non_local_base_is_refused(spark):
     """The manifest is kept with local file I/O: a base on another filesystem
     raises before anything reads or writes it (it would otherwise read as "no

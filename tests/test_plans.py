@@ -2,6 +2,7 @@
 /root/reference/utils/utils.py:74-132) and end-to-end spec execution with
 resume semantics."""
 
+import datetime as dt
 import os
 
 import pytest
@@ -47,14 +48,36 @@ def test_run_end_to_end_and_resume(spark, tmp_path):
     )
     stats = run(spark, spec)
     assert stats["parts_written"] >= 1 and stats["rows_written"] == 60
-    # one pass: every image decoded exactly once
-    assert stats["rows_in"] == 120 and stats["quarantined_rows"] == 0
+    # only the images some label matches are decoded, each once
+    assert stats["rows_in"] == _matched_images(ip, lp) and stats["quarantined_rows"] == 0
     # second run resumes: everything already checkpointed, nothing recomputed
     stats2 = run(spark, spec)
     assert stats2["parts_skipped"] == stats["parts_written"]
     assert stats2["rows_written"] == 0
     assert stats2["rows_in"] == 0  # completed partitions pruned below the UDF
     assert os.path.isdir(os.path.join(op, "_manifest"))
+
+
+def _matched_images(images_path, labels_path, entities=None):
+    """The number of distinct images some label matches: a strict as-of
+    oracle (``pd.merge_asof``, ``allow_exact_matches=False``) over the input
+    files, optionally restricted to the given entities."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    imgs = pq.read_table(images_path, columns=["image_id", "entity_id", "ts"]).to_pandas()
+    labels = pq.read_table(labels_path, columns=["entity_id", "label_ts"]).to_pandas()
+    for df, ts in ((imgs, "ts"), (labels, "label_ts")):
+        df["entity_id"] = df["entity_id"].astype(str)
+        df[ts] = pd.to_datetime(df[ts], utc=True)
+    if entities is not None:
+        imgs = imgs[imgs["entity_id"].isin(entities)]
+        labels = labels[labels["entity_id"].isin(entities)]
+    matched = pd.merge_asof(
+        labels.sort_values("label_ts"), imgs.sort_values("ts"), left_on="label_ts",
+        right_on="ts", by="entity_id", direction="backward", allow_exact_matches=False,
+    )
+    return matched["image_id"].nunique()
 
 
 def _digest(df):
@@ -93,7 +116,7 @@ def test_resume_recomputes_exactly_the_lost_partitions(spark, tmp_path, label_ke
     keyed(generate_labels(spark, 96, n_entities=24), label_key).write.parquet(lp)
     spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=8)
     first = run(spark, spec)
-    assert first["rows_in"] == 120 and first["rows_written"] == 96
+    assert first["rows_in"] == _matched_images(ip, lp) and first["rows_written"] == 96
     cold = _digest(read_checkpointed(spark, op))
 
     part_rows = dict(load_manifest(spark, op).select(PART_COL, "row_count").collect())
@@ -106,9 +129,10 @@ def test_resume_recomputes_exactly_the_lost_partitions(spark, tmp_path, label_ke
     stats = run(spark, spec)
     # the writer's key type: the joined output widens int labels to long
     key = F.col("entity_id").cast("long" if image_key == "long" else "string")
-    lost_images = spark.read.parquet(ip).filter(partition_id([key], 8).isin(*lost)).count()
-    assert 0 < lost_images < 120
-    assert stats["rows_in"] == lost_images
+    lost_images = spark.read.parquet(ip).filter(partition_id([key], 8).isin(*lost))
+    assert 0 < lost_images.count() < 120
+    lost_entities = {str(r["entity_id"]) for r in lost_images.select("entity_id").distinct().collect()}
+    assert stats["rows_in"] == _matched_images(ip, lp, lost_entities)
     assert stats["parts_written"] == 2
     assert stats["rows_written"] == sum(part_rows[p] for p in lost)
     assert verify_manifest(spark, op).count() == 0
@@ -260,3 +284,163 @@ def test_build_skips_quarantined_newest_image(spark, tmp_path):
     (row,) = build(spark, spec).collect()
     assert row["ts_asof"] == imgs["ts"].iloc[-2].to_pydatetime()
     assert row["embedding"] is not None
+
+
+def _job_descriptions(spark, group):
+    """The descriptions of the Spark jobs launched under ``group``."""
+    store = spark.sparkContext._jsc.sc().statusStore()  # noqa: SLF001
+    out = []
+    for j in spark.sparkContext.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(j).description()
+        out.append(desc.get() if desc.isDefined() else None)
+    return out
+
+
+def _in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+
+
+def test_run_requeues_labels_past_undecodable_matches(spark, tmp_path, monkeypatch):
+    """The two newest images of an entity are undecodable: the optimistic
+    write aborts twice (once per newly matched bad image, nothing committed
+    either time), and the label ends up with the third-newest image's
+    feature. Both bad images are counted as quarantined and as decoded."""
+    import glob
+
+    import video_features_spark.sources.checkpoint as ckpt
+    from video_features_spark.sources.checkpoint import read_checkpointed
+    from video_features_spark.sources.datagen import IMAGES_SCHEMA, LABELS_SCHEMA, generate_images
+
+    imgs = generate_images(spark, 40, n_entities=2).toPandas().sort_values("ts")
+    e0 = imgs[imgs["entity_id"] == "e00000"]
+    for i in e0.index[-2:]:
+        imgs.at[i, "bytes"] = b"not an image"
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "out"))
+    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
+    after = imgs.groupby("entity_id")["ts"].max()
+    spark.createDataFrame(
+        [(e, ts.to_pydatetime() + dt.timedelta(hours=1), 1.0) for e, ts in after.items()],
+        LABELS_SCHEMA,
+    ).write.parquet(lp)
+
+    aborted = []
+    real_write = ckpt.checkpointed_write
+
+    def spy(df, base, *args, **kwargs):
+        try:
+            return real_write(df, base, *args, **kwargs)
+        except Exception:
+            aborted.append((glob.glob(f"{base}/data/**/*.parquet", recursive=True),
+                            os.path.exists(f"{base}/_manifest")))
+            raise
+
+    monkeypatch.setattr(ckpt, "checkpointed_write", spy)
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=4)
+    stats = _in_group(spark, "plans-requeue", lambda: run(spark, spec))
+    assert aborted == [([], False), ([], False)]
+    assert _job_descriptions(spark, "plans-requeue").count("plans: undecodable matches") >= 2
+    assert stats["quarantined_rows"] == 2
+    assert stats["rows_in"] == 2 + 2  # the two committed matches + the two bad images
+    assert stats["rows_written"] == 2
+    row = read_checkpointed(spark, op).filter("entity_id = 'e00000'").first()
+    assert row["ts_asof"] == e0["ts"].iloc[-3].to_pydatetime()
+    assert row["embedding"] is not None
+
+
+def test_clean_run_decodes_only_matches_and_collects_no_failures(spark, tmp_path):
+    """An undecodable image that no label matches is never decoded: the run
+    is clean (no abort, no failure-collection job), decodes exactly the one
+    matched image, and computes the as-of exchange once (the key set and the
+    join-back share it)."""
+    from video_features_spark.sources.datagen import IMAGES_SCHEMA, LABELS_SCHEMA, generate_images
+
+    imgs = generate_images(spark, 20, n_entities=1).toPandas().sort_values("ts")
+    imgs.at[imgs.index[-1], "bytes"] = b"not an image"
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "out"))
+    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
+    prev, newest = imgs["ts"].iloc[-2], imgs["ts"].iloc[-1]
+    spark.createDataFrame(
+        [("e00000", (prev + (newest - prev) / 2).to_pydatetime(), 1.0)], LABELS_SCHEMA
+    ).write.parquet(lp)
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    before = store.executionsList().size()
+
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=4)
+    stats = _in_group(spark, "plans-clean", lambda: run(spark, spec))
+    assert stats["rows_in"] == 1 and stats["quarantined_rows"] == 0
+    assert "plans: undecodable matches" not in _job_descriptions(spark, "plans-clean")
+    execs = store.executionsList()
+    writes = [
+        execs.apply(i) for i in range(before, execs.size())
+        if execs.apply(i).description() == "checkpoint: write data"
+    ]
+    assert len(writes) == 1
+    assert "ReusedExchange" in writes[0].physicalPlanDescription()
+
+
+def test_duplicate_ts_images_resolve_by_id_hash(spark, tmp_path):
+    """Two images of one entity at the same ts: the match keeps the one with
+    the max xxhash64(struct(image_id, ts)), decided on metadata alone."""
+    from pyspark.sql import functions as F
+
+    from video_features_spark.operators.features import extract_image_features
+    from video_features_spark.sources.datagen import IMAGES_SCHEMA, LABELS_SCHEMA, generate_images
+
+    imgs = generate_images(spark, 2, n_entities=1).toPandas()
+    imgs["ts"] = imgs["ts"].iloc[0]
+    ip, lp = str(tmp_path / "imgs"), str(tmp_path / "lbls")
+    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
+    label_ts = imgs["ts"].iloc[0].to_pydatetime() + dt.timedelta(hours=1)
+    spark.createDataFrame([("e00000", label_ts, 1.0)], LABELS_SCHEMA).write.parquet(lp)
+
+    feats = (
+        extract_image_features(spark.read.parquet(ip))
+        .withColumn("h", F.xxhash64(F.struct("image_id", F.col("ts").cast("timestamp"))))
+        .collect()
+    )
+    winner, loser = sorted(feats, key=lambda r: r["h"], reverse=True)
+    assert winner["embedding"] != loser["embedding"]
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=str(tmp_path / "o"))
+    (row,) = build(spark, spec).collect()
+    assert row["embedding"] == winner["embedding"]
+
+
+def test_corrupt_video_container_never_matches(spark, tmp_path):
+    """A container that fails to demux yields one error row with no frame and
+    no ts; it never enters the match (a null ts would sort before every
+    label of its entity), and the run stays clean."""
+    from pyspark.sql import functions as F
+
+    from video_features_spark.plans.pipeline import _match, _media_rows, _read_inputs
+    from video_features_spark.sources.datagen import (
+        LABELS_SCHEMA,
+        VIDEOS_SCHEMA,
+        generate_labels,
+        generate_videos,
+    )
+
+    vids = generate_videos(spark, 10, n_entities=5).toPandas()
+    bad = vids.iloc[0]
+    vids.at[vids.index[0], "video"] = b"not a container"
+    clips, labels, out = (str(tmp_path / d) for d in ("clips", "labels", "out"))
+    spark.createDataFrame(vids, VIDEOS_SCHEMA).write.parquet(clips)
+    early = spark.createDataFrame(
+        [(bad["entity_id"], vids["ts"].min().to_pydatetime() - dt.timedelta(days=1), 0.0)],
+        LABELS_SCHEMA,
+    )
+    generate_labels(spark, 20, n_entities=5).unionByName(early).write.parquet(labels)
+    spec = FeatureJobSpec(
+        images_path=clips, labels_path=labels, output_path=out, modality="video", num_parts=4
+    )
+    media, lbls = _read_inputs(spark, spec)
+    assert _match(spec, _media_rows(spec, media), lbls).filter(
+        F.col("image_id") == bad["video_id"]
+    ).count() == 0
+    stats = run(spark, spec)
+    assert stats["rows_written"] == 21 and stats["quarantined_rows"] == 0

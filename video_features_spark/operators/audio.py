@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .._worker import cache_zip_directories
 from ..functions.embed import _head, _model
 from ..functions.wav import demux_audio, logmel_examples, mono_mixdown
 
@@ -55,6 +56,7 @@ def extract_audio_features(
     out_schema = f"{schema_id}, example_idx int, embedding array<float>, error string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for b in batches:
             # decode + frame per row, but run ONE embed over the whole Arrow
             # batch's concatenated examples: the fixed-tile matmul pads every

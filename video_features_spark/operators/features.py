@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType
 
+from .._worker import cache_zip_directories
 from ..functions.codec import decode_image
 from ..functions.embed import (
     _model,
@@ -74,6 +75,7 @@ def extract_image_features(
     # slot. Values are bit-identical (tolist widened float32→double and the
     # sink narrowed it back — identity round trip).
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        cache_zip_directories()
         import pyarrow as pa
 
         for rb in batches:
@@ -129,6 +131,7 @@ def embed_caption_column(
 
     @F.pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
+        cache_zip_directories()
         embs = embed_captions(texts.tolist(), model_name, ckpt)
         return pd.Series([e.tolist() for e in embs])
 
@@ -140,6 +143,7 @@ def caption_token_count(df: DataFrame, caption_col: str = "caption", out_col: st
 
     @F.pandas_udf(IntegerType())
     def _count(texts: pd.Series) -> pd.Series:
+        cache_zip_directories()
         return texts.map(token_count).astype("int32")
 
     return df.withColumn(out_col, _count(F.col(caption_col)))
@@ -166,6 +170,7 @@ def caption_bpe_tokenize(
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _tok(texts: pd.Series) -> pd.Series:
+        cache_zip_directories()
         return pd.Series(
             tokenize(texts.tolist(), context_length=context_length, vocab_pin=pin)
         )

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
+from .._worker import cache_zip_directories
+
 
 def _l2(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda a, x: a + x * x))
@@ -146,6 +148,7 @@ def ivf_assign(
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _cells(embs: pd.Series) -> pd.Series:
+        cache_zip_directories()
         x = np.array(embs.tolist(), dtype=np.float64)
         sims = x @ cents.T
         top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]

@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .._worker import cache_zip_directories
 from ..functions.codec import decode_image
 
 # decoded frames a, decoded frames b → one result per pair: a tuple of output
@@ -67,6 +68,7 @@ def _consecutive_pairs(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for b in batches:
             results: list = [None] * len(b)
             fa, fb, ok = [], [], []
@@ -219,6 +221,7 @@ def stack_mean_pool(
     )
 
     def pool(pdf: pd.DataFrame) -> pd.DataFrame:
+        cache_zip_directories()
         # one group = one entity's full history in one task; a runaway entity
         # would OOM the executor silently — fail loudly with the culprit instead
         if len(pdf) > max_group_rows:

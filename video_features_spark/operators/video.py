@@ -21,6 +21,7 @@ from collections.abc import Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .._worker import cache_zip_directories
 from ..functions.avi import demux_video
 
 
@@ -55,6 +56,7 @@ def extract_video_frames(
     cols = id_cols + ["frame_idx", "frame_ts", "bytes", "fmt", "error"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for b in batches:
             rows = []
             for i in range(len(b)):

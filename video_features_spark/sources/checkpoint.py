@@ -195,11 +195,9 @@ def checkpointed_write(
             .parquet(_data_path(base_path))
         )
     # manifest rows from what LANDED; the explicit schema lets a write that
-    # landed no file (empty input) read back as empty. The base is local, so
-    # its (at most num_parts) part dirs are listed on the driver: no listing job
-    with job_description(spark, "checkpoint: manifest rows"), \
-            session_conf(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(num_parts)):
-        written = spark.read.schema(keyed.schema).parquet(_data_path(base_path))
+    # landed no file (empty input) read back as empty
+    with job_description(spark, "checkpoint: manifest rows"):
+        written = _read_data(spark, base_path, keyed.schema)
         new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
         manifest_rows = (
             new_parts.groupBy(PART_COL)
@@ -226,8 +224,19 @@ def checkpointed_write(
     return stats
 
 
+def _read_data(spark: SparkSession, base_path: str, schema=None) -> DataFrame:
+    """The data table under ``base_path``. Its part dirs (up to
+    ``num_parts`` of them) are listed on the driver: above
+    ``parallelPartitionDiscovery.threshold`` paths (32) Spark would list them
+    in a distributed job, which costs more than it saves on the local bases
+    the manifest requires."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    with session_conf(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)):
+        return reader.parquet(_data_path(base_path))
+
+
 def read_checkpointed(spark: SparkSession, base_path: str) -> DataFrame:
-    return spark.read.parquet(_data_path(base_path)).drop(PART_COL)
+    return _read_data(spark, base_path).drop(PART_COL)
 
 
 def compact_manifest(spark: SparkSession, base_path: str) -> dict:
@@ -301,7 +310,7 @@ def verify_manifest(spark: SparkSession, base_path: str) -> DataFrame:
     if table is None:
         raise FileNotFoundError(f"no manifest under {base_path}")
     manifest = spark.createDataFrame(_latest(table))
-    data = spark.read.parquet(_data_path(base_path))
+    data = _read_data(spark, base_path)
     out_cols = [c for c in data.columns if c != PART_COL]
     actual = data.groupBy(PART_COL).agg(
         F.count(F.lit(1)).alias("actual_rows"), _content_checksum(out_cols).alias("actual_checksum")
