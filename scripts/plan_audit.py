@@ -263,29 +263,51 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
     #     filter reaches the image scan through a broadcast of the keys, and
     #     neither a shuffle Exchange nor a BroadcastExchange carries a binary
     #     column. The writer is swapped for one that hands back its input,
-    #     partitioned as the real writer does, without running it.
+    #     keyed as the real writer keys it (no exchange), without running it.
     import video_features_spark.sources.checkpoint as ckpt
     from video_features_spark.plans import run
+    from video_features_spark.session import session_conf
 
     class Written(Exception):
         pass
 
     def capture(df, base_path, key_cols, num_parts=64, **_):
         keyed = ckpt.with_partition_id(df, key_cols, num_parts)
-        raise Written(keyed.repartition(F.col(ckpt.PART_COL)))
+        keyed._jdf.queryExecution().executedPlan()  # planned under run's confs
+        raise Written(keyed)
 
-    real_write, ckpt.checkpointed_write = ckpt.checkpointed_write, capture
-    try:
-        run(spark, spec)
+    def written_plan():
+        real_write, ckpt.checkpointed_write = ckpt.checkpointed_write, capture
+        try:
+            run(spark, spec)
+        except Written as w:
+            return w.args[0]
+        finally:
+            ckpt.checkpointed_write = real_write
         failures.append("run wrote nothing to audit")
-    except Written as w:
-        schemas = exchange_schemas(w.args[0], ("Exchange", "BroadcastExchange"))
+
+    written = written_plan()
+    if written is not None:
+        schemas = exchange_schemas(written, ("Exchange", "BroadcastExchange"))
         if not any("embedding" in sch for sch in schemas):
             failures.append("run's written plan has no exchange carrying embeddings")
         if any(":binary" in sch for sch in schemas):
             failures.append("run's written plan moves media bytes through an exchange")
-    finally:
-        ckpt.checkpointed_write = real_write
+
+    # 17. the unsalted flagship write adds no exchange of its own: no
+    #     REPARTITION_BY_COL shuffle (the writer's old repartition on the
+    #     part id), and an embedding crosses at most one shuffle. Broadcast
+    #     joins are off for this plan, so the embedding join-back plans as
+    #     the shuffle it is at scale (where only AQE turns it into a
+    #     broadcast) and a second shuffle of the embeddings would show.
+    with session_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        written = written_plan()
+    if written is not None:
+        if "REPARTITION_BY_COL" in plan_of(written):
+            failures.append("run's written plan has a REPARTITION_BY_COL exchange")
+        carrying = [sch for sch in exchange_schemas(written) if "embedding" in sch]
+        if len(carrying) > 1:
+            failures.append(f"run's written plan shuffles embeddings {len(carrying)} times (expected <= 1)")
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

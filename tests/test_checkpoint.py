@@ -3,10 +3,9 @@ identical output, no recompute of completed partitions)."""
 
 import glob
 import os
-import shutil
-import tempfile
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,11 +90,8 @@ def test_verify_manifest_detects_corruption(spark, base):
     feats = _features(spark)
     checkpointed_write(feats, base, ["entity_id"], num_parts=N_PARTS)
     assert verify_manifest(spark, base).count() == 0  # healthy
-    # corrupt one data partition: delete its files
-    import glob, os
-
-    part_dir = sorted(glob.glob(f"{base}/data/{PART_COL}=*"))[0]
-    shutil.rmtree(part_dir)
+    # corrupt the write: delete one of its data files
+    os.remove(sorted(_parquet_files(f"{base}/data/write-0"))[0])
     bad = verify_manifest(spark, base)
     assert bad.count() >= 1  # drift detected
 
@@ -231,13 +227,12 @@ def _parquet_files(path):
 
 
 def test_write_is_aqe_sized_and_labelled(spark, base):
-    """The data write is one AQE-coalesced exchange on the part id: a small
-    write with the default 64 parts launches no more than defaultParallelism
-    tasks per stage (a fixed-count repartition launched 64), still lands
-    exactly one file per partition dir, appends exactly one manifest file per
-    call, runs only jobs under its two labels (the append and the part-dir
-    listing run none), and leaves the caller's job group and description as
-    they were."""
+    """The data write adds no exchange: a small write with the default 64
+    parts launches no more than defaultParallelism tasks per stage and lands
+    one write dir per call holding at most one file per writer task (no
+    file per part), appends exactly one manifest file per call, runs only
+    jobs under its two labels (the append and the dir listing run none),
+    and leaves the caller's job group and description as they were."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()  # noqa: SLF001
     tracker = sc.statusTracker()
@@ -265,13 +260,12 @@ def test_write_is_aqe_sized_and_labelled(spark, base):
     ]
     assert max(write_tasks) <= sc.defaultParallelism, write_tasks
 
-    part_dirs = glob.glob(f"{base}/data/{PART_COL}=*")
-    assert len(part_dirs) == s["parts_written"]
-    assert all(len(_parquet_files(d)) == 1 for d in part_dirs)
+    assert os.listdir(f"{base}/data") == ["write-0"]
+    assert 1 <= len(_parquet_files(f"{base}/data/write-0")) <= max(write_tasks)
     assert len(_parquet_files(f"{base}/_manifest")) == 1
     checkpointed_write(df, base, ["k"], snapshot_id="snapshot-1")
     assert len(_parquet_files(f"{base}/_manifest")) == 2
-    assert all(len(_parquet_files(d)) == 1 for d in part_dirs)
+    assert sorted(os.listdir(f"{base}/data")) == ["write-0", "write-1"]
     m = load_manifest(spark, base)
     assert m.schema.simpleString() == MANIFEST_SCHEMA
     assert verify_manifest(spark, base).count() == 0
@@ -313,22 +307,22 @@ def test_manifest_state_and_compaction_run_no_spark_job(spark, base):
 
 
 def test_reads_of_a_wide_base_list_on_the_driver(spark, base):
-    """A base with more part dirs than Spark's parallel-discovery threshold
-    (32): ``read_checkpointed`` and ``verify_manifest`` list them on the
-    driver instead of launching a distributed listing job (their one-task
-    parquet footer read stays)."""
-    store = spark.sparkContext._jsc.sc().statusStore()  # noqa: SLF001
-
-    def listing_jobs(jobs):
-        descs = [store.job(j).description() for j in jobs]
-        return [d.get() for d in descs if d.isDefined() and d.get().startswith("Listing")]
-
+    """A base with more write dirs than Spark's parallel-discovery threshold
+    (32): defining ``read_checkpointed`` or ``verify_manifest`` launches no
+    Spark job at all. The dirs are listed on the driver, not in a
+    distributed listing job, and the stored schema replaces the parquet
+    footer read."""
     df = spark.range(400).withColumn("k", F.col("id") % 200)
-    assert checkpointed_write(df, base, ["k"], num_parts=64)["parts_written"] > 32
+    keyed = with_partition_id(df, ["k"], 64)
+    parts = sorted(r[PART_COL] for r in keyed.select(PART_COL).distinct().collect())[:34]
+    for p in parts:  # one write dir per part
+        checkpointed_write(keyed.filter(F.col(PART_COL) == p).drop(PART_COL), base, ["k"], num_parts=64)
+    assert len(os.listdir(f"{base}/data")) == len(parts) > 32
     read, jobs = _tagged(spark, lambda: read_checkpointed(spark, base))
-    assert listing_jobs(jobs) == [] and read.columns == ["id", "k"]
+    assert jobs == [] and read.columns == ["id", "k"]
+    assert read.count() == keyed.filter(F.col(PART_COL).isin(parts)).count()
     drift, jobs = _tagged(spark, lambda: verify_manifest(spark, base))
-    assert listing_jobs(jobs) == [] and drift.count() == 0
+    assert jobs == [] and drift.count() == 0
 
 
 def test_non_local_base_is_refused(spark):
@@ -363,8 +357,6 @@ def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, mon
     manifest reader, by verify or by a plain ``pq.read_table``), and the
     rerun rewrites exactly the partitions whose rows never landed, after
     which verify reports no drift."""
-    import pyarrow.parquet as pq
-
     from video_features_spark.sources import checkpoint as C
 
     df = spark.range(200).withColumn("k", F.col("id") % 20).withColumn("v", F.col("id") * 3)
@@ -403,3 +395,71 @@ def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, mon
     assert verify_manifest(spark, base).count() == 0
     assert sorted(C._read_manifest(base)[PART_COL].to_pylist()) == parts
     assert read_checkpointed(spark, base).count() == 200
+
+
+def _digest(df):
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h")).first()
+    return r["n"], r["h"]
+
+
+def test_crash_before_append_is_invisible_and_rerun_reuses_its_dir(spark, base, tmp_path, monkeypatch):
+    """A write dies after its data committed and before its manifest append:
+    its rows are not read, ``verify_manifest`` reports exactly its parts, and
+    the rerun writes the same write dir again; the result equals an
+    uninterrupted write."""
+    from video_features_spark.sources import checkpoint as C
+
+    df = spark.range(200).withColumn("k", F.col("id") % 20).withColumn("v", F.col("id") * 3)
+    keyed = with_partition_id(df, ["k"], N_PARTS)
+    parts = sorted(r[PART_COL] for r in keyed.select(PART_COL).distinct().collect())
+    first, rest = parts[:3], parts[3:]
+    checkpointed_write(keyed.filter(F.col(PART_COL).isin(first)).drop(PART_COL), base, ["k"], num_parts=N_PARTS)
+
+    def crash(*_):
+        raise RuntimeError("driver died before the append")
+
+    with monkeypatch.context() as m:
+        m.setattr(C, "_stage", crash)
+        with pytest.raises(RuntimeError, match="before the append"):
+            checkpointed_write(df, base, ["k"], num_parts=N_PARTS)
+    assert sorted(os.listdir(f"{base}/data")) == ["write-0", "write-1"]
+    assert read_checkpointed(spark, base).count() == keyed.filter(F.col(PART_COL).isin(first)).count()
+    assert sorted(r[PART_COL] for r in verify_manifest(spark, base).collect()) == rest
+
+    s = checkpointed_write(df, base, ["k"], num_parts=N_PARTS)
+    assert s["parts_skipped"] == len(first) and s["parts_written"] == len(rest)
+    assert sorted(os.listdir(f"{base}/data")) == ["write-0", "write-1"]
+    assert verify_manifest(spark, base).count() == 0
+    clean = str(tmp_path / "clean")
+    checkpointed_write(df, clean, ["k"], num_parts=N_PARTS)
+    assert _digest(read_checkpointed(spark, base)) == _digest(read_checkpointed(spark, clean))
+
+
+def test_rewrite_under_a_new_snapshot_reads_only_the_new_write(spark, base):
+    """A new snapshot rewrites every part into a new write dir: the read
+    returns only the new values, and compaction deletes the superseded dir
+    without changing the read."""
+    from video_features_spark.sources.checkpoint import compact_manifest
+
+    df1 = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(1))
+    checkpointed_write(df1, base, ["k"], num_parts=4, snapshot_id="snap-1")
+    df2 = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(2))
+    checkpointed_write(df2, base, ["k"], num_parts=4, snapshot_id="snap-2")
+    before = sorted(read_checkpointed(spark, base).collect())
+    assert len(before) == 100 and {r["v"] for r in before} == {2}
+    compact_manifest(spark, base)
+    assert os.listdir(f"{base}/data") == ["write-1"]
+    assert sorted(read_checkpointed(spark, base).collect()) == before
+    # a hive-partitioned reader of the data dir sees the data columns only
+    flat = pq.read_table(f"{base}/data", partitioning="hive", ignore_prefixes=[".", "_SUCCESS"])
+    assert flat.column_names == ["id", "k", "v", PART_COL] and flat.num_rows == 100
+    assert verify_manifest(spark, base).count() == 0
+
+
+def test_write_of_another_schema_is_refused_before_writing(spark, base):
+    df = spark.range(100).withColumn("k", F.col("id") % 10)
+    checkpointed_write(df, base, ["k"], num_parts=4)
+    with pytest.raises(ValueError, match="v:string"):
+        checkpointed_write(df.withColumn("v", F.lit("x")), base, ["k"], num_parts=4, snapshot_id="s2")
+    assert os.listdir(f"{base}/data") == ["write-0"]
+    assert load_manifest(spark, base).count() == 4

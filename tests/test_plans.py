@@ -241,6 +241,7 @@ def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from video_features_spark.plans.pipeline import FeatureJobSpec, run
+    from video_features_spark.sources.checkpoint import read_checkpointed
     from video_features_spark.sources.datagen import generate_labels, generate_videos
 
     clips = str(tmp_path / "clips")
@@ -254,7 +255,7 @@ def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):
     )
     stats = run(spark, spec)
     assert stats["parts_written"] > 0 and stats["rows_written"] == 20
-    joined = spark.read.parquet(out + "/data")
+    joined = read_checkpointed(spark, out)
     assert joined.filter(F.col("embedding").isNotNull()).count() > 0
     stats2 = run(spark, spec)
     assert stats2["parts_written"] == 0 and stats2["parts_skipped"] == stats["parts_written"]

@@ -10,24 +10,32 @@ Design
 ------
 - Work is bucketed into ``num_parts`` deterministic partitions by key hash
   (``__part = pmod(xxhash64(keys), num_parts)``) — the resume granule.
-- Data lands under ``<base>/data`` partitioned by ``__part`` with DYNAMIC
-  partition overwrite: re-running a partition replaces exactly that partition →
-  idempotent under crash-and-retry, no cross-run races. The write repartitions
-  on ``__part`` with no count, so each partition dir gets one file and AQE
-  sizes the writer tasks to the data, not to ``num_parts``.
+- Each write lands as plain parquet files in a dir of its own,
+  ``<base>/data/write-<seq>`` (``seq`` = max ``manifest_seq`` + 1), with
+  ``__part`` an ordinary column: no ``partitionBy``, no dynamic overwrite,
+  no shuffle, so it makes one file per non-empty input partition. No
+  reader needs rows clustered by part, and a file per part per write costs
+  a ``chmod`` fork each on a Hadoop without ``libhadoop``.
+- Visibility lives in the manifest, as in an Iceberg-style table: a part's
+  live rows are those of the write its LATEST manifest row names. A rerun
+  of a part supersedes exactly that part; a write whose manifest append
+  never happened is never read, and the next write reuses its seq and
+  replaces its dir (the one deletion outside ``compact_manifest``, which
+  deletes every write dir no compacted row names).
 - The manifest (``<base>/_manifest``, or the ``_manifest.ptr``-named
   generation dir once a compaction has run) gets one row per completed
   partition per write: job/snapshot id, partition id, key range, row count,
   content checksum (sum of per-row xxhash64 — order-independent,
-  partitioning-independent), aggregated from the read-back of what landed.
-  It is driver metadata (at most ``num_parts`` rows per write), kept with
-  pyarrow and local file I/O: the append is one file written under a hidden
-  ``.`` name and ``os.replace``d into place (no reader lists a partial one).
-  A write runs two labelled Spark actions (write data, manifest rows);
-  resume state, the append and compaction run none. A base that is not a
-  local path or ``file:`` URI is a ``ValueError``.
-  A partition whose data wrote but whose manifest row didn't (crash between
-  the two) is simply recomputed and overwritten — safe, never corrupt.
+  partitioning-independent), aggregated from the read-back of the write's
+  dir. It is driver metadata (at most ``num_parts`` rows per write), kept
+  with pyarrow and local file I/O: the append is one file written under a
+  hidden ``.`` name and ``os.replace``d into place (no reader lists a
+  partial one). So is the data's Spark schema, stored once per base
+  (``_schema.json``) and passed to every read, so no read infers it from
+  a footer; a write of another schema is a ``ValueError``. A write runs
+  two labelled Spark actions (write data, manifest rows); resume state,
+  the append and compaction run none. A base that is not a local path or
+  ``file:`` URI is a ``ValueError``.
 - Resume = filter the input's partition ids against the manifest's completed
   ids (``completed_parts``): only missing partitions are written.
   ``checkpointed_write`` applies that filter to the frame it is given, i.e.
@@ -36,27 +44,34 @@ Design
   partitions. A caller that knows how its key reaches its inputs prunes
   them below the UDF itself (``plans.run`` does, with ``partition_id``);
   the writer's filter stays as the backstop.
-- ``verify_manifest`` recounts + re-checksums the data and reports drift —
-  the "loads without error" half of the reference's check, done with
-  aggregates instead of re-reading into the model.
+- ``verify_manifest`` recounts + re-checksums the data of the write each
+  latest manifest row names and reports drift — the "loads without error"
+  half of the reference's check, done with aggregates instead of
+  re-reading into the model.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from functools import reduce
+from operator import or_
+from pathlib import Path
 from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructType
 
-from ..session import job_description, session_conf
+from ..session import job_description
 
 PART_COL = "__part"
+WRITE_COL = "__write"
 
 
 def _local_base(base: str) -> str:
@@ -70,6 +85,22 @@ def _local_base(base: str) -> str:
 
 def _data_path(base: str) -> str:
     return os.path.join(base, "data")
+
+
+def _write_dir(base: str, seq: int) -> str:
+    # not ``key=value``: a hive-partitioned reader of ``data`` (pyarrow's
+    # included) then sees only the data columns
+    return os.path.join(_data_path(base), f"write-{seq}")
+
+
+def _write_seqs(base: str) -> list[int]:
+    """The seqs of the write dirs under ``base``, named by a manifest row
+    or not."""
+    return sorted(int(d[len("write-"):]) for d in os.listdir(_data_path(base)) if d.startswith("write-"))
+
+
+def _schema_path(base: str) -> str:
+    return os.path.join(base, "_schema.json")
 
 
 def _manifest_path(base: str) -> str:
@@ -140,6 +171,30 @@ def _latest(table: pa.Table) -> pa.Table:
     return rows.take(pa.array(first, pa.int64()))
 
 
+def _required_manifest(base: str) -> pa.Table:
+    table = _read_manifest(base)
+    if table is None:
+        raise FileNotFoundError(f"no manifest under {base}")
+    return table
+
+
+def _stage(path: str, write) -> str:
+    """``write`` the file for ``path`` under a hidden ``.`` name beside it
+    and return that name; ``os.replace`` it into place to publish it, so no
+    reader ever lists a partial file."""
+    hidden = os.path.join(os.path.dirname(path), "." + os.path.basename(path))
+    write(hidden)
+    return hidden
+
+
+def _stored_schema(base: str) -> StructType | None:
+    try:
+        with open(_schema_path(base)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
 def _done(table: pa.Table, snapshot_id: str) -> set[int]:
     return set(table.filter(pc.field("snapshot_id") == snapshot_id)[PART_COL].to_pylist())
 
@@ -165,42 +220,47 @@ def checkpointed_write(
 ) -> dict:
     """Compute + write only the partitions the manifest doesn't mark complete.
 
+    The rows land in one new write dir, ``data/write-<seq>``, as one file
+    per non-empty partition of ``df``'s plan: the write adds no exchange, so
+    the caller's partitioning decides the file count. A ``df`` whose schema
+    differs from the one the base already holds is a ``ValueError``, raised
+    before anything is written.
+
     Returns {"parts_total", "parts_skipped", "parts_written", "rows_written"}.
     Call again after any failure: completed partitions are not recomputed.
     """
     spark = df.sparkSession
     base_path = _local_base(base_path)
     keyed = with_partition_id(df, key_cols, num_parts)
+    stored = _stored_schema(base_path)
+    if stored is not None and stored.simpleString() != keyed.schema.simpleString():
+        raise ValueError(
+            f"checkpoint base {base_path!r} holds {stored.simpleString()}, "
+            f"not {keyed.schema.simpleString()}"
+        )
 
     manifest = _read_manifest(base_path)
     done = set() if manifest is None else _done(manifest, snapshot_id)
-    # monotone write sequence: verify_manifest trusts only the LATEST row per
-    # partition, so re-writing a base with a new snapshot never leaves stale
-    # rows that report false drift
+    # monotone write sequence: a part's LATEST manifest row names the write
+    # its live rows are in. The max row is always some part's latest, so it
+    # survives compaction and a seq is never named twice.
     seq = 0 if manifest is None else (pc.max(manifest["manifest_seq"]).as_py() or 0) + 1
 
     todo = keyed.filter(~F.col(PART_COL).isin(*done)) if done else keyed
     out_cols = [c for c in keyed.columns if c != PART_COL]
 
     stats = {"parts_total": num_parts, "parts_skipped": len(done)}
-    # dynamic partition overwrite ONLY for this write
-    with session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"), \
-            job_description(spark, "checkpoint: write data"):
-        # no count: AQE coalesces this REPARTITION_BY_COL exchange to the
-        # data size, never repartition(num_parts, col); one reducer per part id
-        (
-            todo.repartition(F.col(PART_COL))
-            .write.mode("overwrite")
-            .partitionBy(PART_COL)
-            .parquet(_data_path(base_path))
-        )
-    # manifest rows from what LANDED; the explicit schema lets a write that
-    # landed no file (empty input) read back as empty
+    write_dir = _write_dir(base_path, seq)
+    # no manifest row names ``seq``: the dir holds at most the remains of a
+    # write that died before its append, so overwriting it loses nothing
+    with job_description(spark, "checkpoint: write data"):
+        todo.write.mode("overwrite").parquet(write_dir)
+    # manifest rows from what LANDED in this write's dir; the explicit schema
+    # reads no footer and lets a write of no rows read back as empty
     with job_description(spark, "checkpoint: manifest rows"):
-        written = _read_data(spark, base_path, keyed.schema)
-        new_parts = written.filter(~F.col(PART_COL).isin(*done)) if done else written
         manifest_rows = (
-            new_parts.groupBy(PART_COL)
+            spark.read.schema(keyed.schema).parquet(write_dir)
+            .groupBy(PART_COL)
             .agg(
                 F.count(F.lit(1)).alias("row_count"),
                 _content_checksum(out_cols),
@@ -215,33 +275,54 @@ def checkpointed_write(
     # an empty write still appends, so the manifest dir exists after it
     manifest_dir = _resolve_manifest_dir(base_path)
     os.makedirs(manifest_dir, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    hidden = os.path.join(manifest_dir, "." + name)
-    pq.write_table(rows, hidden)
-    os.replace(hidden, os.path.join(manifest_dir, name))
+    append = os.path.join(manifest_dir, f"part-{uuid.uuid4().hex}.parquet")
+    staged = _stage(append, lambda p: pq.write_table(rows, p))
+    if stored is None:  # public before the first manifest row: reads need it
+        schema_file = _schema_path(base_path)
+        os.replace(_stage(schema_file, lambda p: Path(p).write_text(keyed.schema.json())), schema_file)
+    os.replace(staged, append)
     stats["parts_written"] = rows.num_rows
     stats["rows_written"] = pc.sum(rows["row_count"]).as_py() or 0
     return stats
 
 
-def _read_data(spark: SparkSession, base_path: str, schema=None) -> DataFrame:
-    """The data table under ``base_path``. Its part dirs (up to
-    ``num_parts`` of them) are listed on the driver: above
-    ``parallelPartitionDiscovery.threshold`` paths (32) Spark would list them
-    in a distributed job, which costs more than it saves on the local bases
-    the manifest requires."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    with session_conf(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)):
-        return reader.parquet(_data_path(base_path))
+def _read_writes(spark: SparkSession, base_path: str, seqs) -> DataFrame:
+    """The rows of the writes ``seqs``, each tagged with its seq in
+    ``__write``. Every write dir is read as a root path of its own, so
+    Spark lists it on the driver however many there are (it would list
+    more than ``parallelPartitionDiscovery.threshold`` subdirs of one root
+    in a distributed job), and the stored schema replaces the parquet
+    footer read: defining the frame runs no Spark job."""
+    schema = _stored_schema(base_path)
+    frames = [
+        spark.read.schema(schema).parquet(_write_dir(base_path, seq)).withColumn(WRITE_COL, F.lit(seq))
+        for seq in seqs
+    ]
+    if not frames:
+        return spark.createDataFrame([], schema.add(WRITE_COL, IntegerType()))
+    return reduce(DataFrame.unionByName, frames)
 
 
 def read_checkpointed(spark: SparkSession, base_path: str) -> DataFrame:
-    return _read_data(spark, base_path).drop(PART_COL)
+    """The live rows: each part's rows in the write its latest manifest row
+    names. Superseded and uncommitted writes are never read."""
+    base_path = _local_base(base_path)
+    latest = _latest(_required_manifest(base_path))
+    by_write: dict[int, list[int]] = {}
+    for part, seq in zip(latest[PART_COL].to_pylist(), latest["manifest_seq"].to_pylist()):
+        by_write.setdefault(seq, []).append(part)
+    live = reduce(
+        or_,
+        ((F.col(WRITE_COL) == seq) & F.col(PART_COL).isin(*parts) for seq, parts in by_write.items()),
+        F.lit(False),
+    )
+    return _read_writes(spark, base_path, by_write).filter(live).drop(PART_COL, WRITE_COL)
 
 
 def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     """Rewrite the append-only manifest (one row per partition per (re)run)
-    down to the ``_latest`` row per partition, keeping its reads O(partitions).
+    down to the ``_latest`` row per partition, keeping its reads O(partitions),
+    and delete every write dir no compacted row names.
 
     Swap protocol — GENERATION POINTER, no directory rename (renames on
     S3/GCS are copy+delete, not atomic): one ``pq.write_table`` into a fresh
@@ -250,16 +331,20 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     pointer first, so they always see a COMPLETE generation. A crash before
     the flip leaves an orphan dir (replaced by the next compaction), one
     after it the superseded dir (removed by the next compaction). Only this
-    function deletes anything; its flip and cleanup are local file I/O, so
+    function deletes anything (besides the writer replacing the dir of a
+    seq no manifest row names); its flip and cleanup are local file I/O, so
     a non-local base is refused (``ValueError``). Appends land in the
     resolved current dir: run compaction while no writer is appending (the
     pointer removes the reader/compactor race, not the writer/compactor one).
 
+    The write dirs go right after the flip, with no grace period: a reader
+    of either generation reads only the dirs its latest rows name, and the
+    compacted rows are those same rows. The rest are superseded writes, or
+    remains of a write that died before its append.
+
     Returns {"rows_before", "rows_after", "generation"}."""
     base_path = _local_base(base_path)
-    manifest = _read_manifest(base_path)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {base_path}")
+    manifest = _required_manifest(base_path)
     gen = _current_generation(base_path)
     cur_dir = _resolve_manifest_dir(base_path)
     next_gen = 0 if gen is None else gen + 1
@@ -285,6 +370,10 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     legacy = _manifest_path(base_path)
     if cur_dir != legacy and os.path.exists(legacy):
         shutil.rmtree(legacy, ignore_errors=True)
+    named = set(compacted["manifest_seq"].to_pylist())
+    for seq in _write_seqs(base_path):
+        if seq not in named:
+            shutil.rmtree(_write_dir(base_path, seq), ignore_errors=True)
     return {"rows_before": manifest.num_rows, "rows_after": compacted.num_rows, "generation": next_gen}
 
 
@@ -302,25 +391,25 @@ def _flip_pointer(base_path: str, gen: int) -> None:
 
 
 def verify_manifest(spark: SparkSession, base_path: str) -> DataFrame:
-    """Recount + re-checksum every data partition against its LATEST manifest
-    row (max manifest_seq — earlier rows describe overwritten data); returns
-    the partitions that disagree (empty DataFrame == healthy)."""
+    """Recount + re-checksum the data of the write each LATEST manifest row
+    names (earlier rows describe superseded writes, which are not drift),
+    and flag a part with data but no manifest row at all; returns the
+    (part, write) groups that disagree (empty DataFrame == healthy)."""
     base_path = _local_base(base_path)
-    table = _read_manifest(base_path)
-    if table is None:
-        raise FileNotFoundError(f"no manifest under {base_path}")
-    manifest = spark.createDataFrame(_latest(table))
-    data = _read_data(spark, base_path)
-    out_cols = [c for c in data.columns if c != PART_COL]
-    actual = data.groupBy(PART_COL).agg(
+    latest = _latest(_required_manifest(base_path))
+    manifest = spark.createDataFrame(latest).withColumnRenamed("manifest_seq", WRITE_COL)
+    data = _read_writes(spark, base_path, _write_seqs(base_path))
+    out_cols = [c for c in data.columns if c not in (PART_COL, WRITE_COL)]
+    actual = data.groupBy(PART_COL, WRITE_COL).agg(
         F.count(F.lit(1)).alias("actual_rows"), _content_checksum(out_cols).alias("actual_checksum")
     )
+    recorded = latest[PART_COL].to_pylist()
     return (
-        manifest.join(actual, PART_COL, "full")
+        manifest.join(actual, [PART_COL, WRITE_COL], "full")
         .filter(
             (F.col("row_count") != F.col("actual_rows"))
             | (F.col("checksum") != F.col("actual_checksum"))
-            | F.col("row_count").isNull()
             | F.col("actual_rows").isNull()
+            | (F.col("row_count").isNull() & ~F.col(PART_COL).isin(*recorded))
         )
     )
