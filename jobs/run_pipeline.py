@@ -51,9 +51,10 @@ def main() -> None:
                          "(--no-strict also admits features AT label_ts)")
     ap.add_argument("--compact-manifest", action="store_true",
                     help="after the run, compact the append-only manifest to "
-                         "one row per partition (generation-pointer swap, no "
-                         "directory rename; run while no other writer "
-                         "is appending to this base)")
+                         "one row per partition, in place (the compacted file "
+                         "is published before the files it replaces are "
+                         "removed; run while no other writer is appending "
+                         "to this base)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

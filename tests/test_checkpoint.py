@@ -3,6 +3,7 @@ identical output, no recompute of completed partitions)."""
 
 import glob
 import os
+import re
 import uuid
 
 import pyarrow.parquet as pq
@@ -106,17 +107,6 @@ def test_snapshot_isolation(spark, base):
     assert {r["snapshot_id"] for r in m.select("snapshot_id").distinct().collect()} == {"snapA", "snapB"}
 
 
-def test_write_restores_session_conf(spark, base):
-    from video_features_spark.sources.checkpoint import checkpointed_write
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "static")
-    df = spark.range(100).withColumn("k", F.col("id") % 10)
-    checkpointed_write(df, base, ["k"], num_parts=4)
-    assert spark.conf.get(key) == "static"  # shared session not mutated
-    spark.conf.unset(key)
-
-
 def test_verify_clean_after_multi_snapshot_overwrite(spark, base):
     """Re-using a base with a NEW snapshot overwrites partitions; verify must
     trust only the latest manifest row per partition — no false drift."""
@@ -148,72 +138,137 @@ def test_compact_manifest_keeps_latest_and_verifies(spark, base):
     assert again["parts_skipped"] == 4 and again["parts_written"] == 0
 
 
-def test_compaction_generation_pointer_protocol(spark, base):
-    """Pointer-based compaction (object-store-safe: NO directory rename):
-    each compaction writes a fresh _manifest.g<N> dir then atomically flips
-    the one-line _manifest.ptr file; appends land in the current generation;
-    superseded generations are removed by the compactor only."""
-    import os
-
-    from video_features_spark.sources import checkpoint as C
-
-    df1 = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(1))
-    checkpointed_write(df1, base, ["k"], num_parts=4, snapshot_id="snap-1")
-    s1 = C.compact_manifest(spark, base)
-    assert s1["generation"] == 0 and s1["rows_after"] == 4
-    assert C._current_generation(base) == 0
-    # GRACE PERIOD: the just-superseded legacy dir survives one compaction —
-    # a reader that resolved it an instant before the flip may still read it
-    assert os.path.exists(C._manifest_path(base))
-    # appends now land in the generation dir; verify + resume stay exact
-    df2 = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(2))
-    checkpointed_write(df2, base, ["k"], num_parts=4, snapshot_id="snap-2")
-    assert verify_manifest(spark, base).count() == 0
-    s2 = C.compact_manifest(spark, base)
-    assert s2["generation"] == 1 and s2["rows_after"] == 4
-    assert not os.path.exists(C._manifest_path(base))  # legacy retired now
-    assert os.path.exists(C._gen_dir(base, 0))  # grace: gen 0 survives once
-    s3 = C.compact_manifest(spark, base)
-    assert s3["generation"] == 2
-    assert not os.path.exists(C._gen_dir(base, 0))  # two generations behind
-    assert os.path.exists(C._gen_dir(base, 1))  # grace for the new superseded
-    again = checkpointed_write(df2, base, ["k"], num_parts=4, snapshot_id="snap-2")
-    assert again["parts_skipped"] == 4 and again["parts_written"] == 0
+def _visible(base):
+    """The manifest files a reader lists (hidden staged files excluded)."""
+    return sorted(_parquet_files(f"{base}/_manifest"))
 
 
-def test_compaction_crash_before_flip_reader_safe(spark, base, monkeypatch):
-    """Simulated non-atomic swap window: the compactor dies AFTER writing the
-    new generation dir but BEFORE flipping the pointer. A racing reader must
-    see the old, complete manifest and must NOT delete the orphan dir (the
-    r4 rename protocol failed exactly here); the next compaction absorbs the
-    orphan and resume stays exact."""
-    import os
+def _two_snapshots(spark, base):
+    """Two writes of every part (8 manifest rows, 4 of them latest)."""
+    for v in (1, 2):
+        df = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(v))
+        checkpointed_write(df, base, ["k"], num_parts=4, snapshot_id=f"snap-{v}")
+    return df
 
-    from video_features_spark.sources import checkpoint as C
+
+def test_appends_after_compaction_land_in_the_manifest_dir(spark, base):
+    """Compaction rewrites ``_manifest`` in place: one file after each
+    compaction, the next append lands beside it, resume and verify stay
+    exact, and the base holds only the manifest, the schema and the data.
+    Writes and reads delete no manifest file; compaction removes exactly
+    the files it replaced."""
+    from video_features_spark.sources.checkpoint import compact_manifest, completed_parts
 
     df = spark.range(100).withColumn("k", F.col("id") % 10).withColumn("v", F.lit(1))
-    checkpointed_write(df, base, ["k"], num_parts=4)
-    C.compact_manifest(spark, base)  # generation 0
-    monkeypatch.setattr(
-        C, "_flip_pointer",
-        lambda *a: (_ for _ in ()).throw(RuntimeError("crash before flip")),
-    )
-    with pytest.raises(RuntimeError, match="crash before flip"):
-        C.compact_manifest(spark, base)
-    monkeypatch.undo()
-    # mid-window state: orphan gen-1 dir, pointer still names gen 0
-    assert os.path.exists(C._gen_dir(base, 1))
-    assert C._current_generation(base) == 0
-    # reader in the window: complete manifest, orphan untouched
-    m = C.load_manifest(spark, base)
-    assert m is not None and m.count() == 4
-    assert os.path.exists(C._gen_dir(base, 1))
-    # next compaction overwrites the orphan and completes the flip
-    s = C.compact_manifest(spark, base)
-    assert s["generation"] == 1
-    again = checkpointed_write(df, base, ["k"], num_parts=4)
-    assert again["parts_skipped"] == 4 and again["parts_written"] == 0
+    checkpointed_write(df, base, ["k"], num_parts=4, snapshot_id="snap-1")
+    assert compact_manifest(spark, base) == {"rows_before": 4, "rows_after": 4}
+    compacted = _visible(base)
+    assert len(compacted) == 1
+    df2 = df.withColumn("v", F.lit(2))
+    checkpointed_write(df2, base, ["k"], num_parts=4, snapshot_id="snap-2")
+    before = _visible(base)
+    assert len(before) == 2 and compacted[0] in before
+    read_checkpointed(spark, base).collect()
+    completed_parts(spark, base, "snap-2")
     assert verify_manifest(spark, base).count() == 0
+    assert _visible(base) == before
+    for _ in range(2):
+        previous = _visible(base)
+        assert compact_manifest(spark, base)["rows_after"] == 4
+        assert len(_visible(base)) == 1 and not set(previous) & set(_visible(base))
+    assert sorted(os.listdir(base)) == ["_manifest", "_schema.json", "data"]
+    assert os.listdir(f"{base}/data") == ["write-1"]
+    again = checkpointed_write(df2, base, ["k"], num_parts=4, snapshot_id="snap-2")
+    assert again["parts_skipped"] == 4 and again["parts_written"] == 0
+    assert len(_visible(base)) == 2
+
+
+def test_compaction_crash_before_publish_leaves_the_manifest_unchanged(spark, base, monkeypatch):
+    """The compactor dies after writing its file under the hidden name and
+    before renaming it into place: the manifest's files and rows are those
+    of before, and the next compaction completes."""
+    from video_features_spark.sources import checkpoint as C
+
+    df = _two_snapshots(spark, base)
+    before, rows = _visible(base), C._read_manifest(base)
+
+    def crash(*_):
+        raise RuntimeError("compactor died before publishing")
+
+    with monkeypatch.context() as m:
+        m.setattr(C.os, "replace", crash)
+        with pytest.raises(RuntimeError, match="before publishing"):
+            C.compact_manifest(spark, base)
+    assert _visible(base) == before
+    order = [(PART_COL, "ascending"), ("manifest_seq", "ascending")]
+    assert C._read_manifest(base).sort_by(order).equals(rows.sort_by(order))
+    assert verify_manifest(spark, base).count() == 0
+    assert C.compact_manifest(spark, base) == {"rows_before": 8, "rows_after": 4}
+    assert len(_visible(base)) == 1
+    again = checkpointed_write(df, base, ["k"], num_parts=4, snapshot_id="snap-2")
+    assert again["parts_skipped"] == 4 and again["parts_written"] == 0
+
+
+def test_compaction_crash_mid_removal_keeps_resume_read_and_verify_exact(spark, base, monkeypatch):
+    """The compactor dies after its first removal: the duplicate rows it
+    leaves collapse, so resume, the read and verify are exact, and the next
+    compaction leaves one file and only the named write dir."""
+    from video_features_spark.sources import checkpoint as C
+
+    df = _two_snapshots(spark, base)
+    digest = _digest(read_checkpointed(spark, base))
+    real_remove, removed = os.remove, []
+
+    def remove_once(path):
+        if removed:
+            raise RuntimeError("compactor died mid-removal")
+        removed.append(path)
+        real_remove(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(C.os, "remove", remove_once)
+        with pytest.raises(RuntimeError, match="mid-removal"):
+            C.compact_manifest(spark, base)
+    assert len(removed) == 1 and len(_visible(base)) == 2
+    assert C._read_manifest(base).num_rows == 8  # compacted rows + an old file's
+    assert C.completed_parts(spark, base, "snap-2") == set(range(4))
+    assert _digest(read_checkpointed(spark, base)) == digest
+    assert verify_manifest(spark, base).count() == 0
+    again = checkpointed_write(df, base, ["k"], num_parts=4, snapshot_id="snap-2")
+    assert again["parts_skipped"] == 4 and again["parts_written"] == 0
+    assert C.compact_manifest(spark, base)["rows_after"] == 4
+    assert len(_visible(base)) == 1
+    assert sorted(os.listdir(base)) == ["_manifest", "_schema.json", "data"]
+    assert os.listdir(f"{base}/data") == ["write-1"]
+    assert _digest(read_checkpointed(spark, base)) == digest
+
+
+def test_reader_racing_a_compaction_gets_every_live_row(spark, base, monkeypatch):
+    """A compaction runs between a reader's listing and its read and removes
+    every file the reader listed: the reader lists again and returns the
+    complete manifest. A file that stays missing is raised."""
+    from video_features_spark.sources import checkpoint as C
+
+    _two_snapshots(spark, base)
+    latest = C._latest(C._read_manifest(base))
+    real_listing = C._manifest_files
+    raced = []
+
+    def listing_then_compaction(b):
+        files = real_listing(b)
+        if not raced:  # the compactor's own listing passes through
+            raced.append(files)
+            C.compact_manifest(spark, b)
+        return files
+
+    monkeypatch.setattr(C, "_manifest_files", listing_then_compaction)
+    got = C._read_manifest(base)
+    assert len(raced[0]) == 2 and not any(os.path.exists(f) for f in raced[0])
+    assert got.sort_by(PART_COL).equals(latest.sort_by(PART_COL))
+    # a file missing from two listings in a row is no race: raise, not loop
+    os.symlink(os.path.join(base, "gone"), os.path.join(base, "_manifest", "part-dangling.parquet"))
+    with pytest.raises(FileNotFoundError):
+        C._read_manifest(base)
 
 
 MANIFEST_SCHEMA = (
@@ -344,6 +399,32 @@ def test_non_local_base_is_refused(spark):
             call()
 
 
+def test_generation_pointer_base_is_refused(spark, base):
+    """A base in the retired generation-pointer layout (a ``_manifest.ptr``
+    naming ``_manifest.g<N>``) raises, naming the pointer file, before
+    anything reads or writes it: its ``_manifest`` dir is missing or stale,
+    so a write would reuse a seq its live manifest names."""
+    from video_features_spark.sources.checkpoint import compact_manifest, completed_parts
+
+    df = spark.range(10).withColumn("k", F.col("id") % 2)
+    checkpointed_write(df, base, ["k"], num_parts=2)
+    pointer = os.path.join(base, "_manifest.ptr")
+    with open(pointer, "w") as f:
+        f.write("0")
+    before = sorted(os.path.relpath(os.path.join(d, n), base) for d, _, ns in os.walk(base) for n in ns)
+    for call in (
+        lambda: checkpointed_write(df, base, ["k"], num_parts=2, snapshot_id="snapshot-1"),
+        lambda: load_manifest(spark, base),
+        lambda: completed_parts(spark, base, "snapshot-0"),
+        lambda: read_checkpointed(spark, base),
+        lambda: verify_manifest(spark, base),
+        lambda: compact_manifest(spark, base),
+    ):
+        with pytest.raises(ValueError, match=re.escape(pointer)):
+            call()
+    assert sorted(os.path.relpath(os.path.join(d, n), base) for d, _, ns in os.walk(base) for n in ns) == before
+
+
 def test_file_uri_base_is_the_local_path(spark, base):
     df = spark.range(100).withColumn("k", F.col("id") % 10)
     checkpointed_write(df, f"file://{base}", ["k"], num_parts=4)
@@ -381,7 +462,7 @@ def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, mon
     assert checkpointed_write(partial, base, ["k"], num_parts=N_PARTS)["parts_written"] == len(first)
 
     write_and_crash(df)
-    manifest_dir = C._resolve_manifest_dir(base)
+    manifest_dir = f"{base}/_manifest"
     hidden = [f for f in os.listdir(manifest_dir) if f.startswith(".part-")]
     assert len(hidden) == 2  # both partial appends are still there, hidden
     assert pq.read_table(manifest_dir).num_rows == len(first)

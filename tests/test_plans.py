@@ -172,6 +172,41 @@ def test_run_fails_on_leakage_before_anything_commits(spark, tmp_path, monkeypat
     assert run(spark, spec)["rows_written"] == 1
 
 
+def test_run_restores_session_conf(spark, tmp_path, monkeypatch):
+    """run() sets two SQL confs for its write: a caller's values of both
+    survive a run that aborts on leakage (planted as in the test above) and
+    a run that commits. The shared session is not mutated for good."""
+    import video_features_spark.operators.asof as asof_mod
+    from video_features_spark.sources.datagen import LABELS_SCHEMA, generate_images
+
+    caller = {
+        "spark.sql.adaptive.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.EliminateLimits",
+        "spark.sql.requireAllClusterKeysForCoPartition": "true",
+    }
+    imgs = generate_images(spark, 12, n_entities=3)
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "out"))
+    imgs.write.parquet(ip)
+    first = imgs.orderBy("ts").select("entity_id", "ts").first()
+    spark.createDataFrame([(first["entity_id"], first["ts"], 1.0)], LABELS_SCHEMA).write.parquet(lp)
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op, num_parts=4)
+    real_asof = asof_mod.asof_join
+    for key, value in caller.items():
+        spark.conf.set(key, value)
+    try:
+        monkeypatch.setattr(
+            asof_mod, "asof_join", lambda *a, **kw: real_asof(*a, **{**kw, "strict": False})
+        )
+        with pytest.raises(AssertionError, match=r"^temporal leakage"):
+            run(spark, spec)
+        assert {key: spark.conf.get(key) for key in caller} == caller
+        monkeypatch.setattr(asof_mod, "asof_join", real_asof)
+        assert run(spark, spec)["rows_written"] == 1
+        assert {key: spark.conf.get(key) for key in caller} == caller
+    finally:
+        for key in caller:
+            spark.conf.unset(key)
+
+
 def test_audio_job_spec_end_to_end_and_resume(spark, tmp_path):
     from video_features_spark.plans.pipeline import FeatureJobSpec, run
     from video_features_spark.sources.datagen import generate_audio, generate_labels

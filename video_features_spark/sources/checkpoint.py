@@ -22,20 +22,21 @@ Design
   never happened is never read, and the next write reuses its seq and
   replaces its dir (the one deletion outside ``compact_manifest``, which
   deletes every write dir no compacted row names).
-- The manifest (``<base>/_manifest``, or the ``_manifest.ptr``-named
-  generation dir once a compaction has run) gets one row per completed
-  partition per write: job/snapshot id, partition id, key range, row count,
-  content checksum (sum of per-row xxhash64 — order-independent,
+- The manifest (``<base>/_manifest``, the one layout) gets one row per
+  completed partition per write: job/snapshot id, partition id, key range,
+  row count, content checksum (sum of per-row xxhash64 — order-independent,
   partitioning-independent), aggregated from the read-back of the write's
   dir. It is driver metadata (at most ``num_parts`` rows per write), kept
   with pyarrow and local file I/O: the append is one file written under a
   hidden ``.`` name and ``os.replace``d into place (no reader lists a
-  partial one). So is the data's Spark schema, stored once per base
+  partial one), and ``compact_manifest`` rewrites the dir in place the
+  same way. So is the data's Spark schema, stored once per base
   (``_schema.json``) and passed to every read, so no read infers it from
   a footer; a write of another schema is a ``ValueError``. A write runs
   two labelled Spark actions (write data, manifest rows); resume state,
   the append and compaction run none. A base that is not a local path or
-  ``file:`` URI is a ``ValueError``.
+  ``file:`` URI, or that holds the retired ``_manifest.ptr``, is a
+  ``ValueError``.
 - Resume = filter the input's partition ids against the manifest's completed
   ids (``completed_parts``): only missing partitions are written.
   ``checkpointed_write`` applies that filter to the frame it is given, i.e.
@@ -76,11 +77,17 @@ WRITE_COL = "__write"
 
 def _local_base(base: str) -> str:
     """``base`` as a local path: the manifest is kept with local file I/O, so
-    any other URI scheme is refused before anything touches the base."""
+    any other URI scheme is refused before anything touches the base. So is
+    a base in the retired generation-pointer layout: its ``_manifest`` dir is
+    missing or stale, and a write would reuse a seq its live manifest names."""
     url = urlparse(base)
     if url.scheme not in ("", "file"):
         raise ValueError(f"checkpoint base {base!r} is not a local path or file: URI")
-    return url.path if url.scheme else base
+    path = url.path if url.scheme else base
+    pointer = os.path.join(path, "_manifest.ptr")
+    if os.path.exists(pointer):
+        raise ValueError(f"{pointer} marks a generation-pointer manifest layout, which is no longer read")
+    return path
 
 
 def _data_path(base: str) -> str:
@@ -107,32 +114,20 @@ def _manifest_path(base: str) -> str:
     return os.path.join(base, "_manifest")
 
 
-def _manifest_ptr_path(base: str) -> str:
-    return os.path.join(base, "_manifest.ptr")
+def _new_manifest_file(base: str) -> str:
+    return os.path.join(_manifest_path(base), f"part-{uuid.uuid4().hex}.parquet")
 
 
-def _gen_dir(base: str, gen: int) -> str:
-    return os.path.join(base, f"_manifest.g{gen}")
-
-
-def _current_generation(base: str) -> "int | None":
-    """The compaction generation the pointer file names, or None while the
-    base is still on the legacy ``_manifest`` layout (pre-first-compaction)."""
+def _manifest_files(base: str) -> list[str]:
+    """The visible files of ``base``'s manifest dir. Hidden (``.``/``_``-
+    prefixed) names are skipped: an append or a compaction that died before
+    its rename left its file under one."""
+    path = _manifest_path(base)
     try:
-        with open(_manifest_ptr_path(base)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def _resolve_manifest_dir(base: str) -> str:
-    """Where the live manifest lives: the pointer's generation dir once a
-    compaction has run, else the legacy append dir. The pointer is flipped
-    only AFTER its generation dir is fully written, so the resolved dir is
-    always complete — readers racing a compaction see either the old or the
-    new generation, never a partial one."""
-    gen = _current_generation(base)
-    return _manifest_path(base) if gen is None else _gen_dir(base, gen)
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return sorted(os.path.join(path, n) for n in names if not n.startswith((".", "_")))
 
 
 def partition_id(keys: Sequence[str | Column], num_parts: int) -> Column:
@@ -153,18 +148,31 @@ def _content_checksum(cols: Sequence[str]):
     return F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("checksum")
 
 
+def _listed_manifest(base: str) -> tuple[list[str], pa.Table | None]:
+    """The visible manifest files of local ``base`` and their rows as one
+    Arrow table (None while there is no file). A compaction publishes its
+    file before it removes the ones it replaces, so when a listed file
+    vanishes before it is read, a fresh listing holds all of its rows. A
+    file that is missing from two equal listings is not such a race."""
+    listed = None
+    while True:
+        files = _manifest_files(base)
+        try:
+            return files, pq.read_table(files) if files else None
+        except FileNotFoundError:
+            if files == listed:
+                raise
+            listed = files
+
+
 def _read_manifest(base: str) -> pa.Table | None:
-    """The live manifest of local ``base`` as one Arrow table, or None while
-    it has no visible file. Hidden (``.``/``_``-prefixed) files are not
-    listed, so an append that died before its rename is never read."""
-    path = _resolve_manifest_dir(base)
-    table = pq.read_table(path) if os.path.isdir(path) else None
-    return table if table is not None and table.num_columns else None
+    return _listed_manifest(base)[1]
 
 
 def _latest(table: pa.Table) -> pa.Table:
     """The LATEST row per partition (max ``manifest_seq``): earlier rows
-    describe data a later write overwrote."""
+    describe data a later write overwrote. Duplicate rows, which a
+    compaction that died during its removals leaves, collapse to one."""
     rows = table.sort_by([(PART_COL, "ascending"), ("manifest_seq", "descending")])
     parts = rows[PART_COL].to_pylist()
     first = [i for i, p in enumerate(parts) if i == 0 or p != parts[i - 1]]
@@ -273,9 +281,8 @@ def checkpointed_write(
         # at most num_parts rows: one collect feeds the append and the stats
         rows = manifest_rows.toArrow()
     # an empty write still appends, so the manifest dir exists after it
-    manifest_dir = _resolve_manifest_dir(base_path)
-    os.makedirs(manifest_dir, exist_ok=True)
-    append = os.path.join(manifest_dir, f"part-{uuid.uuid4().hex}.parquet")
+    os.makedirs(_manifest_path(base_path), exist_ok=True)
+    append = _new_manifest_file(base_path)
     staged = _stage(append, lambda p: pq.write_table(rows, p))
     if stored is None:  # public before the first manifest row: reads need it
         schema_file = _schema_path(base_path)
@@ -324,70 +331,46 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     down to the ``_latest`` row per partition, keeping its reads O(partitions),
     and delete every write dir no compacted row names.
 
-    Swap protocol — GENERATION POINTER, no directory rename (renames on
-    S3/GCS are copy+delete, not atomic): one ``pq.write_table`` into a fresh
-    ``_manifest.g<N+1>`` dir (no Spark job), then the one-line pointer file
-    ``_manifest.ptr`` is atomically replaced to name it. Readers resolve the
-    pointer first, so they always see a COMPLETE generation. A crash before
-    the flip leaves an orphan dir (replaced by the next compaction), one
-    after it the superseded dir (removed by the next compaction). Only this
-    function deletes anything (besides the writer replacing the dir of a
-    seq no manifest row names); its flip and cleanup are local file I/O, so
-    a non-local base is refused (``ValueError``). Appends land in the
-    resolved current dir: run compaction while no writer is appending (the
-    pointer removes the reader/compactor race, not the writer/compactor one).
+    In place, in the one ``_manifest`` dir, with no Spark job: list its
+    visible files once, publish their latest rows as one new file (hidden
+    name, then ``os.replace``, as an append is published), then remove
+    exactly the listed files. The compacted file is public before anything
+    is removed, so a reader racing the compaction still gets every live row
+    (``_listed_manifest`` re-lists when a listed file has gone). A crash
+    before the publish leaves the manifest as it was; one during the
+    removals leaves duplicate rows, which ``_latest`` and ``_done`` collapse,
+    and the next compaction leaves one file. Only this function deletes
+    manifest files. Run it while no writer is appending: an append's file
+    is not listed, so it survives, but the write dir it names is deleted
+    with the unnamed ones.
 
-    The write dirs go right after the flip, with no grace period: a reader
-    of either generation reads only the dirs its latest rows name, and the
-    compacted rows are those same rows. The rest are superseded writes, or
-    remains of a write that died before its append.
+    The write dirs go right after the removals: a reader reads only the
+    dirs its latest rows name, and the compacted rows are those same rows.
+    The rest are superseded writes, or remains of a write that died before
+    its append.
 
-    Returns {"rows_before", "rows_after", "generation"}."""
+    Returns {"rows_before", "rows_after"}."""
     base_path = _local_base(base_path)
-    manifest = _required_manifest(base_path)
-    gen = _current_generation(base_path)
-    cur_dir = _resolve_manifest_dir(base_path)
-    next_gen = 0 if gen is None else gen + 1
-
+    files, manifest = _listed_manifest(base_path)
+    if manifest is None:
+        raise FileNotFoundError(f"no manifest under {base_path}")
     compacted = _latest(manifest)
-    new_dir = _gen_dir(base_path, next_gen)
-    # a fresh dir also absorbs an orphan of the same generation left by a
-    # compaction that crashed before its pointer flip
-    shutil.rmtree(new_dir, ignore_errors=True)
-    os.makedirs(new_dir)
-    pq.write_table(compacted, os.path.join(new_dir, "part-00000.parquet"))
-    _flip_pointer(base_path, next_gen)
-    # GRACE-PERIOD cleanup: the JUST-superseded manifest (cur_dir) survives
-    # until the NEXT compaction — a reader that resolved the pointer an
-    # instant before the flip may still be reading it. Only strictly-older
-    # generations (and the legacy dir once a generation supersedes it) are
-    # removed now; best-effort — failures leave garbage, never corruption
-    # (readers follow the pointer).
-    keep = {os.path.basename(new_dir), os.path.basename(cur_dir)}
-    for d in os.listdir(base_path):
-        if d.startswith("_manifest.g") and d not in keep:
-            shutil.rmtree(os.path.join(base_path, d), ignore_errors=True)
-    legacy = _manifest_path(base_path)
-    if cur_dir != legacy and os.path.exists(legacy):
-        shutil.rmtree(legacy, ignore_errors=True)
+
+    def write_durably(path):  # on disk before the files it replaces go
+        with open(path, "wb") as f:
+            pq.write_table(compacted, f)
+            f.flush()
+            os.fsync(f.fileno())
+
+    target = _new_manifest_file(base_path)
+    os.replace(_stage(target, write_durably), target)
+    for f in files:
+        os.remove(f)
     named = set(compacted["manifest_seq"].to_pylist())
     for seq in _write_seqs(base_path):
         if seq not in named:
             shutil.rmtree(_write_dir(base_path, seq), ignore_errors=True)
-    return {"rows_before": manifest.num_rows, "rows_after": compacted.num_rows, "generation": next_gen}
-
-
-def _flip_pointer(base_path: str, gen: int) -> None:
-    """Atomically point readers at generation ``gen``: write-temp + replace
-    (one file, one atomic primitive — the object-store analog is a single
-    small-object PUT of ``_manifest.ptr``)."""
-    ptr = _manifest_ptr_path(base_path)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(gen))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, ptr)
+    return {"rows_before": manifest.num_rows, "rows_after": compacted.num_rows}
 
 
 def verify_manifest(spark: SparkSession, base_path: str) -> DataFrame:
