@@ -148,6 +148,7 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
     #     size-based auto-broadcast is disabled for the check so any
     #     BroadcastExchange left is the operator's explicit F.broadcast.
     from video_features_spark.operators.dedup import (
+        _MAX_LOCAL_PAIRS,
         _resolve_candidate_pairs,
         jaccard_on_pair_sets,
         lsh_candidate_pairs,
@@ -166,7 +167,7 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
     prior_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        p_small = verify_plan(500_000)
+        p_small = verify_plan(_MAX_LOCAL_PAIRS)
         p_big = verify_plan(0)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_thresh)
@@ -230,20 +231,23 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
             break
 
     # 14. the flagship's leakage gate survives optimization: the guard's
-    #     raise_error predicate sits in a Filter ABOVE the as-of Window (a
-    #     refactor that lets column pruning or pushdown drop it would make the
-    #     gated write silently ungated)
-    from video_features_spark.operators.asof import leakage_guard
+    #     raise_error predicate (built into the plan ``build`` returns and
+    #     ``run`` writes) sits in a Filter ABOVE the as-of Window (a refactor
+    #     that lets column pruning or pushdown drop it would make the gated
+    #     write silently ungated)
     from video_features_spark.plans import FeatureJobSpec, build
     from video_features_spark.sources.datagen import generate_labels
 
     lbl = os.path.join(tmp, "lbls")
     generate_labels(spark, 20, n_entities=2).write.mode("overwrite").parquet(lbl)
     spec = FeatureJobSpec(images_path=d, labels_path=lbl, output_path=lbl + "_out")
-    lines = optimized_plan_lines(
-        leakage_guard(build(spark, spec), "label_ts", "ts_asof", strict=spec.strict)
-    )
-    guards = [i for i, line in enumerate(lines) if "Filter" in line and "raise_error" in line]
+    lines = optimized_plan_lines(build(spark, spec))
+    # (the undecodable-match guard is a raise_error Filter above the Window
+    # too: only the leakage message names this one)
+    guards = [
+        i for i, line in enumerate(lines)
+        if "Filter" in line and "raise_error" in line and "temporal leakage" in line
+    ]
     windows = [i for i, line in enumerate(lines) if line.lstrip(" :+-").startswith("Window ")]
     if not any(is_ancestor(lines, g, w) for g in guards for w in windows):
         failures.append("leakage guard's raise_error Filter is not above the as-of Window")

@@ -186,7 +186,8 @@ def test_appends_after_compaction_land_in_the_manifest_dir(spark, base):
 def test_compaction_crash_before_publish_leaves_the_manifest_unchanged(spark, base, monkeypatch):
     """The compactor dies after writing its file under the hidden name and
     before renaming it into place: the manifest's files and rows are those
-    of before, and the next compaction completes."""
+    of before, and the next compaction completes and removes the staged
+    file."""
     from video_features_spark.sources import checkpoint as C
 
     df = _two_snapshots(spark, base)
@@ -203,8 +204,10 @@ def test_compaction_crash_before_publish_leaves_the_manifest_unchanged(spark, ba
     order = [(PART_COL, "ascending"), ("manifest_seq", "ascending")]
     assert C._read_manifest(base).sort_by(order).equals(rows.sort_by(order))
     assert verify_manifest(spark, base).count() == 0
+    assert [f for f in os.listdir(f"{base}/_manifest") if f.startswith(".")]  # the staged file
     assert C.compact_manifest(spark, base) == {"rows_before": 8, "rows_after": 4}
     assert len(_visible(base)) == 1
+    assert os.listdir(f"{base}/_manifest") == [os.path.basename(f) for f in _visible(base)]
     again = checkpointed_write(df, base, ["k"], num_parts=4, snapshot_id="snap-2")
     assert again["parts_skipped"] == 4 and again["parts_written"] == 0
 
@@ -435,9 +438,10 @@ def test_file_uri_base_is_the_local_path(spark, base):
 def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, monkeypatch):
     """The driver dies after the manifest file is written but before it is
     renamed into place: the hidden partial file is never read (by the
-    manifest reader, by verify or by a plain ``pq.read_table``), and the
-    rerun rewrites exactly the partitions whose rows never landed, after
-    which verify reports no drift."""
+    manifest reader, by verify or by a plain ``pq.read_table``), the rerun
+    rewrites exactly the partitions whose rows never landed, after which
+    verify reports no drift, and the next compaction removes the partial
+    files."""
     from video_features_spark.sources import checkpoint as C
 
     df = spark.range(200).withColumn("k", F.col("id") % 20).withColumn("v", F.col("id") * 3)
@@ -475,6 +479,10 @@ def test_crash_mid_append_rewrites_exactly_the_unrecorded_parts(spark, base, mon
     assert s["rows_written"] == keyed.filter(F.col(PART_COL).isin(rest)).count()
     assert verify_manifest(spark, base).count() == 0
     assert sorted(C._read_manifest(base)[PART_COL].to_pylist()) == parts
+    assert read_checkpointed(spark, base).count() == 200
+    # the next compaction removes both staged files with the files it replaced
+    C.compact_manifest(spark, base)
+    assert os.listdir(manifest_dir) == [os.path.basename(f) for f in _visible(base)]
     assert read_checkpointed(spark, base).count() == 200
 
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from tests.utils import assert_frames_match
 from video_features_spark.operators.dedup import (
-    hamming64_col,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_dedup,
@@ -91,13 +90,13 @@ def test_simhash_near_vs_far(corpus):
     sh = simhash_signatures(corpus, "doc_id", "text")
     joined = sh.alias("x").join(
         sh.alias("y"), F.col("x.doc_id") + 100000 == F.col("y.doc_id")
-    ).select(hamming64_col(F.col("x.simhash"), F.col("y.simhash")).alias("ham"))
+    ).select(F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))).alias("ham"))
     near = [r["ham"] for r in joined.collect()]
     assert len(near) == 5 and max(near) <= 8
     far = sh.alias("x").join(
         sh.alias("y"),
         (F.col("x.doc_id") + 1 == F.col("y.doc_id")) & (F.col("x.doc_id") % 97 == 3),
-    ).select(hamming64_col(F.col("x.simhash"), F.col("y.simhash")).alias("ham"))
+    ).select(F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))).alias("ham"))
     fars = [r["ham"] for r in far.collect()]
     assert fars and np.mean(fars) > 10  # unrelated docs differ in many bits
 
@@ -129,16 +128,18 @@ def test_connected_components_chain_and_clique(spark):
     assert kept == {1, 10, 20}
 
 
-def test_connected_components_auto_evaluates_chain_once(spark):
+def test_connected_components_auto_evaluates_chain_once(spark, monkeypatch):
     """The auto probe must not re-evaluate the (usually expensive) upstream
     pair chain when the graph is over the driver cap: the probe collects from
     a localCheckpoint and the star path reuses the same materialization.
     Counted with an accumulator in the chain, both sides of the cap."""
     from pyspark.sql import functions as F
 
+    from video_features_spark.operators import dedup
     from video_features_spark.operators.dedup import connected_components
 
     for cap in (1, 500_000):  # over-cap -> star path; under-cap -> union-find
+        monkeypatch.setattr(dedup, "_MAX_LOCAL_PAIRS", cap)
         acc = spark.sparkContext.accumulator(0)
 
         @F.udf("long")
@@ -151,7 +152,7 @@ def test_connected_components_auto_evaluates_chain_once(spark):
         ).select(traced("id_a").alias("id_a"), F.col("id_b"))
         comp = {
             r["id"]: r["component"]
-            for r in connected_components(pairs, max_local_pairs=cap).collect()
+            for r in connected_components(pairs).collect()
         }
         assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
         assert acc.value == 3, (
@@ -263,20 +264,22 @@ def _union_find(nodes, edges):
     return {n: find(n) for n in nodes}
 
 
-def test_cc_star_handles_adversarial_chain(spark):
+def test_cc_star_handles_adversarial_chain(spark, monkeypatch):
     """The round-4 hardening gate: an adversarial duplicate CHAIN needs
     O(length) rounds under min-label propagation but only O(log²) under
     large-star/small-star contraction — the star path must be exact on a
     120-chain within 12 rounds."""
-    from video_features_spark.operators.dedup import connected_components
+    from video_features_spark.operators import dedup
+    from video_features_spark.operators.dedup import _cc_alternating_stars
 
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 12)
     n = 120
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     star = {
         r["id"]: r["component"]
-        for r in connected_components(pairs, max_iter=12, max_local_pairs=0).collect()
+        for r in _cc_alternating_stars(pairs, "id_a", "id_b").collect()
     }
     assert star == {i: 0 for i in range(n)}
 
@@ -305,33 +308,35 @@ def test_cc_star_and_auto_equal_union_find(spark, edges):
     """Hypothesis gate: on random graphs (self-loop-free, duplicate edges
     legal, both orientations legal) both connected-components paths agree
     with a pure-Python union-find ground truth."""
-    from video_features_spark.operators.dedup import connected_components
+    from video_features_spark.operators.dedup import _cc_alternating_stars, connected_components
 
     nodes = sorted({x for e in edges for x in e})
     want = _union_find(nodes, edges)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     auto = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
     assert auto == want  # driver-side union-find path (under-cap graphs)
-    # force the probe OVER the cap: the distributed star path, same answer
+    # the distributed star path (what an over-cap graph takes), same answer
     star = {
         r["id"]: r["component"]
-        for r in connected_components(pairs, max_local_pairs=0).collect()
+        for r in _cc_alternating_stars(pairs, "id_a", "id_b").collect()
     }
     assert star == want
 
 
-def test_cc_star_refuses_unconverged_output(spark):
-    """Exhausting max_iter before the star forest forms must raise, never
+def test_cc_star_refuses_unconverged_output(spark, monkeypatch):
+    """Exhausting the star rounds before the star forest forms must raise, never
     silently emit multi-parent rows (wrong dedup groups)."""
     import pytest as _pytest
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
-    from video_features_spark.operators.dedup import connected_components
+    from video_features_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 1)
+    monkeypatch.setattr(dedup, "_MAX_LOCAL_PAIRS", 0)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1, max_local_pairs=0).collect()
+        dedup.connected_components(pairs).collect()
 
 
 def _ref_shingle_set(text, n=5):

@@ -12,7 +12,6 @@ from video_features_spark.functions.embed import embed_captions, preprocess_and_
 from video_features_spark.operators import asof_join, backfill, sessionize
 from video_features_spark.operators.asof import assert_no_leakage
 from video_features_spark.operators.features import (
-    caption_token_count,
     embed_caption_column,
     extract_image_features,
     image_text_similarity,
@@ -183,12 +182,6 @@ def test_caption_embedding_matches_local(spark, images):
     for r in caps:
         ref = embed_captions([r["caption"]], "clip-small-det")[0]
         assert np.allclose(np.array(r["caption_embedding"], np.float32), ref, rtol=1e-5, atol=1e-6)
-
-
-def test_token_count(spark, images):
-    tc = caption_token_count(images).filter("caption is not null").limit(10).collect()
-    for r in tc:
-        assert r["n_tokens"] >= len(r["caption"].split()) > 0
 
 
 def test_phash_sessionize(spark, images):

@@ -296,32 +296,6 @@ def test_video_job_spec_end_to_end_and_resume(spark, tmp_path):
     assert stats2["parts_written"] == 0 and stats2["parts_skipped"] == stats["parts_written"]
 
 
-def test_build_skips_quarantined_newest_image(spark, tmp_path):
-    """An undecodable image newer than every valid one must not win the
-    as-of match: the label gets the newest VALID feature, never the bad
-    row's timestamp with a null embedding."""
-    import datetime as dt
-
-    from video_features_spark.sources.datagen import (
-        IMAGES_SCHEMA,
-        LABELS_SCHEMA,
-        generate_images,
-    )
-
-    imgs = generate_images(spark, 40, n_entities=1).toPandas().sort_values("ts")
-    imgs.iloc[-1, imgs.columns.get_loc("bytes")] = b"not an image"
-    ip, lp = str(tmp_path / "imgs"), str(tmp_path / "lbls")
-    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
-    label_ts = imgs["ts"].iloc[-1].to_pydatetime() + dt.timedelta(hours=1)
-    spark.createDataFrame(
-        [(imgs["entity_id"].iloc[0], label_ts, 1.0)], LABELS_SCHEMA
-    ).write.parquet(lp)
-    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=str(tmp_path / "o"))
-    (row,) = build(spark, spec).collect()
-    assert row["ts_asof"] == imgs["ts"].iloc[-2].to_pydatetime()
-    assert row["embedding"] is not None
-
-
 def _job_descriptions(spark, group):
     """The descriptions of the Spark jobs launched under ``group``."""
     store = spark.sparkContext._jsc.sc().statusStore()  # noqa: SLF001
@@ -340,6 +314,39 @@ def _in_group(spark, group, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
+
+
+def test_build_is_lazy_and_run_skips_quarantined_newest_image(spark, tmp_path):
+    """An undecodable image newer than every valid one: calling ``build``
+    launches no Spark job, evaluating its plan fails on the matched bad row,
+    and ``run`` gives the label the newest VALID feature, never the bad
+    row's timestamp with a null embedding."""
+    from pyspark.errors import SparkRuntimeException
+
+    from video_features_spark.sources.checkpoint import read_checkpointed
+    from video_features_spark.sources.datagen import (
+        IMAGES_SCHEMA,
+        LABELS_SCHEMA,
+        generate_images,
+    )
+
+    imgs = generate_images(spark, 40, n_entities=1).toPandas().sort_values("ts")
+    imgs.iloc[-1, imgs.columns.get_loc("bytes")] = b"not an image"
+    ip, lp, op = (str(tmp_path / d) for d in ("imgs", "lbls", "o"))
+    spark.createDataFrame(imgs, IMAGES_SCHEMA).write.parquet(ip)
+    label_ts = imgs["ts"].iloc[-1].to_pydatetime() + dt.timedelta(hours=1)
+    spark.createDataFrame(
+        [(imgs["entity_id"].iloc[0], label_ts, 1.0)], LABELS_SCHEMA
+    ).write.parquet(lp)
+    spec = FeatureJobSpec(images_path=ip, labels_path=lp, output_path=op)
+    plan = _in_group(spark, "plans-build", lambda: build(spark, spec))
+    assert _job_descriptions(spark, "plans-build") == []
+    with pytest.raises(SparkRuntimeException, match="undecodable matched media"):
+        plan.collect()
+    assert run(spark, spec)["quarantined_rows"] == 1
+    (row,) = read_checkpointed(spark, op).collect()
+    assert row["ts_asof"] == imgs["ts"].iloc[-2].to_pydatetime()
+    assert row["embedding"] is not None
 
 
 def test_run_requeues_labels_past_undecodable_matches(spark, tmp_path, monkeypatch):

@@ -54,12 +54,12 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
 def test_driver_zipimport_is_never_patched(spark):
     """The install is a no-op outside a Python worker, and running library
     UDFs leaves the driver's zipimport as it was."""
-    from video_features_spark.operators.features import caption_token_count
+    from video_features_spark.operators.features import embed_caption_column
 
     original = zipimport.zipimporter.invalidate_caches
     _worker.cache_zip_directories()
     df = spark.createDataFrame([("a cat",), ("two dogs",)], "caption string")
-    assert len(caption_token_count(df).collect()) == 2
+    assert len(embed_caption_column(df).collect()) == 2
     assert zipimport.zipimporter.invalidate_caches is original
     assert original is not _worker._invalidate_if_changed
 

@@ -133,10 +133,6 @@ def _encoder() -> dict[str, int]:
     return _build_encoder(_merges())
 
 
-def vocab_size() -> int:
-    return len(_encoder()) + 1  # + pad
-
-
 # ---- external vocab seam (P19 → real CLIP drop-in) -------------------------
 # Driver-side pin: (SparkFiles name, sha256). Operators capture it in their
 # UDF closure at plan-build time (same pattern as embed._CHECKPOINTS);

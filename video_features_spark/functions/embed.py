@@ -393,11 +393,3 @@ def embed_captions(
         if n > 0:
             out[i] = emb / n
     return out
-
-
-def token_count(text: str | None) -> int:
-    """Whitespace+punctuation token count with the cleanup applied (BPE-ish
-    proxy; the reference's real BPE is simple_tokenizer.py:62-127)."""
-    if not text:
-        return 0
-    return len(_WORD_RE.findall(clean_caption(text)))

@@ -31,7 +31,3 @@ def average_hash(arr: np.ndarray, hash_size: int = 8) -> int:
         val = (val << 1) | int(b)
     # two's-complement fold into signed int64
     return val - (1 << 64) if val >= (1 << 63) else val
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")

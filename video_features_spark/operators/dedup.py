@@ -225,6 +225,12 @@ def lsh_candidate_pairs(
     )
 
 
+# the most pairs a bounded probe brings to the driver: the candidate set
+# ``minhash_dedup`` broadcasts, the edge list ``connected_components`` solves
+_MAX_LOCAL_PAIRS = 500_000
+_MAX_STAR_ROUNDS = 50  # the star path converges in O(log² n) rounds
+
+
 def _resolve_candidate_pairs(
     pairs: DataFrame, max_broadcast_pairs: int
 ) -> tuple[DataFrame, bool]:
@@ -378,7 +384,7 @@ def minhash_dedup(
     # whole signature AND verify-side set computation on one task
     df = spread_scan(df, id_col)
     sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
-    cands, local = _resolve_candidate_pairs(lsh_candidate_pairs(sigs, id_col, bands), 500_000)
+    cands, local = _resolve_candidate_pairs(lsh_candidate_pairs(sigs, id_col, bands), _MAX_LOCAL_PAIRS)
     return jaccard_on_pair_sets(df, cands, id_col, text_col, shingle_n, threshold, local)
 
 
@@ -446,26 +452,19 @@ def near_dup_join(
     return out.dropDuplicates([id_left, id_right])
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 50,
-    max_local_pairs: int = 500_000,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Connected components over near-dup pairs → ``(id, component)`` with
     component = the smallest member id.
 
-    A bounded probe (``limit(max_local_pairs+1).collect()``) sizes the edge
+    A bounded probe (``limit(_MAX_LOCAL_PAIRS+1).collect()``) sizes the edge
     list; the path depends on that size alone. An under-cap graph — the
     COMMON case: the input is the LSH-VERIFIED pair set, already pruned to
-    actual near-dups — solves driver-side by union-find (exact, sub-second; the cap matches the broadcast probe's.
+    actual near-dups — solves driver-side by union-find (exact, sub-second; the cap is the broadcast probe's.
     Honest memory math: 500k collected Rows cost ~100+ bytes each plus a
     ≤1M-entry parent dict — order 100-200 MB transient driver memory, the
     same bounded-collect discipline as the IVF fit sample, NOT the raw 16
     bytes/pair), replacing ~K rounds × ~4 Spark jobs of pure scheduling
-    overhead with one job. An over-cap graph (``max_local_pairs=0`` forces
-    it) takes the distributed star path: alternating large-star/small-star
+    overhead with one job. An over-cap graph takes the distributed star path: alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — converges in O(log² n) rounds on ANY graph shape,
     including an adversarial duplicate CHAIN. The probe runs over a
@@ -492,10 +491,10 @@ def connected_components(
     # fails the query and the caller reruns it; nothing recomputes from
     # lineage.
     local = pairs.select(id_a, id_b).localCheckpoint()
-    head = local.limit(max_local_pairs + 1).collect()
-    if len(head) <= max_local_pairs:
+    head = local.limit(_MAX_LOCAL_PAIRS + 1).collect()
+    if len(head) <= _MAX_LOCAL_PAIRS:
         return _cc_local_union_find(local, head, id_a, id_b)
-    return _cc_alternating_stars(local, id_a, id_b, max_iter)
+    return _cc_alternating_stars(local, id_a, id_b)
 
 
 def _cc_local_union_find(pairs: DataFrame, rows: list, id_a: str, id_b: str) -> DataFrame:
@@ -534,9 +533,7 @@ def _cc_local_union_find(pairs: DataFrame, rows: list, id_a: str, id_b: str) -> 
     )
 
 
-def _cc_alternating_stars(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
+def _cc_alternating_stars(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """The over-cap path of ``connected_components``. Each round:
 
     - large-star: every node's STRICTLY LARGER neighbors re-point to the
@@ -577,7 +574,7 @@ def _cc_alternating_stars(
         multi = e.groupBy("src").count().filter(F.col("count") > 1).limit(1).count()
         return multi > 0
 
-    for rnd in range(max_iter):
+    for rnd in range(_MAX_STAR_ROUNDS):
         # large-star over the bidirected neighborhood
         bi = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -615,15 +612,14 @@ def _cc_alternating_stars(
         if rnd > 0 and not _not_star_forest(edges):
             break
     else:
-        # max_iter exhausted without a probe success: verify once, and FAIL
+        # _MAX_STAR_ROUNDS exhausted without a probe success: verify once, and FAIL
         # LOUDLY if the forest didn't form — an unconverged edge set would
         # fan the final join out to multiple conflicting rows per node
         # (silently wrong dedup groups). O(log² n) convergence means hitting
-        # this indicates a bug or an absurd max_iter, not a big graph.
+        # this indicates a bug, not a big graph.
         if _not_star_forest(edges):
             raise RuntimeError(
-                f"connected_components(star) did not converge in {max_iter} "
-                "rounds; raise max_iter"
+                f"connected_components(star) did not converge in {_MAX_STAR_ROUNDS} rounds"
             )
     return nodes.join(
         edges.select(F.col("src").alias("id"), F.col("dst").alias("component")),
@@ -645,7 +641,7 @@ def simhash_signatures(
     """SimHash: per-token hash (md5-prefix, 32 usable bits — the same
     engine-neutral hash as shingles, so DuckDB reproduces the signature
     bit-for-bit and the driver oracle-checks it), weighted bit-vote, sign →
-    signature. Near-dup docs differ in few bits (compare with hamming64)."""
+    signature. Near-dup docs differ in few bits (popcount of the XOR)."""
     if bits > 32:
         raise ValueError("md5-prefix hash provides 32 bits; bits must be <= 32")
     df = spread_scan(df, id_col)
@@ -667,11 +663,6 @@ def simhash_signatures(
         bit = F.when(F.col(f"__v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
         sig = bit if sig is None else sig.bitwiseOR(bit)
     return agg.select(id_col, sig.alias("simhash"))
-
-
-def hamming64_col(a, b):
-    """Popcount of XOR for two long columns (bit_count is native in Spark)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)) if isinstance(a, str) else a.bitwiseXOR(b))
 
 
 def embedding_near_dup_blocked(

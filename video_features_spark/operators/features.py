@@ -36,7 +36,6 @@ from ..functions.embed import (
     checkpoint_for,
     embed_captions,
     preprocess_and_embed,
-    token_count,
 )
 from ..functions.preprocess import augment_deterministic
 
@@ -136,17 +135,6 @@ def embed_caption_column(
         return pd.Series([e.tolist() for e in embs])
 
     return df.withColumn(out_col, _embed(F.col(caption_col)))
-
-
-def caption_token_count(df: DataFrame, caption_col: str = "caption", out_col: str = "n_tokens") -> DataFrame:
-    """Token counting over captions (BPE-ish regex after cleanup)."""
-
-    @F.pandas_udf(IntegerType())
-    def _count(texts: pd.Series) -> pd.Series:
-        cache_zip_directories()
-        return texts.map(token_count).astype("int32")
-
-    return df.withColumn(out_col, _count(F.col(caption_col)))
 
 
 def caption_bpe_tokenize(

@@ -6,7 +6,9 @@ per-feature YAML + CLI overrides (``/root/reference/main.py:8-10``) and
 validates/rewrites it in ``sanity_check`` (``utils/utils.py:74-132``). Here the
 spec is a frozen dataclass; ``validate`` is the sanity_check analog (device
 fallback becomes model-registry lookup, path rewriting becomes partition
-columns), and ``build`` assembles the logical plan declaratively — Catalyst
+columns). ``_assemble`` is the one definition of the flagship plan, leakage
+guard included: ``build`` returns it lazily, and ``run`` writes it, dropping
+undecodable matches and writing again when one aborts the write — Catalyst
 owns the physical plan.
 """
 
@@ -64,21 +66,17 @@ _UNDECODABLE_PREFIX = "undecodable matched media"
 
 
 def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
-    """The flagship plan: strict as-of match on media metadata → decode+embed
-    (Arrow UDF) of the matched media only → embeddings joined back onto the
-    labels. A label whose matched media row fails to decode gets its newest
-    earlier decodable one instead.
+    """The flagship plan, lazily: strict as-of match on media metadata →
+    decode+embed (Arrow UDF) of the matched media only → embeddings joined
+    back onto the labels → leakage guard. Calling it runs no Spark job;
+    ``run`` writes this same plan.
 
-    Not lazy: it resolves undecodable matches eagerly, one action per round
-    (clean data: one action, which decodes every matched row once). The
-    returned plan decodes the matched rows again when it runs. ``run`` does
-    not call it: it gates the write instead (see there)."""
+    Evaluating it over a label whose matched media row fails to decode fails
+    with Spark's ``USER_RAISED_EXCEPTION`` ("undecodable matched media…").
+    Resolving such matches (the label gets its newest earlier decodable row)
+    is ``run``'s job."""
     media, labels = _read_inputs(spark, spec)
-    rows = _media_rows(spec, media)
-    failed = None
-    while (found := _undecodable(spec, rows, labels, failed)).num_rows:
-        failed = found if failed is None else pa.concat_tables([failed, found])
-    return _assemble(spec, rows, labels, failed)
+    return _assemble(spec, _media_rows(spec, media), labels)
 
 
 def _read_inputs(spark: SparkSession, spec: FeatureJobSpec) -> tuple[DataFrame, DataFrame]:
@@ -199,12 +197,15 @@ def _assemble(
     failed: pa.Table | None = None,
     observation: Observation | None = None,
 ) -> DataFrame:
-    """match → decode+embed the matched rows → join their embeddings back:
-    (entity_id, label_ts, label payload…, embedding, ts_asof). Evaluating a
-    label whose matched row fails to decode fails the task with Spark's
-    ``USER_RAISED_EXCEPTION`` (message starts "undecodable matched media").
-    With an ``observation``, the decoded rows report ``rows_in`` once an
-    action has run the plan."""
+    """The flagship plan: match → decode+embed the matched rows → join their
+    embeddings back → leakage guard: (entity_id, label_ts, label payload…,
+    embedding, ts_asof). Evaluating a label whose matched row fails to
+    decode fails the task with Spark's ``USER_RAISED_EXCEPTION`` (message
+    starts "undecodable matched media"); a leaking row fails it the same way
+    (``leakage_guard``). With an ``observation``, the decoded rows report
+    ``rows_in`` once an action has run the plan."""
+    from ..operators.asof import leakage_guard
+
     id_col = _ID_COL[spec.modality]
     match = _match(spec, rows, labels, failed)
     feats = _features(spec, rows, match)
@@ -225,7 +226,9 @@ def _assemble(
         F.when(F.col("error").isNotNull(), F.raise_error(msg)).otherwise(F.lit(True))
     )
     payload = [c for c in match.columns if c not in (id_col, "ts_asof")]
-    return guarded.select(*payload, "embedding", "ts_asof")
+    return leakage_guard(
+        guarded.select(*payload, "embedding", "ts_asof"), "label_ts", "ts_asof", strict=spec.strict
+    )
 
 
 def _undecodable(
@@ -242,9 +245,10 @@ def _undecodable(
 
 
 def run(spark: SparkSession, spec: FeatureJobSpec) -> dict:
-    """Execute the spec end-to-end: scan → metadata as-of match →
-    decode+embed of the matched rows → join-back → leakage guard →
-    checkpointed write. Re-run after failure to resume.
+    """Execute the spec end-to-end: the checkpointed write of the plan
+    ``build`` returns (scan → metadata as-of match → decode+embed of the
+    matched rows → join-back → leakage guard). Re-run after failure to
+    resume. The only place undecodable matches are resolved.
 
     - Resume: partitions the manifest marks complete for this snapshot are
       filtered out of both input tables BELOW the decode+embed UDF, so a
@@ -266,7 +270,7 @@ def run(spark: SparkSession, spec: FeatureJobSpec) -> dict:
     """
     from pyspark.errors import SparkRuntimeException
 
-    from ..operators.asof import LEAK_MESSAGE_PREFIX, leakage_guard
+    from ..operators.asof import LEAK_MESSAGE_PREFIX
     from ..session import session_conf
     from ..sources.checkpoint import checkpointed_write, completed_parts, partition_id
 
@@ -292,9 +296,7 @@ def run(spark: SparkSession, spec: FeatureJobSpec) -> dict:
     failed = None
     while True:
         observation = Observation()
-        joined = leakage_guard(
-            _assemble(spec, rows, labels, failed, observation), "label_ts", "ts_asof", strict=spec.strict
-        )
+        joined = _assemble(spec, rows, labels, failed, observation)
         try:
             with session_conf(spark, _AQE_EXCLUDED_RULES, excluded), \
                     session_conf(spark, co_partition, "false"):

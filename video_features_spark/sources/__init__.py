@@ -1,1 +1,1 @@
-from .tables import TABLES, load_table, load_tables  # noqa: F401
+from .tables import TABLES  # noqa: F401

@@ -121,7 +121,7 @@ def _new_manifest_file(base: str) -> str:
 def _manifest_files(base: str) -> list[str]:
     """The visible files of ``base``'s manifest dir. Hidden (``.``/``_``-
     prefixed) names are skipped: an append or a compaction that died before
-    its rename left its file under one."""
+    its rename left its file under one (the next compaction removes it)."""
     path = _manifest_path(base)
     try:
         names = os.listdir(path)
@@ -334,15 +334,17 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     In place, in the one ``_manifest`` dir, with no Spark job: list its
     visible files once, publish their latest rows as one new file (hidden
     name, then ``os.replace``, as an append is published), then remove
-    exactly the listed files. The compacted file is public before anything
-    is removed, so a reader racing the compaction still gets every live row
-    (``_listed_manifest`` re-lists when a listed file has gone). A crash
-    before the publish leaves the manifest as it was; one during the
-    removals leaves duplicate rows, which ``_latest`` and ``_done`` collapse,
-    and the next compaction leaves one file. Only this function deletes
-    manifest files. Run it while no writer is appending: an append's file
-    is not listed, so it survives, but the write dir it names is deleted
-    with the unnamed ones.
+    exactly the listed files, and then every hidden staged ``.part-*`` file:
+    the remains of an append or a compaction that died before its publish.
+    The compacted file is public before anything is removed, so a reader
+    racing the compaction still gets every live row (``_listed_manifest``
+    re-lists when a listed file has gone). A crash before the publish
+    leaves the manifest as it was; one during the removals leaves duplicate
+    rows, which ``_latest`` and ``_done`` collapse, and the next compaction
+    leaves one file. Only this function deletes manifest files. Run it
+    while no writer is appending: an append's file is not listed, so it
+    survives (unless it is still staged), but the write dir it names is
+    deleted with the unnamed ones.
 
     The write dirs go right after the removals: a reader reads only the
     dirs its latest rows name, and the compacted rows are those same rows.
@@ -366,6 +368,10 @@ def compact_manifest(spark: SparkSession, base_path: str) -> dict:
     os.replace(_stage(target, write_durably), target)
     for f in files:
         os.remove(f)
+    manifest_dir = _manifest_path(base_path)
+    for name in os.listdir(manifest_dir):
+        if name.startswith(".part-"):  # staged by a writer that died before its publish
+            os.remove(os.path.join(manifest_dir, name))
     named = set(compacted["manifest_seq"].to_pylist())
     for seq in _write_seqs(base_path):
         if seq not in named:

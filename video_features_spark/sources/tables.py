@@ -1,4 +1,5 @@
-"""Parquet table loaders for the driver-generated TPC-H-ish test schema.
+"""Table sources: the snapshot-pinned read, scan parallelism, and the names
+of the driver-generated TPC-H-ish test schema's tables.
 
 Spark-side analog of the reference's path-list source
 (``/root/reference/utils/utils.py:135-175`` — CLI list / txt file → work list):
@@ -9,9 +10,10 @@ scheduling.
 
 from __future__ import annotations
 
-import os
+import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -25,18 +27,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
 
 
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -97,7 +87,9 @@ def read_snapshot(
     manifests). Without it (this sandbox): a plain parquet read — the
     directory IS the immutable snapshot here, and ``snapshot_id`` is carried
     through ``checkpointed_write(..., snapshot_id=...)`` lineage rows so the
-    resume/verify contract is identical either way.
+    resume/verify contract is identical either way. The parquet read passes
+    the schema ``_parquet_schema`` reads on the driver, so defining it runs
+    no Spark job.
     """
     if has_iceberg(spark):
         reader = spark.read.format("iceberg")
@@ -106,4 +98,36 @@ def read_snapshot(
             # numeric → a snapshot id; anything else → a named tag/branch
             reader = reader.option("snapshot-id" if sid.isdigit() else "tag", sid)
         return reader.load(table)
-    return spark.read.parquet(table)
+    schema = _parquet_schema(spark, table)
+    return (spark.read.schema(schema) if schema is not None else spark.read).parquet(table)
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    instead of in the one-task job Spark runs for it: Spark's own footer
+    reader and converter over the file its inference reads, the first data
+    file by path. None, to let Spark infer, under schema merging and for
+    globs, empty dirs, partition dirs and summary (``_metadata``) files."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return None
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):  # a glob or a missing path: Spark resolves or reports it
+        return None
+    listed = [fs.getFileStatus(root)] if fs.isFile(root) else list(fs.listStatus(root))
+    names = [st.getPath().getName() for st in listed]
+    data = [st for st, n in zip(listed, names) if not n.startswith(("_", "."))]
+    if not data or any(st.isDirectory() for st in listed) or {"_metadata", "_common_metadata"} & set(names):
+        return None
+    first = min(data, key=lambda st: st.getPath().toString())
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first.getPath(), footer),
+        parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf()),  # noqa: SLF001
+    )
+    return StructType.fromJson(json.loads(schema.json()))
