@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -45,6 +46,26 @@ def exchange_schemas(df, kinds: tuple[str, ...] = ("Exchange",)) -> list[str]:
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
     return out
+
+
+def final_plans(spark, action) -> list[str]:
+    """The final (AQE) physical-plan description of every SQL execution
+    ``action()`` runs, read from the session's status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    action()
+    execs = store.executionsList()
+    return [execs.apply(i).physicalPlanDescription() for i in range(before, execs.size())]
+
+
+def final_plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, detail block) of every node of a status-store plan
+    description's final (or current) plan, in tree order."""
+    final = re.split(r"== (?:Final|Current) Plan ==", plan)[1].split("== Initial Plan ==")[0]
+    blocks = [b.strip() for b in plan.split("\n\n")]
+    by_id = {int(b[1:b.index(")")]): b for b in blocks if re.match(r"\(\d+\) ", b)}
+    found = (re.search(r"(\w+)[^(]*\((\d+)\)", ln) for ln in final.splitlines()[1:])
+    return [(m.group(1), by_id[int(m.group(2))]) for m in found if m]
 
 
 def _depth(line: str) -> int:
@@ -312,6 +333,27 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
         carrying = [sch for sch in exchange_schemas(written) if "embedding" in sch]
         if len(carrying) > 1:
             failures.append(f"run's written plan shuffles embeddings {len(carrying)} times (expected <= 1)")
+
+    # 18. MinHash signatures are one codegen'd explode + partial aggregate:
+    #     in the plan of minhash_dedup's candidate probe, the partial min()
+    #     aggregate sits on the shingle-position Generate with only Projects
+    #     between (the exploded rows never cross an Exchange), and no in-row
+    #     array_min(transform(...)) lambda is left on the signature path
+    plans = [
+        p for p in final_plans(spark, lambda: minhash_dedup(docs, "doc_id", "text", 32, 8, 5, 0.5))
+        if "partial_min(" in p
+    ]
+    if len(plans) != 1:
+        failures.append(f"minhash_dedup ran {len(plans)} signature plans (expected 1)")
+    for p in plans:
+        if "array_min(transform" in p:
+            failures.append("minhash signatures still run in-row array_min(transform(...))")
+        nodes = final_plan_nodes(p)
+        aggs = [i for i, (n, b) in enumerate(nodes) if n == "HashAggregate" and "partial_min(" in b]
+        # a unary chain: the first non-Project node below the aggregate is its input
+        below = [next((n, b) for n, b in nodes[i + 1:] if n != "Project") for i in aggs]
+        if not below or any(n != "Generate" or "sequence(" not in b for n, b in below):
+            failures.append("signature partial aggregate is not directly on the position Generate")
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

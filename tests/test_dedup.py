@@ -3,6 +3,7 @@ recall vs exact, SimHash hamming on injected near-dups, ANN recall vs
 brute force."""
 
 import hashlib
+import re
 
 import numpy as np
 import pytest
@@ -388,31 +389,56 @@ def test_jaccard_on_pair_sets_matches_python_reference(spark):
 
 
 def test_inrow_signatures_match_exploded_aggregate(spark):
-    """minhash_signatures' in-row array_min form must be bit-identical to the
-    explode+groupBy aggregate it replaced (min over the same distinct set)."""
-    from pyspark.sql import functions as F
+    """The in-row ``_minhash_expr`` (near_dup_join's and the stream lookup's
+    signature) and the explode + partial-aggregate ``minhash_signatures``
+    are bit-identical, with the same schema: NULL text (n_hashes NULLs),
+    "", a text shorter than shingle_n, multi-byte UTF-8 and repeated
+    shingles, from 1 and from 16 input partitions."""
+    from video_features_spark.operators.dedup import _minhash_expr, shingle_sets
 
-    from video_features_spark.operators.dedup import (
-        _P,
-        _hash_params,
-        minhash_signatures,
-        shingle_table,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"document number {i} with some repeated shingle text {i % 3}") for i in range(40)],
-        "doc_id long, text string",
-    )
+    texts = [
+        None,
+        "",
+        "abc",
+        "naïve café — 日本語のテキスト ✓ über straße",
+        "abcab" * 12,
+        "abcabcabcabcabcabc",
+    ] + [f"document number {i} with some repeated shingle text {i % 3}" for i in range(40)]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     n_hashes = 16
-    sh = shingle_table(docs, "doc_id", "text", 5)
-    mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_P)).alias(f"m{i}")
-        for i, (a, b) in enumerate(_hash_params(n_hashes))
-    ]
-    agg = sh.groupBy("doc_id").agg(*mins)
-    old = {r["doc_id"]: [r[f"m{i}"] for i in range(n_hashes)] for r in agg.collect()}
-    new = {
-        r["doc_id"]: list(r["minhash"])
-        for r in minhash_signatures(docs, "doc_id", "text", n_hashes, 5).collect()
-    }
-    assert new == old
+    inrow = shingle_sets(docs, "doc_id", "text", 5).select(
+        "doc_id", _minhash_expr(n_hashes).alias("minhash")
+    )
+    want = {r["doc_id"]: list(r["minhash"]) for r in inrow.collect()}
+    assert len(want) == len(texts)
+    assert want[0] == [None] * n_hashes
+    assert all(None not in sig for k, sig in want.items() if texts[k] is not None)
+    for parts in (1, 16):
+        sigs = minhash_signatures(docs.repartition(parts), "doc_id", "text", n_hashes, 5)
+        assert sigs.schema == inrow.schema
+        assert {r["doc_id"]: list(r["minhash"]) for r in sigs.collect()} == want
+
+
+def _final_plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, detail block) of every node of a status-store plan
+    description's final (or current) plan, in tree order."""
+    final = re.split(r"== (?:Final|Current) Plan ==", plan)[1].split("== Initial Plan ==")[0]
+    blocks = [b.strip() for b in plan.split("\n\n")]
+    by_id = {int(b[1:b.index(")")]): b for b in blocks if re.match(r"\(\d+\) ", b)}
+    found = (re.search(r"(\w+)[^(]*\((\d+)\)", ln) for ln in final.splitlines()[1:])
+    return [(m.group(1), by_id[int(m.group(2))]) for m in found if m]
+
+
+def test_signature_aggregate_runs_once_in_the_candidate_self_join(spark, sf_dir):
+    """The candidate self-join's two sides share one exchange of the
+    signatures (ReuseExchange): the final plan explodes shingle positions
+    and partially aggregates the minima once, and holds one ReusedExchange."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    cands = lsh_candidate_pairs(minhash_signatures(docs, "doc_id", "text", 32, 5), "doc_id", 8)
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    cands.collect()
+    execs = store.executionsList()
+    nodes = _final_plan_nodes(execs.apply(execs.size() - 1).physicalPlanDescription())
+    assert sum(n == "HashAggregate" and "partial_min(" in b for n, b in nodes) == 1
+    assert sum(n == "Generate" and "sequence(" in b for n, b in nodes) == 1
+    assert sum(n == "ReusedExchange" for n, _ in nodes) == 1

@@ -4,6 +4,7 @@ snapshot-id vs tag, and the parquet fallback must read the schema Spark would
 infer, without a job."""
 
 import os
+from types import SimpleNamespace
 
 from video_features_spark.sources import tables
 
@@ -54,6 +55,35 @@ def test_read_snapshot_iceberg_unpinned_reads_head(monkeypatch):
     fs = _FakeSpark()
     tables.read_snapshot(fs, "db.features")
     assert fs.read.fmt == "iceberg" and fs.read.options == {}
+
+
+class _NoIcebergSpark:
+    """A session without an Iceberg runtime that counts its class probes."""
+
+    def __init__(self, app_id):
+        self.probes = 0
+        self.sparkContext = SimpleNamespace(applicationId=app_id)
+        lang = SimpleNamespace(Class=SimpleNamespace(forName=self._for_name))
+        self._jvm = SimpleNamespace(java=SimpleNamespace(lang=lang))
+        self.read = SimpleNamespace(parquet=lambda path: f"PARQUET:{path}")
+
+    def _for_name(self, name):
+        self.probes += 1
+        raise RuntimeError(f"java.lang.ClassNotFoundException: {name}")
+
+
+def test_read_snapshot_probes_iceberg_once_per_context(monkeypatch):
+    """A second read in one SparkContext does not probe the classpath again;
+    a new context (new applicationId) does."""
+    monkeypatch.setattr(tables, "_ICEBERG", {})
+    monkeypatch.setattr(tables, "_parquet_schema", lambda spark, path: None)
+    fs = _NoIcebergSpark("app-1")
+    assert tables.read_snapshot(fs, "a.parquet") == "PARQUET:a.parquet"
+    assert tables.read_snapshot(fs, "b.parquet", snapshot_id=7) == "PARQUET:b.parquet"
+    assert fs.probes == 1
+    fs.sparkContext.applicationId = "app-2"
+    tables.read_snapshot(fs, "a.parquet")
+    assert fs.probes == 2
 
 
 def test_read_snapshot_parquet_fallback(spark, sf_dir):

@@ -66,15 +66,28 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(target, *key_cols)
 
 
+# has_iceberg's answer per SparkContext applicationId
+_ICEBERG: dict[str, bool] = {}
+
+
 def has_iceberg(spark: SparkSession) -> bool:
     """True when an Iceberg runtime is on the classpath (production clusters);
-    this sandbox ships none, so the snapshot source falls back to parquet."""
-    try:
-        # py4j package attributes resolve lazily — Class.forName is the real probe
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
+    without one the snapshot source falls back to parquet.
+
+    The probe is a ``Class.forName`` (without a runtime it fails: 0.18 s for
+    the two reads of a cold ``plans.run``), so it runs once per SparkContext
+    and the answer is kept under the context's ``applicationId``. Only a new
+    context (after ``spark.stop()``) invalidates it; a jar added to a
+    running context is not seen."""
+    app = spark.sparkContext.applicationId
+    if app not in _ICEBERG:
+        try:
+            # py4j package attributes resolve lazily — Class.forName is the real probe
+            spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")  # noqa: SLF001
+            _ICEBERG[app] = True
+        except Exception:  # noqa: BLE001
+            _ICEBERG[app] = False
+    return _ICEBERG[app]
 
 
 def read_snapshot(
