@@ -68,6 +68,17 @@ def final_plan_nodes(plan: str) -> list[tuple[str, str]]:
     return [(m.group(1), by_id[int(m.group(2))]) for m in found if m]
 
 
+def call_args(text: str, start: int) -> str:
+    """The text from ``start`` (just past an opening parenthesis) up to its
+    matching closing parenthesis."""
+    depth = 1
+    for i in range(start, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        if not depth:
+            return text[start:i]
+    raise ValueError("unbalanced parentheses")
+
+
 def _depth(line: str) -> int:
     return len(line) - len(line.lstrip(" :+-"))
 
@@ -354,6 +365,22 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
         below = [next((n, b) for n, b in nodes[i + 1:] if n != "Project") for i in aggs]
         if not below or any(n != "Generate" or "sequence(" not in b for n, b in below):
             failures.append("signature partial aggregate is not directly on the position Generate")
+
+    # 19. langid lowercases each text once per row: the trigram lambda reads
+    #     the lowercased text as an attribute (a lower() inside the lambda
+    #     re-runs over the whole text at every trigram position), and the
+    #     optimized plan holds one lower( in all
+    from video_features_spark.operators.text import langid_ngram
+
+    plan = "\n".join(optimized_plan_lines(langid_ngram(docs)))
+    bodies = [call_args(plan, m.end()) for m in re.finditer(r"lambdafunction\(", plan)]
+    if not bodies:
+        failures.append("langid's plan has no trigram lambda")
+    if any("lower(" in b for b in bodies):
+        failures.append("langid lowercases inside the trigram lambda")
+    n_lower = plan.count("lower(")
+    if n_lower != 1:
+        failures.append(f"langid's plan lowercases {n_lower} times per row (expected 1)")
 
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401

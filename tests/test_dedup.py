@@ -442,3 +442,67 @@ def test_signature_aggregate_runs_once_in_the_candidate_self_join(spark, sf_dir)
     assert sum(n == "HashAggregate" and "partial_min(" in b for n, b in nodes) == 1
     assert sum(n == "Generate" and "sequence(" in b for n, b in nodes) == 1
     assert sum(n == "ReusedExchange" for n, _ in nodes) == 1
+
+
+def test_shingle_hash_matches_its_sql_template(spark):
+    """``shingle_hash`` (the Column form) and ``_SHINGLE_HASH_SQL`` (the text
+    the wide MinHash expressions are built from) give the same value on NULL,
+    "", ASCII and multi-byte UTF-8 text."""
+    from video_features_spark.operators.dedup import _SHINGLE_HASH_SQL, shingle_hash
+
+    texts = [None, "", "abcde", "naïve", "日本語のテ", "✓ über", "İSTANBUL"]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    sql = F.expr(_SHINGLE_HASH_SQL.format("s"))
+    rows = df.select("s", shingle_hash(F.col("s")).alias("col"), sql.alias("sql")).collect()
+    assert [r["col"] for r in rows] == [r["sql"] for r in rows]
+    assert rows[0]["col"] is None
+    assert all(isinstance(r["col"], int) for r in rows[1:])
+    assert rows[1]["col"] == int(hashlib.md5(b"").hexdigest()[:8], 16)
+    assert rows[4]["col"] == int(hashlib.md5("日本語のテ".encode()).hexdigest()[:8], 16)
+
+
+def test_plan_building_cost_is_flat_in_hashes_and_bands(spark, sf_dir):
+    """Building the MinHash chains makes the same number of py4j calls at
+    (n_hashes, bands) = (32, 8) and (128, 32): every expression whose size
+    grows with a parameter is one SQL text, so no Python loop of ``Column``
+    calls (each one several py4j round trips) is left. py4j's deletes of
+    freed Java objects run from ``__del__`` on a finalizer thread, so cyclic
+    GC is off and those commands are not counted."""
+    import gc
+
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    corpus = docs.withColumnRenamed("doc_id", "corpus_id")
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    sent = []
+    real = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(delete):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    builds = {
+        "lsh_candidate_pairs": lambda h, b: lsh_candidate_pairs(
+            minhash_signatures(docs, "doc_id", "text", h, 5), "doc_id", b
+        ),
+        "near_dup_join": lambda h, b: near_dup_join(docs, corpus, n_hashes=h, bands=b),
+    }
+    counts = {}
+    client.send_command = counting
+    gc.disable()
+    try:
+        for name, build in builds.items():
+            build(32, 8)  # first-use lookups are not part of the cost
+            for params in ((32, 8), (128, 32)):
+                sent.clear()
+                build(*params)
+                counts[name, params] = len(sent)
+    finally:
+        gc.enable()
+        del client.send_command
+    for name in builds:
+        assert counts[name, (32, 8)] == counts[name, (128, 32)], counts
+        assert counts[name, (32, 8)] < 1_000, counts

@@ -98,3 +98,38 @@ def test_winnowing_guarantees_shared_fingerprint_on_copies(spark):
         for r in winnow_fingerprints(df.repartition(5), k=5, w=4).collect()
     )
     assert a == b
+
+
+def test_langid_ngram_edge_cases_match_in_lambda_lowercasing(spark):
+    """``langid_ngram`` lowercases each text once, before the trigram lambda.
+    Its scores and predictions equal those of the trigrams the in-lambda
+    form ``substring(lower(text), i, 3)`` gives, on NULL, "", a 2-character
+    text, mixed case, multi-byte UTF-8 and "İSTANBUL" (lowercasing makes it
+    one character longer)."""
+    from pyspark.sql import functions as F
+
+    from video_features_spark.operators.text import TRIGRAM_PROFILES
+
+    texts = [None, "", "Ab", "The CAT and THE Dog", "ÉL Niño está en la CASA de él",
+             "naïve café — 日本語のテキスト ✓ ÜBER", "İSTANBUL", "İSTANBUL İN THE rain"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    t = "lower(text)"
+    in_lambda = F.expr(
+        f"if(length({t}) < 3, array(), array_distinct(transform("
+        f"sequence(1, length({t}) - 2), i -> substring({t}, i, 3))))"
+    )
+    grams = {r["doc_id"]: r["g"] for r in df.select("doc_id", in_lambda.alias("g")).collect()}
+    assert len(grams[6]) == len("İSTANBUL".lower()) - 2 == 7
+    langs = sorted(TRIGRAM_PROFILES)
+    got = {r["doc_id"]: r for r in langid_ngram(df).collect()}
+    assert sorted(got) == list(range(len(texts)))
+    for doc_id, g in grams.items():
+        row = got[doc_id]
+        if g is None:  # NULL text: NULL scores, no prediction
+            assert all(row[f"ngram_{lang}"] is None for lang in langs) and row["lang_pred"] is None
+            continue
+        want = {
+            lang: len(set(g) & set(TRIGRAM_PROFILES[lang])) / max(len(g), 1) for lang in langs
+        }
+        assert {lang: row[f"ngram_{lang}"] for lang in langs} == want, doc_id
+        assert row["lang_pred"] == max(langs, key=lambda lang: (want[lang], -langs.index(lang)))

@@ -40,6 +40,14 @@ Scale notes
   vs a corpus) takes the in-row ``_minhash_expr``, because its streaming
   left side cannot aggregate; that form costs one interpreted lambda pass
   over the shingle set per hash function.
+- Every expression whose size grows with a parameter (the n_hashes minima,
+  the bands' hashes, the shingle set) is ONE SQL text (``F.expr`` /
+  ``selectExpr``), built from ``_universal_hashes``, ``_band_hash_sql`` and
+  ``_SHINGLE_HASH_SQL``. PySpark wraps each ``Column`` call in a call-site
+  capture (a stack walk and ~5 py4j round trips), so a Python loop of
+  ``Column`` calls made building the plan cost more than running parts of
+  it: building ``lsh_candidate_pairs(minhash_signatures(64), 16)`` took
+  5,961 py4j calls, now 217 at any n_hashes and bands.
 - The VERIFY avoids the exploded table altogether (``_set_jaccard``):
   per-doc shingle-hash sets are computed in-row and pairs intersect via
   ``array_intersect`` — no Σ_pairs|A| row explosion, no reassembly groupBy
@@ -74,23 +82,36 @@ def _hash_params(n_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def _shingle_positions(c, n: int):
-    """Start positions 1..len-n+1 of a string column's n-grams; one position
-    (the whole string) when it is shorter than ``n``, and for NULL."""
-    return F.sequence(F.lit(1), F.greatest(F.length(c) - n + 1, F.lit(1)))
+def _shingle_positions(text: str, n: int) -> str:
+    """SQL: start positions 1..len-n+1 of the n-grams of string column
+    ``text``; one position (the whole string) when it is shorter than
+    ``n``, and for NULL."""
+    return f"sequence(1, greatest(length({text}) - {n} + 1, 1))"
 
 
-def char_shingles(text_col, n: int = 5):
+def _char_shingles_sql(text: str, n: int) -> str:
+    # the lambda variable is named apart from any column the body reads
+    pos = _shingle_positions(text, n)
+    return f"array_distinct(transform({pos}, __pos -> substr({text}, __pos, {n})))"
+
+
+def char_shingles(text_col: str, n: int = 5):
     """Distinct character n-grams of a string column (higher-order functions,
     no UDF): positions 1..len-n+1 → substrings → array_distinct."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    idx = _shingle_positions(c, n)
-    return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(n))))
+    return F.expr(_char_shingles_sql(text_col, n))
+
+
+# The md5-prefix shingle hash as SQL text; ``{}`` is the string expression.
+# Expressions whose size grows with a parameter are built from it as one SQL
+# text each; ``shingle_hash`` is its Column form (a test pins the two equal).
+_SHINGLE_HASH_SQL = "CAST(conv(substring(md5({}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def shingle_hash(shingle_col):
     """32-bit integer hash of a shingle via md5 prefix — identical in DuckDB
-    (``('0x'||substr(md5(s),1,8))::BIGINT``), which keeps MinHash oracle-able."""
+    (``('0x'||substr(md5(s),1,8))::BIGINT``), which keeps MinHash oracle-able.
+    The Column form of ``_SHINGLE_HASH_SQL``, for callers that hold a
+    Column (e.g. a Python lambda's argument)."""
     return F.conv(F.substring(F.md5(shingle_col), 1, 8), 16, 10).cast("long")
 
 
@@ -158,17 +179,18 @@ def jaccard_pairs(
     )
 
 
-def _sig_min_expr(a: int, b: int):
-    # separate factory: a lambda with bound default args would read as 3-arg
-    # to PySpark's higher-order-function arity inspection
-    return F.array_min(F.transform("__sset", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_P)))
+def _universal_hashes(n_hashes: int, h: str) -> list[str]:
+    """SQL: the n_hashes terms (a_i·h + b_i) mod P of the hash family, on
+    the long expression ``h``."""
+    return [f"({a} * {h} + {b}) % {_P}" for a, b in _hash_params(n_hashes)]
 
 
 def _minhash_expr(n_hashes: int):
     """The in-row MinHash signature of the ``__sset`` shingle-hash set column,
     bit-identical to ``minhash_signatures`` but one interpreted lambda pass
     per hash function: the form for a streaming side (``near_dup_join``)."""
-    return F.array(*[_sig_min_expr(a, b) for a, b in _hash_params(n_hashes)])
+    mins = (f"array_min(transform(__sset, h -> {t}))" for t in _universal_hashes(n_hashes, "h"))
+    return F.expr(f"array({', '.join(mins)})")
 
 
 def minhash_signatures(
@@ -185,29 +207,32 @@ def minhash_signatures(
 
     Batch only, and ids must be unique (rows sharing an id merge into one
     signature); ``near_dup_join`` is the streaming form."""
-    c = F.col(text_col)
-    pos = df.select(id_col, text_col, F.explode_outer(_shingle_positions(c, shingle_n)).alias("__i"))
-    hashed = pos.select(id_col, shingle_hash(c.substr(F.col("__i"), F.lit(shingle_n))).alias("__h"))
-    mins = [F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(_P)) for a, b in _hash_params(n_hashes)]
-    return hashed.groupBy(id_col).agg(F.array(*mins).alias("minhash"))
-
-
-def band_hash_expr(sig_col: str, band: int, rows_per_band):
-    """Band hash = md5-prefix of the band's signature values joined with ','
-    plus a band marker — engine-neutral (DuckDB computes the identical value:
-    ``('0x'||substr(md5(concat_ws(',', m_i, ..., 'b<band>')),1,8))::BIGINT``),
-    which makes the whole LSH chain oracle-checkable in SQL."""
-    start = F.lit(band) * rows_per_band + 1
-    vals = F.transform(
-        F.slice(F.col(sig_col), start, rows_per_band), lambda x: x.cast("string")
+    pos = df.selectExpr(
+        id_col, text_col, f"explode_outer({_shingle_positions(text_col, shingle_n)}) AS __i"
     )
-    return shingle_hash(F.concat_ws(",", vals, F.lit(f"b{band}")))
+    shingle = f"substr({text_col}, __i, {shingle_n})"
+    hashed = pos.selectExpr(id_col, f"{_SHINGLE_HASH_SQL.format(shingle)} AS __h")
+    mins = (f"min({t})" for t in _universal_hashes(n_hashes, "__h"))
+    return hashed.groupBy(id_col).agg(F.expr(f"array({', '.join(mins)})").alias("minhash"))
+
+
+def _band_hash_sql(sig_col: str, band: int, rows_per_band: str) -> str:
+    """SQL: band hash = md5-prefix of the band's signature values joined with
+    ',' plus a band marker — engine-neutral (DuckDB computes the identical
+    value: ``('0x'||substr(md5(concat_ws(',', m_i, ..., 'b<band>')),1,8))::BIGINT``),
+    which makes the whole LSH chain oracle-checkable in SQL."""
+    vals = (
+        f"transform(slice({sig_col}, {band} * {rows_per_band} + 1, {rows_per_band}),"
+        " x -> CAST(x AS STRING))"
+    )
+    return _SHINGLE_HASH_SQL.format(f"concat_ws(',', {vals}, 'b{band}')")
 
 
 def _band_rows(
-    sig_df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band, carry=()
+    sig_df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band: str, carry=()
 ) -> DataFrame:
-    """(id, carry..., band, band_hash): one row per band of each signature.
+    """(id, carry..., band, band_hash): one row per band of each signature;
+    ``rows_per_band`` is SQL text.
 
     The input is re-exchanged on the id first. In-row signatures
     (``_minhash_expr``, as ``near_dup_join`` builds them) need it: they
@@ -222,12 +247,9 @@ def _band_rows(
     materialized row per id, and the planner drops the repartition where
     the aggregate's own exchange already hash-partitions them the same way.
     ``repartition`` is streaming-legal."""
+    hashes = ", ".join(_band_hash_sql(sig_col, b, rows_per_band) for b in range(bands))
     return sig_df.repartition(id_col).select(
-        id_col,
-        *carry,
-        F.posexplode(
-            F.array(*[band_hash_expr(sig_col, b, rows_per_band) for b in range(bands)])
-        ).alias("band", "band_hash"),
+        id_col, *carry, F.expr(f"posexplode(array({hashes}))").alias("band", "band_hash")
     )
 
 
@@ -237,7 +259,7 @@ def lsh_candidate_pairs(
     """Band the signature, hash each band, self-join on (band, band_hash):
     classic MinHash-LSH candidate generation. Signature length must be
     divisible by ``bands``."""
-    rows_per_band = (F.size(F.col(sig_col)) / bands).cast("int")
+    rows_per_band = f"CAST(size({sig_col}) / {bands} AS INT)"
     banded = _band_rows(sig_df, id_col, sig_col, bands, rows_per_band)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
@@ -282,12 +304,8 @@ def _shingle_set_expr(text_col: str, n: int):
     treats NULL as equal-to-NULL, so keeping them would score two NULL-text
     docs as jaccard 1.0. NULL text is the empty set, as in the exploded
     ``jaccard_pairs`` equi-join (NULL never equals NULL), and scores 0.0."""
-    return F.array_distinct(
-        F.filter(
-            F.transform(char_shingles(text_col, n), shingle_hash),
-            lambda h: h.isNotNull(),
-        )
-    )
+    hashes = f"transform({_char_shingles_sql(text_col, n)}, s -> {_SHINGLE_HASH_SQL.format('s')})"
+    return F.expr(f"array_distinct(filter({hashes}, h -> h IS NOT NULL))")
 
 
 def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
@@ -459,7 +477,7 @@ def near_dup_join(
             *[F.col(c) for c in extra],
             _shingle_set_expr(text_col, shingle_n).alias("__sset"),
         ).select(out_id, out_txt, *extra, _minhash_expr(n_hashes).alias("__mh"))
-        return _band_rows(sig, out_id, "__mh", bands, n_hashes // bands, (out_txt, *extra))
+        return _band_rows(sig, out_id, "__mh", bands, str(n_hashes // bands), (out_txt, *extra))
 
     lb = banded_side(left, id_left, text_left, "__lid", "__ltxt", tuple(left_extra_cols))
     rb = banded_side(right, id_right, text_right, "__rid", "__rtxt")

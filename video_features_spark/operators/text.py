@@ -27,9 +27,15 @@ TRIGRAM_PROFILES: dict[str, tuple[str, ...]] = {
 
 
 def char_trigrams(text_col: str) -> Column:
-    """Distinct lowercase char trigrams of a string column, extracted JVM-side:
-    transform over an index sequence (no UDF, no explode-shuffle)."""
-    t = f"lower({text_col})"
+    """Distinct char trigrams of a string column, extracted JVM-side:
+    transform over an index sequence (no UDF, no explode-shuffle).
+
+    Lowercase contract: the trigrams are taken as the column holds them, so
+    a caller that wants case-folded trigrams passes an ALREADY-lowercased
+    column, computed in a projection of its own (as ``langid_ngram`` does).
+    A ``lower()`` inside the lambda would lowercase the whole text again at
+    every trigram position: O(L²) per document."""
+    t = text_col
     # guard: sequence(1, 0) DESCENDS in Spark, so short texts need the branch
     return F.expr(
         f"if(length({t}) < 3, array(),"
@@ -54,8 +60,10 @@ def langid_ngram(
     # single-split inputs would run the per-character trigram extraction on
     # one task (see tables.spread_scan)
     df = spread_scan(df, id_col)
-    grams = char_trigrams(text_col).alias("__g")
-    base = df.select(id_col, grams)
+    # lowercase once per row: the trigram expression reads __lt three times,
+    # so projection collapse keeps this projection apart from it
+    lowered = df.select(id_col, F.lower(text_col).alias("__lt"))
+    base = lowered.select(id_col, char_trigrams("__lt").alias("__g"))
     scores = [
         (
             F.size(F.array_intersect("__g", F.array(*[F.lit(g) for g in prof])))
