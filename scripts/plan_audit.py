@@ -382,6 +382,20 @@ def checks(spark, sf_dir: str, tmp: str) -> list[str]:
     if n_lower != 1:
         failures.append(f"langid's plan lowercases {n_lower} times per row (expected 1)")
 
+    # 20. curate scores each document in one projection: the final plan of
+    #     its scored localCheckpoint (the one execution that scans the
+    #     documents; the near-dup stage reads the checkpoint) holds no join
+    #     of the scores back by id and no BroadcastExchange
+    from video_features_spark.operators.text import curate_corpus
+
+    plans = [p for p in final_plans(spark, lambda: curate_corpus(docs)) if "Scan parquet" in p]
+    if len(plans) != 1:
+        failures.append(f"curate_corpus scanned its documents in {len(plans)} executions (expected 1)")
+    for p in plans:
+        bad = sorted({n for n, _ in final_plan_nodes(p) if "Join" in n or n == "BroadcastExchange"})
+        if bad:
+            failures.append(f"curate's scoring plan holds {', '.join(bad)}")
+
     # 9. IVF centroid sample: top-k, not a global sort
     from video_features_spark.operators.similarity import _l2  # noqa: F401
 

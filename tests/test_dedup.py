@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.utils import assert_frames_match
+from tests.utils import assert_frames_match, py4j_commands
 from video_features_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -465,25 +465,9 @@ def test_plan_building_cost_is_flat_in_hashes_and_bands(spark, sf_dir):
     """Building the MinHash chains makes the same number of py4j calls at
     (n_hashes, bands) = (32, 8) and (128, 32): every expression whose size
     grows with a parameter is one SQL text, so no Python loop of ``Column``
-    calls (each one several py4j round trips) is left. py4j's deletes of
-    freed Java objects run from ``__del__`` on a finalizer thread, so cyclic
-    GC is off and those commands are not counted."""
-    import gc
-
-    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
-
+    calls (each one several py4j round trips) is left."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     corpus = docs.withColumnRenamed("doc_id", "corpus_id")
-    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
-    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
-    sent = []
-    real = client.send_command
-
-    def counting(command, *args, **kwargs):
-        if not command.startswith(delete):
-            sent.append(command)
-        return real(command, *args, **kwargs)
-
     builds = {
         "lsh_candidate_pairs": lambda h, b: lsh_candidate_pairs(
             minhash_signatures(docs, "doc_id", "text", h, 5), "doc_id", b
@@ -491,18 +475,13 @@ def test_plan_building_cost_is_flat_in_hashes_and_bands(spark, sf_dir):
         "near_dup_join": lambda h, b: near_dup_join(docs, corpus, n_hashes=h, bands=b),
     }
     counts = {}
-    client.send_command = counting
-    gc.disable()
-    try:
+    with py4j_commands(spark) as sent:
         for name, build in builds.items():
             build(32, 8)  # first-use lookups are not part of the cost
             for params in ((32, 8), (128, 32)):
                 sent.clear()
                 build(*params)
                 counts[name, params] = len(sent)
-    finally:
-        gc.enable()
-        del client.send_command
     for name in builds:
         assert counts[name, (32, 8)] == counts[name, (128, 32)], counts
         assert counts[name, (32, 8)] < 1_000, counts

@@ -1,8 +1,15 @@
 """Text-analysis operators (char-trigram language-ID, quality scoring) vs
 DuckDB oracles + semantic gates on crafted inputs."""
 
-from tests.utils import assert_frames_match
-from video_features_spark.operators.text import langid_ngram, quality_score
+from pyspark.sql import functions as F
+
+from tests.utils import assert_frames_match, py4j_commands
+from video_features_spark.operators.text import (
+    TRIGRAM_PROFILES,
+    char_trigrams,
+    langid_ngram,
+    quality_score,
+)
 
 
 def test_langid_ngram_vs_oracle(spark, duck, sf_dir):
@@ -106,10 +113,6 @@ def test_langid_ngram_edge_cases_match_in_lambda_lowercasing(spark):
     form ``substring(lower(text), i, 3)`` gives, on NULL, "", a 2-character
     text, mixed case, multi-byte UTF-8 and "İSTANBUL" (lowercasing makes it
     one character longer)."""
-    from pyspark.sql import functions as F
-
-    from video_features_spark.operators.text import TRIGRAM_PROFILES
-
     texts = [None, "", "Ab", "The CAT and THE Dog", "ÉL Niño está en la CASA de él",
              "naïve café — 日本語のテキスト ✓ ÜBER", "İSTANBUL", "İSTANBUL İN THE rain"]
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
@@ -133,3 +136,74 @@ def test_langid_ngram_edge_cases_match_in_lambda_lowercasing(spark):
         }
         assert {lang: row[f"ngram_{lang}"] for lang in langs} == want, doc_id
         assert row["lang_pred"] == max(langs, key=lambda lang: (want[lang], -langs.index(lang)))
+
+
+def test_curate_scores_equal_the_public_scorers_joined(spark, sf_dir, monkeypatch):
+    """``curate_corpus`` scores each document in one projection. The table it
+    checkpoints holds, row for row, the ``quality``, ``n_words`` and
+    ``lang_pred`` of ``quality_score`` joined to ``langid_ngram`` by id, on
+    the documents plus a NULL, an empty and a 2-character text."""
+    from video_features_spark.operators.text import curate_corpus
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    extra = spark.createDataFrame(
+        [(10**9, None), (10**9 + 1, ""), (10**9 + 2, "ab")], "doc_id long, text string"
+    )
+    df = docs.unionByName(extra, allowMissingColumns=True)
+    checkpointed = []
+    real = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(real(self, *args, **kwargs))
+        return checkpointed[-1]
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    curate_corpus(df)
+    monkeypatch.undo()
+    cols = ["doc_id", "quality", "n_words", "lang_pred"]
+    got = sorted(map(tuple, checkpointed[0].select(cols).collect()))
+    want = quality_score(df).join(langid_ngram(df), "doc_id").select(cols)
+    assert got == sorted(map(tuple, want.collect()))
+    assert len(got) == docs.count() + 3
+    assert got[-3][2:] == (None, None)  # NULL text: no word count, no language
+
+
+def test_langid_build_cost_is_flat_in_profiles_and_escapes_literals(spark, sf_dir):
+    """Building ``langid_ngram`` makes the same number of py4j calls with the
+    3 default profiles of 20 trigrams as with 12 profiles of 80: the profile
+    arrays, the scores and the argmax are SQL text. A profile (and a
+    language name) holding ``'`` and ``\\`` scores as the ``F.lit`` form of
+    the profiles, kept only here, does."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    wide = {f"l{i:02d}": tuple(f"{chr(97 + i)}{j:02d}" for j in range(80)) for i in range(12)}
+    counts = {}
+    with py4j_commands(spark) as sent:
+        langid_ngram(docs)  # first-use lookups are not part of the cost
+        for name, profiles in (("default", None), ("wide", wide)):
+            sent.clear()
+            langid_ngram(docs, profiles=profiles)
+            counts[name] = len(sent)
+    assert counts["default"] == counts["wide"] < 300, counts
+
+    quoted = ("t's", "'s ", "a\\b", "\\' ", "'''")
+    profiles = {"en": TRIGRAM_PROFILES["en"], "it's": quoted}
+    texts = [None, "", "it's a\\b test", "It'''S \\' \\\\ and the end", "the cat"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    langs = sorted(profiles)
+    grams = df.select("doc_id", F.lower("text").alias("__lt")).select(
+        "doc_id", char_trigrams("__lt").alias("__g")
+    )
+    scored = grams.select("doc_id", *[
+        (F.size(F.array_intersect("__g", F.array(*[F.lit(g) for g in profiles[lang]])))
+         / F.greatest(F.size("__g"), F.lit(1))).alias(f"ngram_{lang}")
+        for lang in langs
+    ])
+    best = F.greatest(*[F.col(f"`ngram_{lang}`") for lang in langs])
+    pred = F.lit(None).cast("string")
+    for lang in reversed(langs):
+        pred = F.when(F.col(f"`ngram_{lang}`") == best, F.lit(lang)).otherwise(pred)
+    want = sorted(map(tuple, scored.withColumn("lang_pred", pred).collect()))
+    assert sorted(map(tuple, langid_ngram(df, profiles=profiles).collect())) == want
+    # (doc_id, ngram_en, ngram_it's, lang_pred): the quoted trigrams match
+    assert want[2][2] == 3 / 11 and want[2][3] == "it's"
+    assert want[3][2] > 0

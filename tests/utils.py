@@ -6,8 +6,38 @@ tests/utils.py:102-104 is acknowledged-weak; we use proper np.allclose)."""
 
 from __future__ import annotations
 
+import contextlib
+import gc
+
 import numpy as np
 import pandas as pd
+
+
+@contextlib.contextmanager
+def py4j_commands(spark):
+    """Collect the py4j commands Python sends to the JVM inside the block.
+    py4j's deletes of freed Java objects run from ``__del__`` on a finalizer
+    thread, so cyclic GC is off in the block and those commands are not
+    collected."""
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    sent = []
+    real = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(delete):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = counting
+    gc.disable()
+    try:
+        yield sent
+    finally:
+        gc.enable()
+        del client.send_command
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

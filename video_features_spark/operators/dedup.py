@@ -16,9 +16,6 @@ Scale notes
   the *banded signature* (MinHash) — k·n rows, band cardinality keeps buckets
   small. Never on raw shingles except in ``jaccard_pairs`` (the exact
   full-pair path for small corpora and oracle twins).
-- Stop-shingle removal (``max_shingle_freq``) bounds the hottest buckets the
-  same way stop-words bound an inverted index; without it one common shingle
-  creates an O(n²) bucket.
 - All signatures are integers; a 10^12-row dedup shuffles fixed-width columns,
   not text.
 - The shingle scan+explode is deliberately RECOMPUTED per consumer (sigs,
@@ -123,24 +120,13 @@ def exact_dedup(df: DataFrame, key_cols, tiebreak_col: str) -> DataFrame:
     )
 
 
-def shingle_table(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5, max_shingle_freq: int | None = None
-) -> DataFrame:
-    """(id, shingle_hash h) exploded table; optionally drops stop-shingles
-    occurring in more than ``max_shingle_freq`` docs (bounds join fan-out)."""
-    sh = (
+def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
+    """(id, shingle_hash h) exploded table."""
+    return (
         df.select(id_col, F.explode(char_shingles(text_col, n)).alias("__sh"))
         .select(id_col, shingle_hash(F.col("__sh")).alias("h"))
         .distinct()
     )
-    if max_shingle_freq:
-        hot = (
-            sh.groupBy("h").agg(F.count(F.lit(1)).alias("__f"))
-            .filter(F.col("__f") > max_shingle_freq)
-            .select("h")
-        )
-        sh = sh.join(F.broadcast(hot), "h", "left_anti")
-    return sh
 
 
 def jaccard_pairs(
@@ -149,13 +135,12 @@ def jaccard_pairs(
     text_col: str,
     n: int = 5,
     threshold: float = 0.7,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle:
     |A∩B| via shingle self-join, |A∪B| = |A|+|B|−|A∩B|. Output
     (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold."""
     df = spread_scan(df, id_col)
-    sh = shingle_table(df, id_col, text_col, n, max_shingle_freq)
+    sh = shingle_table(df, id_col, text_col, n)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "h")
     b = sh.select(F.col(id_col).alias("id_b"), "h")

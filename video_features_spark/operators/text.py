@@ -5,12 +5,15 @@ oracle twin in ``__spark_entry__.oracle_sql``.
 The reference's only text ops are the CLIP tokenizer cleanup + BPE
 (``/root/reference/models/clip/clip_src/simple_tokenizer.py``); these operators
 are the training-data-pipeline extensions the task brief names: language-ID
-(char-n-gram heuristic), quality scoring, token counting.
+(char-n-gram heuristic), quality scoring, curation, winnow fingerprints.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..sources.tables import spread_scan
+from .dedup import dedup_groups, minhash_dedup, shingle_hash
 
 # Compact per-language char-trigram profiles (high-frequency trigrams of each
 # language, public linguistic knowledge). Deliberately small: the operator's
@@ -44,6 +47,35 @@ def char_trigrams(text_col: str) -> Column:
     )
 
 
+def _sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal (``\\`` and ``'`` escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _with_langid(
+    df: DataFrame, text_col: str, profiles: dict[str, tuple[str, ...]]
+) -> DataFrame:
+    """``df`` plus ``ngram_<lang>`` per profile and ``lang_pred``, in staged
+    projections. The scores are one struct of SQL text and the argmax one
+    ``CASE`` text, so building them makes the same py4j calls at any number
+    and size of profiles."""
+    langs = sorted(profiles)
+    scores = ", ".join(
+        f"size(array_intersect(__g, array({', '.join(map(_sql_literal, profiles[lang]))})))"
+        f" / greatest(size(__g), 1) AS `ngram_{lang}`"
+        for lang in langs
+    )
+    best = "greatest(" + ", ".join(f"__s.`ngram_{lang}`" for lang in langs) + ")"
+    # earliest language wins ties
+    pred = " ".join(f"WHEN __s.`ngram_{lang}` = {best} THEN {_sql_literal(lang)}" for lang in langs)
+    # lowercase once per row: the trigram expression reads __lt three times,
+    # so projection collapse keeps this projection apart from it
+    lowered = df.select("*", F.lower(text_col).alias("__lt"))
+    grams = lowered.select("*", char_trigrams("__lt").alias("__g")).drop("__lt")
+    scored = grams.selectExpr("*", f"struct({scores}) AS __s")
+    return scored.selectExpr("*", "__s.*", f"CASE {pred} END AS lang_pred").drop("__g", "__s")
+
+
 def langid_ngram(
     df: DataFrame,
     text_col: str = "text",
@@ -54,30 +86,10 @@ def langid_ngram(
     distinct trigrams found in that language's profile; ``lang_pred`` is the
     argmax (ties broken by language-name order, deterministic). Emits
     ``(id, ngram_<lang>... , lang_pred)``."""
-    from ..sources.tables import spread_scan
-
-    profiles = profiles or TRIGRAM_PROFILES
     # single-split inputs would run the per-character trigram extraction on
     # one task (see tables.spread_scan)
-    df = spread_scan(df, id_col)
-    # lowercase once per row: the trigram expression reads __lt three times,
-    # so projection collapse keeps this projection apart from it
-    lowered = df.select(id_col, F.lower(text_col).alias("__lt"))
-    base = lowered.select(id_col, char_trigrams("__lt").alias("__g"))
-    scores = [
-        (
-            F.size(F.array_intersect("__g", F.array(*[F.lit(g) for g in prof])))
-            / F.greatest(F.size("__g"), F.lit(1))
-        ).alias(f"ngram_{lang}")
-        for lang, prof in sorted(profiles.items())
-    ]
-    scored = base.select(id_col, *scores)
-    langs = sorted(profiles)
-    best = F.greatest(*[F.col(f"ngram_{lang}") for lang in langs])
-    pred = F.lit(None).cast("string")
-    for lang in reversed(langs):  # earliest language wins ties
-        pred = F.when(F.col(f"ngram_{lang}") == best, F.lit(lang)).otherwise(pred)
-    return scored.withColumn("lang_pred", pred)
+    df = spread_scan(df, id_col).select(id_col, text_col)
+    return _with_langid(df, text_col, profiles or TRIGRAM_PROFILES).drop(text_col)
 
 
 def curate_corpus(
@@ -109,12 +121,12 @@ def curate_corpus(
     """
     if dedup_strategy != "lsh":
         raise ValueError(f"dedup_strategy must be 'lsh', got {dedup_strategy!r}")
-    from ..sources.tables import spread_scan
-    from .dedup import dedup_groups, minhash_dedup
-
     df = spread_scan(df, id_col)
-    q = quality_score(df, text_col, id_col).select(id_col, "quality", "n_words")
-    l = langid_ngram(df, text_col, id_col).select(id_col, "lang_pred")
+    # scoring is one projection of each row: no join of the scores back by
+    # id, so ids must be unique and non-NULL (as minhash_signatures requires
+    # and the oracle's joins assume)
+    q = _quality_columns(text_col)
+    scored = _with_langid(df.select("*", q["quality"], q["n_words"]), text_col, TRIGRAM_PROFILES)
     # localCheckpoint the SCORED table before the gates: (a) filtering on a
     # computed column pushes a rewritten predicate below the scan, inlining
     # the trigram/quality expressions up to 12x per row into a single-task
@@ -129,7 +141,7 @@ def curate_corpus(
     # fails the query and the caller reruns it; nothing recomputes from
     # lineage. Not persist(DISK_ONLY): its session-wide cache entry would need
     # an unpersist after the caller has consumed the lazy result.
-    scored = df.join(q, id_col).join(l, id_col).localCheckpoint()
+    scored = scored.select(*df.columns, "quality", "n_words", "lang_pred").localCheckpoint()
     kept = scored.filter(F.col("quality") >= min_quality)
     if lang is not None:
         kept = kept.filter(F.col("lang_pred") == lang)
@@ -146,12 +158,8 @@ def curate_corpus(
     )
 
 
-def quality_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Composite document-quality heuristics (all JVM): length, word count,
-    mean word length, punctuation ratio, uppercase ratio, and a 0..1 composite
-    that penalizes degenerate documents (too short, all-punct, shouting)."""
+def _quality_columns(text_col: str) -> dict[str, Column]:
+    """``quality_score``'s aliased columns by name."""
     t = F.col(text_col)
     words = F.split(F.trim(t), r"\s+")
     n_chars = F.length(t)
@@ -166,15 +174,18 @@ def quality_score(
         * (F.lit(1.0) - F.least(punct_ratio * 4, F.lit(1.0)))
         * (F.lit(1.0) - F.least(upper_ratio * 4, F.lit(1.0)))
     )
-    return df.select(
-        id_col,
-        n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        mean_wlen.alias("mean_word_len"),
-        punct_ratio.alias("punct_ratio"),
-        upper_ratio.alias("upper_ratio"),
-        composite.alias("quality"),
-    )
+    cols = dict(n_chars=n_chars, n_words=n_words, mean_word_len=mean_wlen,
+                punct_ratio=punct_ratio, upper_ratio=upper_ratio, quality=composite)
+    return {name: c.alias(name) for name, c in cols.items()}
+
+
+def quality_score(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Composite document-quality heuristics (all JVM): length, word count,
+    mean word length, punctuation ratio, uppercase ratio, and a 0..1 composite
+    that penalizes degenerate documents (too short, all-punct, shouting)."""
+    return df.select(id_col, *_quality_columns(text_col).values())
 
 
 def winnow_fingerprints(
@@ -197,9 +208,6 @@ def winnow_fingerprints(
     detection: group by fingerprint, pairs sharing ≥ t fingerprints are
     plagiarism/near-copy candidates — same join shape as the shingle
     verifier, ~1/w the rows."""
-    from ..sources.tables import spread_scan
-    from .dedup import shingle_hash
-
     df = spread_scan(df, id_col)
     t = F.col(text_col)
     pos = F.sequence(F.lit(1), F.greatest(F.length(t) - k + 1, F.lit(1)))
